@@ -103,32 +103,11 @@ def main() -> None:
     timed("cc", lambda: G.connected_components(edges).count())
     timed("triangle", lambda: G.triangle_count(edges).collect())
 
-    # 6. graph partition, phase-split
-    def gp_phases():
-        maps, c_edges, c_w = timed("gp.coarsen", lambda: P.coarsen_graph(edges, target=256))
-        edge_pdf = timed(
-            "gp.collect", lambda: c_edges.toPandas().sort_values(["src", "dst"], ignore_index=True)
-        )
-        weight_pdf = c_w.toPandas().sort_values("id", ignore_index=True)
-        part = timed(
-            "gp.driver_part",
-            lambda: P._initial_partition_driver(edge_pdf, weight_pdf, NUM_SHARDS, 0.05, P.SEED),
-        )
-        coarse_asn = spark.createDataFrame(
-            [(int(v), int(s)) for v, s in part.items()], "label long, shard int"
-        )
-        asn = coarse_asn
-        for lab in reversed(maps):
-            asn = lab.join(asn, "label").select(F.col("id").alias("label"), "shard")
-        asn = asn.select(F.col("label").alias("id"), "shard")
-        if not maps and len(weight_pdf) <= 256:
-            return asn.localCheckpoint(eager=True)
-        n = asn.count()
-        cap = P.max_cluster_size(n, NUM_SHARDS, 0.05)
-        ref = timed("gp.refine", lambda: P.refine_partition(edges, asn, cap, rounds=3))
-        return ref.localCheckpoint(eager=True)
-
-    asn = timed("graph_partition_total", gp_phases)
+    # 6. graph partition, as one call (it picks the driver or Spark path)
+    asn = timed(
+        "graph_partition_total",
+        lambda: P.graph_partition(edges, num_shards=NUM_SHARDS, coarse_target=256).localCheckpoint(eager=True),
+    )
     imbalance = round(P.imbalance(asn, NUM_SHARDS), 4)
 
     # 7. route + recall curve, phase-split

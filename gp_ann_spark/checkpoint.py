@@ -52,6 +52,35 @@ def release_local_checkpoint(df: DataFrame | None) -> None:
         pass
 
 
+_NO_ESTIMATE = (1 << 63) - 1  # Long.MaxValue: Spark's default sizeInBytes
+
+
+def local_checkpoint(df: DataFrame, eager: bool = True) -> DataFrame:
+    """``df.localCheckpoint(eager)`` with its carried size estimate clamped.
+
+    A local checkpoint keeps its source plan's ``sizeInBytes`` estimate,
+    and Catalyst estimates a join as the product of its children's
+    estimates, so a loop that joins checkpoint against checkpoint grows the
+    estimate's digit count about tenfold per level (7 → 92 → 1,028 →
+    11,323 → 124,574 digits over four LP-coarsening levels); the BigInteger
+    products then stall the driver inside planning. An estimate above
+    2^63−1 is replaced by Spark's own "no estimate" value (the session's
+    default size, 2^63−1); smaller ones are kept, so static plan choices
+    such as broadcast joins do not move.
+    """
+    out = df.localCheckpoint(eager=eager)
+    plan = out._jdf.queryExecution().analyzed()
+    if plan.stats().sizeInBytes() <= _NO_ESTIMATE:
+        return out
+    jvm = df.sparkSession._jvm
+    session, _, constraints = (plan.otherCopyArgs().apply(i) for i in range(3))
+    clamped = plan.copy(
+        plan.output(), plan.rdd(), plan.outputPartitioning(), plan.outputOrdering(),
+        plan.isStreaming(), plan.stream(), session, jvm.scala.Option.apply(None), constraints,
+    )
+    return type(out)(jvm.org.apache.spark.sql.classic.Dataset.ofRows(session, clamped), out.sparkSession)
+
+
 def swap_checkpoint(new_df: DataFrame, prev_df: DataFrame | None = None) -> DataFrame:
     """Materialize ``new_df`` as a localCheckpoint, then release ``prev_df``.
 
@@ -80,19 +109,33 @@ class SuperstepCheckpointer:
         assert self.base_dir is not None
         return os.path.join(self.base_dir, self.name, f"meta_{superstep}.json")
 
-    def save(self, df: DataFrame, superstep: int, metrics: dict[str, Any] | None = None) -> DataFrame:
+    def save(
+        self, df: DataFrame, superstep: int, metrics: dict[str, Any] | None = None,
+        materialized: bool = False,
+    ) -> DataFrame:
         """Persist superstep state; returns the (lineage-truncated) state.
 
         With no ``base_dir``: ``localCheckpoint`` only (lineage truncation,
         no resumability) — the fast path for tests/bench.
+
+        ``materialized``: ``df`` is a local checkpoint the caller has
+        already materialized (e.g. by counting it). It becomes the state as
+        is instead of being copied again; with ``base_dir`` it is written
+        out and then released.
         """
         if self.base_dir is None:
-            out = swap_checkpoint(df, self._prev)
+            if materialized:
+                out = df
+                release_local_checkpoint(self._prev)
+            else:
+                out = swap_checkpoint(df, self._prev)
             self._prev = out
             self.history.append({"superstep": superstep, **(metrics or {})})
             return out
         path = self._dir(superstep)
         df.write.mode("overwrite").parquet(path)
+        if materialized:
+            release_local_checkpoint(df)
         out = df.sparkSession.read.parquet(path)
         per_part = (
             out.groupBy(F.spark_partition_id().alias("pid")).count().orderBy("pid").collect()

@@ -260,16 +260,19 @@ def connected_components(
             .localCheckpoint(eager=False)
         )
         ptr = stepped.select(F.col("id").alias("_pid"), F.col("component").alias("_pcomp"))
+        # the superstep's plan executes ONCE: the changed count materializes
+        # this non-eager checkpoint, and the checkpointer takes it as is
         new_labels = (
             stepped.join(ptr, stepped.component == ptr._pid, "left")
             .select("id", F.coalesce("_pcomp", F.col("component")).alias("component"))
+            .localCheckpoint(eager=False)
         )
         changed = (
             new_labels.join(labels.withColumnRenamed("component", "old"), "id")
             .where(F.col("component") != F.col("old"))
             .count()
         )
-        labels = cp.save(new_labels, it, {"changed": int(changed)})
+        labels = cp.save(new_labels, it, {"changed": int(changed)}, materialized=True)
         release_local_checkpoint(stepped)
         if changed == 0:
             break

@@ -10,7 +10,12 @@ OGP affinity moves (:23-141).
 
 The graph partitioner is the north_star centerpiece: multilevel
 **label-propagation coarsening → driver-local initial partition → projection
-+ balance-constrained LP refinement**, all as DataFrame supersteps:
++ balance-constrained LP refinement**. Where it runs depends on the edge
+table's size: one that fits under the session's broadcast threshold
+(``spark.sql.autoBroadcastJoinThreshold``) is collected once and the driver
+runs the whole algorithm in vectorized NumPy; above it, Spark runs the same
+algorithm as DataFrame supersteps, with the same tie-breaks and therefore
+the same assignment:
 
 - coarsening contracts the graph ~10× per level via size-constrained LP;
   after ~3-5 levels even a 10^12-edge graph fits on the driver (≤ ~100k
@@ -24,6 +29,7 @@ The graph partitioner is the north_star centerpiece: multilevel
 from __future__ import annotations
 
 import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -31,7 +37,7 @@ from gp_ann_spark.functions.windows import bounded_global_window
 
 from gp_ann_spark.operators import kmeans as KM
 from gp_ann_spark.checkpoint import realias as _realias
-from gp_ann_spark.checkpoint import release_local_checkpoint, swap_checkpoint
+from gp_ann_spark.checkpoint import local_checkpoint, release_local_checkpoint, swap_checkpoint
 from gp_ann_spark.operators.graph import vertices
 
 SEED = KM.SEED
@@ -146,6 +152,9 @@ def imbalance(assignment: DataFrame, num_shards: int | None = None) -> float:
 
 
 # ------------------------------------------------ multilevel graph partition
+MAX_COARSEN_LEVELS = 8
+
+
 def _lp_coarsen_level(edges: DataFrame, weights: DataFrame, cap: int, rounds: int = 2) -> DataFrame:
     """One coarsening level: size-constrained label propagation.
 
@@ -192,13 +201,14 @@ def _lp_coarsen_level(edges: DataFrame, weights: DataFrame, cap: int, rounds: in
             # still required: the caller cogroups/joins this output against
             # frames derived from it, and swap_checkpoint must be able to
             # release it when the next level lands)
-            return nxt.select("id", "label").localCheckpoint(eager=True)
+            return local_checkpoint(nxt.select("id", "label"), eager=True)
         labels = _realias(nxt)
     return labels.select("id", "label")  # rounds == 0: identity labelling
 
 
 def coarsen_graph(
-    edges: DataFrame, weights: DataFrame | None = None, target: int = 4096, max_levels: int = 8,
+    edges: DataFrame, weights: DataFrame | None = None, target: int = 4096,
+    max_levels: int = MAX_COARSEN_LEVELS,
 ) -> tuple[list[DataFrame], DataFrame, DataFrame]:
     """Multilevel LP coarsening until ≤ ``target`` vertices.
 
@@ -213,8 +223,8 @@ def coarsen_graph(
     # materializes cur_w, and level 1's job materializes cur_edges — three
     # setup jobs become one (nothing upstream is released before either
     # materializes)
-    cur_edges = edges.select("src", "dst", F.col("weight").cast("double")).localCheckpoint(eager=False)
-    cur_w = weights.localCheckpoint(eager=False)
+    cur_edges = local_checkpoint(edges.select("src", "dst", F.col("weight").cast("double")), eager=False)
+    cur_w = local_checkpoint(weights, eager=False)
     row = cur_w.agg(F.count(F.lit(1)).alias("n"), F.sum("w").alias("tw")).collect()[0]
     n = int(row["n"])
     total_w = row["tw"]
@@ -229,9 +239,10 @@ def coarsen_graph(
         # NON-eager checkpoint: the count() below is the materializing
         # action, so checkpoint + count is one job, not two (cur_w is only
         # released after, so the truncated lineage never needs recompute)
-        new_w = lab.join(cur_w, "id").groupBy(F.col("label").alias("id")).agg(
-            F.sum("w").alias("w")
-        ).localCheckpoint(eager=False)
+        new_w = local_checkpoint(
+            lab.join(cur_w, "id").groupBy(F.col("label").alias("id")).agg(F.sum("w").alias("w")),
+            eager=False,
+        )
         contracted = (
             cur_edges.join(lab.select(F.col("id").alias("src"), F.col("label").alias("nsrc")), "src")
             .join(lab.select(F.col("id").alias("dst"), F.col("label").alias("ndst")), "dst")
@@ -245,7 +256,7 @@ def coarsen_graph(
         # WITHOUT releasing cur_edges yet — the no-shrinkage break must
         # still return the UNcontracted graph.
         with ThreadPoolExecutor(max_workers=1) as ex:
-            fut = ex.submit(lambda: contracted.localCheckpoint(eager=True))
+            fut = ex.submit(local_checkpoint, contracted, True)
             n_new = new_w.count()
             contracted_cp = fut.result()
         if n_new >= n:  # no shrinkage → stop (guard ≙ knn_graph.h:120-131)
@@ -430,10 +441,13 @@ def refine_partition(
     multilevel refinement; determinstic via (gain, id) ordering)."""
     # non-eager: round 1's movers count is the first consumer of both — it
     # materializes them; nothing upstream is released before that
-    sym = edges.select("src", "dst", "weight").unionByName(
-        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"), "weight")
-    ).localCheckpoint(eager=False)
-    asn = assignment.select("id", "shard").localCheckpoint(eager=False)
+    sym = local_checkpoint(
+        edges.select("src", "dst", "weight").unionByName(
+            edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"), "weight")
+        ),
+        eager=False,
+    )
+    asn = local_checkpoint(assignment.select("id", "shard"), eager=False)
     for _ in range(rounds):
         conn = (
             sym.join(asn.select(F.col("id").alias("dst"), F.col("shard").alias("cand")), "dst")
@@ -461,22 +475,24 @@ def refine_partition(
         # otherwise each evaluate the full window program. Non-eager: the
         # count() below is the materializing action — one job per round for
         # the whole window program instead of two.
-        movers = (
+        movers = local_checkpoint(
             best.join(F.broadcast(room), "cand")
             .withColumn("_fill", F.row_number().over(w_cap))
             .where(F.col("_fill") <= F.greatest(F.col("cap"), F.lit(0)))
-            .select("id", F.col("cand").alias("new_shard"))
-            .localCheckpoint(eager=False)
+            .select("id", F.col("cand").alias("new_shard")),
+            eager=False,
         )
         n_moved = movers.count()
         if n_moved == 0:
             release_local_checkpoint(movers)
             break
-        asn = swap_checkpoint(
+        nxt = local_checkpoint(
             asn.join(movers, "id", "left")
             .select("id", F.coalesce(F.col("new_shard"), F.col("shard")).cast("int").alias("shard")),
-            asn,
+            eager=True,
         )
+        release_local_checkpoint(asn)
+        asn = nxt
         release_local_checkpoint(movers)
     # the returned asn checkpoint is the caller's to consume; the sym edge
     # view was only ever this loop's join input — free its blocks here
@@ -495,7 +511,40 @@ def graph_partition(
     """From-scratch multilevel balanced k-way graph partitioning
     (replaces KaMinPar, partitioning.cpp:172-199; composed into "GP"
     partitioning.cpp:251-264). Returns (id, shard), max shard ≤ (1+ε)n/s.
+
+    An edge table that fits under the session's broadcast threshold
+    (``spark.sql.autoBroadcastJoinThreshold``, counted as 24-byte
+    ``(long, long, double)`` rows) is collected once and partitioned on the
+    driver by ``_graph_partition_local``; a larger one runs the same
+    algorithm as DataFrame supersteps (``_graph_partition_spark``). Both
+    return the same assignment.
     """
+    spark = edges.sparkSession
+    budget = spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold() // 24
+    if budget > 0:
+        pdf = (
+            edges.select("src", "dst", F.col("weight").cast("double"))
+            .limit(budget + 1)
+            .toPandas()
+        )
+        if len(pdf) <= budget:
+            ids, shard = _graph_partition_local(
+                pdf["src"].to_numpy(np.int64), pdf["dst"].to_numpy(np.int64),
+                pdf["weight"].to_numpy(np.float64),
+                num_shards, eps, coarse_target, refine_rounds, seed,
+            )
+            return spark.createDataFrame(
+                pd.DataFrame({"id": ids, "shard": shard.astype(np.int32)}), "id long, shard int"
+            )
+    return _graph_partition_spark(edges, num_shards, eps, coarse_target, refine_rounds, seed)
+
+
+def _graph_partition_spark(
+    edges: DataFrame, num_shards: int, eps: float, coarse_target: int, refine_rounds: int, seed: int,
+) -> DataFrame:
+    """``graph_partition`` as DataFrame supersteps, for edge tables too
+    large to collect: LP coarsening, driver-local initial partition of the
+    coarse graph, projection, then distributed refinement."""
     maps, c_edges, c_w = coarsen_graph(edges, target=coarse_target)
     # pin driver-side row order: toPandas() order follows the (AQE-chosen)
     # partition layout, and the greedy grower's tie-breaks follow row order
@@ -516,7 +565,7 @@ def graph_partition(
     # level) executes ONCE — the count below materializes it, and the
     # refinement's own eager checkpoint then copies from cache instead of
     # re-walking the joins
-    asn = asn.select(F.col("label").alias("id"), "shard").localCheckpoint(eager=False)
+    asn = local_checkpoint(asn.select(F.col("label").alias("id"), "shard"), eager=False)
     if not maps and len(weight_pdf) <= coarse_target:
         # no coarsening was NEEDED (n ≤ coarse_target): the driver pass just
         # partitioned AND boundary-refined the full-resolution graph, so the
@@ -531,6 +580,125 @@ def graph_partition(
     n = asn.count()
     cap = max_cluster_size(n, num_shards, eps)
     return refine_partition(edges, asn, cap, rounds=refine_rounds)
+
+
+# ------------------------------------ driver-local form of the same algorithm
+# Vertices are dense indices into a sorted id array, so "id asc" and "cand
+# asc" tie-breaks are index order, and every grouped sum is a bincount.
+def _pair_sums(a: np.ndarray, b: np.ndarray, w: np.ndarray, nb: int):
+    """``GROUP BY (a, b) SUM(w)`` over dense keys, in (a, b) order."""
+    keys, inv = np.unique(a * nb + b, return_inverse=True)
+    return keys // nb, keys % nb, np.bincount(inv, weights=w, minlength=len(keys))
+
+
+def _sort_in_groups(group: np.ndarray, *order_keys: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """``PARTITION BY group ORDER BY order_keys`` (most significant first):
+    row indices in that order, and a mask of the rows that open a group."""
+    o = np.lexsort(tuple(reversed(order_keys)) + (group,))
+    g = group[o]
+    first = np.ones(len(g), dtype=bool)
+    first[1:] = g[1:] != g[:-1]
+    return o, first
+
+
+def _first_per_group(group: np.ndarray, *order_keys: np.ndarray) -> np.ndarray:
+    """Row indices where ``row_number() OVER (...) = 1``."""
+    o, first = _sort_in_groups(group, *order_keys)
+    return o[first]
+
+
+def _rank_in_group(group: np.ndarray, *order_keys: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """Row indices in window order, and per sorted row the sorted position
+    where its group starts."""
+    o, first = _sort_in_groups(group, *order_keys)
+    return o, np.flatnonzero(first)[np.cumsum(first) - 1]
+
+
+def _lp_labels(src: np.ndarray, dst: np.ndarray, wt: np.ndarray, vw: np.ndarray, cap: int,
+               rounds: int = 2) -> np.ndarray:
+    """``_lp_coarsen_level`` on dense arrays; returns each vertex's label."""
+    n = len(vw)
+    ss, dd, ww = np.concatenate([src, dst]), np.concatenate([dst, src]), np.concatenate([wt, wt])
+    ids = np.arange(n)
+    lab = ids.copy()
+    for _ in range(rounds):
+        a_src, a_cand, aff = _pair_sums(ss, lab[dd], ww, n)
+        best = _first_per_group(a_src, -aff, a_cand)  # (aff desc, cand asc)
+        cand, c_aff = lab.copy(), np.full(n, np.inf)
+        cand[a_src[best]] = a_cand[best]
+        c_aff[a_src[best]] = -aff[best]  # negated; no edges → +inf, i.e. nulls last
+        # capacity gate: cumulative weight into each candidate label
+        o, start = _rank_in_group(cand, c_aff, ids)
+        cum = np.cumsum(vw[o])
+        cum -= (cum - vw[o])[start]
+        ok = np.empty(n, dtype=bool)
+        ok[o] = cum <= cap
+        lab = np.where(ok, cand, lab)
+    return lab
+
+
+def _refine_local(src: np.ndarray, dst: np.ndarray, wt: np.ndarray, shard: np.ndarray,
+                  num_shards: int, cap: int, rounds: int) -> np.ndarray:
+    """``refine_partition`` on dense arrays."""
+    ss, dd, ww = np.concatenate([src, dst]), np.concatenate([dst, src]), np.concatenate([wt, wt])
+    shard = shard.copy()
+    for _ in range(rounds):
+        vid, cand, aff = _pair_sums(ss, shard[dd], ww, num_shards)
+        own = cand == shard[vid]
+        own_aff = np.zeros(len(shard))
+        own_aff[vid[own]] = aff[own]
+        gain = aff - own_aff[vid]
+        m = ~own & (gain > 0)
+        vid, cand, gain = vid[m], cand[m], gain[m]
+        best = _first_per_group(vid, -gain, cand)  # (gain desc, cand asc)
+        vid, cand, gain = vid[best], cand[best], gain[best]
+        room = cap - np.bincount(shard, minlength=num_shards)
+        o, start = _rank_in_group(cand, -gain, vid)  # (gain desc, id asc)
+        fill = np.arange(len(o)) - start
+        movers = o[fill < np.maximum(room[cand[o]], 0)]
+        if len(movers) == 0:
+            break
+        shard[vid[movers]] = cand[movers]
+    return shard
+
+
+def _graph_partition_local(
+    src: np.ndarray, dst: np.ndarray, weight: np.ndarray, num_shards: int, eps: float,
+    coarse_target: int, refine_rounds: int, seed: int,
+) -> tuple[np.ndarray, np.ndarray]:
+    """``_graph_partition_spark`` on a collected edge table, step for step:
+    the same coarsening cap, rounds and stop rule, the same tie-breaks, the
+    same initial partition and refinement. Returns (ids, shard) arrays."""
+    o = np.lexsort((weight, dst, src))  # row order pins float summation order
+    src, dst, weight = src[o], dst[o], weight[o]
+    ids = np.unique(np.concatenate([src, dst]))
+    s, d = np.searchsorted(ids, src), np.searchsorted(ids, dst)
+    n0 = n = len(ids)
+    c_ids, cs, cd, cw, vw = ids, s, d, weight, np.ones(n, dtype=np.int64)
+    maps = []
+    for _ in range(MAX_COARSEN_LEVELS):
+        if n <= coarse_target:
+            break
+        cap = max(int(n0 / max(coarse_target // 4, 1)), 2)
+        keep, inv = np.unique(_lp_labels(cs, cd, cw, vw, cap), return_inverse=True)
+        if len(keep) >= n:  # no shrinkage → stop
+            break
+        ns, nd = inv[cs], inv[cd]
+        m = ns != nd
+        cs, cd, cw = _pair_sums(ns[m], nd[m], cw[m], len(keep))
+        vw = np.bincount(inv, weights=vw, minlength=len(keep)).astype(np.int64)
+        c_ids, n = c_ids[keep], len(keep)
+        maps.append(inv)
+    edge_pdf = pd.DataFrame({"src": c_ids[cs], "dst": c_ids[cd], "weight": cw})
+    weight_pdf = pd.DataFrame({"id": c_ids, "w": vw})
+    part = _initial_partition_driver(edge_pdf, weight_pdf, num_shards, eps, seed)
+    shard = np.array([part[int(v)] for v in c_ids], dtype=np.int64)
+    for inv in reversed(maps):
+        shard = shard[inv]
+    if not maps and n <= coarse_target:
+        return ids, shard
+    cap = max_cluster_size(n0, num_shards, eps)
+    return ids, _refine_local(s, d, weight, shard, num_shards, cap, refine_rounds)
 
 
 def overlapping_partition(

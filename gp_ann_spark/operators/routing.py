@@ -96,6 +96,15 @@ MAX_QUERY_BLOCK_BYTES = int(
 )
 
 
+def _query_block(pdf, q_id_col: str, q_vec_col: str) -> tuple[np.ndarray, np.ndarray]:
+    """(qids, Q) NumPy arrays of one collected query block. Raises on a
+    NULL vector anywhere in the block — loud, not a silently short result."""
+    vecs = pdf[q_vec_col]
+    if vecs.isna().any():
+        raise ValueError(f"{q_vec_col} contains NULL vectors; cannot score routing points")
+    return pdf[q_id_col].to_numpy().astype(np.int64), np.stack(vecs.to_numpy()).astype(np.float64)
+
+
 def _bounded_query_batches(queries: DataFrame, q_id_col: str, q_vec_col: str):
     """Collect the query side to the driver in bounded blocks.
 
@@ -104,10 +113,12 @@ def _bounded_query_batches(queries: DataFrame, q_id_col: str, q_vec_col: str):
     The scoring kernels are per-query independent and both distributed
     paths finish with a per-query window/aggregation, so running them per
     block and unioning is bit-identical to one unchunked pass. One block
-    (the common evaluation-batch case) keeps the old single-collect plan;
-    the multi-block path pays one routing-table scan per block — callers
-    with an expensive routing plan should checkpoint it first (they
-    already must for the size probe, see ``score_routing_points``).
+    (the common evaluation-batch case) is one bounded ``limit`` collect
+    after the one-row dimension probe; only when that collect overflows
+    does the query set get counted and split by id hash, paying one
+    routing-table scan per block — callers with an expensive routing plan
+    should checkpoint it first (they already must for the size probe, see
+    ``score_routing_points``).
     """
     q = queries.select(q_id_col, q_vec_col)
     first = q.select(q_vec_col).first()
@@ -115,28 +126,18 @@ def _bounded_query_batches(queries: DataFrame, q_id_col: str, q_vec_col: str):
         yield np.zeros(0, dtype=np.int64), np.zeros((0, 1))
         return
     if first[0] is None:
-        # loud, like the unchunked np.stack would have been — NOT a silent
-        # empty result for a query set that merely starts with a null vector
         raise ValueError(f"{q_vec_col} contains NULL vectors; cannot score routing points")
-    d = max(len(first[0]), 1)
-    n = q.count()
-    block_rows = max(1, MAX_QUERY_BLOCK_BYTES // (8 * d))
-    n_blocks = max(1, -(-n // block_rows))
-    if n_blocks == 1:
-        pdf = q.toPandas()
-        yield (
-            pdf[q_id_col].to_numpy().astype(np.int64),
-            np.stack(pdf[q_vec_col].to_numpy()).astype(np.float64),
-        )
+    block_rows = max(1, MAX_QUERY_BLOCK_BYTES // (8 * max(len(first[0]), 1)))
+    pdf = q.limit(block_rows + 1).toPandas()
+    if len(pdf) <= block_rows:
+        yield _query_block(pdf, q_id_col, q_vec_col)
         return
+    n_blocks = -(-q.count() // block_rows)
     for i in range(n_blocks):
         pdf = q.where(F.pmod(F.xxhash64(F.col(q_id_col)), F.lit(n_blocks)) == i).toPandas()
         if len(pdf) == 0:
             continue
-        yield (
-            pdf[q_id_col].to_numpy().astype(np.int64),
-            np.stack(pdf[q_vec_col].to_numpy()).astype(np.float64),
-        )
+        yield _query_block(pdf, q_id_col, q_vec_col)
 
 _PAD_HASH = np.int64((1 << 62))  # sorts after every real xxhash64 tie-key
 

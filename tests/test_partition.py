@@ -1,4 +1,5 @@
 import numpy as np
+import pandas as pd
 from pyspark.sql import functions as F
 
 from gp_ann_spark.operators import partition as P
@@ -263,3 +264,110 @@ def test_grow_once_drains_overfull_leftover_shard():
     assert (part >= 0).all()
     assert loads.max() <= 9.45
     assert sorted(loads.tolist()) == [9.0, 9.0]
+
+
+# ------------------------------------------- driver path vs. Spark path
+def knn_graph_edges(spark, n_clusters, per_cluster, dim, k, seed=555):
+    """Symmetrized exact k-NN graph (min weight per pair, as
+    ``knn.symmetrize``) of a seeded Gaussian mixture."""
+    rng = np.random.default_rng(seed)
+    X = np.vstack([
+        rng.normal(rng.normal(size=dim) * 3, 1.0, size=(per_cluster, dim)) for _ in range(n_clusters)
+    ])
+    D = ((X[:, None, :] - X[None, :, :]) ** 2).sum(-1)
+    np.fill_diagonal(D, np.inf)
+    src = np.repeat(np.arange(len(X)), k)
+    dst = np.argsort(D, axis=1, kind="stable")[:, :k].ravel()
+    e = pd.DataFrame({"src": np.r_[src, dst], "dst": np.r_[dst, src], "weight": np.r_[D[src, dst], D[src, dst]]})
+    e = e.groupby(["src", "dst"], as_index=False)["weight"].min()
+    return spark.createDataFrame(e, "src long, dst long, weight double").localCheckpoint(eager=True)
+
+
+def assignment_rows(df):
+    return sorted((int(r["id"]), int(r["shard"])) for r in df.collect())
+
+
+def assert_paths_identical(edges, num_shards, coarse_target):
+    spark_path = P._graph_partition_spark(edges, num_shards, 0.05, coarse_target, 3, P.SEED)
+    driver_path = P.graph_partition(edges, num_shards, coarse_target=coarse_target)
+    got = assignment_rows(driver_path)
+    assert got == assignment_rows(spark_path)
+    return got
+
+
+def test_driver_path_matches_spark_path_multilevel(spark):
+    """Multilevel case with refinement: 496 vertices coarsen below the
+    target of 64, then refine at full resolution into 16 shards."""
+    edges = knn_graph_edges(spark, 8, 62, 16, 10)
+    got = assert_paths_identical(edges, 16, 64)
+    assert len(got) == 496 and len({s for _, s in got}) == 16
+
+
+def test_driver_path_matches_spark_path_without_coarsening(spark):
+    """coarse_target ≥ n: no LP level runs, the initial partition is the
+    answer and refinement is skipped."""
+    edges = make_edges_df(spark, ring_of_cliques(6, 6))
+    assert_paths_identical(edges, 4, 36)
+
+
+def test_driver_path_matches_spark_path_exact_ties(spark):
+    """Integer weights make affinities and gains tie exactly, so every
+    tie-break order (cand asc, id asc) decides moves."""
+    edges = make_edges_df(spark, ring_of_cliques(6, 6))
+    assert_paths_identical(edges, 3, 12)
+
+
+def test_driver_path_matches_spark_path_isolated_coarse_vertices(spark):
+    """Disjoint cliques next to a ring of cliques: each disjoint clique
+    contracts to a vertex with no edges, which the next LP level gates with
+    a NULL affinity (ordered last) and the initial partition places as a
+    leftover."""
+    el = ring_of_cliques(6, 6)
+    for c in range(3):
+        base = 100 + 10 * c
+        el += [(base + i, base + j, 1.0) for i in range(5) for j in range(i + 1, 5)]
+    assert_paths_identical(make_edges_df(spark, el), 4, 4)
+
+
+def test_graph_partition_small_graph_runs_few_spark_jobs(spark):
+    """A graph under the broadcast threshold is one collect plus driver
+    work: a silent fall-back to the DataFrame supersteps (dozens of jobs)
+    shows here."""
+    edges = make_edges_df(spark, ring_of_cliques(6, 6))
+    sc = spark.sparkContext
+    group = "graph_partition_job_probe"
+    sc.setJobGroup(group, group)
+    try:
+        rows = P.graph_partition(edges, 3, coarse_target=12).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(rows) == 36
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 3
+
+
+def test_spark_path_size_estimates_stay_bounded(spark, monkeypatch):
+    """Over four LP levels the Spark path's carried size estimates would
+    compound past 2^63 (a join's estimate is the product of its
+    children's); every checkpoint it takes stays at or below Spark's
+    no-estimate value, and the assignment still equals the driver path's."""
+    from gp_ann_spark import checkpoint as CP
+
+    def size_estimate(df):
+        return df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+
+    raw, kept, levels = [], [], []
+
+    def recording_checkpoint(df, eager=True):
+        raw.append(size_estimate(df))
+        out = CP.local_checkpoint(df, eager)
+        kept.append(size_estimate(out))
+        return out
+
+    real_level = P._lp_coarsen_level
+    monkeypatch.setattr(P, "local_checkpoint", recording_checkpoint)
+    monkeypatch.setattr(P, "_lp_coarsen_level", lambda *a, **kw: levels.append(1) or real_level(*a, **kw))
+    edges = knn_graph_edges(spark, 6, 50, 8, 8)
+    assert_paths_identical(edges, 4, 8)
+    assert len(levels) >= 4
+    assert max(raw) > (1 << 63) - 1
+    assert max(kept) <= (1 << 63) - 1

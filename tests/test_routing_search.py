@@ -451,6 +451,23 @@ def test_score_distributed_chunked_queries_bit_identical(spark, score_fixture, m
         assert a == b, nv
 
 
+@pytest.mark.parametrize("null_row", [0, 23])
+@pytest.mark.parametrize("block_bytes", [None, 512])
+def test_score_distributed_null_query_vector_raises(spark, score_fixture, monkeypatch, null_row, block_bytes):
+    """A NULL query vector fails the distributed scorer loudly — in the
+    first row (the dimension probe) and in a later row (the collected
+    block), with one query block and with several."""
+    rp, _, Q = score_fixture
+    if block_bytes is not None:
+        monkeypatch.setattr(RT, "MAX_QUERY_BLOCK_BYTES", block_bytes)  # d=8 → 8 rows/block
+    qs = spark.createDataFrame(
+        [(i, None if i == null_row else [float(x) for x in q]) for i, q in enumerate(Q)],
+        "query_id long, vec array<double>",
+    )
+    with pytest.raises(ValueError, match="NULL vectors"):
+        RT.score_routing_points(qs, rp, num_voting=25, distributed=True).collect()
+
+
 def test_score_overflow_all_duplicates_vectorized(spark):
     """Adversarial mass-duplicate routing table: every row is the same
     vector, so EVERY query row overflows the preselect margin in every
