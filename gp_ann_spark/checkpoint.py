@@ -85,9 +85,10 @@ def swap_checkpoint(new_df: DataFrame, prev_df: DataFrame | None = None) -> Data
     """Materialize ``new_df`` as a localCheckpoint, then release ``prev_df``.
 
     The standard superstep state swap: lineage truncated, old blocks freed,
-    bounded memory no matter how many supersteps run.
+    bounded memory no matter how many supersteps run. The checkpoint's
+    size estimate is clamped as in ``local_checkpoint``.
     """
-    out = new_df.localCheckpoint(eager=True)
+    out = local_checkpoint(new_df, eager=True)
     release_local_checkpoint(prev_df)
     return out
 

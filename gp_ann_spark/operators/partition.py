@@ -11,11 +11,10 @@ OGP affinity moves (:23-141).
 The graph partitioner is the north_star centerpiece: multilevel
 **label-propagation coarsening → driver-local initial partition → projection
 + balance-constrained LP refinement**. Where it runs depends on the edge
-table's size: one that fits under the session's broadcast threshold
-(``spark.sql.autoBroadcastJoinThreshold``) is collected once and the driver
-runs the whole algorithm in vectorized NumPy; above it, Spark runs the same
-algorithm as DataFrame supersteps, with the same tie-breaks and therefore
-the same assignment:
+table's size: one of at most ``MAX_DRIVER_EDGES`` rows is collected once
+and the driver runs the whole algorithm in vectorized NumPy; above it, Spark
+runs the same algorithm as DataFrame supersteps, with the same tie-breaks
+and therefore the same assignment:
 
 - coarsening contracts the graph ~10× per level via size-constrained LP;
   after ~3-5 levels even a 10^12-edge graph fits on the driver (≤ ~100k
@@ -153,6 +152,14 @@ def imbalance(assignment: DataFrame, num_shards: int | None = None) -> float:
 
 # ------------------------------------------------ multilevel graph partition
 MAX_COARSEN_LEVELS = 8
+# Largest edge table graph_partition collects and partitions on the driver;
+# larger ones run as DataFrame supersteps. It is the largest size measured
+# on the driver path (4-core VM, local[4], 16 shards, coarse_target=256):
+# 455,844 corpus k-NN edges took 16.5 s (the Spark path: 50.9 s, same
+# assignment) and a 2,801,396-edge 2-D mesh 125 s, at a driver-process peak
+# RSS of 293 MB and 904 MB. Most of that time is the initial partition of
+# the coarse graph, which runs on the driver on both paths.
+MAX_DRIVER_EDGES = 2_800_000
 
 
 def _lp_coarsen_level(edges: DataFrame, weights: DataFrame, cap: int, rounds: int = 2) -> DataFrame:
@@ -486,13 +493,11 @@ def refine_partition(
         if n_moved == 0:
             release_local_checkpoint(movers)
             break
-        nxt = local_checkpoint(
+        asn = swap_checkpoint(
             asn.join(movers, "id", "left")
             .select("id", F.coalesce(F.col("new_shard"), F.col("shard")).cast("int").alias("shard")),
-            eager=True,
+            asn,
         )
-        release_local_checkpoint(asn)
-        asn = nxt
         release_local_checkpoint(movers)
     # the returned asn checkpoint is the caller's to consume; the sym edge
     # view was only ever this loop's join input — free its blocks here
@@ -512,31 +517,30 @@ def graph_partition(
     (replaces KaMinPar, partitioning.cpp:172-199; composed into "GP"
     partitioning.cpp:251-264). Returns (id, shard), max shard ≤ (1+ε)n/s.
 
-    An edge table that fits under the session's broadcast threshold
-    (``spark.sql.autoBroadcastJoinThreshold``, counted as 24-byte
-    ``(long, long, double)`` rows) is collected once and partitioned on the
-    driver by ``_graph_partition_local``; a larger one runs the same
-    algorithm as DataFrame supersteps (``_graph_partition_spark``). Both
-    return the same assignment.
+    An edge table of at most ``MAX_DRIVER_EDGES`` rows is collected once
+    and partitioned on the driver by ``_graph_partition_local``; a larger
+    one runs the same algorithm as DataFrame supersteps
+    (``_graph_partition_spark``). Both return the same assignment.
     """
-    spark = edges.sparkSession
-    budget = spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold() // 24
-    if budget > 0:
-        pdf = (
-            edges.select("src", "dst", F.col("weight").cast("double"))
-            .limit(budget + 1)
-            .toPandas()
-        )
-        if len(pdf) <= budget:
-            ids, shard = _graph_partition_local(
-                pdf["src"].to_numpy(np.int64), pdf["dst"].to_numpy(np.int64),
-                pdf["weight"].to_numpy(np.float64),
-                num_shards, eps, coarse_target, refine_rounds, seed,
-            )
-            return spark.createDataFrame(
-                pd.DataFrame({"id": ids, "shard": shard.astype(np.int32)}), "id long, shard int"
-            )
-    return _graph_partition_spark(edges, num_shards, eps, coarse_target, refine_rounds, seed)
+    # one non-eager checkpoint feeds the size probe and whichever path runs:
+    # the count materializes it, so the edges' upstream plan executes once
+    # and an oversized table moves no rows to the driver
+    sel = local_checkpoint(edges.select("src", "dst", F.col("weight").cast("double")), eager=False)
+    try:
+        if sel.count() > MAX_DRIVER_EDGES:
+            return _graph_partition_spark(sel, num_shards, eps, coarse_target, refine_rounds, seed)
+        pdf = sel.toPandas()
+    finally:
+        # neither path's result reads sel later: the Spark path's lineage
+        # ends at checkpoints it has materialized, or at driver data
+        release_local_checkpoint(sel)
+    ids, shard = _graph_partition_local(
+        pdf["src"].to_numpy(np.int64), pdf["dst"].to_numpy(np.int64), pdf["weight"].to_numpy(np.float64),
+        num_shards, eps, coarse_target, refine_rounds, seed,
+    )
+    return edges.sparkSession.createDataFrame(
+        pd.DataFrame({"id": ids, "shard": shard.astype(np.int32)}), "id long, shard int"
+    )
 
 
 def _graph_partition_spark(

@@ -329,20 +329,37 @@ def test_driver_path_matches_spark_path_isolated_coarse_vertices(spark):
     assert_paths_identical(make_edges_df(spark, el), 4, 4)
 
 
-def test_graph_partition_small_graph_runs_few_spark_jobs(spark):
-    """A graph under the broadcast threshold is one collect plus driver
-    work: a silent fall-back to the DataFrame supersteps (dozens of jobs)
-    shows here."""
-    edges = make_edges_df(spark, ring_of_cliques(6, 6))
+def partition_jobs(spark, edges, group):
+    """(assignment rows, Spark jobs run) of one graph_partition call."""
     sc = spark.sparkContext
-    group = "graph_partition_job_probe"
     sc.setJobGroup(group, group)
     try:
-        rows = P.graph_partition(edges, 3, coarse_target=12).collect()
+        rows = assignment_rows(P.graph_partition(edges, 3, coarse_target=12))
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
+    return rows, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_graph_partition_small_graph_runs_few_spark_jobs(spark):
+    """A graph of at most MAX_DRIVER_EDGES edges is a count, one collect
+    and driver work: a silent fall-back to the DataFrame supersteps (dozens
+    of jobs) shows here."""
+    edges = make_edges_df(spark, ring_of_cliques(6, 6))
+    rows, jobs = partition_jobs(spark, edges, "graph_partition_job_probe")
     assert len(rows) == 36
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 3
+    assert jobs <= 3
+
+
+def test_graph_partition_over_cutoff_runs_spark_path(spark, monkeypatch):
+    """One edge over MAX_DRIVER_EDGES sends graph_partition to the
+    DataFrame supersteps, fed by the probe's checkpoint, with the same
+    assignment as the driver path."""
+    edges = make_edges_df(spark, ring_of_cliques(6, 6))
+    driver_rows, _ = partition_jobs(spark, edges, "graph_partition_driver")
+    monkeypatch.setattr(P, "MAX_DRIVER_EDGES", edges.count() - 1)
+    spark_rows, jobs = partition_jobs(spark, edges, "graph_partition_spark")
+    assert spark_rows == driver_rows
+    assert jobs > 3
 
 
 def test_spark_path_size_estimates_stay_bounded(spark, monkeypatch):
@@ -356,15 +373,17 @@ def test_spark_path_size_estimates_stay_bounded(spark, monkeypatch):
         return df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
 
     raw, kept, levels = [], [], []
+    real_checkpoint = CP.local_checkpoint
 
     def recording_checkpoint(df, eager=True):
         raw.append(size_estimate(df))
-        out = CP.local_checkpoint(df, eager)
+        out = real_checkpoint(df, eager)
         kept.append(size_estimate(out))
         return out
 
     real_level = P._lp_coarsen_level
     monkeypatch.setattr(P, "local_checkpoint", recording_checkpoint)
+    monkeypatch.setattr(CP, "local_checkpoint", recording_checkpoint)  # swap_checkpoint's
     monkeypatch.setattr(P, "_lp_coarsen_level", lambda *a, **kw: levels.append(1) or real_level(*a, **kw))
     edges = knn_graph_edges(spark, 6, 50, 8, 8)
     assert_paths_identical(edges, 4, 8)
