@@ -1,27 +1,34 @@
-"""Superstep checkpointing with per-partition lineage + metrics, resumable.
+"""Checkpoint ownership for superstep loops, and resumable superstep state.
 
-north_rule: iterative graph algorithms must be "resumable from checkpoint
-with per-partition lineage + metrics". Each superstep of an iterative
-algorithm writes its state DataFrame as Parquet under
-``<dir>/<name>/superstep=<t>/`` plus a ``meta.json`` recording row count,
-per-partition row counts (the lineage of which partition produced what), and
-algorithm metrics (delta, changed-count, ...). ``latest()`` finds the last
-*complete* superstep (meta written after data), so a killed run resumes
-exactly where it stopped.
+Every local checkpoint is pinned in a scope, which owns it::
 
-Checkpointing also truncates Spark lineage — without it, iterative
-DataFrame loops accumulate a plan per superstep and the optimizer chokes
-(SURVEY.md §7 "iterative-loop lineage blowup").
+    with checkpoints() as cp:
+        state = cp.pin(first)                  # eager; eager=False is lazy
+        for _ in range(rounds):
+            state = cp.swap(step(state), state)
+        return cp.keep(result(state))
+
+``swap`` releases ``prev`` at once, and the end of the block (normal or by
+exception) releases the rest — but only what the scope owns and no live
+frame (a pin of an open scope of this thread, or a kept result) reads, found
+by walking RDD dependencies from the frames' LogicalRDD leaves. What is still
+read passes to the innermost open scope of the thread, or with none to the
+caller (``release_local_checkpoint``). ``fan_out`` gives each worker thread
+its own scope. ``SuperstepCheckpointer`` with a ``base_dir`` also writes each
+superstep as Parquet plus a ``meta.json`` (row counts per partition,
+metrics), written after the data, so a killed run resumes at ``latest()``.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import threading
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
-from typing import Any
+from typing import Any, Callable, Iterable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -29,45 +36,32 @@ def realias(df: DataFrame) -> DataFrame:
     """Fresh exprIds for every column. localCheckpoint keeps the original
     attribute ids, so joining/cogrouping a frame with its own derivation
     trips Spark's ambiguous-self-join check; a trivial re-alias fixes it."""
-    from pyspark.sql import functions as F
-
     return df.select([F.col(c).alias(c) for c in df.columns])
 
 
 def release_local_checkpoint(df: DataFrame | None) -> None:
-    """Free the storage of a localCheckpoint'ed DataFrame.
-
-    Iterative loops create one checkpoint per superstep; without explicit
-    release the cached RDD blocks accumulate until the context cleaner
-    eventually notices, and long loops degrade badly under the memory
-    pressure. Safe to call once the successor state is materialized.
-    """
-    if df is None:
-        return
+    """Free the storage of a local checkpoint the caller owns."""
     try:
-        plan = df._jdf.queryExecution().analyzed()
-        if plan.getClass().getName().endswith("LogicalRDD"):
-            plan.rdd().unpersist(False)
+        rdd = _checkpoint_rdd(df)
+        if rdd is not None:
+            rdd.unpersist(False)
     except Exception:  # noqa: BLE001 — best-effort resource cleanup
         pass
+
+
+def _checkpoint_rdd(df: DataFrame | None) -> Any:
+    """The RDD behind ``df`` if ``df`` is a checkpoint, else None."""
+    plan = df._jdf.queryExecution().analyzed() if df is not None else None
+    return plan.rdd() if plan is not None and plan.getClass().getName().endswith("LogicalRDD") else None
 
 
 _NO_ESTIMATE = (1 << 63) - 1  # Long.MaxValue: Spark's default sizeInBytes
 
 
-def local_checkpoint(df: DataFrame, eager: bool = True) -> DataFrame:
-    """``df.localCheckpoint(eager)`` with its carried size estimate clamped.
-
-    A local checkpoint keeps its source plan's ``sizeInBytes`` estimate,
-    and Catalyst estimates a join as the product of its children's
-    estimates, so a loop that joins checkpoint against checkpoint grows the
-    estimate's digit count about tenfold per level (7 → 92 → 1,028 →
-    11,323 → 124,574 digits over four LP-coarsening levels); the BigInteger
-    products then stall the driver inside planning. An estimate above
-    2^63−1 is replaced by Spark's own "no estimate" value (the session's
-    default size, 2^63−1); smaller ones are kept, so static plan choices
-    such as broadcast joins do not move.
-    """
+def _local_checkpoint(df: DataFrame, eager: bool) -> DataFrame:
+    """``df.localCheckpoint(eager)`` with its carried size estimate clamped to
+    2^63−1: a join's estimate is the product of its children's, so looped
+    checkpoint joins grow it tenfold in digits per level and stall planning."""
     out = df.localCheckpoint(eager=eager)
     plan = out._jdf.queryExecution().analyzed()
     if plan.stats().sizeInBytes() <= _NO_ESTIMATE:
@@ -81,16 +75,128 @@ def local_checkpoint(df: DataFrame, eager: bool = True) -> DataFrame:
     return type(out)(jvm.org.apache.spark.sql.classic.Dataset.ofRows(session, clamped), out.sparkSession)
 
 
-def swap_checkpoint(new_df: DataFrame, prev_df: DataFrame | None = None) -> DataFrame:
-    """Materialize ``new_df`` as a localCheckpoint, then release ``prev_df``.
+def _frames(obj: Any) -> list[DataFrame]:
+    """The DataFrames in a result: a frame, or nested tuples/lists/dicts."""
+    if isinstance(obj, DataFrame):
+        return [obj]
+    items = obj.values() if isinstance(obj, dict) else obj if isinstance(obj, (tuple, list)) else ()
+    return [df for o in items for df in _frames(o)]
 
-    The standard superstep state swap: lineage truncated, old blocks freed,
-    bounded memory no matter how many supersteps run. The checkpoint's
-    size estimate is clamped as in ``local_checkpoint``.
-    """
-    out = local_checkpoint(new_df, eager=True)
-    release_local_checkpoint(prev_df)
+
+def _leaf_rdds(df: DataFrame) -> dict[int, Any]:
+    """The RDDs of ``df``'s LogicalRDD leaves (a checkpoint is its own leaf)."""
+    leaves, out = df._jdf.queryExecution().analyzed().collectLeaves().iterator(), {}
+    while leaves.hasNext():
+        leaf = leaves.next()
+        if leaf.getClass().getName().endswith("LogicalRDD"):
+            rdd = leaf.rdd()
+            out[rdd.id()] = rdd
     return out
+
+
+def _reads(rdds: Iterable[Any]) -> set[int]:
+    """Ids of the RDDs ``rdds`` read, themselves included, stopping at
+    materialized checkpoints and at shuffles whose map output is complete
+    (under AQE a lazy checkpoint runs its shuffle stages when taken)."""
+    seen: set[int] = set()
+    stack, tracker = list(rdds), None
+    while stack:
+        rdd = stack.pop()
+        if rdd.id() in seen:
+            continue
+        seen.add(rdd.id())
+        if rdd.isCheckpointed():
+            continue
+        deps = rdd.dependencies().iterator()
+        while deps.hasNext():
+            dep = deps.next()
+            if dep.getClass().getSimpleName() == "ShuffleDependency":
+                tracker = tracker or dep.rdd().context().env().mapOutputTracker()
+                if tracker.getNumAvailableOutputs(dep.shuffleId()) >= dep.rdd().getNumPartitions():
+                    continue
+            stack.append(dep.rdd())
+    return seen
+
+
+class _Thread(threading.local):
+    def __init__(self) -> None:
+        self.scopes: list[checkpoints] = []  # open scopes, outermost first
+
+
+_THREAD = _Thread()
+
+
+def _live(scopes: list[checkpoints], results: Iterable[DataFrame] = ()) -> list[Any]:
+    """RDDs of the live frames: the pins and kept results of ``scopes``."""
+    frames = [*results, *(df for s in scopes for df in s._results)]
+    return [r for s in scopes for r in s._pins.values()] + [r for df in frames for r in _leaf_rdds(df).values()]
+
+
+class checkpoints:  # noqa: N801 — used as ``with checkpoints() as cp:``
+    """A scope owning the local checkpoints pinned in it (see module doc)."""
+
+    def __init__(self) -> None:
+        self._pins: dict[int, Any] = {}  # RDD id → the checkpoint's JVM RDD
+        self._results: list[DataFrame] = []
+
+    def __enter__(self) -> checkpoints:
+        _THREAD.scopes.append(self)
+        return self
+
+    def __exit__(self, *exc: Any) -> None:
+        scopes = _THREAD.scopes
+        scopes.pop()
+        live = _reads(_live(scopes, self._results)) if self._pins else set()
+        for rid in self._pins.keys() - live:
+            self._pins.pop(rid).unpersist(False)
+        if scopes:
+            scopes[-1]._pins.update(self._pins)
+
+    def pin(self, df: DataFrame, eager: bool = True) -> DataFrame:
+        """Local checkpoint of ``df``, owned by this scope."""
+        out = _local_checkpoint(df, eager)
+        rdd = _checkpoint_rdd(out)
+        self._pins[rdd.id()] = rdd
+        return out
+
+    def swap(self, new: DataFrame, prev: DataFrame | None) -> DataFrame:
+        """``new`` (checkpointed eagerly unless already a pin of this scope
+        or one inside it) replaces ``prev``, a checkpoint or plan over them."""
+        scopes, rdd = _THREAD.scopes, _checkpoint_rdd(new)
+        owner = next((s for s in scopes[scopes.index(self):] if rdd is not None and rdd.id() in s._pins), None)
+        if owner is None:
+            new = self.pin(new)
+        else:
+            self._pins[rdd.id()] = owner._pins.pop(rdd.id())
+        self._release(prev)
+        return new
+
+    def keep(self, result: Any) -> Any:
+        """Declare what this scope hands back; returns it unchanged."""
+        self._results += _frames(result)
+        return result
+
+    def _release(self, df: DataFrame | None) -> None:
+        mine = {rid: rdd for rid, rdd in _leaf_rdds(df).items() if rid in self._pins} if df is not None else {}
+        live = _reads(r for r in _live(_THREAD.scopes) if r.id() not in mine) if mine else set()
+        for rid in mine.keys() - live:
+            self._pins.pop(rid).unpersist(False)
+
+
+def fan_out(fn: Callable[[checkpoints, Any], Any], items: Iterable[Any], max_workers: int) -> list[Any]:
+    """``[fn(cp, x) for x in items]`` on a thread pool, each call in its own
+    scope ``cp``, whose leftovers pass to the caller's innermost scope."""
+
+    def run(item: Any) -> tuple[Any, checkpoints]:
+        with checkpoints() as cp:
+            return cp.keep(fn(cp, item)), cp
+
+    with ThreadPoolExecutor(max_workers=max_workers) as ex:
+        done = list(ex.map(run, items))
+    if _THREAD.scopes:
+        for _, cp in done:
+            _THREAD.scopes[-1]._pins.update(cp._pins)
+    return [out for out, _ in done]
 
 
 @dataclass
@@ -98,7 +204,6 @@ class SuperstepCheckpointer:
     base_dir: str | None
     name: str = "state"
     history: list[dict[str, Any]] = field(default_factory=list)
-    _prev: DataFrame | None = None
 
     def _dir(self, superstep: int) -> str:
         assert self.base_dir is not None
@@ -112,35 +217,20 @@ class SuperstepCheckpointer:
 
     def save(
         self, df: DataFrame, superstep: int, metrics: dict[str, Any] | None = None,
-        materialized: bool = False,
+        prev: DataFrame | None = None,
     ) -> DataFrame:
-        """Persist superstep state; returns the (lineage-truncated) state.
-
-        With no ``base_dir``: ``localCheckpoint`` only (lineage truncation,
-        no resumability) — the fast path for tests/bench.
-
-        ``materialized``: ``df`` is a local checkpoint the caller has
-        already materialized (e.g. by counting it). It becomes the state as
-        is instead of being copied again; with ``base_dir`` it is written
-        out and then released.
-        """
+        """``df`` replaces ``prev`` as superstep state in the caller's scope:
+        a ``swap``, or with a ``base_dir`` a write and read-back of ``df``."""
+        scope = _THREAD.scopes[-1]
+        self.history.append({"superstep": superstep, **(metrics or {})})
         if self.base_dir is None:
-            if materialized:
-                out = df
-                release_local_checkpoint(self._prev)
-            else:
-                out = swap_checkpoint(df, self._prev)
-            self._prev = out
-            self.history.append({"superstep": superstep, **(metrics or {})})
-            return out
+            return scope.swap(df, prev)
         path = self._dir(superstep)
         df.write.mode("overwrite").parquet(path)
-        if materialized:
-            release_local_checkpoint(df)
+        scope._release(df)
+        scope._release(prev)
         out = df.sparkSession.read.parquet(path)
-        per_part = (
-            out.groupBy(F.spark_partition_id().alias("pid")).count().orderBy("pid").collect()
-        )
+        per_part = out.groupBy(F.spark_partition_id().alias("pid")).count().orderBy("pid").collect()
         meta = {
             "superstep": superstep,
             "rows": int(sum(r["count"] for r in per_part)),
@@ -149,7 +239,6 @@ class SuperstepCheckpointer:
         }
         with open(self._meta_path(superstep), "w") as f:
             json.dump(meta, f)
-        self.history.append({"superstep": superstep, **(metrics or {})})
         return out
 
     def latest(self) -> int | None:
@@ -166,8 +255,13 @@ class SuperstepCheckpointer:
         ]
         return max(done) if done else None
 
-    def load(self, spark: SparkSession, superstep: int) -> DataFrame:
-        return spark.read.parquet(self._dir(superstep))
+    def resume(self, init: DataFrame, metrics: dict[str, Any] | None = None) -> tuple[DataFrame, int]:
+        """(state, first superstep to run): the last complete superstep's
+        state, or ``init`` saved as superstep 0."""
+        start = self.latest()
+        if start is None:
+            return self.save(init, 0, metrics), 1
+        return init.sparkSession.read.parquet(self._dir(start)), start + 1
 
     def load_meta(self, superstep: int) -> dict[str, Any]:
         with open(self._meta_path(superstep)) as f:

@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from gp_ann_spark.checkpoint import checkpoints
 from gp_ann_spark.functions.windows import bounded_global_window
 
 DIM = 64  # fixed featurizer dimensionality (FIXTURES.md §2)
@@ -71,23 +72,24 @@ def dense_ids(df: DataFrame, order_col: str = "sha256", scalable: bool = True) -
     # otherwise see different partition layouts (dropping/duplicating rows
     # in the offset join). At extreme scale swap localCheckpoint for a
     # parquet/Iceberg checkpoint — the barrier is what matters.
-    with_pid = parted.withColumn("_pid", F.spark_partition_id()).localCheckpoint(eager=True)
-    # Small aggregate (one row per partition) → broadcast prefix sums.
-    counts = with_pid.groupBy("_pid").count()
-    offsets = counts.withColumn(
-        "_offset",
-        F.coalesce(
-            F.sum("count").over(bounded_global_window("_pid").rowsBetween(Window.unboundedPreceding, -1)),
-            F.lit(0),
-        ),
-    ).select("_pid", "_offset")
-    local_rank = F.row_number().over(Window.partitionBy("_pid").orderBy(order_col)).cast("long") - 1
-    return (
-        with_pid.withColumn("_local", local_rank)
-        .join(F.broadcast(offsets), "_pid")
-        .withColumn("id", (F.col("_offset") + F.col("_local")).cast("long"))
-        .drop("_pid", "_local", "_offset")
-    )
+    with checkpoints() as cp:
+        with_pid = cp.pin(parted.withColumn("_pid", F.spark_partition_id()))
+        # Small aggregate (one row per partition) → broadcast prefix sums.
+        counts = with_pid.groupBy("_pid").count()
+        offsets = counts.withColumn(
+            "_offset",
+            F.coalesce(
+                F.sum("count").over(bounded_global_window("_pid").rowsBetween(Window.unboundedPreceding, -1)),
+                F.lit(0),
+            ),
+        ).select("_pid", "_offset")
+        local_rank = F.row_number().over(Window.partitionBy("_pid").orderBy(order_col)).cast("long") - 1
+        return cp.keep(
+            with_pid.withColumn("_local", local_rank)
+            .join(F.broadcast(offsets), "_pid")
+            .withColumn("id", (F.col("_offset") + F.col("_local")).cast("long"))
+            .drop("_pid", "_local", "_offset")
+        )
 
 
 def featurize(files: DataFrame, dim: int = DIM, seed: int = 42, id_col: str = "id") -> DataFrame:

@@ -14,7 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from gp_ann_spark.checkpoint import release_local_checkpoint
+from gp_ann_spark.checkpoint import checkpoints
 from gp_ann_spark.functions.windows import bounded_global_window
 
 from gp_ann_spark.functions.distances import sql_distance
@@ -71,55 +71,50 @@ def validate_ground_truth(
     # LEFT join: a GT row naming a nonexistent point id must surface in the
     # report (the reference's validation errors out on them), not silently
     # vanish from the counters and the repaired lists
-    joined = (
-        gt.join(pv, "neighbor_id", "left")
-        .join(F.broadcast(qv), "query_id")
-        .localCheckpoint(eager=True)
-    )
-    n_missing = joined.where(F.col("_pv").isNull()).count()
-    with_true = (
-        joined.where(F.col("_pv").isNotNull())
-        .withColumn("true_dist", sql_distance(F.col("_qv"), F.col("_pv"), metric))
-        .drop("_pv", "_qv")
-        .localCheckpoint(eager=True)
-    )
-    # with_true is materialized and n_missing counted — the nq×k×vec
-    # intermediate has no further reader; keep the gate re-runnable in a
-    # long-lived session instead of accumulating dead cached blocks
-    release_local_checkpoint(joined)
-    w_rank = Window.partitionBy("query_id").orderBy("rank")
-    flags = (
-        with_true.withColumn("_prev", F.lag("dist").over(w_rank))
-        .withColumn("_prev_true", F.lag("true_dist").over(w_rank))
-        .groupBy("query_id")
-        .agg(
-            F.max((F.col("dist") < F.col("_prev")).cast("int")).alias("bad_before"),
-            F.max((F.col("true_dist") < F.col("_prev_true")).cast("int")).alias("bad_after"),
+    with checkpoints() as cp:
+        with checkpoints() as step:
+            joined = step.pin(gt.join(pv, "neighbor_id", "left").join(F.broadcast(qv), "query_id"))
+            n_missing = joined.where(F.col("_pv").isNull()).count()
+            # with_true outlives joined: the nq×k×vec intermediate is released
+            # as soon as with_true is materialized and n_missing counted
+            with_true = cp.pin(
+                joined.where(F.col("_pv").isNotNull())
+                .withColumn("true_dist", sql_distance(F.col("_qv"), F.col("_pv"), metric))
+                .drop("_pv", "_qv")
+            )
+        w_rank = Window.partitionBy("query_id").orderBy("rank")
+        flags = (
+            with_true.withColumn("_prev", F.lag("dist").over(w_rank))
+            .withColumn("_prev_true", F.lag("true_dist").over(w_rank))
+            .groupBy("query_id")
+            .agg(
+                F.max((F.col("dist") < F.col("_prev")).cast("int")).alias("bad_before"),
+                F.max((F.col("true_dist") < F.col("_prev_true")).cast("int")).alias("bad_after"),
+            )
+            .agg(F.sum("bad_before").alias("wsb"), F.sum("bad_after").alias("wsa"))
         )
-        .agg(F.sum("bad_before").alias("wsb"), F.sum("bad_after").alias("wsa"))
-    )
-    err = F.abs(F.col("dist") - F.col("true_dist"))
-    counts = with_true.agg(
-        F.sum((err > 1e-8).cast("long")).alias("mism"),
-        *[F.sum((err > e).cast("long")).alias(f"e{i}") for i, e in enumerate(EPS_GRID)],
-    )
-    crow = counts.collect()[0]
-    frow = flags.collect()[0]
-    report = {
-        "distance_mismatches": int(crow["mism"] or 0),
-        "wrong_by_eps": {e: int(crow[f"e{i}"] or 0) for i, e in enumerate(EPS_GRID)},
-        "wrong_sorts_before": int(frow["wsb"] or 0),
-        "wrong_sorts_after": int(frow["wsa"] or 0),
-        "missing_neighbors": int(n_missing),
-    }
-    w_true = Window.partitionBy("query_id").orderBy(F.col("true_dist").asc(), F.col("neighbor_id").asc())
-    repaired = with_true.withColumn("rank", F.row_number().over(w_true)).select(
-        "query_id", "neighbor_id", F.col("true_dist").alias("dist"), "rank"
-    )
-    # same short-GT guard as distance_to_kth_neighbor: a query with < k
-    # repaired rows keeps its last-rank threshold instead of dropping out
-    thresholds = distance_to_kth_neighbor(repaired, k)
-    return repaired, thresholds, report
+        err = F.abs(F.col("dist") - F.col("true_dist"))
+        counts = with_true.agg(
+            F.sum((err > 1e-8).cast("long")).alias("mism"),
+            *[F.sum((err > e).cast("long")).alias(f"e{i}") for i, e in enumerate(EPS_GRID)],
+        )
+        crow = counts.collect()[0]
+        frow = flags.collect()[0]
+        report = {
+            "distance_mismatches": int(crow["mism"] or 0),
+            "wrong_by_eps": {e: int(crow[f"e{i}"] or 0) for i, e in enumerate(EPS_GRID)},
+            "wrong_sorts_before": int(frow["wsb"] or 0),
+            "wrong_sorts_after": int(frow["wsa"] or 0),
+            "missing_neighbors": int(n_missing),
+        }
+        w_true = Window.partitionBy("query_id").orderBy(F.col("true_dist").asc(), F.col("neighbor_id").asc())
+        repaired = with_true.withColumn("rank", F.row_number().over(w_true)).select(
+            "query_id", "neighbor_id", F.col("true_dist").alias("dist"), "rank"
+        )
+        # same short-GT guard as distance_to_kth_neighbor: a query with < k
+        # repaired rows keeps its last-rank threshold instead of dropping out
+        thresholds = distance_to_kth_neighbor(repaired, k)
+        return cp.keep((repaired, thresholds, report))
 
 
 def recall(results: DataFrame, thresholds: DataFrame, k: int, n_queries: int, eps: float = 1e-9) -> float:

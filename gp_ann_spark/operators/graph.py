@@ -25,7 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from gp_ann_spark.checkpoint import SuperstepCheckpointer, release_local_checkpoint, swap_checkpoint
+from gp_ann_spark.checkpoint import SuperstepCheckpointer, checkpoints
 
 
 def vertices(edges: DataFrame) -> DataFrame:
@@ -94,8 +94,7 @@ def pagerank(
     state twice — see the loop comment). Either way the dangling mass stays
     in the plan as a broadcast 1-row aggregate, never a driver collect.
     """
-    spark = edges.sparkSession
-    cp = checkpointer or SuperstepCheckpointer(None, "pagerank")
+    ckpt = checkpointer or SuperstepCheckpointer(None, "pagerank")
     fixed_iters = tol <= 0.0
     verts = vertices(edges).cache()
     n = verts.count()
@@ -114,94 +113,76 @@ def pagerank(
     dangling = verts.join(e.select("src").distinct(), verts.id == F.col("src"), "left_anti").cache()
     has_dangling = dangling.limit(1).count() > 0
 
-    start = cp.latest()
-    if start is not None:
-        ranks = cp.load(spark, start)
-        it0 = start + 1
-    else:
-        ranks = verts.withColumn("pagerank", F.lit(1.0 / n))
-        ranks = cp.save(ranks, 0, {"delta": None})
-        it0 = 1
+    with checkpoints() as cp:
+        ranks, it0 = ckpt.resume(verts.withColumn("pagerank", F.lit(1.0 / n)), {"delta": None})
 
-    n_iter = it0 - 1
-    base_const = (1.0 - damping) / n
-    for it in range(it0, max_iter + 1):
-        n_iter = it
-        # one shuffle per superstep: contributions ∪ zero-rows-for-all-verts
-        # → a single partial/final sum by id (replaces groupBy(dst) + a
-        # second left-join-with-verts shuffle)
-        contrib_rows = (
-            ranks.join(e, ranks.id == e.src)
-            .select(F.col("dst").alias("id"), (F.col("pagerank") / F.col("outdeg")).alias("c"))
-        )
-        zero_rows = verts.select("id", F.lit(0.0).alias("c"))
-        summed = contrib_rows.unionByName(zero_rows).groupBy("id").agg(F.sum("c").alias("_s"))
-        if has_dangling:
-            # dangling mass stays IN the plan as a broadcast 1-row aggregate
-            # — a driver-side collect here would be an action per superstep
-            # that, in fixed-iteration mode, re-executes every lazy join
-            # since the last checkpoint (the mode's whole point is zero
-            # per-superstep actions). Same arithmetic order as the scalar
-            # form: (base + d·dm/n) + d·Σc, so values are bit-unchanged.
-            dm = (
-                ranks.join(dangling.select("id"), "id", "left_semi")
-                .agg(F.coalesce(F.sum("pagerank"), F.lit(0.0)).alias("_dm"))
+        n_iter = it0 - 1
+        base_const = (1.0 - damping) / n
+        for it in range(it0, max_iter + 1):
+            n_iter = it
+            # one shuffle per superstep: contributions ∪ zero-rows-for-all-verts
+            # → a single partial/final sum by id (replaces groupBy(dst) + a
+            # second left-join-with-verts shuffle)
+            contrib_rows = (
+                ranks.join(e, ranks.id == e.src)
+                .select(F.col("dst").alias("id"), (F.col("pagerank") / F.col("outdeg")).alias("c"))
             )
-            new_ranks = summed.crossJoin(F.broadcast(dm)).select(
-                "id",
-                (
-                    F.lit(base_const)
-                    + F.lit(damping) * F.col("_dm") / F.lit(float(n))
-                    + F.lit(damping) * F.col("_s")
-                ).alias("pagerank"),
-            )
-        else:
-            new_ranks = summed.select(
-                "id", (F.lit(base_const) + F.lit(damping) * F.col("_s")).alias("pagerank")
-            )
-        if fixed_iters:
-            # no convergence action; truncate lineage only every few steps
-            if it % checkpoint_every == 0 or it == max_iter:
-                # same prev-release dance as the tol>0 branch below: on the
-                # dangling path `ranks` is a swap_checkpoint product the
-                # checkpointer does not own — cp.save frees only its own
-                # _prev, so without this the it=interval-1 checkpoint of
-                # every interval leaks for the session's lifetime
-                prev = ranks
-                ranks = cp.save(new_ranks, it, {"delta": None})
-                release_local_checkpoint(prev)
-            elif has_dangling:
-                # the dangling plan reads `ranks` twice (contributions +
-                # mass aggregate): materialize each superstep once, or lazy
-                # pipelining re-executes the window 2^k times through the
-                # dual reference. Dangling-free graphs (k-NN: every vertex
-                # has out-edges) keep the fully lazy pipeline below.
-                ranks = swap_checkpoint(new_ranks, ranks)
+            zero_rows = verts.select("id", F.lit(0.0).alias("c"))
+            summed = contrib_rows.unionByName(zero_rows).groupBy("id").agg(F.sum("c").alias("_s"))
+            if has_dangling:
+                # dangling mass stays IN the plan as a broadcast 1-row aggregate
+                # — a driver-side collect here would be an action per superstep
+                # that, in fixed-iteration mode, re-executes every lazy join
+                # since the last checkpoint (the mode's whole point is zero
+                # per-superstep actions). Same arithmetic order as the scalar
+                # form: (base + d·dm/n) + d·Σc, so values are bit-unchanged.
+                dm = (
+                    ranks.join(dangling.select("id"), "id", "left_semi")
+                    .agg(F.coalesce(F.sum("pagerank"), F.lit(0.0)).alias("_dm"))
+                )
+                new_ranks = summed.crossJoin(F.broadcast(dm)).select(
+                    "id",
+                    (
+                        F.lit(base_const)
+                        + F.lit(damping) * F.col("_dm") / F.lit(float(n))
+                        + F.lit(damping) * F.col("_s")
+                    ).alias("pagerank"),
+                )
             else:
-                ranks = new_ranks
-            continue
-        delta = (
-            new_ranks.join(ranks.withColumnRenamed("pagerank", "old"), "id")
-            .agg(F.max(F.abs(F.col("pagerank") - F.col("old"))).alias("d"))
-            .collect()[0]["d"]
-        )
-        if it % checkpoint_every == 0 or delta < tol:
-            # cp.save releases only the checkpointer's own _prev; the current
-            # ranks frame may be a swap_checkpoint product — release it too
-            # (double-release of an already-freed frame is a no-op)
-            prev = ranks
-            ranks = cp.save(new_ranks, it, {"delta": float(delta)})
-            release_local_checkpoint(prev)
-        else:
-            # must break lineage here: next iter joins new_ranks with its
-            # own ancestor (delta) → ambiguous-self-join otherwise
-            ranks = swap_checkpoint(new_ranks, ranks)
-        if delta < tol:
-            break
-    e.unpersist()
-    dangling.unpersist()
-    verts.unpersist()
-    return ranks.withColumn("n_iter", F.lit(n_iter))
+                new_ranks = summed.select(
+                    "id", (F.lit(base_const) + F.lit(damping) * F.col("_s")).alias("pagerank")
+                )
+            if fixed_iters:
+                # no convergence action; truncate lineage only every few steps
+                if it % checkpoint_every == 0 or it == max_iter:
+                    ranks = ckpt.save(new_ranks, it, {"delta": None}, prev=ranks)
+                elif has_dangling:
+                    # the dangling plan reads `ranks` twice (contributions +
+                    # mass aggregate): materialize each superstep once, or lazy
+                    # pipelining re-executes the window 2^k times through the
+                    # dual reference. Dangling-free graphs (k-NN: every vertex
+                    # has out-edges) keep the fully lazy pipeline below.
+                    ranks = cp.swap(new_ranks, ranks)
+                else:
+                    ranks = new_ranks
+                continue
+            delta = (
+                new_ranks.join(ranks.withColumnRenamed("pagerank", "old"), "id")
+                .agg(F.max(F.abs(F.col("pagerank") - F.col("old"))).alias("d"))
+                .collect()[0]["d"]
+            )
+            if it % checkpoint_every == 0 or delta < tol:
+                ranks = ckpt.save(new_ranks, it, {"delta": float(delta)}, prev=ranks)
+            else:
+                # must break lineage here: next iter joins new_ranks with its
+                # own ancestor (delta) → ambiguous-self-join otherwise
+                ranks = cp.swap(new_ranks, ranks)
+            if delta < tol:
+                break
+        e.unpersist()
+        dangling.unpersist()
+        verts.unpersist()
+        return cp.keep(ranks.withColumn("n_iter", F.lit(n_iter)))
 
 
 # ------------------------------------------------- Connected components (CC)
@@ -232,52 +213,46 @@ def connected_components(
     but each probe row matches exactly one build row (unique id) — AQE's
     skew-join split keeps the hot partitions bounded.
     """
-    spark = edges.sparkSession
-    cp = checkpointer or SuperstepCheckpointer(None, "cc")
+    ckpt = checkpointer or SuperstepCheckpointer(None, "cc")
     sym = _symmetrized_cached(edges)
 
-    start = cp.latest()
-    if start is not None:
-        labels = cp.load(spark, start)
-        it0 = start + 1
-    else:
-        labels = vertices(edges).withColumn("component", F.col("id"))
-        labels = cp.save(labels, 0, {"changed": None})
-        it0 = 1
+    with checkpoints() as cp:
+        labels, it0 = ckpt.resume(vertices(edges).withColumn("component", F.col("id")), {"changed": None})
 
-    for it in range(it0, max_iter + 1):
-        pushed = (
-            labels.join(sym, labels.id == sym.src)
-            .groupBy("dst")
-            .agg(F.min("component").alias("nbr_min"))
-        )
-        stepped = (
-            labels.join(pushed, labels.id == pushed.dst, "left")
-            .select("id", F.least(F.col("component"), F.coalesce(F.col("nbr_min"), F.col("component"))).alias("component"))
-            # break lineage before the self-join; NON-eager — the changed
-            # count below is the materializing action (one driver job per
-            # superstep saved; the LogicalRDD breaks ambiguity identically)
-            .localCheckpoint(eager=False)
-        )
-        ptr = stepped.select(F.col("id").alias("_pid"), F.col("component").alias("_pcomp"))
-        # the superstep's plan executes ONCE: the changed count materializes
-        # this non-eager checkpoint, and the checkpointer takes it as is
-        new_labels = (
-            stepped.join(ptr, stepped.component == ptr._pid, "left")
-            .select("id", F.coalesce("_pcomp", F.col("component")).alias("component"))
-            .localCheckpoint(eager=False)
-        )
-        changed = (
-            new_labels.join(labels.withColumnRenamed("component", "old"), "id")
-            .where(F.col("component") != F.col("old"))
-            .count()
-        )
-        labels = cp.save(new_labels, it, {"changed": int(changed)}, materialized=True)
-        release_local_checkpoint(stepped)
-        if changed == 0:
-            break
-    sym.unpersist()
-    return labels
+        for it in range(it0, max_iter + 1):
+            pushed = (
+                labels.join(sym, labels.id == sym.src)
+                .groupBy("dst")
+                .agg(F.min("component").alias("nbr_min"))
+            )
+            with checkpoints() as step:
+                stepped = step.pin(
+                    labels.join(pushed, labels.id == pushed.dst, "left")
+                    .select("id", F.least(F.col("component"), F.coalesce(F.col("nbr_min"), F.col("component"))).alias("component")),
+                    # break lineage before the self-join; NON-eager — the changed
+                    # count below is the materializing action (one driver job per
+                    # superstep saved; the LogicalRDD breaks ambiguity identically)
+                    eager=False,
+                )
+                ptr = stepped.select(F.col("id").alias("_pid"), F.col("component").alias("_pcomp"))
+                # the superstep's plan executes ONCE: the changed count
+                # materializes this non-eager checkpoint, and the checkpointer
+                # takes it as is
+                new_labels = cp.pin(
+                    stepped.join(ptr, stepped.component == ptr._pid, "left")
+                    .select("id", F.coalesce("_pcomp", F.col("component")).alias("component")),
+                    eager=False,
+                )
+                changed = (
+                    new_labels.join(labels.withColumnRenamed("component", "old"), "id")
+                    .where(F.col("component") != F.col("old"))
+                    .count()
+                )
+            labels = ckpt.save(new_labels, it, {"changed": int(changed)}, prev=labels)
+            if changed == 0:
+                break
+        sym.unpersist()
+        return cp.keep(labels)
 
 
 # ------------------------------------------------- Label propagation (LP)
@@ -296,36 +271,29 @@ def label_propagation(
     window argmax with (count desc, label asc) ordering — fully deterministic
     under synchronous updates.
     """
-    spark = edges.sparkSession
-    cp = checkpointer or SuperstepCheckpointer(None, "lp")
+    ckpt = checkpointer or SuperstepCheckpointer(None, "lp")
     sym = _symmetrized_cached(edges)
 
-    start = cp.latest()
-    if start is not None:
-        labels = cp.load(spark, start)
-        it0 = start + 1
-    else:
-        labels = (init_labels or vertices(edges).withColumn("label", F.col("id"))).select("id", "label")
-        labels = cp.save(labels, 0, {})
-        it0 = 1
+    with checkpoints() as cp:
+        labels, it0 = ckpt.resume((init_labels or vertices(edges).withColumn("label", F.col("id"))).select("id", "label"))
 
-    w = Window.partitionBy("dst").orderBy(F.col("votes").desc(), F.col("label").asc())
-    for it in range(it0, n_iter + 1):
-        votes = (
-            labels.join(sym, labels.id == sym.src)
-            .groupBy("dst", "label")
-            .agg(F.count(F.lit(1)).alias("votes"))
-        )
-        best = votes.withColumn("rn", F.row_number().over(w)).where(F.col("rn") == 1).select(
-            F.col("dst").alias("id"), F.col("label").alias("new_label")
-        )
-        new_labels = (
-            labels.join(best, "id", "left")
-            .select("id", F.coalesce(F.col("new_label"), F.col("label")).alias("label"))
-        )
-        labels = cp.save(new_labels, it, {})
-    sym.unpersist()
-    return labels
+        w = Window.partitionBy("dst").orderBy(F.col("votes").desc(), F.col("label").asc())
+        for it in range(it0, n_iter + 1):
+            votes = (
+                labels.join(sym, labels.id == sym.src)
+                .groupBy("dst", "label")
+                .agg(F.count(F.lit(1)).alias("votes"))
+            )
+            best = votes.withColumn("rn", F.row_number().over(w)).where(F.col("rn") == 1).select(
+                F.col("dst").alias("id"), F.col("label").alias("new_label")
+            )
+            new_labels = (
+                labels.join(best, "id", "left")
+                .select("id", F.coalesce(F.col("new_label"), F.col("label")).alias("label"))
+            )
+            labels = ckpt.save(new_labels, it, {}, prev=labels)
+        sym.unpersist()
+        return cp.keep(labels)
 
 
 # ------------------------------------------------------- Triangle counting
@@ -383,6 +351,7 @@ def triangle_count(edges: DataFrame, per_vertex: bool = False) -> DataFrame:
         .unionByName(tris.select(F.col("y").alias("id")))
         .unionByName(tris.select(F.col("z").alias("id")))
     )
-    res = corners.groupBy("id").agg(F.count(F.lit(1)).alias("triangles")).localCheckpoint(eager=True)
-    oriented.unpersist()
-    return res
+    with checkpoints() as cp:
+        res = cp.pin(corners.groupBy("id").agg(F.count(F.lit(1)).alias("triangles")))
+        oriented.unpersist()
+        return cp.keep(res)

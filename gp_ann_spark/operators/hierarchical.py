@@ -26,7 +26,7 @@ from pyspark.sql import functions as F
 from gp_ann_spark.functions.distances import pairwise_sqr_l2
 from gp_ann_spark.functions.windows import bounded_global_window
 
-from gp_ann_spark.checkpoint import swap_checkpoint
+from gp_ann_spark.checkpoint import checkpoints
 from gp_ann_spark.operators import kmeans as KM
 from gp_ann_spark.operators import knn as KNN
 from gp_ann_spark.operators import partition as P
@@ -54,66 +54,68 @@ def hierarchical_kmeans(
     n = points.count()
     k0 = min(branching, max(2, int(np.ceil(n / target_leaf_size))))
     _, asn = KM.lloyd(points, k0, n_iter=n_iter, metric=metric, seed=seed)
-    asn = asn.select("id", F.col("shard").cast("long").alias("leaf")).localCheckpoint(eager=True)
+    with checkpoints() as cp:
+        asn = cp.pin(asn.select("id", F.col("shard").cast("long").alias("leaf")))
 
-    for level in range(1, max_levels):
-        sizes = asn.groupBy("leaf").agg(F.count(F.lit(1)).alias("cnt")).localCheckpoint(eager=True)
-        big = sizes.where(F.col("cnt") > target_leaf_size)
-        if big.limit(1).count() == 0:
-            break
-        joined = points.join(asn, "id").join(F.broadcast(big.select("leaf")), "leaf", "left_semi")
+        for level in range(1, max_levels):
+            with checkpoints() as step:
+                sizes = step.pin(asn.groupBy("leaf").agg(F.count(F.lit(1)).alias("cnt")))
+                big = sizes.where(F.col("cnt") > target_leaf_size)
+                if big.limit(1).count() == 0:
+                    break
+                joined = points.join(asn, "id").join(F.broadcast(big.select("leaf")), "leaf", "left_semi")
 
-        def split(pdf: pd.DataFrame, lvl=level) -> pd.DataFrame:
-            X = np.stack(pdf["vec"].to_numpy()).astype(np.float64)
-            leaf = int(pdf["leaf"].iloc[0])
-            k = min(branching, max(2, int(np.ceil(len(X) / target_leaf_size))))
-            # leaf ids are hashes (possibly negative int64) — fold to a
-            # non-negative entropy tuple; default_rng rejects negatives
-            rng = np.random.default_rng((seed, lvl, leaf & 0xFFFFFFFFFFFFFFFF))
-            C = X[rng.choice(len(X), size=min(k, len(X)), replace=False)]
-            for _ in range(n_iter):
-                # BLAS m×k kernel — the (m,k,d) broadcast tensor is O(m·k·d)
-                # memory per iteration in-task
-                d2 = pairwise_sqr_l2(X, C)
-                a = d2.argmin(1)
-                for j in range(len(C)):
-                    m = a == j
-                    if m.any():
-                        C[j] = X[m].mean(0)
-            return pd.DataFrame({"id": pdf["id"], "sub": a.astype(np.int64)})
+                def split(pdf: pd.DataFrame, lvl=level) -> pd.DataFrame:
+                    X = np.stack(pdf["vec"].to_numpy()).astype(np.float64)
+                    leaf = int(pdf["leaf"].iloc[0])
+                    k = min(branching, max(2, int(np.ceil(len(X) / target_leaf_size))))
+                    # leaf ids are hashes (possibly negative int64) — fold to a
+                    # non-negative entropy tuple; default_rng rejects negatives
+                    rng = np.random.default_rng((seed, lvl, leaf & 0xFFFFFFFFFFFFFFFF))
+                    C = X[rng.choice(len(X), size=min(k, len(X)), replace=False)]
+                    for _ in range(n_iter):
+                        # BLAS m×k kernel — the (m,k,d) broadcast tensor is O(m·k·d)
+                        # memory per iteration in-task
+                        d2 = pairwise_sqr_l2(X, C)
+                        a = d2.argmin(1)
+                        for j in range(len(C)):
+                            m = a == j
+                            if m.any():
+                                C[j] = X[m].mean(0)
+                    return pd.DataFrame({"id": pdf["id"], "sub": a.astype(np.int64)})
 
-        subs = joined.groupBy("leaf").applyInPandas(
-            lambda pdf: split(pdf).assign(leaf=pdf["leaf"].iloc[0]), schema="id long, sub long, leaf long"
-        )
-        # hash-namespaced child ids (same pattern as knn_approx's bucket
-        # splits): the positional encoding leaf·branching + sub + 1e9·level
-        # grows ~branching× per level and overflows int64 around level 7 on a
-        # never-shrinking (near-duplicate) leaf — hashes stay flat, ids are
-        # densified below anyway, and a 64-bit collision merely merges two
-        # leaves (re-split next level by the size check)
-        new_big = subs.select(
-            "id", F.xxhash64("leaf", "sub", F.lit(level), F.lit("hkm")).alias("leaf")
-        )
-        keep = asn.join(F.broadcast(big.select("leaf")), "leaf", "left_anti")
-        asn = swap_checkpoint(keep.select("id", "leaf").unionByName(new_big), asn)
+                subs = joined.groupBy("leaf").applyInPandas(
+                    lambda pdf: split(pdf).assign(leaf=pdf["leaf"].iloc[0]), schema="id long, sub long, leaf long"
+                )
+                # hash-namespaced child ids (same pattern as knn_approx's bucket
+                # splits): the positional encoding leaf·branching + sub + 1e9·level
+                # grows ~branching× per level and overflows int64 around level 7 on a
+                # never-shrinking (near-duplicate) leaf — hashes stay flat, ids are
+                # densified below anyway, and a 64-bit collision merely merges two
+                # leaves (re-split next level by the size check)
+                new_big = subs.select(
+                    "id", F.xxhash64("leaf", "sub", F.lit(level), F.lit("hkm")).alias("leaf")
+                )
+                keep = asn.join(F.broadcast(big.select("leaf")), "leaf", "left_anti")
+                asn = cp.swap(keep.select("id", "leaf").unionByName(new_big), asn)
 
-    # densify leaf ids + centroids (partial/final mean via shard_centroids).
-    # dense_ids = range-repartition + broadcast prefix sums: the distinct
-    # leaf table is row-proportional (~n/target_leaf_size), so a global
-    # row_number window here would be the single-partition scale-killer
-    # windows.py warns about
-    from gp_ann_spark.corpus.ingest import dense_ids
+        # densify leaf ids + centroids (partial/final mean via shard_centroids).
+        # dense_ids = range-repartition + broadcast prefix sums: the distinct
+        # leaf table is row-proportional (~n/target_leaf_size), so a global
+        # row_number window here would be the single-partition scale-killer
+        # windows.py warns about
+        from gp_ann_spark.corpus.ingest import dense_ids
 
-    dense = dense_ids(asn.select("leaf").distinct(), order_col="leaf").withColumnRenamed("id", "_n")
-    # no broadcast hint: the leaf table is row-proportional too — let AQE
-    # pick broadcast vs shuffle from its measured size
-    asn = asn.join(dense, "leaf").select("id", F.col("_n").cast("long").alias("leaf"))
-    from gp_ann_spark.operators.routing import shard_centroids
+        dense = dense_ids(asn.select("leaf").distinct(), order_col="leaf").withColumnRenamed("id", "_n")
+        # no broadcast hint: the leaf table is row-proportional too — let AQE
+        # pick broadcast vs shuffle from its measured size
+        asn = asn.join(dense, "leaf").select("id", F.col("_n").cast("long").alias("leaf"))
+        from gp_ann_spark.operators.routing import shard_centroids
 
-    cents = shard_centroids(points, asn.select("id", F.col("leaf").alias("shard")))
-    sizes = asn.groupBy(F.col("leaf")).agg(F.count(F.lit(1)).alias("size"))
-    leaf_cents = cents.select(F.col("shard").alias("leaf"), "vec").join(sizes, "leaf")
-    return asn, leaf_cents
+        cents = shard_centroids(points, asn.select("id", F.col("leaf").alias("shard")))
+        sizes = asn.groupBy(F.col("leaf")).agg(F.count(F.lit(1)).alias("size"))
+        leaf_cents = cents.select(F.col("shard").alias("leaf"), "vec").join(sizes, "leaf")
+        return cp.keep((asn, leaf_cents))
 
 
 def pyramid_partition(
@@ -222,24 +224,13 @@ def our_pyramid_partition(
     leaf_asn, leaf_cents = hierarchical_kmeans(
         points, target_leaf_size, metric=metric, seed=seed
     )
-    leaf_pts = leaf_cents.select(F.col("leaf").alias("id"), "vec").localCheckpoint(eager=True)
-    n_leaves = leaf_pts.count()
-    edges = KNN.symmetrize(KNN.knn_edges(leaf_pts, k=min(knn_k, n_leaves - 1), metric=metric))
-    weights = leaf_cents.select(F.col("leaf").alias("id"), F.col("size").cast("long").alias("w"))
-    maps, c_edges, c_w = P.coarsen_graph(edges, weights=weights, target=max(64, n_leaves // 4))
-    # sorted for run-to-run determinism (see graph_partition: toPandas row
-    # order follows the partition layout and feeds the grower's tie-breaks)
-    part = P._initial_partition_driver(
-        c_edges.toPandas().sort_values(["src", "dst"], ignore_index=True),
-        c_w.toPandas().sort_values("id", ignore_index=True),
-        num_shards, eps, seed,
-    )
-    spark = points.sparkSession
-    coarse_asn = spark.createDataFrame([(int(v), int(s)) for v, s in part.items()], "label long, shard int")
-    asn = coarse_asn
-    for lab in reversed(maps):
-        asn = lab.join(asn, "label").select(F.col("id").alias("label"), "shard")
-    leaf_shard = asn.select(F.col("label").alias("leaf"), "shard")
-    assignment = leaf_asn.join(F.broadcast(leaf_shard), "leaf").select("id", "shard")
-    routing_index = leaf_cents.join(F.broadcast(leaf_shard), "leaf").select("leaf", "shard", "vec", "size")
-    return assignment, routing_index
+    with checkpoints() as cp:
+        leaf_pts = cp.pin(leaf_cents.select(F.col("leaf").alias("id"), "vec"))
+        n_leaves = leaf_pts.count()
+        edges = KNN.symmetrize(KNN.knn_edges(leaf_pts, k=min(knn_k, n_leaves - 1), metric=metric))
+        weights = leaf_cents.select(F.col("leaf").alias("id"), F.col("size").cast("long").alias("w"))
+        asn, _ = P._partition_coarsest(edges, weights, num_shards, eps, max(64, n_leaves // 4), seed)
+        leaf_shard = asn.select(F.col("label").alias("leaf"), "shard")
+        assignment = leaf_asn.join(F.broadcast(leaf_shard), "leaf").select("id", "shard")
+        routing_index = leaf_cents.join(F.broadcast(leaf_shard), "leaf").select("leaf", "shard", "vec", "size")
+        return cp.keep((assignment, routing_index))

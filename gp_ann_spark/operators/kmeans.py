@@ -27,7 +27,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from gp_ann_spark.checkpoint import release_local_checkpoint, swap_checkpoint
+from gp_ann_spark.checkpoint import checkpoints
 from gp_ann_spark.functions.distances import distance_matrix, pos_distance_matrix
 
 SEED = 555  # the reference's algorithm seed (kmeans.cpp:19 via partition.cpp:14)
@@ -235,50 +235,51 @@ def capacity_fill(
         caps = (
             scored.select(shard_col).distinct().withColumn("cap", F.lit(int(capacity)).cast("long"))
         )
-    caps = caps.where(F.col("cap") > 0).localCheckpoint(eager=True)
-    # pairs to dead (cap ≤ 0 / unknown) shards can never place — drop once
-    remaining = scored.join(F.broadcast(caps), shard_col, "left_semi").localCheckpoint(eager=True)
-    # termination is guaranteed (every continuing pass deletes ≥1 pair), so
-    # #passes ≤ #pairs; guard with a generous bound so a logic regression
-    # surfaces as a loud failure instead of an apparent hang of O(#pairs)
-    # window-shuffle Spark jobs. The bound is computed LAZILY (a count() job
-    # only once a run looks suspicious) and raised as RuntimeError — a bare
-    # assert would both cost the count up front on every healthy call and
-    # vanish under python -O.
-    max_passes: int | None = None
-    n_pass = 0
-    while True:
-        n_pass += 1
-        if max_passes is None and n_pass > 64:
-            # still valid as a bound from HERE: each future pass deletes ≥1
-            # of the currently remaining pairs
-            max_passes = n_pass + remaining.count() + 1
-        if max_passes is not None and n_pass > max_passes:
-            raise RuntimeError(
-                f"capacity_fill exceeded {max_passes} passes — each pass must "
-                "delete at least one candidate pair; this is a regression"
+    with checkpoints() as cp:
+        caps = cp.pin(caps.where(F.col("cap") > 0))
+        # pairs to dead (cap ≤ 0 / unknown) shards can never place — drop once
+        remaining = cp.pin(scored.join(F.broadcast(caps), shard_col, "left_semi"))
+        # termination is guaranteed (every continuing pass deletes ≥1 pair),
+        # so #passes ≤ #pairs; guard with a generous bound so a logic
+        # regression surfaces as a loud failure instead of an apparent hang
+        # of O(#pairs) window-shuffle Spark jobs. The bound is computed
+        # LAZILY (a count() job only once a run looks suspicious) and raised
+        # as RuntimeError — a bare assert would both cost the count up front
+        # on every healthy call and vanish under python -O.
+        max_passes: int | None = None
+        n_pass = 0
+        while True:
+            n_pass += 1
+            if max_passes is None and n_pass > 64:
+                # still valid as a bound from HERE: each future pass deletes
+                # ≥1 of the currently remaining pairs
+                max_passes = n_pass + remaining.count() + 1
+            if max_passes is not None and n_pass > max_passes:
+                raise RuntimeError(
+                    f"capacity_fill exceeded {max_passes} passes — each pass must "
+                    "delete at least one candidate pair; this is a regression"
+                )
+            # propose: each id's best not-yet-rejected candidate
+            proposals = (
+                remaining.withColumn("_choice", F.row_number().over(w_id))
+                .where(F.col("_choice") == 1)
+                .drop("_choice")
             )
-        # propose: each id's best not-yet-rejected candidate
-        proposals = (
-            remaining.withColumn("_choice", F.row_number().over(w_id))
-            .where(F.col("_choice") == 1)
-            .drop("_choice")
-        )
-        # tentative admission: each shard holds its cap best proposers and
-        # rejects the rest; rejected pairs are DELETED so the id re-proposes
-        # to its next candidate next pass. Holds stay tentative — a better
-        # re-proposer evicts a worse hold in a later pass.
-        ranked = proposals.withColumn("_fill", F.row_number().over(w_shard)).join(
-            F.broadcast(caps), shard_col
-        )
-        rejected = ranked.where(F.col("_fill") > F.col("cap")).select(id_col, shard_col).localCheckpoint(eager=True)
-        if rejected.limit(1).count() == 0:
-            return ranked.select(*scored.columns)
-        remaining = swap_checkpoint(
-            remaining.join(rejected, [id_col, shard_col], "left_anti"), remaining
-        )
-        if remaining.limit(1).count() == 0:
-            return scored.limit(0)
+            # tentative admission: each shard holds its cap best proposers and
+            # rejects the rest; rejected pairs are DELETED so the id
+            # re-proposes to its next candidate next pass. Holds stay
+            # tentative — a better re-proposer evicts a worse hold in a later
+            # pass.
+            ranked = proposals.withColumn("_fill", F.row_number().over(w_shard)).join(
+                F.broadcast(caps), shard_col
+            )
+            with checkpoints() as step:
+                rejected = step.pin(ranked.where(F.col("_fill") > F.col("cap")).select(id_col, shard_col))
+                if rejected.limit(1).count() == 0:
+                    return cp.keep(ranked.select(*scored.columns))
+                remaining = cp.swap(remaining.join(rejected, [id_col, shard_col], "left_anti"), remaining)
+            if remaining.limit(1).count() == 0:
+                return scored.limit(0)
 
 
 def balanced_lloyd(
@@ -310,52 +311,53 @@ def balanced_lloyd(
             f"infeasible balance: k={k_eff} × cap={max_cluster_size} < n={n}"
         )
     assignment = assign_to_centroids(points, centroids, metric, with_dist=True)
-    assignment = assignment.localCheckpoint(eager=True)
-
-    for _ in range(rebalance_rounds):
-        sizes = {r["shard"]: r["cnt"] for r in assignment.groupBy("shard").agg(F.count(F.lit(1)).alias("cnt")).collect()}
-        over = [s for s, c in sizes.items() if c > max_cluster_size]
-        if not over:
-            break
-        # Within each overfull shard keep the max_cluster_size closest points
-        # (≙ kmeans.cpp:494-515 keeps best-fitting, migrates the rest).
-        w = Window.partitionBy("shard").orderBy(F.col("dist").asc(), F.col("id").asc())
-        ranked = assignment.withColumn("_r", F.row_number().over(w))
-        keep = ranked.where(~F.col("shard").isin(over) | (F.col("_r") <= max_cluster_size)).drop("_r")
-        spill_ids = ranked.where(F.col("shard").isin(over) & (F.col("_r") > max_cluster_size)).select("id")
-        spill_pts = points.join(spill_ids, "id", "left_semi")
-        # Rate spilled points against all non-full shards, greedy fill.
-        # range(k_eff), not sizes.keys(): a shard that never received a point
-        # is absent from sizes yet is exactly the spare capacity we need.
-        room = {
-            s: max_cluster_size - int(sizes.get(s, 0))
-            for s in range(k_eff)
-            if int(sizes.get(s, 0)) < max_cluster_size
-        }
-        if not room:
-            break
-        open_shards = sorted(room)
-        sub_c = centroids[open_shards]
-        rated = assign_all_candidates(spill_pts, sub_c, metric)
-        rated = rated.withColumn(
-            "shard", F.element_at(F.array(*[F.lit(s) for s in open_shards]), F.col("cand") + 1)
-        ).drop("cand")
-        caps = points.sparkSession.createDataFrame(
-            [(int(s), int(c)) for s, c in room.items()], "shard int, cap int"
-        )
-        placed = capacity_fill(rated, caps).localCheckpoint(eager=True)
-        # every spilled point must land somewhere — silent loss would shrink
-        # the assignment (feasibility was checked up front, so this is a bug
-        # trap, not an expected path)
-        n_spill, n_placed = spill_ids.count(), placed.count()
-        if n_placed != n_spill:
-            raise RuntimeError(f"capacity_fill stranded {n_spill - n_placed} of {n_spill} spill points")
-        assignment = swap_checkpoint(
-            keep.select("id", "shard", "dist").unionByName(placed.select("id", "shard", "dist")), assignment
-        )
-        release_local_checkpoint(placed)
-
-    return centroids[:k_eff], assignment.select("id", "shard")
+    with checkpoints() as cp:
+        assignment = cp.pin(assignment)
+        for _ in range(rebalance_rounds):
+            sizes = {r["shard"]: r["cnt"] for r in assignment.groupBy("shard").agg(F.count(F.lit(1)).alias("cnt")).collect()}
+            over = [s for s, c in sizes.items() if c > max_cluster_size]
+            if not over:
+                break
+            # Within each overfull shard keep the max_cluster_size closest
+            # points (≙ kmeans.cpp:494-515 keeps best-fitting, migrates the
+            # rest).
+            w = Window.partitionBy("shard").orderBy(F.col("dist").asc(), F.col("id").asc())
+            ranked = assignment.withColumn("_r", F.row_number().over(w))
+            keep = ranked.where(~F.col("shard").isin(over) | (F.col("_r") <= max_cluster_size)).drop("_r")
+            spill_ids = ranked.where(F.col("shard").isin(over) & (F.col("_r") > max_cluster_size)).select("id")
+            spill_pts = points.join(spill_ids, "id", "left_semi")
+            # Rate spilled points against all non-full shards, greedy fill.
+            # range(k_eff), not sizes.keys(): a shard that never received a
+            # point is absent from sizes yet is exactly the spare capacity we
+            # need.
+            room = {
+                s: max_cluster_size - int(sizes.get(s, 0))
+                for s in range(k_eff)
+                if int(sizes.get(s, 0)) < max_cluster_size
+            }
+            if not room:
+                break
+            open_shards = sorted(room)
+            sub_c = centroids[open_shards]
+            rated = assign_all_candidates(spill_pts, sub_c, metric)
+            rated = rated.withColumn(
+                "shard", F.element_at(F.array(*[F.lit(s) for s in open_shards]), F.col("cand") + 1)
+            ).drop("cand")
+            caps = points.sparkSession.createDataFrame(
+                [(int(s), int(c)) for s, c in room.items()], "shard int, cap int"
+            )
+            with checkpoints() as step:
+                placed = step.pin(capacity_fill(rated, caps))
+                # every spilled point must land somewhere — silent loss would
+                # shrink the assignment (feasibility was checked up front, so
+                # this is a bug trap, not an expected path)
+                n_spill, n_placed = spill_ids.count(), placed.count()
+                if n_placed != n_spill:
+                    raise RuntimeError(f"capacity_fill stranded {n_spill - n_placed} of {n_spill} spill points")
+                assignment = cp.swap(
+                    keep.select("id", "shard", "dist").unionByName(placed.select("id", "shard", "dist")), assignment
+                )
+        return cp.keep((centroids[:k_eff], assignment.select("id", "shard")))
 
 
 def assign_all_candidates(
@@ -432,7 +434,6 @@ def balanced_kmeans_bkm(
     k_eff = len(centroids)
     if k_eff * max_cluster_size < n:
         raise ValueError(f"infeasible balance: k={k_eff} × cap={max_cluster_size} < n={n}")
-    assignment = assign_to_centroids(points, centroids, metric).localCheckpoint(eager=True)
     pts = points.select("id", "vec").repartition("id").cache()
 
     def sizes_of(asn: DataFrame) -> np.ndarray:
@@ -441,117 +442,113 @@ def balanced_kmeans_bkm(
             out[int(r["shard"])] = int(r["c"])
         return out
 
-    sizes = sizes_of(assignment)
-    penalty = 0.0
-    best_balanced: DataFrame | None = None
-    best_objective = np.inf
+    with checkpoints() as cp:  # owns the best balanced assignment
+        best_balanced: DataFrame | None = None
+        with checkpoints() as cur:  # owns the current assignment
+            assignment = cur.pin(assign_to_centroids(points, centroids, metric))
+            sizes = sizes_of(assignment)
+            penalty = 0.0
+            best_objective = np.inf
 
-    for rnd in range(1, max_rounds + 1):
-        bc = spark.sparkContext.broadcast((centroids, sizes, penalty))
-        state = pts.join(assignment, "id")
+            for rnd in range(1, max_rounds + 1):
+                bc = spark.sparkContext.broadcast((centroids, sizes, penalty))
+                state = pts.join(assignment, "id")
 
-        def score_moves(batches):
-            C, SZ, pen = bc.value
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                X = np.stack(pdf["vec"].to_numpy()).astype(np.float64)
-                old = pdf["shard"].to_numpy()
-                d = pos_distance_matrix(X, C, metric)
-                score = d + pen * SZ[None, :]
-                old_d = d[np.arange(len(X)), old]
-                old_sz = SZ[old]
-                denom = old_sz[:, None] - SZ[None, :]
-                denom[denom == 0] = 1
-                pen_needed = (d - old_d[:, None]) / denom
-                # moves to larger clusters allowed only if pen >= pen_needed
-                to_larger = SZ[None, :] >= old_sz[:, None]
-                blocked = to_larger & (pen < pen_needed)
-                score[blocked] = np.inf
-                score[np.arange(len(X)), old] = old_d + pen * old_sz  # own score
-                best = score.argmin(1)
-                gain = score[np.arange(len(X)), old] - score[np.arange(len(X)), best]
-                # min penalty that would unlock a smaller-cluster move
-                pn = np.where((SZ[None, :] < old_sz[:, None]) & (pen < pen_needed), pen_needed, np.inf).min(1)
-                yield pd.DataFrame(
-                    {
-                        "id": pdf["id"].to_numpy(),
-                        "old": old,
-                        "new": best.astype(np.int32),
-                        "gain": gain,
-                        "dist_new": d[np.arange(len(X)), best],
-                        "pen_needed": pn,
+                def score_moves(batches):
+                    C, SZ, pen = bc.value
+                    for pdf in batches:
+                        if len(pdf) == 0:
+                            continue
+                        X = np.stack(pdf["vec"].to_numpy()).astype(np.float64)
+                        old = pdf["shard"].to_numpy()
+                        d = pos_distance_matrix(X, C, metric)
+                        score = d + pen * SZ[None, :]
+                        old_d = d[np.arange(len(X)), old]
+                        old_sz = SZ[old]
+                        denom = old_sz[:, None] - SZ[None, :]
+                        denom[denom == 0] = 1
+                        pen_needed = (d - old_d[:, None]) / denom
+                        # moves to larger clusters allowed only if pen >= pen_needed
+                        to_larger = SZ[None, :] >= old_sz[:, None]
+                        blocked = to_larger & (pen < pen_needed)
+                        score[blocked] = np.inf
+                        score[np.arange(len(X)), old] = old_d + pen * old_sz  # own score
+                        best = score.argmin(1)
+                        gain = score[np.arange(len(X)), old] - score[np.arange(len(X)), best]
+                        # min penalty that would unlock a smaller-cluster move
+                        pn = np.where((SZ[None, :] < old_sz[:, None]) & (pen < pen_needed), pen_needed, np.inf).min(1)
+                        yield pd.DataFrame(
+                            {
+                                "id": pdf["id"].to_numpy(),
+                                "old": old,
+                                "new": best.astype(np.int32),
+                                "gain": gain,
+                                "dist_new": d[np.arange(len(X)), best],
+                                "pen_needed": pn,
+                            }
+                        )
+
+                with checkpoints() as step:
+                    moves = step.pin(state.mapInPandas(
+                        score_moves, schema="id long, old int, new int, gain double, dist_new double, pen_needed double"
+                    ))
+
+                    # inflow gate per target cluster: best gains first (≙ the
+                    # continuous size updates of the sequential mini-batches)
+                    room = {
+                        j: max(0, max_cluster_size - int(sizes[j])) + int(inflow_slack * n / k_eff) for j in range(k_eff)
                     }
+                    caps = spark.createDataFrame([(int(j), int(c)) for j, c in room.items()], "new int, cap long")
+                    w_cap = Window.partitionBy("new").orderBy(F.col("gain").desc(), F.col("id").asc())
+                    applied = (
+                        moves.where((F.col("new") != F.col("old")) & (F.col("gain") > 0))
+                        .join(F.broadcast(caps), "new")
+                        .withColumn("_r", F.row_number().over(w_cap))
+                        .where(F.col("_r") <= F.col("cap"))
+                        .select("id", F.col("new").alias("shard"))
+                    )
+                    n_moved = applied.count()
+                    assignment = cur.swap(
+                        assignment.join(applied.withColumnRenamed("shard", "_ns"), "id", "left")
+                        .select("id", F.coalesce("_ns", F.col("shard")).cast("int").alias("shard")),
+                        assignment,
+                    )
+                    # centroid update + objective + per-shard sizes in ONE
+                    # aggregation pass (a separate sizes_of() here would
+                    # re-shuffle the assignment for counts the superstep
+                    # aggregate already computes)
+                    centroids, sizes, objective = _superstep_given_assignment(
+                        pts, assignment, k_eff, metric, prev_centroids=centroids
+                    )
+                    min_pen_needed = moves.agg(F.min("pen_needed")).collect()[0][0]
+
+                balanced = (sizes <= max_cluster_size).all()
+                if balanced:
+                    if objective < best_objective:
+                        best_objective = objective
+                        best_balanced = cp.swap(assignment, best_balanced)
+                    else:
+                        break  # balanced, no improvement → quit (kmeans.cpp:470)
+                elif min_pen_needed is not None and np.isfinite(min_pen_needed):
+                    sched = 1.01 if rnd > 100 else (1.5009 - 0.0009 * rnd)
+                    penalty = sched * float(min_pen_needed)
+                if n_moved == 0 and balanced:
+                    break
+
+            final = best_balanced if best_balanced is not None else assignment
+            if final is not assignment:
+                # `centroids` tracks the LAST round's assignment; the chosen
+                # best may be from an earlier round — re-derive its own
+                # centroids so the enforcement's keep/spill ranking and the
+                # returned (centroids, assignment) pair are mutually
+                # consistent
+                centroids, _, _ = _superstep_given_assignment(
+                    pts, final, k_eff, metric, prev_centroids=centroids
                 )
-
-        moves = state.mapInPandas(
-            score_moves, schema="id long, old int, new int, gain double, dist_new double, pen_needed double"
-        ).localCheckpoint(eager=True)
-
-        # inflow gate per target cluster: best gains first (≙ the continuous
-        # size updates of the sequential mini-batches)
-        room = {
-            j: max(0, max_cluster_size - int(sizes[j])) + int(inflow_slack * n / k_eff) for j in range(k_eff)
-        }
-        caps = spark.createDataFrame([(int(j), int(c)) for j, c in room.items()], "new int, cap long")
-        w_cap = Window.partitionBy("new").orderBy(F.col("gain").desc(), F.col("id").asc())
-        applied = (
-            moves.where((F.col("new") != F.col("old")) & (F.col("gain") > 0))
-            .join(F.broadcast(caps), "new")
-            .withColumn("_r", F.row_number().over(w_cap))
-            .where(F.col("_r") <= F.col("cap"))
-            .select("id", F.col("new").alias("shard"))
-        )
-        n_moved = applied.count()
-        # never release a frame still referenced as best_balanced — it must
-        # stay readable for the final _enforce_cap (a released localCheckpoint
-        # dies with CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND on next read)
-        assignment = swap_checkpoint(
-            assignment.join(applied.withColumnRenamed("shard", "_ns"), "id", "left")
-            .select("id", F.coalesce("_ns", F.col("shard")).cast("int").alias("shard")),
-            assignment if assignment is not best_balanced else None,
-        )
-        # centroid update + objective + per-shard sizes in ONE aggregation
-        # pass (a separate sizes_of() here would re-shuffle the assignment
-        # for counts the superstep aggregate already computes)
-        centroids, sizes, objective = _superstep_given_assignment(
-            pts, assignment, k_eff, metric, prev_centroids=centroids
-        )
-        min_pen_needed = moves.agg(F.min("pen_needed")).collect()[0][0]
-        release_local_checkpoint(moves)
-
-        balanced = (sizes <= max_cluster_size).all()
-        if balanced:
-            if objective < best_objective:
-                best_objective = objective
-                if best_balanced is not None and best_balanced is not assignment:
-                    release_local_checkpoint(best_balanced)  # superseded best
-                best_balanced = assignment
-            else:
-                break  # balanced, no improvement → quit (kmeans.cpp:470)
-        elif min_pen_needed is not None and np.isfinite(min_pen_needed):
-            sched = 1.01 if rnd > 100 else (1.5009 - 0.0009 * rnd)
-            penalty = sched * float(min_pen_needed)
-        if n_moved == 0 and balanced:
-            break
-
-    final = best_balanced if best_balanced is not None else assignment
-    if final is not assignment:
-        # the last round's assignment checkpoint has no further reader once
-        # an earlier round's best wins — release it (the loop's swap guard
-        # kept it alive only as the candidate state)
-        release_local_checkpoint(assignment)
-        # `centroids` tracks the LAST round's assignment; the chosen best
-        # may be from an earlier round — re-derive its own centroids so the
-        # enforcement's keep/spill ranking and the returned (centroids,
-        # assignment) pair are mutually consistent
-        centroids, _, _ = _superstep_given_assignment(
-            pts, final, k_eff, metric, prev_centroids=centroids
-        )
-    # hard enforcement (≙ kmeans.cpp:494-515)
-    _, enforced = _enforce_cap(pts, final, centroids, max_cluster_size, metric)
-    pts.unpersist()
-    return centroids, enforced
+            # hard enforcement (≙ kmeans.cpp:494-515)
+            _, enforced = _enforce_cap(pts, final, centroids, max_cluster_size, metric)
+            pts.unpersist()
+            return cp.keep((centroids, enforced))
 
 
 def _superstep_given_assignment(
@@ -618,47 +615,47 @@ def _enforce_cap(
     shard, capacity_fill the rest into remaining room."""
     spark = pts.sparkSession
     asn = assignment
-    for _ in range(8):
-        sizes = {int(r["shard"]): int(r["c"]) for r in asn.groupBy("shard").agg(F.count(F.lit(1)).alias("c")).collect()}
-        over = [s for s, c in sizes.items() if c > cap]
-        if not over:
-            break
-        with_own = pts.join(asn, "id")
-        bc = spark.sparkContext.broadcast(centroids)
+    with checkpoints() as cp:
+        for _ in range(8):
+            sizes = {int(r["shard"]): int(r["c"]) for r in asn.groupBy("shard").agg(F.count(F.lit(1)).alias("c")).collect()}
+            over = [s for s, c in sizes.items() if c > cap]
+            if not over:
+                break
+            with_own = pts.join(asn, "id")
+            bc = spark.sparkContext.broadcast(centroids)
 
-        def own_dist(batches):
-            C = bc.value
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                X = np.stack(pdf["vec"].to_numpy()).astype(np.float64)
-                sh = pdf["shard"].to_numpy()
-                dd = distance_matrix(X, C, metric)
-                yield pd.DataFrame({"id": pdf["id"], "shard": sh, "dist": dd[np.arange(len(X)), sh]})
+            def own_dist(batches):
+                C = bc.value
+                for pdf in batches:
+                    if len(pdf) == 0:
+                        continue
+                    X = np.stack(pdf["vec"].to_numpy()).astype(np.float64)
+                    sh = pdf["shard"].to_numpy()
+                    dd = distance_matrix(X, C, metric)
+                    yield pd.DataFrame({"id": pdf["id"], "shard": sh, "dist": dd[np.arange(len(X)), sh]})
 
-        rated = with_own.mapInPandas(own_dist, schema="id long, shard int, dist double")
-        w = Window.partitionBy("shard").orderBy(F.col("dist").asc(), F.col("id").asc())
-        ranked = rated.withColumn("_r", F.row_number().over(w))
-        keep = ranked.where(~F.col("shard").isin(over) | (F.col("_r") <= cap)).select("id", "shard")
-        spill = ranked.where(F.col("shard").isin(over) & (F.col("_r") > cap)).select("id").localCheckpoint(eager=True)
-        # empty shards are spare capacity too — range over all centroids
-        room = {
-            s: cap - int(sizes.get(s, 0)) for s in range(len(centroids)) if int(sizes.get(s, 0)) < cap
-        }
-        if not room:
-            break
-        open_shards = sorted(room)
-        sub_c = centroids[open_shards]
-        rated_spill = assign_all_candidates(pts.join(spill, "id", "left_semi"), sub_c, metric)
-        rated_spill = rated_spill.withColumn(
-            "shard", F.element_at(F.array(*[F.lit(s) for s in open_shards]), F.col("cand") + 1)
-        ).drop("cand")
-        caps_df = spark.createDataFrame([(int(s), int(c)) for s, c in room.items()], "shard int, cap int")
-        placed = capacity_fill(rated_spill, caps_df).localCheckpoint(eager=True)
-        n_spill, n_placed = spill.count(), placed.count()
-        if n_placed != n_spill:
-            raise RuntimeError(f"capacity_fill stranded {n_spill - n_placed} of {n_spill} spill points")
-        asn = swap_checkpoint(keep.unionByName(placed.select("id", "shard")), asn if asn is not assignment else None)
-        release_local_checkpoint(spill)
-        release_local_checkpoint(placed)
-    return centroids, asn.select("id", "shard")
+            rated = with_own.mapInPandas(own_dist, schema="id long, shard int, dist double")
+            w = Window.partitionBy("shard").orderBy(F.col("dist").asc(), F.col("id").asc())
+            ranked = rated.withColumn("_r", F.row_number().over(w))
+            keep = ranked.where(~F.col("shard").isin(over) | (F.col("_r") <= cap)).select("id", "shard")
+            with checkpoints() as step:
+                spill = step.pin(ranked.where(F.col("shard").isin(over) & (F.col("_r") > cap)).select("id"))
+                # empty shards are spare capacity too — range over all centroids
+                room = {
+                    s: cap - int(sizes.get(s, 0)) for s in range(len(centroids)) if int(sizes.get(s, 0)) < cap
+                }
+                if not room:
+                    break
+                open_shards = sorted(room)
+                sub_c = centroids[open_shards]
+                rated_spill = assign_all_candidates(pts.join(spill, "id", "left_semi"), sub_c, metric)
+                rated_spill = rated_spill.withColumn(
+                    "shard", F.element_at(F.array(*[F.lit(s) for s in open_shards]), F.col("cand") + 1)
+                ).drop("cand")
+                caps_df = spark.createDataFrame([(int(s), int(c)) for s, c in room.items()], "shard int, cap int")
+                placed = step.pin(capacity_fill(rated_spill, caps_df))
+                n_spill, n_placed = spill.count(), placed.count()
+                if n_placed != n_spill:
+                    raise RuntimeError(f"capacity_fill stranded {n_spill - n_placed} of {n_spill} spill points")
+                asn = cp.swap(keep.unionByName(placed.select("id", "shard")), asn)
+        return cp.keep((centroids, asn.select("id", "shard")))

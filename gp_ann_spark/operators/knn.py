@@ -21,7 +21,6 @@ oracle bit-for-bit.
 
 from __future__ import annotations
 
-import os
 from typing import Iterator
 
 import numpy as np
@@ -32,6 +31,8 @@ from pyspark.sql import functions as F
 from gp_ann_spark.functions.distances import distance_matrix, sql_distance
 
 KNN_SCHEMA = "query_id long, neighbor_id long, dist double"
+# exact_knn broadcasts the query side; more queries than this are refused
+MAX_BROADCAST_QUERIES = 4_000_000
 
 
 def _topk_within_block(
@@ -91,7 +92,7 @@ def exact_knn(
     # self-joins over the full corpus belong to knn_approx.build_knn_graph.
     # The limit BOUNDS the driver collect at cap+1 rows — an over-cap input
     # raises here without first materializing all of it driver-side.
-    max_q = int(os.environ.get("SPARK_GRAFT_MAX_BROADCAST_QUERIES", "4000000"))
+    max_q = MAX_BROADCAST_QUERIES
     qpd = (
         queries.select(F.col(q_id_col).alias("qid"), F.col(q_vec_col).alias("qvec"))
         .limit(max_q + 1)
@@ -100,7 +101,7 @@ def exact_knn(
     if len(qpd) > max_q:
         raise ValueError(
             f"exact_knn broadcasts the query side; >{max_q} queries exceed the "
-            f"cap (SPARK_GRAFT_MAX_BROADCAST_QUERIES). For corpus-scale "
+            f"cap (knn.MAX_BROADCAST_QUERIES). For corpus-scale "
             "self-kNN use knn_approx.build_knn_graph (the sketch path)."
         )
     if len(qpd) == 0:

@@ -35,8 +35,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from gp_ann_spark.functions.distances import distance_matrix
+from gp_ann_spark.checkpoint import checkpoints, fan_out
 from gp_ann_spark.checkpoint import realias as _realias
-from gp_ann_spark.checkpoint import release_local_checkpoint, swap_checkpoint
 from gp_ann_spark.operators.knn import merge_topk, symmetrize
 
 # Reference hyperparameters (knn_graph.h:254-265)
@@ -151,44 +151,41 @@ def _merge_small_buckets(
     no single-partition global window.
     """
     spark = pts.sparkSession
-    # non-eager: the limit(1).count() probe is the materializing action
-    sizes = pts.groupBy("bucket").agg(F.count(F.lit(1)).alias("n")).localCheckpoint(eager=False)
-    small = sizes.where(F.col("n") < min_size)
-    if small.limit(1).count() == 0:
-        release_local_checkpoint(sizes)
-        return pts
-    nparts = max(spark.sparkContext.defaultParallelism, 1)
-    # one materialization (at the collect below) so the offsets pass and the
-    # cumsum pass see the same (range-sampled) partition layout
-    parted = (
-        small.repartitionByRange(nparts, "bucket")
-        .sortWithinPartitions("bucket")
-        .withColumn("_pid", F.spark_partition_id())
-        .localCheckpoint(eager=False)
-    )
-    per_part = sorted(
-        (int(r["_pid"]), int(r["s"]))
-        for r in parted.groupBy("_pid").agg(F.sum("n").alias("s")).collect()
-    )
-    offs, acc = [], 0
-    for pid, s_ in per_part:
-        offs.append((pid, acc))
-        acc += s_
-    off_df = F.broadcast(spark.createDataFrame(offs or [(0, 0)], "_pid int, _off long"))
-    w_local = Window.partitionBy("_pid").orderBy("bucket").rowsBetween(Window.unboundedPreceding, 0)
-    merged_map = (
-        parted.withColumn("_cum", F.sum("n").over(w_local))
-        .join(off_df, "_pid")
-        .withColumn("_merged", -(F.floor((F.col("_off") + F.col("_cum")) / max_merged) + 1))
-        .select("bucket", "_merged")
-        .localCheckpoint(eager=True)
-    )
-    release_local_checkpoint(parted)
-    release_local_checkpoint(sizes)
-    return (
-        pts.join(F.broadcast(merged_map), "bucket", "left")
-        .select("id", "vec", F.coalesce("_merged", F.col("bucket")).alias("bucket"))
-    )
+    with checkpoints() as cp:
+        # non-eager: the limit(1).count() probe is the materializing action
+        sizes = cp.pin(pts.groupBy("bucket").agg(F.count(F.lit(1)).alias("n")), eager=False)
+        small = sizes.where(F.col("n") < min_size)
+        if small.limit(1).count() == 0:
+            return pts
+        nparts = max(spark.sparkContext.defaultParallelism, 1)
+        # one materialization (at the collect below) so the offsets pass and
+        # the cumsum pass see the same (range-sampled) partition layout
+        parted = cp.pin(
+            small.repartitionByRange(nparts, "bucket")
+            .sortWithinPartitions("bucket")
+            .withColumn("_pid", F.spark_partition_id()),
+            eager=False,
+        )
+        per_part = sorted(
+            (int(r["_pid"]), int(r["s"]))
+            for r in parted.groupBy("_pid").agg(F.sum("n").alias("s")).collect()
+        )
+        offs, acc = [], 0
+        for pid, s_ in per_part:
+            offs.append((pid, acc))
+            acc += s_
+        off_df = F.broadcast(spark.createDataFrame(offs or [(0, 0)], "_pid int, _off long"))
+        w_local = Window.partitionBy("_pid").orderBy("bucket").rowsBetween(Window.unboundedPreceding, 0)
+        merged_map = cp.pin(
+            parted.withColumn("_cum", F.sum("n").over(w_local))
+            .join(off_df, "_pid")
+            .withColumn("_merged", -(F.floor((F.col("_off") + F.col("_cum")) / max_merged) + 1))
+            .select("bucket", "_merged")
+        )
+        return cp.keep(
+            pts.join(F.broadcast(merged_map), "bucket", "left")
+            .select("id", "vec", F.coalesce("_merged", F.col("bucket")).alias("bucket"))
+        )
 
 
 def _force_split_big_buckets(pts: DataFrame, max_cluster_size: int, seed: int) -> DataFrame:
@@ -197,32 +194,29 @@ def _force_split_big_buckets(pts: DataFrame, max_cluster_size: int, seed: int) -
     knn_graph.h:120-131: such buckets are (near-)duplicate clusters that
     leader sampling cannot shrink; a seeded hash split bounds the
     brute-force cost at the price of a few split-crossing edges)."""
-    # non-eager: the limit(1).count() probe is the materializing action
-    sizes = pts.groupBy("bucket").agg(F.count(F.lit(1)).alias("n")).localCheckpoint(eager=False)
-    big = sizes.where(F.col("n") > max_cluster_size)
-    if big.limit(1).count() == 0:
-        release_local_checkpoint(sizes)
-        return pts
-    splits = big.select("bucket", F.ceil(F.col("n") / max_cluster_size).cast("long").alias("_ns"))
-    out = (
-        pts.join(F.broadcast(splits), "bucket", "left")
-        .select(
-            "id",
-            "vec",
-            F.when(
-                F.col("_ns").isNotNull(),
-                # hash-namespace the split children (bucket ids are already
-                # mixed hashes — positional offsets would overflow int64)
-                F.xxhash64(
-                    "bucket", F.lit(seed), F.lit("split"),
-                    F.pmod(F.xxhash64("id", F.lit(seed), F.lit("split")), F.col("_ns")),
-                ),
-            ).otherwise(F.col("bucket")).alias("bucket"),
+    with checkpoints() as cp:
+        # non-eager: the limit(1).count() probe is the materializing action
+        sizes = cp.pin(pts.groupBy("bucket").agg(F.count(F.lit(1)).alias("n")), eager=False)
+        big = sizes.where(F.col("n") > max_cluster_size)
+        if big.limit(1).count() == 0:
+            return pts
+        splits = big.select("bucket", F.ceil(F.col("n") / max_cluster_size).cast("long").alias("_ns"))
+        return cp.keep(
+            pts.join(F.broadcast(splits), "bucket", "left")
+            .select(
+                "id",
+                "vec",
+                F.when(
+                    F.col("_ns").isNotNull(),
+                    # hash-namespace the split children (bucket ids are already
+                    # mixed hashes — positional offsets would overflow int64)
+                    F.xxhash64(
+                        "bucket", F.lit(seed), F.lit("split"),
+                        F.pmod(F.xxhash64("id", F.lit(seed), F.lit("split")), F.col("_ns")),
+                    ),
+                ).otherwise(F.col("bucket")).alias("bucket"),
+            )
         )
-    )
-    # NOTE: sizes stays checkpointed — `out` is lazy and still reads the
-    # broadcast splits derived from it; it is tiny (one row per bucket).
-    return out
 
 
 def build_knn_graph(
@@ -243,94 +237,95 @@ def build_knn_graph(
     ``repetitions`` recursive sketches, merged + deduped to per-src top-k.
     """
     pts0 = points.select("id", "vec").withColumn("bucket", F.lit(0).cast("long"))
-    # ONE shared materialization of the bucket-0 state — the repetitions all
-    # start from the identical frame, so checkpointing it per repetition was
-    # repetitions-1 redundant jobs. The first swap inside a repetition must
-    # NOT release it (other repetitions still read it) — see `prev` below.
-    pts_base = pts0.localCheckpoint(eager=True)
+    with checkpoints() as cp:
+        # ONE shared materialization of the bucket-0 state — the repetitions
+        # all start from the identical frame, so checkpointing it per
+        # repetition was repetitions-1 redundant jobs. Eager: it is
+        # materialized before the repetition threads read it.
+        pts_base = cp.pin(pts0)
 
-    def one_repetition(rep: int) -> DataFrame:
-        pts = pts_base
-        for depth in range(max_depth):
-            # localCheckpoint the (tiny) size table: breaks the self-join
-            # lineage between pts and its own aggregate. Non-eager — the
-            # count() is the materializing action, one job instead of two.
-            sizes = pts.groupBy("bucket").agg(F.count(F.lit(1)).alias("n")).localCheckpoint(eager=False)
-            big = sizes.where(F.col("n") > max_cluster_size)
-            n_big = big.count()
-            if n_big == 0:
-                release_local_checkpoint(sizes)  # break path must release too
-                break
-            big_pts = pts.join(big.select("bucket"), "bucket", "left_semi")
-            done_pts = pts.join(big.select("bucket"), "bucket", "left_anti")
-            # deterministic per-bucket leader sample: smallest hashes win
-            n_leaders_expr = (
-                F.when(F.lit(depth) == 0, F.lit(top_level_leaders))
-                .otherwise(F.least(F.lit(MAX_LEADERS), F.greatest(F.lit(2), (F.col("n") * LEADER_FRACTION).cast("int"))))
-            )
-            big_sized = big.withColumn("n_leaders", n_leaders_expr).select("bucket", "n", "n_leaders")
-            w = Window.partitionBy("bucket").orderBy("_h")
-            # "n_leaders smallest hashes win" — but ranking the bucket's full
-            # membership funnels it through ONE window-sort task (at depth 0
-            # the bucket is the whole corpus: the exact scale-killer
-            # functions/windows.py warns about). Pre-filter to a hash PREFIX
-            # first: keep hashes below the ~(4·n_leaders+64)/n quantile of the
-            # uniform int64 hash space, a distributed filter leaving ~4× the
-            # needed rows, then rank only survivors. The filter is a prefix of
-            # the ranking order, so the selected leaders are identical to the
-            # unfiltered version whenever ≥ n_leaders rows survive (mean 4×
-            # margin; Chernoff-negligible otherwise, and a short bucket just
-            # yields fewer leaders — the oversize guard re-splits it).
-            p_keep = (4.0 * F.col("n_leaders") + 64.0) / F.col("n")
-            h_thr = F.least(
-                F.lit(-9.223372036854776e18) + p_keep * F.lit(1.8446744073709552e19),
-                F.lit(9.223372036854e18),
-            ).cast("long")
-            leaders = (
-                big_pts.join(F.broadcast(big_sized), "bucket")
-                .withColumn("_h", F.xxhash64("id", F.lit(seed + rep), F.lit(depth)))
-                .where((F.col("n") <= 4 * F.col("n_leaders") + 64) | (F.col("_h") < h_thr))
-                .withColumn("_r", F.row_number().over(w))
-                .where(F.col("_r") <= F.col("n_leaders"))
-                .select("bucket", "id", "vec", (F.col("_r") - 1).cast("long").alias("leader_rank"))
-                # leaders derive from big_pts; cogrouping the two without a
-                # lineage break trips the ambiguous-self-join check. The
-                # NON-eager checkpoint breaks lineage identically (the plan
-                # becomes a LogicalRDD either way) but defers materialization
-                # to the swap_checkpoint job below — one driver job per
-                # depth instead of two.
-                .localCheckpoint(eager=False)
-            )
-            # fanout>1 only on the first split (knn_graph.h:133 recurses with
-            # fanout=1): duplication is bounded at fanout×n per repetition.
-            level_fanout = fanout if depth == 0 else 1
-            reassigned = _assign_to_leaders(big_pts, _realias(leaders), level_fanout, metric)
-            new_pts = reassigned.join(points.select("id", "vec"), "id").select("id", "vec", "bucket")
-            # hash path encoding (see _assign_to_leaders): done buckets keep
-            # their ids, split buckets get mixed-hash children — no per-level
-            # renumbering pass, no global window, no id overflow.
-            merged = done_pts.unionByName(new_pts)
-            pts = swap_checkpoint(merged, pts if pts is not pts_base else None)
-            for aux in (sizes, leaders):
-                release_local_checkpoint(aux)
-        pts = _force_split_big_buckets(pts, max_cluster_size, seed + rep)
-        pts = _merge_small_buckets(pts).dropDuplicates(["bucket", "id"])
-        return _bucket_bruteforce(pts.select("bucket", "id", "vec"), k, metric)
+        def one_repetition(rep_cp, rep: int) -> DataFrame:
+            pts = pts_base
+            for depth in range(max_depth):
+                with checkpoints() as level:
+                    # localCheckpoint the (tiny) size table: breaks the
+                    # self-join lineage between pts and its own aggregate.
+                    # Non-eager — the count() is the materializing action,
+                    # one job instead of two.
+                    sizes = level.pin(pts.groupBy("bucket").agg(F.count(F.lit(1)).alias("n")), eager=False)
+                    big = sizes.where(F.col("n") > max_cluster_size)
+                    if big.count() == 0:
+                        break
+                    big_pts = pts.join(big.select("bucket"), "bucket", "left_semi")
+                    done_pts = pts.join(big.select("bucket"), "bucket", "left_anti")
+                    # deterministic per-bucket leader sample: smallest hashes win
+                    n_leaders_expr = (
+                        F.when(F.lit(depth) == 0, F.lit(top_level_leaders))
+                        .otherwise(F.least(F.lit(MAX_LEADERS), F.greatest(F.lit(2), (F.col("n") * LEADER_FRACTION).cast("int"))))
+                    )
+                    big_sized = big.withColumn("n_leaders", n_leaders_expr).select("bucket", "n", "n_leaders")
+                    w = Window.partitionBy("bucket").orderBy("_h")
+                    # "n_leaders smallest hashes win" — but ranking the bucket's full
+                    # membership funnels it through ONE window-sort task (at depth 0
+                    # the bucket is the whole corpus: the exact scale-killer
+                    # functions/windows.py warns about). Pre-filter to a hash PREFIX
+                    # first: keep hashes below the ~(4·n_leaders+64)/n quantile of the
+                    # uniform int64 hash space, a distributed filter leaving ~4× the
+                    # needed rows, then rank only survivors. The filter is a prefix of
+                    # the ranking order, so the selected leaders are identical to the
+                    # unfiltered version whenever ≥ n_leaders rows survive (mean 4×
+                    # margin; Chernoff-negligible otherwise, and a short bucket just
+                    # yields fewer leaders — the oversize guard re-splits it).
+                    p_keep = (4.0 * F.col("n_leaders") + 64.0) / F.col("n")
+                    h_thr = F.least(
+                        F.lit(-9.223372036854776e18) + p_keep * F.lit(1.8446744073709552e19),
+                        F.lit(9.223372036854e18),
+                    ).cast("long")
+                    leaders = level.pin(
+                        big_pts.join(F.broadcast(big_sized), "bucket")
+                        .withColumn("_h", F.xxhash64("id", F.lit(seed + rep), F.lit(depth)))
+                        .where((F.col("n") <= 4 * F.col("n_leaders") + 64) | (F.col("_h") < h_thr))
+                        .withColumn("_r", F.row_number().over(w))
+                        .where(F.col("_r") <= F.col("n_leaders"))
+                        .select("bucket", "id", "vec", (F.col("_r") - 1).cast("long").alias("leader_rank")),
+                        # leaders derive from big_pts; cogrouping the two
+                        # without a lineage break trips the
+                        # ambiguous-self-join check. The NON-eager checkpoint
+                        # breaks lineage identically (the plan becomes a
+                        # LogicalRDD either way) but defers materialization
+                        # to the state swap's job below — one driver job per
+                        # depth instead of two.
+                        eager=False,
+                    )
+                    # fanout>1 only on the first split (knn_graph.h:133
+                    # recurses with fanout=1): duplication is bounded at
+                    # fanout×n per repetition.
+                    level_fanout = fanout if depth == 0 else 1
+                    reassigned = _assign_to_leaders(big_pts, _realias(leaders), level_fanout, metric)
+                    new_pts = reassigned.join(points.select("id", "vec"), "id").select("id", "vec", "bucket")
+                    # hash path encoding (see _assign_to_leaders): done
+                    # buckets keep their ids, split buckets get mixed-hash
+                    # children — no per-level renumbering pass, no global
+                    # window, no id overflow.
+                    pts = rep_cp.swap(done_pts.unionByName(new_pts), pts)
+            pts = _force_split_big_buckets(pts, max_cluster_size, seed + rep)
+            pts = _merge_small_buckets(pts).dropDuplicates(["bucket", "id"])
+            return _bucket_bruteforce(pts.select("bucket", "id", "vec"), k, metric)
 
-    # repetitions are fully independent — run their driver loops on threads
-    # so the per-level jobs of different reps overlap (Spark schedules
-    # concurrent jobs onto the shared task slots; the loop is latency-bound
-    # on small per-job work, so overlap ≈ repetitions× wall-clock win)
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=min(repetitions, 4)) as ex:
-        all_candidates = list(ex.map(one_repetition, range(repetitions)))
-
-    cand = all_candidates[0]
-    for c in all_candidates[1:]:
-        cand = cand.unionByName(c)
-    edges = merge_topk(cand, k)
-    return symmetrize(edges) if symmetric else edges
+        # repetitions are fully independent — run their driver loops on
+        # threads so the per-level jobs of different reps overlap (Spark
+        # schedules concurrent jobs onto the shared task slots; the loop is
+        # latency-bound on small per-job work, so overlap ≈ repetitions×
+        # wall-clock win)
+        all_candidates = fan_out(one_repetition, range(repetitions), min(repetitions, 4))
+        cand = all_candidates[0]
+        for c in all_candidates[1:]:
+            cand = cand.unionByName(c)
+        edges = merge_topk(cand, k)
+        # a lazy pin: under AQE taking it runs the shuffle stages, so the
+        # repetitions' checkpoints are released here and the first action
+        # on the result runs only its last stage
+        return cp.keep(cp.pin(symmetrize(edges) if symmetric else edges, eager=False))
 
 
 SIZE_QUANTILES = (0.0, 0.01, 0.05, 0.1, 0.15, 0.5, 0.85, 0.9, 0.95, 0.99, 1.0)

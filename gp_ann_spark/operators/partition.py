@@ -27,6 +27,8 @@ and therefore the same assignment:
 
 from __future__ import annotations
 
+from concurrent.futures import ThreadPoolExecutor
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window
@@ -35,8 +37,8 @@ from pyspark.sql import functions as F
 from gp_ann_spark.functions.windows import bounded_global_window
 
 from gp_ann_spark.operators import kmeans as KM
+from gp_ann_spark.checkpoint import checkpoints
 from gp_ann_spark.checkpoint import realias as _realias
-from gp_ann_spark.checkpoint import local_checkpoint, release_local_checkpoint, swap_checkpoint
 from gp_ann_spark.operators.graph import vertices
 
 SEED = KM.SEED
@@ -79,27 +81,27 @@ def recursive_kmeans_partition(
     n = points.count()
     cap = max_cluster_size(n, num_shards, eps)
     _, assignment = KM.lloyd(points, num_shards, n_iter=n_iter, metric=metric, seed=seed)
-    assignment = assignment.localCheckpoint(eager=True)
-
-    for depth in range(max_depth):
-        sizes = assignment.groupBy("shard").agg(F.count(F.lit(1)).alias("cnt"))
-        over = [(r["shard"], r["cnt"]) for r in sizes.where(F.col("cnt") > cap).collect()]
-        if not over:
-            break
-        n_existing = assignment.agg(F.max("shard")).collect()[0][0] + 1
-        next_id = n_existing
-        pieces = [assignment.where(~F.col("shard").isin([s for s, _ in over]))]
-        for s, cnt in over:
-            sub_k = int(np.ceil(cnt / cap))
-            sub_pts = points.join(assignment.where(F.col("shard") == s).select("id"), "id", "left_semi")
-            _, sub_asn = KM.lloyd(sub_pts, sub_k, n_iter=n_iter, metric=metric, seed=seed + depth + s)
-            pieces.append(sub_asn.select("id", (F.col("shard") + F.lit(next_id)).cast("int").alias("shard")))
-            next_id += sub_k
-        acc = pieces[0]
-        for p in pieces[1:]:
-            acc = acc.unionByName(p)
-        assignment = swap_checkpoint(acc, assignment)
-    return remap_shard_ids(assignment)
+    with checkpoints() as cp:
+        assignment = cp.pin(assignment)
+        for depth in range(max_depth):
+            sizes = assignment.groupBy("shard").agg(F.count(F.lit(1)).alias("cnt"))
+            over = [(r["shard"], r["cnt"]) for r in sizes.where(F.col("cnt") > cap).collect()]
+            if not over:
+                break
+            n_existing = assignment.agg(F.max("shard")).collect()[0][0] + 1
+            next_id = n_existing
+            pieces = [assignment.where(~F.col("shard").isin([s for s, _ in over]))]
+            for s, cnt in over:
+                sub_k = int(np.ceil(cnt / cap))
+                sub_pts = points.join(assignment.where(F.col("shard") == s).select("id"), "id", "left_semi")
+                _, sub_asn = KM.lloyd(sub_pts, sub_k, n_iter=n_iter, metric=metric, seed=seed + depth + s)
+                pieces.append(sub_asn.select("id", (F.col("shard") + F.lit(next_id)).cast("int").alias("shard")))
+                next_id += sub_k
+            acc = pieces[0]
+            for p in pieces[1:]:
+                acc = acc.unionByName(p)
+            assignment = cp.swap(acc, assignment)
+        return cp.keep(remap_shard_ids(assignment))
 
 
 def rebalancing_kmeans_partition(
@@ -116,9 +118,9 @@ def rebalancing_kmeans_partition(
     centroids, assignment = KM.lloyd(
         points, num_shards, n_iter=n_iter, metric=metric, seed=seed, drop_empty=False
     )
-    assignment = assignment.localCheckpoint(eager=True)
-    _, out = KM._enforce_cap(points.select("id", "vec"), assignment, centroids, cap, metric)
-    return out
+    with checkpoints() as cp:
+        _, out = KM._enforce_cap(points.select("id", "vec"), cp.pin(assignment), centroids, cap, metric)
+        return cp.keep(out)
 
 
 def duplicates_in_clusters(cover: DataFrame) -> DataFrame:
@@ -169,7 +171,7 @@ def _lp_coarsen_level(edges: DataFrame, weights: DataFrame, cap: int, rounds: in
     capacity-gated so no cluster exceeds ``cap`` vertex weight (windows over
     affinity order — the deterministic relational form of the reference's
     size-constrained moves in overlapping_partitioning.cpp:50-141).
-    Returns (id, label).
+    Returns the (id, label) plan, which the caller pins.
 
     The rounds are chained LAZILY and the level materializes ONCE: a round's
     output feeds the next round as a plain re-aliased plan (realias breaks
@@ -202,15 +204,8 @@ def _lp_coarsen_level(edges: DataFrame, weights: DataFrame, cap: int, rounds: in
         gated = cand.withColumn("_cum", F.sum("w").over(w_cap)).withColumn(
             "label", F.when(F.col("_cum") <= cap, F.col("cand")).otherwise(F.col("label"))
         )
-        nxt = gated.select("id", "label", "w")
-        if _ == rounds - 1:
-            # the ONE materialization of the level (the eager checkpoint is
-            # still required: the caller cogroups/joins this output against
-            # frames derived from it, and swap_checkpoint must be able to
-            # release it when the next level lands)
-            return local_checkpoint(nxt.select("id", "label"), eager=True)
-        labels = _realias(nxt)
-    return labels.select("id", "label")  # rounds == 0: identity labelling
+        labels = _realias(gated.select("id", "label", "w"))
+    return labels.select("id", "label")
 
 
 def coarsen_graph(
@@ -224,60 +219,49 @@ def coarsen_graph(
     """
     if weights is None:
         weights = vertices(edges).withColumn("w", F.lit(1).cast("long"))
-    from concurrent.futures import ThreadPoolExecutor
-
-    # non-eager checkpoints + ONE setup aggregate: the count/total_w row
-    # materializes cur_w, and level 1's job materializes cur_edges — three
-    # setup jobs become one (nothing upstream is released before either
-    # materializes)
-    cur_edges = local_checkpoint(edges.select("src", "dst", F.col("weight").cast("double")), eager=False)
-    cur_w = local_checkpoint(weights, eager=False)
-    row = cur_w.agg(F.count(F.lit(1)).alias("n"), F.sum("w").alias("tw")).collect()[0]
-    n = int(row["n"])
-    total_w = row["tw"]
-    maps: list[DataFrame] = []
-    for _ in range(max_levels):
-        if n <= target:
-            break
-        cap = max(int(total_w / max(target // 4, 1)), 2)
-        lab = _lp_coarsen_level(cur_edges, cur_w, cap)  # returns its own checkpoint
-        # shrinkage count comes FREE from materializing the contracted
-        # weights (row count == distinct labels) — no separate distinct job.
-        # NON-eager checkpoint: the count() below is the materializing
-        # action, so checkpoint + count is one job, not two (cur_w is only
-        # released after, so the truncated lineage never needs recompute)
-        new_w = local_checkpoint(
-            lab.join(cur_w, "id").groupBy(F.col("label").alias("id")).agg(F.sum("w").alias("w")),
-            eager=False,
-        )
-        contracted = (
-            cur_edges.join(lab.select(F.col("id").alias("src"), F.col("label").alias("nsrc")), "src")
-            .join(lab.select(F.col("id").alias("dst"), F.col("label").alias("ndst")), "dst")
-            .where(F.col("nsrc") != F.col("ndst"))
-            .groupBy(F.col("nsrc").alias("src"), F.col("ndst").alias("dst"))
-            .agg(F.sum("weight").alias("weight"))
-        )
-        # the shrinkage count and the edge contraction both depend only on
-        # lab (already materialized): run them as concurrent jobs (guide
-        # §2.6) instead of back-to-back. The contraction is checkpointed
-        # WITHOUT releasing cur_edges yet — the no-shrinkage break must
-        # still return the UNcontracted graph.
-        with ThreadPoolExecutor(max_workers=1) as ex:
-            fut = ex.submit(local_checkpoint, contracted, True)
-            n_new = new_w.count()
-            contracted_cp = fut.result()
-        if n_new >= n:  # no shrinkage → stop (guard ≙ knn_graph.h:120-131)
-            release_local_checkpoint(contracted_cp)
-            release_local_checkpoint(new_w)
-            release_local_checkpoint(lab)
-            break
-        maps.append(lab)
-        release_local_checkpoint(cur_edges)
-        cur_edges = contracted_cp
-        release_local_checkpoint(cur_w)
-        cur_w = new_w
-        n = n_new
-    return maps, cur_edges, cur_w
+    with checkpoints() as cp:
+        # non-eager checkpoints + ONE setup aggregate: the count/total_w row
+        # materializes cur_w, and level 1's job materializes cur_edges
+        cur_edges = cp.pin(edges.select("src", "dst", F.col("weight").cast("double")), eager=False)
+        cur_w = cp.pin(weights, eager=False)
+        row = cur_w.agg(F.count(F.lit(1)).alias("n"), F.sum("w").alias("tw")).collect()[0]
+        n = int(row["n"])
+        total_w = row["tw"]
+        maps: list[DataFrame] = []
+        for _ in range(max_levels):
+            if n <= target:
+                break
+            cap = max(int(total_w / max(target // 4, 1)), 2)
+            lab = cp.pin(_lp_coarsen_level(cur_edges, cur_w, cap))
+            # shrinkage count comes FREE from materializing the contracted
+            # weights (row count == distinct labels) — no separate distinct
+            # job: the count() below is the lazy checkpoint's materializing
+            # action
+            new_w = cp.pin(
+                lab.join(cur_w, "id").groupBy(F.col("label").alias("id")).agg(F.sum("w").alias("w")),
+                eager=False,
+            )
+            contracted = (
+                cur_edges.join(lab.select(F.col("id").alias("src"), F.col("label").alias("nsrc")), "src")
+                .join(lab.select(F.col("id").alias("dst"), F.col("label").alias("ndst")), "dst")
+                .where(F.col("nsrc") != F.col("ndst"))
+                .groupBy(F.col("nsrc").alias("src"), F.col("ndst").alias("dst"))
+                .agg(F.sum("weight").alias("weight"))
+            )
+            # the shrinkage count and the edge contraction both depend only
+            # on lab (already materialized): run them as concurrent jobs
+            # (guide §2.6) instead of back-to-back
+            with ThreadPoolExecutor(max_workers=1) as ex:
+                counted = ex.submit(new_w.count)
+                contracted = cp.pin(contracted)
+                n_new = counted.result()
+            if n_new >= n:  # no shrinkage → stop (guard ≙ knn_graph.h:120-131)
+                break
+            maps.append(lab)
+            cur_edges = cp.swap(contracted, cur_edges)
+            cur_w = cp.swap(new_w, cur_w)
+            n = n_new
+        return cp.keep((maps, cur_edges, cur_w))
 
 
 def _initial_partition_driver(
@@ -446,63 +430,58 @@ def refine_partition(
     """Balance-constrained LP refinement at full resolution: gain-ordered,
     capacity-gated single-vertex moves per superstep (the DataFrame form of
     multilevel refinement; determinstic via (gain, id) ordering)."""
-    # non-eager: round 1's movers count is the first consumer of both — it
-    # materializes them; nothing upstream is released before that
-    sym = local_checkpoint(
-        edges.select("src", "dst", "weight").unionByName(
-            edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"), "weight")
-        ),
-        eager=False,
-    )
-    asn = local_checkpoint(assignment.select("id", "shard"), eager=False)
-    for _ in range(rounds):
-        conn = (
-            sym.join(asn.select(F.col("id").alias("dst"), F.col("shard").alias("cand")), "dst")
-            .groupBy(F.col("src").alias("id"), "cand")
-            .agg(F.sum("weight").alias("aff"))
-        )
-        own = asn.withColumnRenamed("shard", "own")
-        with_own = conn.join(own, "id")
-        own_aff = (
-            with_own.where(F.col("cand") == F.col("own"))
-            .select("id", F.col("aff").alias("own_aff"))
-        )
-        cand = (
-            with_own.where(F.col("cand") != F.col("own"))
-            .join(own_aff, "id", "left")
-            .withColumn("gain", F.col("aff") - F.coalesce("own_aff", F.lit(0.0)))
-            .where(F.col("gain") > 0)
-        )
-        w_best = Window.partitionBy("id").orderBy(F.col("gain").desc(), F.col("cand").asc())
-        best = cand.withColumn("_r", F.row_number().over(w_best)).where(F.col("_r") == 1)
-        sizes = asn.groupBy("shard").agg(F.count(F.lit(1)).alias("cnt"))
-        room = sizes.select(F.col("shard").alias("cand"), (F.lit(cap) - F.col("cnt")).cast("int").alias("cap"))
-        w_cap = Window.partitionBy("cand").orderBy(F.col("gain").desc(), F.col("id").asc())
-        # materialize movers ONCE: the count action and the state swap would
-        # otherwise each evaluate the full window program. Non-eager: the
-        # count() below is the materializing action — one job per round for
-        # the whole window program instead of two.
-        movers = local_checkpoint(
-            best.join(F.broadcast(room), "cand")
-            .withColumn("_fill", F.row_number().over(w_cap))
-            .where(F.col("_fill") <= F.greatest(F.col("cap"), F.lit(0)))
-            .select("id", F.col("cand").alias("new_shard")),
+    with checkpoints() as cp:
+        # non-eager: round 1's movers count is the first consumer of both
+        sym = cp.pin(
+            edges.select("src", "dst", "weight").unionByName(
+                edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"), "weight")
+            ),
             eager=False,
         )
-        n_moved = movers.count()
-        if n_moved == 0:
-            release_local_checkpoint(movers)
-            break
-        asn = swap_checkpoint(
-            asn.join(movers, "id", "left")
-            .select("id", F.coalesce(F.col("new_shard"), F.col("shard")).cast("int").alias("shard")),
-            asn,
-        )
-        release_local_checkpoint(movers)
-    # the returned asn checkpoint is the caller's to consume; the sym edge
-    # view was only ever this loop's join input — free its blocks here
-    release_local_checkpoint(sym)
-    return asn
+        asn = cp.pin(assignment.select("id", "shard"), eager=False)
+        for _ in range(rounds):
+            conn = (
+                sym.join(asn.select(F.col("id").alias("dst"), F.col("shard").alias("cand")), "dst")
+                .groupBy(F.col("src").alias("id"), "cand")
+                .agg(F.sum("weight").alias("aff"))
+            )
+            own = asn.withColumnRenamed("shard", "own")
+            with_own = conn.join(own, "id")
+            own_aff = (
+                with_own.where(F.col("cand") == F.col("own"))
+                .select("id", F.col("aff").alias("own_aff"))
+            )
+            cand = (
+                with_own.where(F.col("cand") != F.col("own"))
+                .join(own_aff, "id", "left")
+                .withColumn("gain", F.col("aff") - F.coalesce("own_aff", F.lit(0.0)))
+                .where(F.col("gain") > 0)
+            )
+            w_best = Window.partitionBy("id").orderBy(F.col("gain").desc(), F.col("cand").asc())
+            best = cand.withColumn("_r", F.row_number().over(w_best)).where(F.col("_r") == 1)
+            sizes = asn.groupBy("shard").agg(F.count(F.lit(1)).alias("cnt"))
+            room = sizes.select(F.col("shard").alias("cand"), (F.lit(cap) - F.col("cnt")).cast("int").alias("cap"))
+            w_cap = Window.partitionBy("cand").orderBy(F.col("gain").desc(), F.col("id").asc())
+            # materialize movers ONCE: the count action and the state swap
+            # would otherwise each evaluate the full window program.
+            # Non-eager: the count() is the materializing action — one job
+            # per round for the whole window program instead of two.
+            with checkpoints() as step:
+                movers = step.pin(
+                    best.join(F.broadcast(room), "cand")
+                    .withColumn("_fill", F.row_number().over(w_cap))
+                    .where(F.col("_fill") <= F.greatest(F.col("cap"), F.lit(0)))
+                    .select("id", F.col("cand").alias("new_shard")),
+                    eager=False,
+                )
+                if movers.count() == 0:
+                    break
+                asn = cp.swap(
+                    asn.join(movers, "id", "left")
+                    .select("id", F.coalesce(F.col("new_shard"), F.col("shard")).cast("int").alias("shard")),
+                    asn,
+                )
+        return cp.keep(asn)
 
 
 def graph_partition(
@@ -525,15 +504,11 @@ def graph_partition(
     # one non-eager checkpoint feeds the size probe and whichever path runs:
     # the count materializes it, so the edges' upstream plan executes once
     # and an oversized table moves no rows to the driver
-    sel = local_checkpoint(edges.select("src", "dst", F.col("weight").cast("double")), eager=False)
-    try:
+    with checkpoints() as cp:
+        sel = cp.pin(edges.select("src", "dst", F.col("weight").cast("double")), eager=False)
         if sel.count() > MAX_DRIVER_EDGES:
-            return _graph_partition_spark(sel, num_shards, eps, coarse_target, refine_rounds, seed)
+            return cp.keep(_graph_partition_spark(sel, num_shards, eps, coarse_target, refine_rounds, seed))
         pdf = sel.toPandas()
-    finally:
-        # neither path's result reads sel later: the Spark path's lineage
-        # ends at checkpoints it has materialized, or at driver data
-        release_local_checkpoint(sel)
     ids, shard = _graph_partition_local(
         pdf["src"].to_numpy(np.int64), pdf["dst"].to_numpy(np.int64), pdf["weight"].to_numpy(np.float64),
         num_shards, eps, coarse_target, refine_rounds, seed,
@@ -543,47 +518,53 @@ def graph_partition(
     )
 
 
-def _graph_partition_spark(
-    edges: DataFrame, num_shards: int, eps: float, coarse_target: int, refine_rounds: int, seed: int,
-) -> DataFrame:
-    """``graph_partition`` as DataFrame supersteps, for edge tables too
-    large to collect: LP coarsening, driver-local initial partition of the
-    coarse graph, projection, then distributed refinement."""
-    maps, c_edges, c_w = coarsen_graph(edges, target=coarse_target)
+def _partition_coarsest(
+    edges: DataFrame, weights: DataFrame | None, num_shards: int, eps: float, target: int, seed: int,
+) -> tuple[DataFrame, bool]:
+    """Coarsen, partition the coarsest graph on the driver, project back up:
+    the (label, shard) plan over the finest ids, and whether no coarsening was needed."""
+    maps, c_edges, c_w = coarsen_graph(edges, weights=weights, target=target)
     # pin driver-side row order: toPandas() order follows the (AQE-chosen)
     # partition layout, and the greedy grower's tie-breaks follow row order
     # — unsorted frames make the partition vary between identical runs
     edge_pdf = c_edges.toPandas().sort_values(["src", "dst"], ignore_index=True)
     weight_pdf = c_w.toPandas().sort_values("id", ignore_index=True)
     part = _initial_partition_driver(edge_pdf, weight_pdf, num_shards, eps, seed)
-    spark = edges.sparkSession
-    coarse_asn = spark.createDataFrame(
-        [(int(v), int(s)) for v, s in part.items()], "label long, shard int"
-    )
-    # project back up through the contraction maps: maps[i] is
-    # (id@level_i → label@level_{i+1}); walk coarsest → finest.
-    asn = coarse_asn  # (label, shard) keyed by coarsest vertex ids
+    # (label, shard) keyed by the coarsest vertex ids; maps[i] is
+    # (id@level_i → label@level_{i+1}), so walk coarsest → finest
+    asn = edges.sparkSession.createDataFrame([(int(v), int(s)) for v, s in part.items()], "label long, shard int")
     for lab in reversed(maps):
         asn = lab.join(asn, "label").select(F.col("id").alias("label"), "shard")
-    # non-eager checkpoint: the projection chain (one broadcast join per
-    # level) executes ONCE — the count below materializes it, and the
-    # refinement's own eager checkpoint then copies from cache instead of
-    # re-walking the joins
-    asn = local_checkpoint(asn.select(F.col("label").alias("id"), "shard"), eager=False)
-    if not maps and len(weight_pdf) <= coarse_target:
-        # no coarsening was NEEDED (n ≤ coarse_target): the driver pass just
-        # partitioned AND boundary-refined the full-resolution graph, so the
-        # DataFrame refinement rounds would re-walk the same moves as pure
-        # Spark-job latency (~2/3 of graph_partition wall time at bench
-        # scale). Multilevel inputs still refine below — and so does the
-        # maps-empty-but-large case (the first LP level made no shrinkage,
-        # the knn_graph.h:120-131 stall guard), where the full-resolution
-        # graph was only driver-partitioned and needs distributed refinement
-        # most.
-        return asn
-    n = asn.count()
-    cap = max_cluster_size(n, num_shards, eps)
-    return refine_partition(edges, asn, cap, rounds=refine_rounds)
+    return asn, not maps and len(weight_pdf) <= target
+
+
+def _graph_partition_spark(
+    edges: DataFrame, num_shards: int, eps: float, coarse_target: int, refine_rounds: int, seed: int,
+) -> DataFrame:
+    """``graph_partition`` as DataFrame supersteps, for edge tables too
+    large to collect: LP coarsening, driver-local initial partition of the
+    coarse graph, projection, then distributed refinement."""
+    with checkpoints() as cp:
+        asn, whole = _partition_coarsest(edges, None, num_shards, eps, coarse_target, seed)
+        # non-eager checkpoint: the projection chain (one broadcast join per
+        # level) executes ONCE — the count below materializes it, and the
+        # refinement's own eager checkpoint then copies from cache instead
+        # of re-walking the joins
+        asn = cp.pin(asn.select(F.col("label").alias("id"), "shard"), eager=False)
+        if whole:
+            # no coarsening was NEEDED (n ≤ coarse_target): the driver pass
+            # just partitioned AND boundary-refined the full-resolution
+            # graph, so the DataFrame refinement rounds would re-walk the
+            # same moves as pure Spark-job latency (~2/3 of graph_partition
+            # wall time at bench scale). Multilevel inputs still refine
+            # below — and so does the maps-empty-but-large case (the first
+            # LP level made no shrinkage, the knn_graph.h:120-131 stall
+            # guard), where the full-resolution graph was only
+            # driver-partitioned and needs distributed refinement most.
+            return cp.keep(asn)
+        n = asn.count()
+        cap = max_cluster_size(n, num_shards, eps)
+        return cp.keep(refine_partition(edges, asn, cap, rounds=refine_rounds))
 
 
 # ------------------------------------ driver-local form of the same algorithm
@@ -733,86 +714,80 @@ def overlapping_partition(
     Returns a *cover* relation — ids may appear in multiple shards
     (Cover semantics defs.h:32, free in relational form, SURVEY §1).
     """
-    sym = edges.select("src", "dst").unionByName(
-        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).localCheckpoint(eager=True)
-    cover = assignment.select("id", "shard").localCheckpoint(eager=True)
-    n = assignment.select("id").distinct().count()
-    s = num_shards or (assignment.agg(F.max("shard")).collect()[0][0] + 1)
-    budget = int(overlap * n)
-    cap = max_cluster_size(n + budget, s, eps)
-    sizes = {
-        int(r["shard"]): int(r["c"])
-        for r in cover.groupBy("shard").agg(F.count(F.lit(1)).alias("c")).collect()
-    }
-
-    for _ in range(max_rounds):
-        if budget <= 0:
-            break
-        room = {sh: cap - sz for sh, sz in sizes.items() if sz < cap}
-        if not room:
-            break
-        open_df = F.broadcast(
-            edges.sparkSession.createDataFrame(
-                [(int(sh),) for sh in sorted(room)], "cand int"
-            )
-        )
-        affinity = (
-            sym.join(cover.select(F.col("id").alias("dst"), F.col("shard").alias("cand")), "dst")
-            .groupBy(F.col("src").alias("id"), "cand")
-            .agg(F.count(F.lit(1)).alias("aff"))
-        )
-        # valid targets only (TopMove :36-40): not already in the point's
-        # cover (anti-join) AND the target cluster still has room
-        new_targets = affinity.join(
-            cover.select("id", F.col("shard").alias("cand")), ["id", "cand"], "left_anti"
-        ).join(open_df, "cand", "left_semi")
-        w_best = Window.partitionBy("id").orderBy(F.col("aff").desc(), F.col("cand").asc())
-        best = (
-            new_targets.withColumn("_r", F.row_number().over(w_best))
-            .where(F.col("_r") == 1)
-            .localCheckpoint(eager=True)
-        )
-        max_aff = best.agg(F.max("aff")).collect()[0][0]
-        if max_aff is None or max_aff == 0:
-            release_local_checkpoint(best)
-            break
-        movers = best.where(F.col("aff") == max_aff)
-        counts = {
-            int(r["cand"]): int(r["c"])
-            for r in movers.groupBy("cand").agg(F.count(F.lit(1)).alias("c")).collect()
+    with checkpoints() as cp:
+        sym = cp.pin(edges.select("src", "dst").unionByName(
+            edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+        ))
+        cover = cp.pin(assignment.select("id", "shard"))
+        n = assignment.select("id").distinct().count()
+        s = num_shards or (assignment.agg(F.max("shard")).collect()[0][0] + 1)
+        budget = int(overlap * n)
+        cap = max_cluster_size(n + budget, s, eps)
+        sizes = {
+            int(r["shard"]): int(r["c"])
+            for r in cover.groupBy("shard").agg(F.count(F.lit(1)).alias("c")).collect()
         }
-        # per-cluster take = min(room, movers), then budget served in
-        # ascending cluster-id order (≙ the sequential budget loop :108-111)
-        remaining = budget
-        take: dict[int, int] = {}
-        for sh in sorted(counts):
-            t = min(room.get(sh, 0), counts[sh], remaining)
-            if t > 0:
-                take[sh] = t
-                remaining -= t
-        if not take:
-            release_local_checkpoint(best)
-            break
-        take_df = F.broadcast(
-            edges.sparkSession.createDataFrame(
-                [(int(sh), int(t)) for sh, t in take.items()], "cand int, take long"
+
+        for _ in range(max_rounds):
+            if budget <= 0:
+                break
+            room = {sh: cap - sz for sh, sz in sizes.items() if sz < cap}
+            if not room:
+                break
+            open_df = F.broadcast(
+                edges.sparkSession.createDataFrame(
+                    [(int(sh),) for sh in sorted(room)], "cand int"
+                )
             )
-        )
-        w_cap = Window.partitionBy("cand").orderBy(F.col("id").asc())
-        moves = (
-            movers.join(take_df, "cand")
-            .withColumn("_fill", F.row_number().over(w_cap))
-            .where(F.col("_fill") <= F.col("take"))
-            .select("id", F.col("cand").cast("int").alias("shard"))
-        )
-        budget -= sum(take.values())
-        for sh, t in take.items():
-            sizes[sh] = sizes.get(sh, 0) + t
-        cover = swap_checkpoint(cover.unionByName(moves), cover)
-        release_local_checkpoint(best)
-    release_local_checkpoint(sym)
-    return cover
+            affinity = (
+                sym.join(cover.select(F.col("id").alias("dst"), F.col("shard").alias("cand")), "dst")
+                .groupBy(F.col("src").alias("id"), "cand")
+                .agg(F.count(F.lit(1)).alias("aff"))
+            )
+            # valid targets only (TopMove :36-40): not already in the point's
+            # cover (anti-join) AND the target cluster still has room
+            new_targets = affinity.join(
+                cover.select("id", F.col("shard").alias("cand")), ["id", "cand"], "left_anti"
+            ).join(open_df, "cand", "left_semi")
+            w_best = Window.partitionBy("id").orderBy(F.col("aff").desc(), F.col("cand").asc())
+            with checkpoints() as step:
+                best = step.pin(new_targets.withColumn("_r", F.row_number().over(w_best)).where(F.col("_r") == 1))
+                max_aff = best.agg(F.max("aff")).collect()[0][0]
+                if max_aff is None or max_aff == 0:
+                    break
+                movers = best.where(F.col("aff") == max_aff)
+                counts = {
+                    int(r["cand"]): int(r["c"])
+                    for r in movers.groupBy("cand").agg(F.count(F.lit(1)).alias("c")).collect()
+                }
+                # per-cluster take = min(room, movers), then budget served in
+                # ascending cluster-id order (≙ the sequential budget loop :108-111)
+                remaining = budget
+                take: dict[int, int] = {}
+                for sh in sorted(counts):
+                    t = min(room.get(sh, 0), counts[sh], remaining)
+                    if t > 0:
+                        take[sh] = t
+                        remaining -= t
+                if not take:
+                    break
+                take_df = F.broadcast(
+                    edges.sparkSession.createDataFrame(
+                        [(int(sh), int(t)) for sh, t in take.items()], "cand int, take long"
+                    )
+                )
+                w_cap = Window.partitionBy("cand").orderBy(F.col("id").asc())
+                moves = (
+                    movers.join(take_df, "cand")
+                    .withColumn("_fill", F.row_number().over(w_cap))
+                    .where(F.col("_fill") <= F.col("take"))
+                    .select("id", F.col("cand").cast("int").alias("shard"))
+                )
+                budget -= sum(take.values())
+                for sh, t in take.items():
+                    sizes[sh] = sizes.get(sh, 0) + t
+                cover = cp.swap(cover.unionByName(moves), cover)
+        return cp.keep(cover)
 
 
 def overlapping_kmeans_partition(
@@ -873,37 +848,35 @@ def overlapping_kmeans_partition(
     kept = external.withColumn("_k", F.row_number().over(w_keep)).where(F.col("_k") <= 5).drop("_k")
     # capacity gate FIRST (best distances land), then the budget water-fill
     w_cap = Window.partitionBy("shard").orderBy(F.col("dist").asc(), F.col("id").asc())
-    gated = (
-        kept.withColumn("_fill", F.row_number().over(w_cap))
-        .join(
-            F.broadcast(
-                points.sparkSession.createDataFrame(
-                    [(int(sh), int(r)) for sh, r in room.items()], "shard int, room long"
-                )
-            ),
-            "shard",
+    with checkpoints() as cp:
+        gated = cp.pin(
+            kept.withColumn("_fill", F.row_number().over(w_cap))
+            .join(
+                F.broadcast(
+                    points.sparkSession.createDataFrame(
+                        [(int(sh), int(r)) for sh, r in room.items()], "shard int, room long"
+                    )
+                ),
+                "shard",
+            )
+            .where(F.col("_fill") <= F.col("room"))
         )
-        .where(F.col("_fill") <= F.col("room"))
-        .localCheckpoint(eager=True)
-    )
-    avail = {
-        int(r["shard"]): int(r["c"])
-        for r in gated.groupBy("shard").agg(F.count(F.lit(1)).alias("c")).collect()
-    }
-    take = _water_fill(avail, budget)
-    take_df = F.broadcast(
-        points.sparkSession.createDataFrame(
-            [(int(sh), int(t)) for sh, t in take.items()], "shard int, take long"
+        avail = {
+            int(r["shard"]): int(r["c"])
+            for r in gated.groupBy("shard").agg(F.count(F.lit(1)).alias("c")).collect()
+        }
+        take = _water_fill(avail, budget)
+        take_df = F.broadcast(
+            points.sparkSession.createDataFrame(
+                [(int(sh), int(t)) for sh, t in take.items()], "shard int, take long"
+            )
         )
-    )
-    extras = (
-        gated.join(take_df, "shard")
-        .where(F.col("_fill") <= F.col("take"))
-        .select("id", "shard")
-    )
-    out = assignment.select("id", "shard").unionByName(extras).localCheckpoint(eager=True)
-    release_local_checkpoint(gated)
-    return out
+        extras = (
+            gated.join(take_df, "shard")
+            .where(F.col("_fill") <= F.col("take"))
+            .select("id", "shard")
+        )
+        return cp.keep(cp.pin(assignment.select("id", "shard").unionByName(extras)))
 
 
 def _water_fill(avail: dict[int, int], budget: int) -> dict[int, int]:

@@ -89,11 +89,7 @@ SCORE_BUDGET_BYTES = 64 << 20
 # batch is broadcast, so its float64 payload is held once on the driver and
 # once per executor — chunk it rather than trust "evaluation batches are
 # small" (at 100k queries × d=768 one unchecked toPandas is ~600 MB)
-import os as _os
-
-MAX_QUERY_BLOCK_BYTES = int(
-    _os.environ.get("SPARK_GRAFT_MAX_QUERY_BLOCK_BYTES", str(64 << 20))
-)
+MAX_QUERY_BLOCK_BYTES = 64 << 20
 
 
 def _query_block(pdf, q_id_col: str, q_vec_col: str) -> tuple[np.ndarray, np.ndarray]:
@@ -109,7 +105,7 @@ def _bounded_query_batches(queries: DataFrame, q_id_col: str, q_vec_col: str):
     """Collect the query side to the driver in bounded blocks.
 
     Yields ``(qids, Q)`` NumPy blocks whose vector payload stays ≤
-    ``MAX_QUERY_BLOCK_BYTES`` (env ``SPARK_GRAFT_MAX_QUERY_BLOCK_BYTES``).
+    ``MAX_QUERY_BLOCK_BYTES``.
     The scoring kernels are per-query independent and both distributed
     paths finish with a per-query window/aggregation, so running them per
     block and unioning is bit-identical to one unchunked pass. One block

@@ -165,15 +165,6 @@ def run_in_shard_searches_sweep(
     )
 
 
-def serialize_shard_searches(shard_results: DataFrame, path: str) -> None:
-    """≙ SerializeShardSearches (shard_searches.cpp:108-158) — Parquet."""
-    shard_results.write.mode("overwrite").parquet(path)
-
-
-def deserialize_shard_searches(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)
-
-
 def serialize_routes(routes: DataFrame, path: str) -> None:
     """≙ SerializeRoutes (routes.cpp:317-352) — Parquet of the
     (query_id, shard, probe_rank) relation."""

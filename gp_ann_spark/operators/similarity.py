@@ -11,6 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from gp_ann_spark.checkpoint import checkpoints
 from gp_ann_spark.operators import kmeans as KM
 from gp_ann_spark.operators import routing as RT
 from gp_ann_spark.operators import search as S
@@ -89,6 +90,7 @@ def ivf_topk(
     # materialize the (nq × k, three ints) result eagerly so the 3×-reused
     # pts cache can be released HERE — a lazily returned plan would pin it
     # in executor storage for the session's lifetime
-    out = out.localCheckpoint(eager=True)
-    pts.unpersist()
-    return out
+    with checkpoints() as cp:
+        out = cp.pin(out)
+        pts.unpersist()
+        return cp.keep(out)

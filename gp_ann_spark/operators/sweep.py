@@ -27,7 +27,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from gp_ann_spark.checkpoint import release_local_checkpoint
+from gp_ann_spark.checkpoint import checkpoints, fan_out
 from gp_ann_spark.eval import recall as R
 from gp_ann_spark.operators import routing as RT
 from gp_ann_spark.operators import search as S
@@ -95,59 +95,58 @@ def iterate_routing_configs(
     num_shards = num_shards or (assignment.agg(F.max("shard")).collect()[0][0] + 1)
     nq = n_queries if n_queries is not None else queries.count()
     out: list[dict] = []
-    for cfg in generate_router_configs(budgets):
-        rp = RT.train_kmeans_tree(
-            points,
-            assignment,
-            branching=cfg["num_centroids"],
-            min_cluster_size=cfg["min_cluster_size"],
-            max_nodes_per_shard=max(1, cfg["budget"] // num_shards),
-            seed=seed,
-        ).localCheckpoint(eager=False)  # the count below materializes: 1 job
-        n_rp = rp.count()
-        for nv in num_voting_list:
-            scored = RT.score_routing_points(
-                queries, rp, num_voting=nv, metric=metric,
-                # n_rp is already counted off the checkpointed table — no
-                # size-probe job per (config, num_voting) grid cell
-                distributed=n_rp > RT.MAX_BROADCAST_ROUTING_POINTS,
-            ).localCheckpoint(eager=False)  # materialized by the first
-            # routes materialization below; released after the policy loop
-            for policy in policies:
-                # checkpoint the (small, nq×shards) routes relation so the
-                # (bigger) scored checkpoint can be released per grid cell —
-                # a full reference-shaped grid (~10 budgets × 7 nv) would
-                # otherwise pin ~80 scored/routing tables for the session.
-                # Non-eager: the first_shard_recall count is the
-                # materializing action — one job per policy, not two.
-                routes = RT.probe_order(scored, policy=policy).localCheckpoint(eager=False)
-                fsr = R.first_shard_recall(gt, cover, routes, k, nq)
-                out.append(
-                    {
-                        "algorithm": f"KMeansTree-{policy}",
-                        "budget": cfg["budget"],
-                        "num_centroids": cfg["num_centroids"],
-                        "num_voting": nv,
-                        "n_routing_points": n_rp,
-                        "first_shard_recall": fsr,
-                        "routes": routes,
-                    }
-                )
-            release_local_checkpoint(scored)
-        release_local_checkpoint(rp)
-    rr = random_routes(queries, num_shards, seed).localCheckpoint(eager=False)
-    out.append(
-        {
-            "algorithm": "Random",
-            "budget": 0,
-            "num_centroids": 0,
-            "num_voting": 0,
-            "n_routing_points": 0,
-            "first_shard_recall": R.first_shard_recall(gt, cover, rr, k, nq),
-            "routes": rr,
-        }
-    )
-    return out
+    with checkpoints() as cp:
+        for cfg in generate_router_configs(budgets):
+            with checkpoints() as per_cfg:
+                rp = per_cfg.pin(RT.train_kmeans_tree(
+                    points, assignment, branching=cfg["num_centroids"], min_cluster_size=cfg["min_cluster_size"],
+                    max_nodes_per_shard=max(1, cfg["budget"] // num_shards), seed=seed,
+                ), eager=False)  # the count below materializes: 1 job
+                n_rp = rp.count()
+                for nv in num_voting_list:
+                    with checkpoints() as per_nv:
+                        # non-eager: materialized by the first routes below.
+                        # n_rp is already counted off the checkpointed table
+                        # — no size-probe job per (config, num_voting) cell
+                        scored = per_nv.pin(RT.score_routing_points(
+                            queries, rp, num_voting=nv, metric=metric,
+                            distributed=n_rp > RT.MAX_BROADCAST_ROUTING_POINTS,
+                        ), eager=False)
+                        for policy in policies:
+                            # checkpoint the (small, nq×shards) routes relation
+                            # so the (bigger) scored checkpoint can be released
+                            # per grid cell — a full reference-shaped grid (~10
+                            # budgets × 7 nv) would otherwise pin ~80
+                            # scored/routing tables for the session.
+                            # Non-eager: the first_shard_recall count is the
+                            # materializing action — one job per policy, not
+                            # two.
+                            routes = cp.pin(RT.probe_order(scored, policy=policy), eager=False)
+                            fsr = R.first_shard_recall(gt, cover, routes, k, nq)
+                            out.append(
+                                {
+                                    "algorithm": f"KMeansTree-{policy}",
+                                    "budget": cfg["budget"],
+                                    "num_centroids": cfg["num_centroids"],
+                                    "num_voting": nv,
+                                    "n_routing_points": n_rp,
+                                    "first_shard_recall": fsr,
+                                    "routes": routes,
+                                }
+                            )
+        rr = cp.pin(random_routes(queries, num_shards, seed), eager=False)
+        out.append(
+            {
+                "algorithm": "Random",
+                "budget": 0,
+                "num_centroids": 0,
+                "num_voting": 0,
+                "n_routing_points": 0,
+                "first_shard_recall": R.first_shard_recall(gt, cover, rr, k, nq),
+                "routes": rr,
+            }
+        )
+        return cp.keep(out)
 
 
 def routing_sweep_pareto(
@@ -181,67 +180,59 @@ def routing_sweep_pareto(
     nprobes_values = list(nprobes_values or range(1, num_shards + 1))
     ef_list = sorted(set(int(e) for e in (ef_values or SS.EF_SWEEP)))
     nq = queries.count()
-    configs = iterate_routing_configs(
-        points, assignment, queries, gt, k, num_shards, budgets, num_voting_list,
-        policies=policies, metric=metric, seed=seed, n_queries=nq,
-    )
-    # EAGER on purpose: the config threads below all read `sharded`
-    # concurrently — a lazy checkpoint would let several threads race to
-    # materialize the full point table at once (duplicated compute); one
-    # up-front job, then every thread hits the cache. (`sr_all` inside each
-    # thread stays non-eager: it is private to that thread.)
-    sharded = S.shard_points(points, assignment).localCheckpoint(eager=True)
+    with checkpoints() as cp:
+        # the routes relations of the configs pass to this scope, which
+        # releases them once every config is evaluated
+        configs = iterate_routing_configs(
+            points, assignment, queries, gt, k, num_shards, budgets, num_voting_list,
+            policies=policies, metric=metric, seed=seed, n_queries=nq,
+        )
+        # EAGER on purpose: the config threads below all read `sharded`
+        # concurrently — a lazy checkpoint would let several threads race to
+        # materialize the full point table at once (duplicated compute); one
+        # up-front job, then every thread hits the cache. (`sr_all` inside
+        # each thread stays non-eager: it is private to that thread.)
+        sharded = cp.pin(S.shard_points(points, assignment))
 
-    def eval_config(cfg) -> list[dict]:
-        """Sweep-evaluate ONE route config; configs are independent, so the
-        driver loop runs them on a small thread pool (guide §2.6: Spark
-        schedules concurrent jobs onto shared task slots — one config's
-        aggregation back-fills the executor tail of another's search).
-        Checkpoint lifecycle stays per-thread-sequential: everything this
-        config pinned is released before the thread returns."""
-        if in_shard == "ivf":
-            sr_all = SS.run_in_shard_searches_sweep(
-                sharded, queries, cfg["routes"], k=k, metric=metric, ef_values=ef_list, seed=seed,
-            ).localCheckpoint(eager=False)
-            # one grouped-by-ef pass for the whole ef sweep (2 jobs), not
-            # 2·|ef| jobs over per-ef filters — row-identical grids
-            grids = SS.recall_qps_grid_by_ef(sr_all, gt, k, nq, nprobes_values, ef_list)
-            sweeps = [(ef, grids[int(ef)]) for ef in ef_list]
-        else:
-            sr_all = SS.run_in_shard_searches(sharded, queries, cfg["routes"], k=k, metric=metric)
-            sr_all = sr_all.localCheckpoint(eager=False)
-            sweeps = [(0, SS.recall_qps_grid(sr_all, gt, k, nq, nprobes_values))]
-        out = []
-        for ef, grid in sweeps:
-            for _, g in grid.iterrows():
-                out.append(
-                    {
-                        "algorithm": cfg["algorithm"],
-                        "budget": cfg["budget"],
-                        "num_voting": cfg["num_voting"],
-                        "first_shard_recall": cfg["first_shard_recall"],
-                        "ef": int(ef),
-                        "nprobes": int(g["nprobes"]),
-                        "recall": float(g["recall"]),
-                        "qps": float(g["qps"]),
-                    }
-                )
-        release_local_checkpoint(sr_all)
-        # the routes relation was checkpointed per grid cell inside
-        # iterate_routing_configs and is not returned — release it too, or a
-        # reference-shaped grid (~10 budgets × 7 nv × 4 policies) pins ~280
-        # small tables in executor storage for the session
-        release_local_checkpoint(cfg["routes"])
-        return out
+        def eval_config(cfg_cp, cfg) -> list[dict]:
+            """Sweep-evaluate ONE route config; configs are independent, so
+            the driver loop runs them on a small thread pool (guide §2.6:
+            Spark schedules concurrent jobs onto shared task slots — one
+            config's aggregation back-fills the executor tail of another's
+            search). What this config pins is released when it returns."""
+            if in_shard == "ivf":
+                sr_all = cfg_cp.pin(SS.run_in_shard_searches_sweep(
+                    sharded, queries, cfg["routes"], k=k, metric=metric, ef_values=ef_list, seed=seed,
+                ), eager=False)
+                # one grouped-by-ef pass for the whole ef sweep (2 jobs), not
+                # 2·|ef| jobs over per-ef filters — row-identical grids
+                grids = SS.recall_qps_grid_by_ef(sr_all, gt, k, nq, nprobes_values, ef_list)
+                sweeps = [(ef, grids[int(ef)]) for ef in ef_list]
+            else:
+                sr_all = cfg_cp.pin(
+                    SS.run_in_shard_searches(sharded, queries, cfg["routes"], k=k, metric=metric), eager=False)
+                sweeps = [(0, SS.recall_qps_grid(sr_all, gt, k, nq, nprobes_values))]
+            out = []
+            for ef, grid in sweeps:
+                for _, g in grid.iterrows():
+                    out.append(
+                        {
+                            "algorithm": cfg["algorithm"],
+                            "budget": cfg["budget"],
+                            "num_voting": cfg["num_voting"],
+                            "first_shard_recall": cfg["first_shard_recall"],
+                            "ef": int(ef),
+                            "nprobes": int(g["nprobes"]),
+                            "recall": float(g["recall"]),
+                            "qps": float(g["qps"]),
+                        }
+                    )
+            return out
 
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=min(4, max(1, len(configs)))) as ex:
-        per_config = list(ex.map(eval_config, configs))
+        per_config = fan_out(eval_config, configs, min(4, max(1, len(configs))))
     # rows in CONFIG ORDER regardless of thread completion order — the
     # output frame's row order (and so downstream hashes) stays deterministic
     rows = [r for chunk in per_config for r in chunk]
-    release_local_checkpoint(sharded)
     pdf = pd.DataFrame(rows)
     # global Pareto across ALL configs (reference keeps the non-dominated set)
     pdf["pareto"] = [

@@ -35,9 +35,7 @@ _ENGINE_CONF = {
     # SPARK_GRAFT_ADVISORY_PARTITION_BYTES to 128–256m so 100 TB shuffles
     # produce 100 MB+ partitions (guide §2.2) instead of millions of 8 MB
     # ones.
-    "spark.sql.adaptive.coalescePartitions.parallelismFirst": os.environ.get(
-        "SPARK_GRAFT_AQE_PARALLELISM_FIRST", "false"
-    ),
+    "spark.sql.adaptive.coalescePartitions.parallelismFirst": "false",
     "spark.sql.adaptive.advisoryPartitionSizeInBytes": os.environ.get(
         "SPARK_GRAFT_ADVISORY_PARTITION_BYTES", "8m"
     ),

@@ -38,6 +38,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from gp_ann_spark.checkpoint import checkpoints
 from gp_ann_spark.corpus.ingest import dedup_files, dense_ids, featurize
 from gp_ann_spark.operators.knn import deg_kth, incremental_knn_delta, knn_edges, merge_topk
 
@@ -358,131 +359,130 @@ def ingest_stream(
     bucket = edges_sink.bucket_expr
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        # 1. content-hash dedup WITHIN the batch — the ONE definition of the
-        #    keep-first-provenance rule (corpus.dedup_files), so the batch
-        #    and streaming paths cannot silently diverge ...
-        batch_unique = dedup_files(batch_df).select("sha256", "content")
-        # 2. ... and against the sink (anti-join on the hash — state lives in
-        #    the sink, not the state store). The sink is hash-bucketed by
-        #    pbucket = pmod(xxhash64(sha256), n_buckets), so the anti-join
-        #    reads ONLY the batch's buckets (partition-pruned scan) instead
-        #    of the whole 10^12-row sink every micro-batch — same design as
-        #    the edge sink.
-        points_sink.heal()
-        have_sink = _sink_exists(points_dir)
-        if have_sink:
-            points_sink.ensure_layout(spark)
-            batch_buckets = [
-                int(r["b"])
-                for r in batch_unique.select(_points_bucket(n_buckets).alias("b"))
-                .distinct()
-                .collect()
-            ]
-            seen = (
-                spark.read.parquet(points_dir)
-                .where(F.col("pbucket").isin(batch_buckets))
-                .select("sha256")
-            )
-            batch_unique = batch_unique.join(seen, "sha256", "left_anti")
-        batch_unique = batch_unique.localCheckpoint(eager=True)
-        n_new = batch_unique.count()
-        if n_new == 0:
-            # a replayed batch whose points append fully landed dedups to
-            # zero — finalize the crashed attempt's bookkeeping (else the
-            # marker leaks and EVERY later batch pays the count-reconcile
-            # over the full sink). _read_next_id validates the marker's
-            # (offset, n_new) against the committed count first, so a torn
-            # append still fails loudly here rather than being blessed.
-            marker = _inflight_marker(points_dir)
-            if have_sink and os.path.exists(marker):
-                _write_next_id(spark, points_dir, _read_next_id(spark, points_dir))
-                os.remove(marker)
-            return
-        # 3. dense ids continue from the metadata sink's next_id
-        #    (deterministic within the batch: rank by sha256, prefix-sum
-        #    assignment — no single-partition window)
-        offset = _read_next_id(spark, points_dir) if have_sink else 0
-        existing = spark.read.parquet(points_dir) if have_sink else None
-        # in-flight marker: present ⇒ a batch may have crashed between its
-        # sink writes, so the next id read reconciles against the committed
-        # count instead of trusting the (possibly stale) metadata row. It
-        # records (offset, n_new) so replay can DETECT a torn append (a
-        # committed count strictly between the two) instead of silently
-        # renumbering — see _read_next_id.
-        with open(_inflight_marker(points_dir), "w") as fh:
-            fh.write(json.dumps({"offset": int(offset), "n_new": int(n_new)}))
-        with_ids = dense_ids(batch_unique, order_col="sha256").withColumn(
-            "id", F.col("id") + F.lit(offset)
-        )
-        new_pts = featurize(with_ids, dim=dim).join(
-            with_ids.select("id", "sha256"), "id"
-        ).localCheckpoint(eager=True)
-        # 4. maintain the EXACT edge table incrementally, rewriting only the
-        #    src-buckets that contain changed rows. The (src, deg, kth)
-        #    threshold sidecar (bucket-partitioned like the edges) replaces
-        #    the O(n·k)-row full-edge-table aggregate in the delta — the one
-        #    remaining table-sized read — so a batch touches O(n_points)
-        #    narrow rows + O(changed buckets) edge rows, never O(edges).
-        thresh_dir = edges_dir + "_thresh"
-        if existing is not None and _sink_exists(edges_dir):
-            edges_sink.ensure_layout(spark)
-            edges_full = spark.read.parquet(edges_dir)
-            if not _sink_exists(thresh_dir):
-                # one-time migration of a pre-sidecar sink: materialize the
-                # FULL sidecar now (every bucket). The per-batch refresh
-                # below rewrites only changed buckets, so an in-memory
-                # partial migration would leave every other src invisible
-                # (null → +inf threshold) on the NEXT batch.
-                deg_kth(edges_full, "bucket").write.mode("overwrite").partitionBy(
-                    "bucket"
-                ).parquet(thresh_dir)
-            thresholds = spark.read.parquet(thresh_dir).select("src", "deg", "kth")
-            delta = incremental_knn_delta(
-                existing.select("id", "vec"), None, new_pts.select("id", "vec"),
-                k=k, metric=metric, thresholds=thresholds,
-            ).localCheckpoint(eager=True)
-            changed = [
-                int(r["b"]) for r in delta.select(bucket.alias("b")).distinct().collect()
-            ]
-            if changed:
-                # filter on the PARTITION column so the scan prunes to the
-                # changed bucket directories (a pmod(src,..) predicate does
-                # not map to partition pruning)
-                old_changed = edges_full.where(F.col("bucket").isin(changed)).select(
-                    "src", "dst", "weight"
+        with checkpoints() as cp:
+            # 1. content-hash dedup WITHIN the batch — the ONE definition of the
+            #    keep-first-provenance rule (corpus.dedup_files), so the batch
+            #    and streaming paths cannot silently diverge ...
+            batch_unique = dedup_files(batch_df).select("sha256", "content")
+            # 2. ... and against the sink (anti-join on the hash — state lives in
+            #    the sink, not the state store). The sink is hash-bucketed by
+            #    pbucket = pmod(xxhash64(sha256), n_buckets), so the anti-join
+            #    reads ONLY the batch's buckets (partition-pruned scan) instead
+            #    of the whole 10^12-row sink every micro-batch — same design as
+            #    the edge sink.
+            points_sink.heal()
+            have_sink = _sink_exists(points_dir)
+            if have_sink:
+                points_sink.ensure_layout(spark)
+                batch_buckets = [
+                    int(r["b"])
+                    for r in batch_unique.select(_points_bucket(n_buckets).alias("b"))
+                    .distinct()
+                    .collect()
+                ]
+                seen = (
+                    spark.read.parquet(points_dir)
+                    .where(F.col("pbucket").isin(batch_buckets))
+                    .select("sha256")
                 )
-                updated = merge_topk(old_changed.unionByName(delta), k).withColumn("bucket", bucket)
-                # stage, then dynamic-overwrite ONLY the changed bucket dirs
-                # (can't read+overwrite the same path in one job); both
-                # writes are O(changed buckets), not O(table)
-                staging = edges_dir + "_staging"
-                updated.write.mode("overwrite").partitionBy("bucket").parquet(staging)
-                staged = spark.read.parquet(staging)
-                staged.write.mode("overwrite").option(
-                    "partitionOverwriteMode", "dynamic"
-                ).partitionBy("bucket").parquet(edges_dir)
-                _write_thresholds(spark, thresh_dir, staged)
-        else:
-            all_pts = new_pts.select("id", "vec")
-            if existing is not None:
-                all_pts = all_pts.unionByName(existing.select("id", "vec"))
-            n_all = all_pts.count()
-            if n_all > 1:
-                full = knn_edges(all_pts, k=min(k, n_all - 1), metric=metric).withColumn("bucket", bucket)
-                full.write.mode("overwrite").partitionBy("bucket").parquet(edges_dir)
-                _write_thresholds(spark, thresh_dir, spark.read.parquet(edges_dir))
-                edges_sink.stamp(spark)
-        new_pts.withColumn("pbucket", _points_bucket(n_buckets)).write.mode(
-            "append"
-        ).partitionBy("pbucket").parquet(points_dir)
-        if not have_sink:
-            points_sink.stamp(spark)
-        _write_next_id(spark, points_dir, offset + n_new)
-        # clean completion: the metadata row is authoritative again
-        try:
-            os.remove(_inflight_marker(points_dir))
-        except FileNotFoundError:
-            pass
+                batch_unique = batch_unique.join(seen, "sha256", "left_anti")
+            batch_unique = cp.pin(batch_unique)
+            n_new = batch_unique.count()
+            if n_new == 0:
+                # a replayed batch whose points append fully landed dedups to
+                # zero — finalize the crashed attempt's bookkeeping (else the
+                # marker leaks and EVERY later batch pays the count-reconcile
+                # over the full sink). _read_next_id validates the marker's
+                # (offset, n_new) against the committed count first, so a torn
+                # append still fails loudly here rather than being blessed.
+                marker = _inflight_marker(points_dir)
+                if have_sink and os.path.exists(marker):
+                    _write_next_id(spark, points_dir, _read_next_id(spark, points_dir))
+                    os.remove(marker)
+                return
+            # 3. dense ids continue from the metadata sink's next_id
+            #    (deterministic within the batch: rank by sha256, prefix-sum
+            #    assignment — no single-partition window)
+            offset = _read_next_id(spark, points_dir) if have_sink else 0
+            existing = spark.read.parquet(points_dir) if have_sink else None
+            # in-flight marker: present ⇒ a batch may have crashed between its
+            # sink writes, so the next id read reconciles against the committed
+            # count instead of trusting the (possibly stale) metadata row. It
+            # records (offset, n_new) so replay can DETECT a torn append (a
+            # committed count strictly between the two) instead of silently
+            # renumbering — see _read_next_id.
+            with open(_inflight_marker(points_dir), "w") as fh:
+                fh.write(json.dumps({"offset": int(offset), "n_new": int(n_new)}))
+            with_ids = dense_ids(batch_unique, order_col="sha256").withColumn(
+                "id", F.col("id") + F.lit(offset)
+            )
+            new_pts = cp.pin(featurize(with_ids, dim=dim).join(with_ids.select("id", "sha256"), "id"))
+            # 4. maintain the EXACT edge table incrementally, rewriting only the
+            #    src-buckets that contain changed rows. The (src, deg, kth)
+            #    threshold sidecar (bucket-partitioned like the edges) replaces
+            #    the O(n·k)-row full-edge-table aggregate in the delta — the one
+            #    remaining table-sized read — so a batch touches O(n_points)
+            #    narrow rows + O(changed buckets) edge rows, never O(edges).
+            thresh_dir = edges_dir + "_thresh"
+            if existing is not None and _sink_exists(edges_dir):
+                edges_sink.ensure_layout(spark)
+                edges_full = spark.read.parquet(edges_dir)
+                if not _sink_exists(thresh_dir):
+                    # one-time migration of a pre-sidecar sink: materialize the
+                    # FULL sidecar now (every bucket). The per-batch refresh
+                    # below rewrites only changed buckets, so an in-memory
+                    # partial migration would leave every other src invisible
+                    # (null → +inf threshold) on the NEXT batch.
+                    deg_kth(edges_full, "bucket").write.mode("overwrite").partitionBy(
+                        "bucket"
+                    ).parquet(thresh_dir)
+                thresholds = spark.read.parquet(thresh_dir).select("src", "deg", "kth")
+                delta = cp.pin(incremental_knn_delta(
+                    existing.select("id", "vec"), None, new_pts.select("id", "vec"),
+                    k=k, metric=metric, thresholds=thresholds,
+                ))
+                changed = [
+                    int(r["b"]) for r in delta.select(bucket.alias("b")).distinct().collect()
+                ]
+                if changed:
+                    # filter on the PARTITION column so the scan prunes to the
+                    # changed bucket directories (a pmod(src,..) predicate does
+                    # not map to partition pruning)
+                    old_changed = edges_full.where(F.col("bucket").isin(changed)).select(
+                        "src", "dst", "weight"
+                    )
+                    updated = merge_topk(old_changed.unionByName(delta), k).withColumn("bucket", bucket)
+                    # stage, then dynamic-overwrite ONLY the changed bucket dirs
+                    # (can't read+overwrite the same path in one job); both
+                    # writes are O(changed buckets), not O(table)
+                    staging = edges_dir + "_staging"
+                    updated.write.mode("overwrite").partitionBy("bucket").parquet(staging)
+                    staged = spark.read.parquet(staging)
+                    staged.write.mode("overwrite").option(
+                        "partitionOverwriteMode", "dynamic"
+                    ).partitionBy("bucket").parquet(edges_dir)
+                    _write_thresholds(spark, thresh_dir, staged)
+            else:
+                all_pts = new_pts.select("id", "vec")
+                if existing is not None:
+                    all_pts = all_pts.unionByName(existing.select("id", "vec"))
+                n_all = all_pts.count()
+                if n_all > 1:
+                    full = knn_edges(all_pts, k=min(k, n_all - 1), metric=metric).withColumn("bucket", bucket)
+                    full.write.mode("overwrite").partitionBy("bucket").parquet(edges_dir)
+                    _write_thresholds(spark, thresh_dir, spark.read.parquet(edges_dir))
+                    edges_sink.stamp(spark)
+            new_pts.withColumn("pbucket", _points_bucket(n_buckets)).write.mode(
+                "append"
+            ).partitionBy("pbucket").parquet(points_dir)
+            if not have_sink:
+                points_sink.stamp(spark)
+            _write_next_id(spark, points_dir, offset + n_new)
+            # clean completion: the metadata row is authoritative again
+            try:
+                os.remove(_inflight_marker(points_dir))
+            except FileNotFoundError:
+                pass
 
     stream = spark.readStream.schema(REPO_SCHEMA).parquet(input_dir)
     q = (

@@ -1,4 +1,5 @@
 import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
 from gp_ann_spark.operators import knn
@@ -38,6 +39,13 @@ def test_exact_knn_sql_agrees_with_arrow_path(spark, rng):
     a = knn.exact_knn(pdf, qdf, k=4).select("query_id", "rank", "neighbor_id").orderBy("query_id", "rank").collect()
     b = knn.exact_knn_sql(pdf, qdf, k=4).select("query_id", "rank", "neighbor_id").orderBy("query_id", "rank").collect()
     assert a == b
+
+
+def test_exact_knn_refuses_queries_over_the_broadcast_cap(spark, rng, monkeypatch):
+    monkeypatch.setattr(knn, "MAX_BROADCAST_QUERIES", 5)
+    base = rng.normal(size=(20, 4))
+    with pytest.raises(ValueError, match="MAX_BROADCAST_QUERIES"):
+        knn.exact_knn(make_points_df(spark, base), make_points_df(spark, base[:6], id_col="query_id"), k=3)
 
 
 def test_knn_edges_and_symmetrize(spark, rng):

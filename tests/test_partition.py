@@ -373,7 +373,7 @@ def test_spark_path_size_estimates_stay_bounded(spark, monkeypatch):
         return df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
 
     raw, kept, levels = [], [], []
-    real_checkpoint = CP.local_checkpoint
+    real_checkpoint = CP._local_checkpoint
 
     def recording_checkpoint(df, eager=True):
         raw.append(size_estimate(df))
@@ -382,8 +382,7 @@ def test_spark_path_size_estimates_stay_bounded(spark, monkeypatch):
         return out
 
     real_level = P._lp_coarsen_level
-    monkeypatch.setattr(P, "local_checkpoint", recording_checkpoint)
-    monkeypatch.setattr(CP, "local_checkpoint", recording_checkpoint)  # swap_checkpoint's
+    monkeypatch.setattr(CP, "_local_checkpoint", recording_checkpoint)
     monkeypatch.setattr(P, "_lp_coarsen_level", lambda *a, **kw: levels.append(1) or real_level(*a, **kw))
     edges = knn_graph_edges(spark, 6, 50, 8, 8)
     assert_paths_identical(edges, 4, 8)
