@@ -206,16 +206,3 @@ def max_shard_search_recall(gt: DataFrame, cover: DataFrame, k: int, n_queries: 
     )
     return covered / (n_queries * k)
 
-
-def pareto_front(configs: DataFrame, x: str = "recall", y: str = "qps") -> DataFrame:
-    """Drop dominated (recall, QPS) configs (≙ route_search_combination.cpp:
-    193-218): keep rows where no other row is ≥ in both dims (> in one).
-    Config grids are tiny — a window over recall-descending order suffices."""
-    w = bounded_global_window(F.col(x).desc(), F.col(y).desc(), key=F.col(x)).rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    return (
-        configs.withColumn("_best_y", F.max(y).over(w))
-        .where(F.col("_best_y").isNull() | (F.col(y) > F.col("_best_y")))
-        .drop("_best_y")
-    )

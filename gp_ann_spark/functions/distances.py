@@ -135,12 +135,3 @@ def sql_distance(a: Column, b: Column, metric: str = "l2") -> Column:
     norm_prod = F.sqrt(sql_inner_product(a, a)) * F.sqrt(sql_inner_product(b, b))
     safe = F.when(norm_prod == 0.0, F.lit(1.0)).otherwise(norm_prod)
     return F.lit(1.0) - sql_inner_product(a, b) / safe
-
-
-def sql_l2_normalize(vec: Column) -> Column:
-    """L2-normalize an ARRAY column in Catalyst (≙ L2Normalize
-    dist.cpp:60-73, used by convert.cpp:38-61 for angular datasets);
-    zero vectors pass through unchanged."""
-    norm = F.sqrt(F.aggregate(vec.cast("array<double>"), F.lit(0.0), lambda a, v: a + v * v))
-    safe = F.when(norm == 0.0, F.lit(1.0)).otherwise(norm)
-    return F.transform(vec, lambda v: (v / safe).cast("float"))

@@ -194,10 +194,6 @@ def write_points(points: DataFrame, path: str) -> None:
     points.write.mode("overwrite").parquet(path)
 
 
-def read_points(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)
-
-
 def write_ground_truth(gt: DataFrame, path: str) -> None:
     """≙ WriteGroundTruth (points_io.cpp:161-179) — Parquet of the
     (query_id, rank, neighbor_id, dist) relation."""

@@ -328,22 +328,6 @@ def build_knn_graph(
         return cp.keep(cp.pin(symmetrize(edges) if symmetric else edges, eager=False))
 
 
-SIZE_QUANTILES = (0.0, 0.01, 0.05, 0.1, 0.15, 0.5, 0.85, 0.9, 0.95, 0.99, 1.0)
-
-
-def bucket_size_stats(bucketed: DataFrame) -> DataFrame:
-    """Bucket-size distribution diagnostic (≙ the BruteForceBuckets stats,
-    knn_graph.h:191-208): count, mean, and the reference's quantile grid over
-    the per-bucket sizes. One row; the size table is one groupBy."""
-    sizes = bucketed.groupBy("bucket").agg(F.count(F.lit(1)).alias("n"))
-    qs = ",".join(str(q) for q in SIZE_QUANTILES)
-    return sizes.agg(
-        F.count(F.lit(1)).alias("n_buckets"),
-        F.avg("n").alias("avg_size"),
-        F.expr(f"percentile(n, array({qs}))").alias("quantiles"),
-    )
-
-
 def graph_recall(approx_edges: DataFrame, exact_edges: DataFrame) -> float:
     """Fraction of exact k-NN edges recovered by the approximate graph
     (≙ GraphRecall graph_quality_benchmark.cpp:53-66): |A ∩ E| / |E|."""

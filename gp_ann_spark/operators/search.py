@@ -11,7 +11,9 @@ Spark-first design: points are **co-partitioned by shard** (the relational
 form of the reference's CSR-blocked inverted index, north_star), the probe
 plan ``(query, shard)`` is joined with query vectors and cogrouped with the
 points by shard; one ``applyInPandas`` per shard runs the in-shard kernel
-for every query probing that shard. Two kernels:
+for every query probing that shard. ``_per_shard`` is that operator — the
+only cogroup-by-shard in the library: ``probe_shards`` here and the timed
+``shard_searches.run_in_shard_searches`` are kernels of it. Two kernels:
 
 - ``in_shard="exact"``: blocked BLAS top-k (≙ InvertedIndex,
   inverted_index.h:12-60) — the oracle, O(n_shard·d) per query;
@@ -31,6 +33,33 @@ from pyspark.sql import functions as F
 from gp_ann_spark.checkpoint import realias
 from gp_ann_spark.functions.distances import distance_matrix
 from gp_ann_spark.operators.ivf_shard import build_ivf, ivf_search
+
+
+def _per_shard(sharded_points: DataFrame, queries: DataFrame, routes: DataFrame, kernel, schema: str) -> DataFrame:
+    """Run ``kernel(shard, ids, X, probes, Q)`` once per shard on every
+    query that ``routes`` (query_id, shard, probe_rank) sends there — one
+    cogrouped ``applyInPandas``. ``X`` holds the shard's points in id order,
+    ``probes`` the (query_id, probe_rank) rows and ``Q`` their vectors,
+    both float64; the kernel returns rows of ``schema``. A shard that no
+    query probes, or a route to a shard without points, yields no rows."""
+    probe_q = routes.join(queries.select("query_id", "vec"), "query_id").select(
+        "shard", "query_id", "probe_rank", "vec"
+    )
+    def search(points_pdf: pd.DataFrame, queries_pdf: pd.DataFrame) -> pd.DataFrame:
+        if len(points_pdf) == 0 or len(queries_pdf) == 0:
+            return pd.DataFrame()  # Spark accepts a column-less empty result
+        # sort by id: the kernels tie-break by POSITION into X, and cogroup
+        # delivers rows in shuffle order — sorting makes position order ==
+        # id order, so tie resolution no longer depends on the input layout
+        points_pdf = points_pdf.sort_values("id", ignore_index=True)
+        X = np.stack(points_pdf["vec"].to_numpy()).astype(np.float64)
+        Q = np.stack(queries_pdf["vec"].to_numpy()).astype(np.float64)
+        shard = int(points_pdf["shard"].iloc[0])
+        return kernel(shard, points_pdf["id"].to_numpy(), X, queries_pdf[["query_id", "probe_rank"]], Q)
+
+    return sharded_points.groupBy("shard").cogroup(realias(probe_q).groupBy("shard")).applyInPandas(
+        search, schema=schema
+    )
 
 
 def shard_points(points: DataFrame, assignment: DataFrame) -> DataFrame:
@@ -65,36 +94,19 @@ def probe_shards(
     if in_shard not in ("exact", "ivf"):
         raise ValueError(f"in_shard must be 'exact' or 'ivf', got {in_shard!r}")
     probe = routes if nprobes is None else routes.where(F.col("probe_rank") <= nprobes)
-    probe_q = probe.join(queries.select("query_id", "vec"), "query_id").select(
-        "shard", "query_id", "probe_rank", "vec"
-    )
 
-    def search(points_pdf: pd.DataFrame, queries_pdf: pd.DataFrame) -> pd.DataFrame:
-        if len(points_pdf) == 0 or len(queries_pdf) == 0:
-            return pd.DataFrame(
-                {"query_id": [], "shard": [], "probe_rank": [], "neighbor_id": [], "dist": []}
-            ).astype({"query_id": "int64", "shard": "int32", "probe_rank": "int32", "neighbor_id": "int64", "dist": "float64"})
-        # sort by id: the kernels tie-break by POSITION into X, and cogroup
-        # delivers rows in shuffle order — sorting makes position order ==
-        # id order, so tie resolution no longer depends on the input layout
-        points_pdf = points_pdf.sort_values("id", ignore_index=True)
-        X = np.stack(points_pdf["vec"].to_numpy()).astype(np.float64)
-        ids = points_pdf["id"].to_numpy()
-        Q = np.stack(queries_pdf["vec"].to_numpy()).astype(np.float64)
-        shard = int(points_pdf["shard"].iloc[0])
-        if in_shard == "ivf":
-            index = build_ivf(X, seed=seed + shard, metric=metric)
-            idx_rows, dist_rows = ivf_search(Q, X, index, k, ef, metric)
-            lens = [len(r) for r in idx_rows]
-            return pd.DataFrame(
-                {
-                    "query_id": np.repeat(queries_pdf["query_id"].to_numpy(), lens),
-                    "shard": shard,
-                    "probe_rank": np.repeat(queries_pdf["probe_rank"].to_numpy(), lens),
-                    "neighbor_id": ids[np.concatenate(idx_rows)] if len(Q) else [],
-                    "dist": np.concatenate(dist_rows) if len(Q) else [],
-                }
-            )
+    def rows(shard, probes, qi, neighbor_ids, dist) -> pd.DataFrame:
+        return pd.DataFrame(
+            {
+                "query_id": probes["query_id"].to_numpy()[qi],
+                "shard": shard,
+                "probe_rank": probes["probe_rank"].to_numpy().astype(np.int32)[qi],
+                "neighbor_id": neighbor_ids,
+                "dist": dist,
+            }
+        )
+
+    def exact(shard, ids, X, probes, Q) -> pd.DataFrame:
         d = distance_matrix(Q, X, metric)
         kk = min(k, d.shape[1])
         # keep every candidate tied at the k-th distance (content-based
@@ -108,18 +120,17 @@ def probe_shards(
             qi, ci = np.nonzero(d <= kth[:, None])
         else:
             qi, ci = np.nonzero(np.ones(d.shape, dtype=bool))
-        return pd.DataFrame(
-            {
-                "query_id": queries_pdf["query_id"].to_numpy()[qi],
-                "shard": shard,
-                "probe_rank": queries_pdf["probe_rank"].to_numpy().astype(np.int32)[qi],
-                "neighbor_id": ids[ci],
-                "dist": d[qi, ci],
-            }
-        )
+        return rows(shard, probes, qi, ids[ci], d[qi, ci])
 
-    return sharded_points.groupBy("shard").cogroup(realias(probe_q).groupBy("shard")).applyInPandas(
-        search, schema="query_id long, shard int, probe_rank int, neighbor_id long, dist double"
+    def ivf(shard, ids, X, probes, Q) -> pd.DataFrame:
+        index = build_ivf(X, seed=seed + shard, metric=metric)
+        idx_rows, dist_rows = ivf_search(Q, X, index, k, ef, metric)
+        qi = np.repeat(np.arange(len(Q)), [len(r) for r in idx_rows])
+        return rows(shard, probes, qi, ids[np.concatenate(idx_rows)], np.concatenate(dist_rows))
+
+    return _per_shard(
+        sharded_points, queries, probe, exact if in_shard == "exact" else ivf,
+        schema="query_id long, shard int, probe_rank int, neighbor_id long, dist double",
     )
 
 

@@ -32,6 +32,7 @@ from gp_ann_spark.eval import recall as R
 from gp_ann_spark.operators import routing as RT
 from gp_ann_spark.operators import search as S
 from gp_ann_spark.operators import shard_searches as SS
+from gp_ann_spark.operators.ivf_shard import EF_SWEEP
 
 SEED = 555
 
@@ -178,7 +179,7 @@ def routing_sweep_pareto(
     """
     num_shards = num_shards or (assignment.agg(F.max("shard")).collect()[0][0] + 1)
     nprobes_values = list(nprobes_values or range(1, num_shards + 1))
-    ef_list = sorted(set(int(e) for e in (ef_values or SS.EF_SWEEP)))
+    ef_list = sorted(set(int(e) for e in (ef_values or EF_SWEEP))) if in_shard == "ivf" else [0]
     nq = queries.count()
     with checkpoints() as cp:
         # the routes relations of the configs pass to this scope, which
@@ -200,20 +201,11 @@ def routing_sweep_pareto(
             Spark schedules concurrent jobs onto shared task slots — one
             config's aggregation back-fills the executor tail of another's
             search). What this config pins is released when it returns."""
-            if in_shard == "ivf":
-                sr_all = cfg_cp.pin(SS.run_in_shard_searches_sweep(
-                    sharded, queries, cfg["routes"], k=k, metric=metric, ef_values=ef_list, seed=seed,
-                ), eager=False)
-                # one grouped-by-ef pass for the whole ef sweep (2 jobs), not
-                # 2·|ef| jobs over per-ef filters — row-identical grids
-                grids = SS.recall_qps_grid_by_ef(sr_all, gt, k, nq, nprobes_values, ef_list)
-                sweeps = [(ef, grids[int(ef)]) for ef in ef_list]
-            else:
-                sr_all = cfg_cp.pin(
-                    SS.run_in_shard_searches(sharded, queries, cfg["routes"], k=k, metric=metric), eager=False)
-                sweeps = [(0, SS.recall_qps_grid(sr_all, gt, k, nq, nprobes_values))]
+            sr_all = cfg_cp.pin(SS.run_in_shard_searches(
+                sharded, queries, cfg["routes"], k=k, metric=metric, ef_values=ef_list, seed=seed,
+            ), eager=False)
             out = []
-            for ef, grid in sweeps:
+            for ef, grid in SS.recall_qps_grid(sr_all, gt, k, nq, nprobes_values, ef_list).items():
                 for _, g in grid.iterrows():
                     out.append(
                         {
@@ -221,7 +213,7 @@ def routing_sweep_pareto(
                             "budget": cfg["budget"],
                             "num_voting": cfg["num_voting"],
                             "first_shard_recall": cfg["first_shard_recall"],
-                            "ef": int(ef),
+                            "ef": ef,
                             "nprobes": int(g["nprobes"]),
                             "recall": float(g["recall"]),
                             "qps": float(g["qps"]),
@@ -232,15 +224,7 @@ def routing_sweep_pareto(
         per_config = fan_out(eval_config, configs, min(4, max(1, len(configs))))
     # rows in CONFIG ORDER regardless of thread completion order — the
     # output frame's row order (and so downstream hashes) stays deterministic
-    rows = [r for chunk in per_config for r in chunk]
-    pdf = pd.DataFrame(rows)
+    pdf = pd.DataFrame([r for chunk in per_config for r in chunk])
     # global Pareto across ALL configs (reference keeps the non-dominated set)
-    pdf["pareto"] = [
-        not any(
-            ((o.recall >= r.recall) and (o.qps > r.qps))
-            or ((o.recall > r.recall) and (o.qps >= r.qps))
-            for o in pdf.itertuples()
-        )
-        for r in pdf.itertuples()
-    ]
+    pdf["pareto"] = SS.pareto_flags(pdf)
     return pdf

@@ -131,26 +131,22 @@ def _write_thresholds(spark: SparkSession, thresh_dir: str, bucket_edges) -> Non
 
 
 class _BucketedSink:
-    """ONE guard/heal/migrate policy for every bucket-partitioned parquet
-    sink (the edge sink and the points sink today; any future sink — a
-    media-feature table, say — instantiates this instead of copying the
-    logic a third time).
+    """ONE layout guard for every bucket-partitioned parquet sink (the edge
+    sink and the points sink today; any future sink — a media-feature
+    table, say — instantiates this instead of copying the logic a third
+    time).
 
     Invariants enforced per sink:
 
     - the layout meta dir ``sink_dir + meta_suffix`` pins ``n_buckets``;
       reopening with a different value is refused (a mismatch would silently
       drop/duplicate rows in every bucket-pruned read);
-    - a sink that predates the meta but HAS the bucket column gets a
+    - a sink whose meta was lost but that HAS the bucket column gets a
       one-time consistency scan before the meta is stamped (blind stamping
       would bless wrong-bucket pruning);
-    - a legacy sink WITHOUT the bucket column is either migrated in place
-      (``legacy_error=None``: staged bucketed copy + two-rename swap, the
-      original never deleted before the complete replacement exists) or
-      refused with targeted guidance (``legacy_error`` set — the edge sink,
-      where the operator must choose between rebuild and repartition);
-    - ``heal`` finishes a swap interrupted at ANY crash stage
-      (tests/test_streaming.py enumerates the stage matrix).
+    - a sink WITHOUT the bucket column was not written by this engine
+      (``ingest_stream`` buckets both sinks from their first write) and is
+      refused with an error naming the column.
     """
 
     def __init__(
@@ -163,7 +159,6 @@ class _BucketedSink:
         meta_suffix: str,
         mismatch_consequence: str,
         scan_error: str,
-        legacy_error: str | None = None,
     ):
         self.sink_dir = sink_dir
         self.n_buckets = int(n_buckets)
@@ -173,74 +168,15 @@ class _BucketedSink:
         self.meta_dir = sink_dir + meta_suffix
         self.mismatch_consequence = mismatch_consequence
         self.scan_error = scan_error
-        self.legacy_error = legacy_error
-        self.staging = sink_dir + "_staging"
-        self.backup = sink_dir + "_prebucket"
 
-    # -- layout meta ------------------------------------------------------
     def stamp(self, spark: SparkSession) -> None:
         spark.createDataFrame([(self.n_buckets,)], "n_buckets int").coalesce(
             1
         ).write.mode("overwrite").parquet(self.meta_dir)
 
-    # -- crash healing ----------------------------------------------------
-    def heal(self) -> None:
-        """Finish a legacy-sink migration that crashed between its two
-        renames. The swap sequence is: write complete bucketed copy to
-        ``_staging`` → rename sink → ``_prebucket`` → rename ``_staging`` →
-        sink → delete ``_prebucket``. A ``_prebucket`` directory therefore
-        implies the staging copy was COMPLETE when the crash happened: if
-        the sink is missing, promote the staging copy (or, if staging is
-        somehow gone too, restore the backup); if the sink is present, only
-        the final cleanup was lost. Without this, a crash in that window
-        makes the next drain see "no sink" and restart dense ids at 0 over
-        a live edge table. (The edge sink reuses ``_staging`` per batch for
-        its dynamic-overwrite merge — that path never creates
-        ``_prebucket``, so heal is a no-op there by construction.)"""
-        if not os.path.isdir(self.backup):
-            return
-        import shutil
-
-        if not _sink_exists(self.sink_dir):
-            if os.path.isdir(self.sink_dir):
-                shutil.rmtree(self.sink_dir)  # partially created target
-            if _sink_exists(self.staging):
-                os.rename(self.staging, self.sink_dir)
-            else:
-                os.rename(self.backup, self.sink_dir)
-                return  # keep nothing else: migration will re-run from scratch
-        shutil.rmtree(self.backup, ignore_errors=True)
-        shutil.rmtree(self.staging, ignore_errors=True)
-
-    # -- one-time legacy migration ---------------------------------------
-    def _migrate_legacy(self, spark: SparkSession, sink: DataFrame) -> None:
-        """Stage the bucketed copy, then SWAP via two filesystem renames
-        (crash-safe on a local FS: the original sink is never deleted before
-        the complete replacement is in place; Spark's mode('overwrite')
-        deletes the target first, which a crash mid-write would turn into
-        data loss). Remote URIs fall back to the Spark overwrite — there the
-        table format's atomic commit is the real answer (see README 'Table
-        format')."""
-        import shutil
-
-        sink.withColumn(self.bucket_col, self.bucket_expr).write.mode(
-            "overwrite"
-        ).partitionBy(self.bucket_col).parquet(self.staging)
-        try:
-            os.rename(self.sink_dir, self.backup)
-            os.rename(self.staging, self.sink_dir)
-            shutil.rmtree(self.backup)
-        except OSError:
-            spark.read.parquet(self.staging).write.mode("overwrite").partitionBy(
-                self.bucket_col
-            ).parquet(self.sink_dir)
-            shutil.rmtree(self.staging, ignore_errors=True)
-
-    # -- the guard --------------------------------------------------------
     def ensure_layout(self, spark: SparkSession) -> None:
         """Validate (or establish) the sink's bucket layout before any
         bucket-pruned read or partial overwrite touches it."""
-        self.heal()
         if _sink_exists(self.meta_dir):
             stored = int(spark.read.parquet(self.meta_dir).collect()[0]["n_buckets"])
             if stored != self.n_buckets:
@@ -253,17 +189,17 @@ class _BucketedSink:
             return
         sink = spark.read.parquet(self.sink_dir)
         if self.bucket_col not in sink.columns:
-            if self.legacy_error is not None:
-                raise ValueError(self.legacy_error)
-            self._migrate_legacy(spark, sink)
-        else:
-            # meta missing but the sink IS bucketed (e.g. the meta write was
-            # lost): verify the stored values against THIS n_buckets before
-            # stamping — blind stamping over values computed with a
-            # different n_buckets would bless wrong-bucket pruning
-            bad = sink.where(self.bucket_expr != F.col(self.bucket_col)).limit(1).count()
-            if bad:
-                raise ValueError(self.scan_error)
+            raise ValueError(
+                f"{self.what} {self.sink_dir} has no '{self.bucket_col}' partition "
+                f"column — rebuild it with partitionBy('{self.bucket_col}') before "
+                "resuming incremental ingest"
+            )
+        # meta missing but the sink IS bucketed (e.g. the meta write was
+        # lost): verify the stored values against THIS n_buckets before
+        # stamping — blind stamping over values computed with a different
+        # n_buckets would bless wrong-bucket pruning
+        if sink.where(self.bucket_expr != F.col(self.bucket_col)).limit(1).count():
+            raise ValueError(self.scan_error)
         self.stamp(spark)
 
 
@@ -279,9 +215,7 @@ def _edges_sink(edges_dir: str, n_buckets: int) -> _BucketedSink:
     """Edge sink: bucket = pmod(src, n_buckets). The changed-bucket list is
     computed from src but old rows are selected by their STORED bucket
     value, so a layout mismatch would silently drop/duplicate adjacency
-    (≙ the maintenance contract of the bucketed incremental path). Legacy
-    unbucketed sinks are refused, not migrated — the operator must pick
-    rebuild vs repartition for a table that can be 10^12 rows."""
+    (≙ the maintenance contract of the bucketed incremental path)."""
     return _BucketedSink(
         edges_dir,
         n_buckets,
@@ -297,22 +231,13 @@ def _edges_sink(edges_dir: str, n_buckets: int) -> _BucketedSink:
             f"edge sink {edges_dir} bucket layout does not match "
             f"n_buckets={n_buckets}"
         ),
-        legacy_error=(
-            f"edge sink {edges_dir} is an unbucketed legacy sink (no 'bucket' "
-            "partition column) — rebuild it, or repartition it once with "
-            "bucket = pmod(src, n_buckets) and write partitionBy('bucket') "
-            "before resuming incremental ingest"
-        ),
     )
 
 
 def _points_sink(points_dir: str, n_buckets: int) -> _BucketedSink:
     """Points sink: pbucket = pmod(xxhash64(sha256), n_buckets). Pruning the
     dedup anti-join with buckets computed at a different ``n_buckets`` than
-    the stored values would MISS duplicates and silently double-insert rows.
-    Legacy unbucketed sinks (pre-r4) are migrated in place — one O(sink)
-    rewrite, after which every batch's anti-join reads only the batch's
-    buckets."""
+    the stored values would MISS duplicates and silently double-insert rows."""
     return _BucketedSink(
         points_dir,
         n_buckets,
@@ -326,9 +251,8 @@ def _points_sink(points_dir: str, n_buckets: int) -> _BucketedSink:
         scan_error=(
             f"points sink {points_dir} pbucket values do not match "
             f"n_buckets={n_buckets} — it was bucketed with a different "
-            "layout; pass the original n_buckets or re-migrate"
+            "layout; pass the original n_buckets"
         ),
-        legacy_error=None,
     )
 
 
@@ -370,7 +294,6 @@ def ingest_stream(
             #    reads ONLY the batch's buckets (partition-pruned scan) instead
             #    of the whole 10^12-row sink every micro-batch — same design as
             #    the edge sink.
-            points_sink.heal()
             have_sink = _sink_exists(points_dir)
             if have_sink:
                 points_sink.ensure_layout(spark)
@@ -428,11 +351,12 @@ def ingest_stream(
                 edges_sink.ensure_layout(spark)
                 edges_full = spark.read.parquet(edges_dir)
                 if not _sink_exists(thresh_dir):
-                    # one-time migration of a pre-sidecar sink: materialize the
-                    # FULL sidecar now (every bucket). The per-batch refresh
-                    # below rewrites only changed buckets, so an in-memory
-                    # partial migration would leave every other src invisible
-                    # (null → +inf threshold) on the NEXT batch.
+                    # sidecar lost (a crash between the first edge write and
+                    # _write_thresholds): rebuild the FULL sidecar now (every
+                    # bucket). The per-batch refresh below rewrites only
+                    # changed buckets, so an in-memory partial rebuild would
+                    # leave every other src invisible (null → +inf threshold)
+                    # on the NEXT batch.
                     deg_kth(edges_full, "bucket").write.mode("overwrite").partitionBy(
                         "bucket"
                     ).parquet(thresh_dir)

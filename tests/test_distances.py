@@ -78,13 +78,3 @@ def test_sql_cosine_matches_numpy(spark, ab):
     )
     assert np.allclose(got, want, atol=1e-9)
 
-
-def test_sql_l2_normalize(spark, rng):
-    from pyspark.sql import functions as F
-
-    a = rng.normal(size=(5, 8))
-    df = spark.createDataFrame([([float(x) for x in r],) for r in a] + [([0.0] * 8,)], "vec array<float>")
-    out = df.select(D.sql_l2_normalize(F.col("vec")).alias("n")).collect()
-    for r in out[:-1]:
-        assert abs(sum(x * x for x in r["n"]) - 1.0) < 1e-5
-    assert all(x == 0.0 for x in out[-1]["n"])

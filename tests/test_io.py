@@ -6,7 +6,6 @@ import numpy as np
 from pyspark.sql import functions as F
 
 from gp_ann_spark import io as IO
-from gp_ann_spark.operators import shard_searches as SS
 from tests.conftest import make_points_df
 
 
@@ -64,7 +63,7 @@ def test_points_and_gt_parquet_roundtrip(spark, tmp_path, rng):
     pts = make_points_df(spark, rng.normal(size=(10, 4)).astype(np.float32))
     ppath = str(tmp_path / "pts")
     IO.write_points(pts, ppath)
-    back = IO.read_points(spark, ppath)
+    back = spark.read.parquet(ppath)
     assert back.count() == 10 and set(back.columns) == {"id", "vec"}
     a = {r["id"]: r["vec"] for r in pts.collect()}
     b = {r["id"]: r["vec"] for r in back.collect()}
@@ -74,18 +73,6 @@ def test_points_and_gt_parquet_roundtrip(spark, tmp_path, rng):
     gpath = str(tmp_path / "gt")
     IO.write_ground_truth(gt, gpath)
     assert IO.read_ground_truth(spark, gpath).count() == 2
-
-
-def test_routes_serialization_roundtrip(spark, tmp_path):
-    routes = spark.createDataFrame(
-        [(0, 1, 1), (0, 2, 2), (1, 0, 1)], "query_id long, shard int, probe_rank int"
-    )
-    path = str(tmp_path / "routes")
-    SS.serialize_routes(routes, path)
-    back = SS.deserialize_routes(spark, path)
-    assert {(r["query_id"], r["shard"], r["probe_rank"]) for r in back.collect()} == {
-        (0, 1, 1), (0, 2, 2), (1, 0, 1)
-    }
 
 
 def test_points_bin_roundtrip_fbin(spark, tmp_path, rng):

@@ -186,7 +186,7 @@ def test_probe_shards_ivf_matches_exact_at_full_ef(spark, rng):
     assert e == v
 
 
-def test_run_in_shard_searches_sweep(spark, rng):
+def test_run_in_shard_searches_ef_axis(spark, rng):
     X = rng.normal(size=(300, 8)).astype(np.float32)
     pts = make_points_df(spark, X).cache()
     asn = pts.select("id", (F.pmod("id", F.lit(3))).cast("int").alias("shard"))
@@ -194,20 +194,68 @@ def test_run_in_shard_searches_sweep(spark, rng):
     shards = spark.createDataFrame([(s,) for s in range(3)], "shard int")
     routes = qs.select("query_id").crossJoin(shards).withColumn("probe_rank", F.col("shard") + 1)
     sp = S.shard_points(pts, asn).localCheckpoint(eager=True)
-    sr = SS.run_in_shard_searches_sweep(
+    sr = SS.run_in_shard_searches(
         sp, qs, routes, k=5, ef_values=(20, 1000), reps=1
     ).localCheckpoint(eager=True)
     efs = sorted(r["ef"] for r in sr.select("ef").distinct().collect())
     assert efs == [20, 1000]
     assert sr.where(F.size("neighbors") > 5).count() == 0
     assert sr.where(F.col("time_s") <= 0).count() == 0
-    # ef=1000 ≥ every shard size → per-shard hits equal the exact path's
+
+    def hits(df, ef):
+        return df.where(F.col("ef") == ef).select("shard", "query_id", F.explode("neighbors").alias("n"))
+
+    def same(a, b):
+        return a.exceptAll(b).count() + b.exceptAll(a).count() == 0
+
+    # ef=1000 ≥ every shard size → per-shard hits equal the exact search's
     exact = SS.run_in_shard_searches(sp, qs, routes, k=5, reps=1)
-    big = sr.where(F.col("ef") == 1000).select(
-        "shard", "query_id", F.explode("neighbors").alias("n")
+    assert same(hits(sr, 1000), hits(exact, 0))
+    # one call mixing the exact kernel (ef 0) with IVF at full budget
+    mixed = SS.run_in_shard_searches(sp, qs, routes, k=5, ef_values=(0, 1000), reps=1).localCheckpoint(eager=True)
+    assert sorted(r["ef"] for r in mixed.select("ef").distinct().collect()) == [0, 1000]
+    assert same(hits(mixed, 0), hits(mixed, 1000))
+
+
+def test_per_shard_searches_skip_empty_sides(spark, rng):
+    """A shard that no query probes and a route to a shard without points
+    each leave one cogroup side empty: every per-shard search must return
+    its declared columns and the same rows as a run without the two."""
+    X = rng.normal(size=(120, 8)).astype(np.float32)
+    pts = make_points_df(spark, X).cache()
+    asn = pts.select("id", (F.pmod("id", F.lit(3))).cast("int").alias("shard"))
+    qs = pts.select(F.col("id").alias("query_id"), "vec").where(F.col("query_id") < 8)
+    shards = spark.createDataFrame([(0,), (1,)], "shard int")
+    routes = qs.select("query_id").crossJoin(shards).withColumn("probe_rank", F.col("shard") + 1)
+    # shard 2 holds points but is never probed; shard 7 is probed but empty
+    extra_routes = routes.unionByName(
+        qs.select("query_id", F.lit(7).alias("shard"), F.lit(3).alias("probe_rank"))
     )
-    ex = exact.select("shard", "query_id", F.explode("neighbors").alias("n"))
-    assert big.exceptAll(ex).count() + ex.exceptAll(big).count() == 0
+    sp_all = S.shard_points(pts, asn).localCheckpoint(eager=True)
+    sp_probed = S.shard_points(pts, asn.where(F.col("shard") < 2)).localCheckpoint(eager=True)
+    probe_cols = [
+        ("query_id", "bigint"), ("shard", "int"), ("probe_rank", "int"), ("neighbor_id", "bigint"), ("dist", "double")
+    ]
+    timed_cols = [
+        ("shard", "int"), ("query_id", "bigint"), ("probe_rank", "int"), ("ef", "int"), ("neighbors", "array<bigint>")
+    ]
+    searches = [
+        (lambda sp, r: S.probe_shards(sp, qs, r, k=5), probe_cols),
+        (lambda sp, r: S.probe_shards(sp, qs, r, k=5, in_shard="ivf", ef=20), probe_cols),
+        (lambda sp, r: SS.run_in_shard_searches(sp, qs, r, k=5, reps=1).drop("time_s"), timed_cols),
+        (lambda sp, r: SS.run_in_shard_searches(sp, qs, r, k=5, reps=1, ef_values=(20,)).drop("time_s"), timed_cols),
+    ]
+    for search, cols in searches:
+        got = search(sp_all, extra_routes)
+        want = search(sp_probed, routes)
+        assert got.dtypes == want.dtypes == cols
+        got_rows, want_rows = got.collect(), want.collect()
+        assert len(want_rows) > 0
+        assert sorted(map(_hashable, got_rows)) == sorted(map(_hashable, want_rows))
+
+
+def _hashable(row):
+    return tuple(tuple(v) if isinstance(v, list) else v for v in row)
 
 
 def _canon_d(q, X):

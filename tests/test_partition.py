@@ -144,16 +144,6 @@ def test_duplicates_in_clusters_diagnostic(spark):
     assert out[0] == (3, 1) and out[1] == (2, 0)
 
 
-def test_bucket_size_stats(spark):
-    from gp_ann_spark.operators import knn_approx as KA
-
-    rows = [(i, [0.0], i % 4) for i in range(40)]  # 4 buckets of 10
-    bucketed = spark.createDataFrame(rows, "id long, vec array<float>, bucket long")
-    r = KA.bucket_size_stats(bucketed).collect()[0]
-    assert r["n_buckets"] == 4 and abs(r["avg_size"] - 10.0) < 1e-9
-    assert r["quantiles"][0] == 10.0 and r["quantiles"][-1] == 10.0
-
-
 def test_initial_partition_packs_disconnected_components(spark):
     """Regression for the greedy-grower reseed fix: on a graph whose
     components are much smaller than n/num_shards, every shard must be

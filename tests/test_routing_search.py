@@ -1,4 +1,5 @@
 import numpy as np
+import pandas as pd
 import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
@@ -7,6 +8,7 @@ from gp_ann_spark.eval import recall as R
 from gp_ann_spark.operators import partition as P
 from gp_ann_spark.operators import routing as RT
 from gp_ann_spark.operators import search as S
+from gp_ann_spark.operators import shard_searches as SS
 from tests.conftest import make_points_df
 
 
@@ -99,11 +101,22 @@ def test_kmeans_tree_router_beats_random_first_shard(spark, setup):
     assert r_tree > r_rand
 
 
-def test_pareto_front(spark):
-    rows = [(0.9, 100.0), (0.8, 200.0), (0.85, 50.0), (0.95, 20.0)]
-    df = spark.createDataFrame(rows, "recall double, qps double")
-    got = {(r["recall"], r["qps"]) for r in R.pareto_front(df).collect()}
-    assert got == {(0.95, 20.0), (0.9, 100.0), (0.8, 200.0)}
+def test_pareto_front():
+    rows = [(0.9, 100.0), (0.8, 200.0), (0.85, 50.0), (0.95, 20.0), (0.9, 100.0), (0.9, 90.0), (0.8, 100.0)]
+    df = pd.DataFrame(rows, columns=["recall", "qps"])
+    # equal rows do not dominate each other; a tie in one dimension does
+    assert SS.pareto_flags(df).tolist() == [True, True, False, True, True, False, False]
+    # the pairwise definition as the reference, on a grid full of ties
+    rng = np.random.default_rng(5)
+    df = pd.DataFrame({"recall": rng.integers(0, 6, 200) / 5, "qps": rng.integers(0, 8, 200) * 10.0})
+    want = [
+        not any(
+            (o.recall >= r.recall and o.qps > r.qps) or (o.recall > r.recall and o.qps >= r.qps)
+            for o in df.itertuples()
+        )
+        for r in df.itertuples()
+    ]
+    assert SS.pareto_flags(df).tolist() == want
 
 
 def test_validate_ground_truth_detects_and_repairs(spark, rng):

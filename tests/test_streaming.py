@@ -314,38 +314,6 @@ def test_points_sink_layout_change_refused(spark, tmp_path):
         ingest_stream(spark, input_dir, points_dir, edges_dir, ckpt, k=3, dim=16, n_buckets=8)
 
 
-def test_legacy_unbucketed_points_sink_migrates(spark, tmp_path):
-    """A pre-bucketing points sink (no pbucket column) is migrated in place
-    on first reopen; dedup and dense ids keep working afterwards."""
-    import os
-
-    input_dir = str(tmp_path / "landing")
-    points_dir = str(tmp_path / "points")
-    edges_dir = str(tmp_path / "edges")
-    ckpt = str(tmp_path / "ckpt")
-    schema = "repo string, path string, commit string, lang string, content string"
-    docs = ["legacy doc alpha", "legacy doc beta", "legacy doc gamma"]
-    spark.createDataFrame(_repo_rows(docs), schema).write.mode("append").parquet(input_dir)
-    ingest_stream(spark, input_dir, points_dir, edges_dir, ckpt, k=3, dim=16, n_buckets=16)
-    # strip the sink back to the legacy layout: flatten partitions, drop col
-    legacy = spark.read.parquet(points_dir).drop("pbucket").localCheckpoint(eager=True)
-    import shutil
-
-    shutil.rmtree(points_dir)
-    shutil.rmtree(points_dir + "_playout")
-    legacy.write.mode("overwrite").parquet(points_dir)
-    assert "pbucket" not in spark.read.parquet(points_dir).columns
-
-    spark.createDataFrame(
-        _repo_rows([docs[0], "legacy era ends here"]), schema
-    ).write.mode("append").parquet(input_dir)
-    ingest_stream(spark, input_dir, points_dir, edges_dir, ckpt, k=3, dim=16, n_buckets=16)
-    pts = spark.read.parquet(points_dir)
-    assert "pbucket" in pts.columns  # migrated
-    assert pts.count() == 4 and pts.select("sha256").distinct().count() == 4
-    assert sorted(r["id"] for r in pts.select("id").collect()) == [0, 1, 2, 3]
-
-
 def test_torn_append_detected(spark, tmp_path):
     """A committed row count strictly between the in-flight marker's offset
     and offset+n_new means a torn (partially committed) points append —
@@ -380,10 +348,10 @@ def test_torn_append_detected(spark, tmp_path):
     assert spark.read.parquet(points_dir).count() == 7
 
 
-def test_legacy_unbucketed_edge_sink_targeted_error(spark, tmp_path):
-    """An edge sink written by pre-bucketing code (no 'bucket' column) must
-    produce the targeted migration error, not an unresolved-column
-    AnalysisException from the consistency scan."""
+def test_unbucketed_edge_sink_refused(spark, tmp_path):
+    """An edge sink without the 'bucket' column must be refused with an
+    error naming the column, not an unresolved-column AnalysisException
+    from the consistency scan."""
     import shutil
 
     import pytest
@@ -396,15 +364,15 @@ def test_legacy_unbucketed_edge_sink_targeted_error(spark, tmp_path):
     docs = ["edge sink doc one", "edge sink doc two", "edge sink doc three"]
     spark.createDataFrame(_repo_rows(docs), schema).write.mode("append").parquet(input_dir)
     ingest_stream(spark, input_dir, points_dir, edges_dir, ckpt, k=3, dim=16)
-    # strip to legacy: unpartitioned sink without the bucket column or layout
-    legacy = spark.read.parquet(edges_dir).drop("bucket").localCheckpoint(eager=True)
+    # strip to an unpartitioned sink without the bucket column or layout
+    flat = spark.read.parquet(edges_dir).drop("bucket").localCheckpoint(eager=True)
     shutil.rmtree(edges_dir)
     shutil.rmtree(edges_dir + "_layout")
-    legacy.write.mode("overwrite").parquet(edges_dir)
+    flat.write.mode("overwrite").parquet(edges_dir)
     spark.createDataFrame(_repo_rows(["a new doc arrives"]), schema).write.mode(
         "append"
     ).parquet(input_dir)
-    with pytest.raises(Exception, match="unbucketed legacy sink"):
+    with pytest.raises(Exception, match="has no 'bucket' partition column"):
         ingest_stream(spark, input_dir, points_dir, edges_dir, ckpt, k=3, dim=16)
 
 
@@ -464,101 +432,6 @@ def test_points_sidecar_loss_with_wrong_n_buckets_refused(spark, tmp_path):
     ingest_stream(spark, input_dir, points_dir, edges_dir, ckpt, k=3, dim=16, n_buckets=16)
     assert spark.read.parquet(points_dir).count() == 3
     assert spark.read.parquet(points_dir + "_playout").collect()[0]["n_buckets"] == 16
-
-
-def test_interrupted_migration_heals(spark, tmp_path):
-    """A crash between the legacy-migration's two renames leaves the points
-    sink missing with a complete staging copy + a _prebucket backup — the
-    next drain must promote the staging copy instead of treating the sink
-    as fresh and restarting dense ids at 0 over a live edge table."""
-    import os
-    import shutil
-
-    input_dir = str(tmp_path / "landing")
-    points_dir = str(tmp_path / "points")
-    edges_dir = str(tmp_path / "edges")
-    ckpt = str(tmp_path / "ckpt")
-    schema = "repo string, path string, commit string, lang string, content string"
-    docs = ["heal doc one", "heal doc two", "heal doc three"]
-    spark.createDataFrame(_repo_rows(docs), schema).write.mode("append").parquet(input_dir)
-    ingest_stream(spark, input_dir, points_dir, edges_dir, ckpt, k=3, dim=16, n_buckets=16)
-    # forge the crash state: sink gone, complete staging + backup present
-    shutil.copytree(points_dir, points_dir + "_staging")
-    os.rename(points_dir, points_dir + "_prebucket")
-    assert not os.path.isdir(points_dir)
-
-    spark.createDataFrame(_repo_rows(["heal doc four"]), schema).write.mode("append").parquet(
-        input_dir
-    )
-    ingest_stream(spark, input_dir, points_dir, edges_dir, ckpt, k=3, dim=16, n_buckets=16)
-    pts = spark.read.parquet(points_dir)
-    assert pts.count() == 4
-    assert sorted(r["id"] for r in pts.select("id").collect()) == [0, 1, 2, 3]  # ids continued
-    assert not os.path.isdir(points_dir + "_prebucket")
-    assert not os.path.isdir(points_dir + "_staging")
-    rebuilt = KNN.knn_edges(pts.select("id", "vec"), k=3)
-    assert _edge_set(spark.read.parquet(edges_dir)) == _edge_set(rebuilt)
-
-
-def _mk_legacy_points_sink(spark, points_dir, n=8):
-    rows = [(int(i), [float(i)] * 4, f"{i:064x}") for i in range(n)]
-    spark.createDataFrame(rows, "id long, vec array<float>, sha256 string").write.mode(
-        "overwrite"
-    ).parquet(points_dir)
-
-
-@pytest.mark.parametrize(
-    "stage",
-    [
-        "after_staging_write",  # crash before rename 1: sink intact, staging complete
-        "between_renames",      # crash between renames: sink gone, staging complete
-        "before_cleanup",       # crash after rename 2: sink migrated, backup left
-        "backup_only",          # staging also lost: only the backup survives
-    ],
-)
-def test_migration_crash_stage_matrix(spark, tmp_path, stage):
-    """The shared _BucketedSink swap must converge from EVERY crash stage of
-    the legacy migration (staging write → rename sink→backup → rename
-    staging→sink → delete backup): heal + ensure_layout always ends with a
-    complete bucketed sink holding exactly the original rows and a stamped
-    layout meta."""
-    import os
-    import shutil
-
-    from gp_ann_spark.streaming.ingest import _points_sink, _sink_exists
-
-    points_dir = str(tmp_path / "points")
-    _mk_legacy_points_sink(spark, points_dir)
-    want = sorted(r["sha256"] for r in spark.read.parquet(points_dir).collect())
-    sink = _points_sink(points_dir, n_buckets=4)
-
-    # forge the crash stage from real swap artifacts: a COMPLETE staged copy
-    # (what _migrate_legacy writes before any rename), then the renames the
-    # crashed process did or did not reach
-    spark.read.parquet(points_dir).withColumn("pbucket", sink.bucket_expr).write.mode(
-        "overwrite"
-    ).partitionBy("pbucket").parquet(sink.staging)
-    if stage == "between_renames":
-        os.rename(points_dir, sink.backup)
-    elif stage == "before_cleanup":
-        os.rename(points_dir, sink.backup)
-        os.rename(sink.staging, points_dir)
-    elif stage == "backup_only":
-        os.rename(points_dir, sink.backup)
-        shutil.rmtree(sink.staging)
-
-    sink.ensure_layout(spark)  # heal() runs first inside
-
-    assert _sink_exists(points_dir)
-    assert not os.path.isdir(sink.backup)
-    pts = spark.read.parquet(points_dir)
-    assert "pbucket" in pts.columns
-    assert sorted(r["sha256"] for r in pts.collect()) == want
-    assert pts.where(sink.bucket_expr != F.col("pbucket")).count() == 0
-    assert spark.read.parquet(sink.meta_dir).collect()[0]["n_buckets"] == 4
-    # idempotent: a second guard pass is a clean no-op
-    sink.ensure_layout(spark)
-    assert sorted(r["sha256"] for r in spark.read.parquet(points_dir).collect()) == want
 
 
 def test_ingest_zero_token_documents(spark, tmp_path):

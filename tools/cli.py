@@ -256,7 +256,7 @@ def cmd_small_scale_queries(spark, args):
             "probe_rank", F.lit(1)
         )
         sp = SRCH.shard_points(pts, asn).localCheckpoint(eager=True)
-        sr = SS.run_in_shard_searches_sweep(
+        sr = SS.run_in_shard_searches(
             sp, qs, routes, k=k, metric=metric,
             ef_values=(20, 50, 80, 100, 120, 150, 200, 300, 400), reps=1,
         ).localCheckpoint(eager=True)
@@ -302,14 +302,11 @@ def cmd_small_scale_queries(spark, args):
     with open(out_file, "w") as out:
         out.write("partitioning,routing,shard query,probes,latency,routing latency, query latency,recall\n")
         for desc, routes, routing_time in routers:
-            for shard_query, sr in (
-                ("BruteForce", SS.run_in_shard_searches(sp, qs, routes, k=k, metric=metric, reps=1)),
-                ("HNSW", SS.run_in_shard_searches_sweep(
-                    sp, qs, routes, k=k, metric=metric, ef_values=(120,), reps=1
-                ).drop("ef")),
-            ):
-                sr = sr.localCheckpoint(eager=True)
-                grid = SS.recall_qps_grid(sr, gt, k, nq, range(1, num_shards + 1))
+            for shard_query, ef in (("BruteForce", 0), ("HNSW", 120)):
+                sr = SS.run_in_shard_searches(
+                    sp, qs, routes, k=k, metric=metric, ef_values=(ef,), reps=1
+                ).localCheckpoint(eager=True)
+                grid = SS.recall_qps_grid(sr, gt, k, nq, range(1, num_shards + 1), (ef,))[ef]
                 for _, g in grid.iterrows():
                     qlat = 1.0 / g["qps"] if g["qps"] > 0 else float("inf")
                     lat = routing_time / nq + qlat
