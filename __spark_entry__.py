@@ -290,9 +290,9 @@ def _approx_edges(spark, sf_dir):
 
 def q_approx_knn_edges(spark, sf_dir):
     """Determinism attestation for ApproximateKNNGraphBuilder (seeded
-    leaders, hash path ids, threaded repetitions — knn_graph.h:145-162):
-    two independent builds must produce the identical edge table. Quality
-    is gated by approx_knn_quality."""
+    leaders, hash path ids, repetitions keyed by ``rep`` in one loop —
+    knn_graph.h:145-162): two independent builds must produce the identical
+    edge table. Quality is gated by approx_knn_quality."""
     a = _approx_edges(spark, sf_dir).localCheckpoint(eager=True)
     b = _approx_edges(spark, sf_dir).localCheckpoint(eager=True)
     _, same = _attest_deterministic(spark, a, b, ["src", "dst", "weight"])

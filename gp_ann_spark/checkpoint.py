@@ -13,10 +13,11 @@ exception) releases the rest — but only what the scope owns and no live
 frame (a pin of an open scope of this thread, or a kept result) reads, found
 by walking RDD dependencies from the frames' LogicalRDD leaves. What is still
 read passes to the innermost open scope of the thread, or with none to the
-caller (``release_local_checkpoint``). ``fan_out`` gives each worker thread
-its own scope. ``SuperstepCheckpointer`` with a ``base_dir`` also writes each
-superstep as Parquet plus a ``meta.json`` (row counts per partition,
-metrics), written after the data, so a killed run resumes at ``latest()``.
+caller (``release_local_checkpoint``). Scopes are per thread, and the
+library itself runs no threads. ``SuperstepCheckpointer`` with a
+``base_dir`` also writes each superstep as Parquet plus a ``meta.json`` (row
+counts per partition, metrics), written after the data, so a killed run
+resumes at ``latest()``.
 """
 
 from __future__ import annotations
@@ -24,9 +25,8 @@ from __future__ import annotations
 import json
 import os
 import threading
-from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
-from typing import Any, Callable, Iterable
+from typing import Any, Iterable
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -181,22 +181,6 @@ class checkpoints:  # noqa: N801 — used as ``with checkpoints() as cp:``
         live = _reads(r for r in _live(_THREAD.scopes) if r.id() not in mine) if mine else set()
         for rid in mine.keys() - live:
             self._pins.pop(rid).unpersist(False)
-
-
-def fan_out(fn: Callable[[checkpoints, Any], Any], items: Iterable[Any], max_workers: int) -> list[Any]:
-    """``[fn(cp, x) for x in items]`` on a thread pool, each call in its own
-    scope ``cp``, whose leftovers pass to the caller's innermost scope."""
-
-    def run(item: Any) -> tuple[Any, checkpoints]:
-        with checkpoints() as cp:
-            return cp.keep(fn(cp, item)), cp
-
-    with ThreadPoolExecutor(max_workers=max_workers) as ex:
-        done = list(ex.map(run, items))
-    if _THREAD.scopes:
-        for _, cp in done:
-            _THREAD.scopes[-1]._pins.update(cp._pins)
-    return [out for out, _ in done]
 
 
 @dataclass

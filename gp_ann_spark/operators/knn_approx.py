@@ -12,17 +12,20 @@ per-bucket top-k lists across buckets and 3 repetitions with dedup
 Spark-first shape — an iterative DataFrame loop, no driver recursion over
 data:
 
-- state is ``(id, vec, bucket)`` where ``bucket`` is a path-encoded id
+- state is ``(rep, id, vec, bucket)`` where ``bucket`` is a path-encoded id
   (parent_bucket * fanout_limit + leader_rank) — the recursion tree lives in
-  a column, bounded by MAX_DEPTH like the reference;
+  a column, bounded by MAX_DEPTH like the reference; every stage is keyed
+  on ``(rep, bucket)``, so ONE depth loop runs all repetitions, each an
+  independent sketch seeded ``seed + rep``;
 - leaders are a *deterministic seeded sample per bucket* (smallest
-  xxhash64(id, seed, depth) — partition-independent, ≙ the seeded
+  xxhash64(id, seed + rep, depth) — partition-independent, ≙ the seeded
   std::sample at knn_graph.h:75);
 - point→leader assignment is one cogrouped ``applyInPandas`` per bucket
   (blocked BLAS, top-``fanout`` per point);
 - finished buckets flow straight into the per-bucket brute-force stage —
-  only oversized buckets iterate again;
-- candidates from all buckets and repetitions union, then one
+  only oversized buckets iterate again, and the loop stops when no
+  repetition has one;
+- candidates from all buckets and repetitions form one relation, then one
   ``merge_topk`` (groupBy + window) deduplicates — lock-free vs the
   reference's spinlocked merge.
 """
@@ -35,7 +38,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from gp_ann_spark.functions.distances import distance_matrix
-from gp_ann_spark.checkpoint import checkpoints, fan_out
+from gp_ann_spark.checkpoint import checkpoints
 from gp_ann_spark.checkpoint import realias as _realias
 from gp_ann_spark.operators.knn import merge_topk, symmetrize
 
@@ -79,9 +82,9 @@ def _assign_to_leaders(
 
     def assign(pts_pdf: pd.DataFrame, lead_pdf: pd.DataFrame) -> pd.DataFrame:
         if len(pts_pdf) == 0:
-            return pd.DataFrame({"id": [], "bucket": []}).astype({"id": "int64", "bucket": "int64"})
+            return pd.DataFrame()  # Spark accepts a column-less empty result
         if len(lead_pdf) == 0:  # no leaders sampled (tiny bucket) — keep as-is
-            return pd.DataFrame({"id": pts_pdf["id"], "bucket": pts_pdf["bucket"]})
+            return pts_pdf[["rep", "id", "bucket"]]
         X = np.stack(pts_pdf["vec"].to_numpy()).astype(np.float64)
         L = np.stack(lead_pdf["vec"].to_numpy()).astype(np.float64)
         ranks = lead_pdf["leader_rank"].to_numpy()
@@ -99,13 +102,14 @@ def _assign_to_leaders(
         child = np.repeat(base, idx.shape[1]) + (ranks[idx.ravel()].astype(np.uint64) + np.uint64(1))
         return pd.DataFrame(
             {
+                "rep": pts_pdf["rep"].iloc[0],
                 "id": np.repeat(pts_pdf["id"].to_numpy(), idx.shape[1]),
                 "bucket": _mix64(child),
             }
         )
 
-    return pts.groupBy("bucket").cogroup(leaders.groupBy("bucket")).applyInPandas(
-        assign, schema="id long, bucket long"
+    return pts.groupBy("rep", "bucket").cogroup(leaders.groupBy("rep", "bucket")).applyInPandas(
+        assign, schema="rep int, id long, bucket long"
     )
 
 
@@ -137,7 +141,7 @@ def _bucket_bruteforce(bucketed: DataFrame, k: int, metric: str) -> DataFrame:
         keep = np.isfinite(w)  # drop masked equal-id pairs
         return pd.DataFrame({"src": ids[r][keep], "dst": ids[c][keep], "weight": w[keep]})
 
-    return bucketed.groupBy("bucket").applyInPandas(crunch, schema="src long, dst long, weight double")
+    return bucketed.groupBy("rep", "bucket").applyInPandas(crunch, schema="src long, dst long, weight double")
 
 
 def _merge_small_buckets(
@@ -145,15 +149,15 @@ def _merge_small_buckets(
 ) -> DataFrame:
     """Merge buckets smaller than ``min_size`` into batches ≤ ``max_merged``
     (≙ knn_graph.h:100-112 — avoids isolated nodes at the cost of a few long
-    range candidate edges). The greedy packing needs a *global* cumulative
-    sum over the bucket-size table (O(n/min_size) rows at scale), done as
-    range-partitioned local cumsums + driver-broadcast partition offsets —
-    no single-partition global window.
+    range candidate edges). The greedy packing needs a cumulative sum per
+    repetition over the bucket-size table (O(n/min_size) rows at scale),
+    done as range-partitioned local cumsums + driver-broadcast per-(partition,
+    rep) offsets — no single-partition global window.
     """
     spark = pts.sparkSession
     with checkpoints() as cp:
         # non-eager: the limit(1).count() probe is the materializing action
-        sizes = cp.pin(pts.groupBy("bucket").agg(F.count(F.lit(1)).alias("n")), eager=False)
+        sizes = cp.pin(pts.groupBy("rep", "bucket").agg(F.count(F.lit(1)).alias("n")), eager=False)
         small = sizes.where(F.col("n") < min_size)
         if small.limit(1).count() == 0:
             return pts
@@ -161,30 +165,30 @@ def _merge_small_buckets(
         # one materialization (at the collect below) so the offsets pass and
         # the cumsum pass see the same (range-sampled) partition layout
         parted = cp.pin(
-            small.repartitionByRange(nparts, "bucket")
-            .sortWithinPartitions("bucket")
+            small.repartitionByRange(nparts, "rep", "bucket")
+            .sortWithinPartitions("rep", "bucket")
             .withColumn("_pid", F.spark_partition_id()),
             eager=False,
         )
         per_part = sorted(
-            (int(r["_pid"]), int(r["s"]))
-            for r in parted.groupBy("_pid").agg(F.sum("n").alias("s")).collect()
+            (int(r["_pid"]), int(r["rep"]), int(r["s"]))
+            for r in parted.groupBy("_pid", "rep").agg(F.sum("n").alias("s")).collect()
         )
-        offs, acc = [], 0
-        for pid, s_ in per_part:
-            offs.append((pid, acc))
-            acc += s_
-        off_df = F.broadcast(spark.createDataFrame(offs or [(0, 0)], "_pid int, _off long"))
-        w_local = Window.partitionBy("_pid").orderBy("bucket").rowsBetween(Window.unboundedPreceding, 0)
+        offs, acc = [], {}
+        for pid, rep, s_ in per_part:
+            offs.append((pid, rep, acc.get(rep, 0)))
+            acc[rep] = acc.get(rep, 0) + s_
+        off_df = F.broadcast(spark.createDataFrame(offs, "_pid int, rep int, _off long"))
+        w_local = Window.partitionBy("_pid", "rep").orderBy("bucket").rowsBetween(Window.unboundedPreceding, 0)
         merged_map = cp.pin(
             parted.withColumn("_cum", F.sum("n").over(w_local))
-            .join(off_df, "_pid")
+            .join(off_df, ["_pid", "rep"])
             .withColumn("_merged", -(F.floor((F.col("_off") + F.col("_cum")) / max_merged) + 1))
-            .select("bucket", "_merged")
+            .select("rep", "bucket", "_merged")
         )
         return cp.keep(
-            pts.join(F.broadcast(merged_map), "bucket", "left")
-            .select("id", "vec", F.coalesce("_merged", F.col("bucket")).alias("bucket"))
+            pts.join(F.broadcast(merged_map), ["rep", "bucket"], "left")
+            .select("rep", "id", "vec", F.coalesce("_merged", F.col("bucket")).alias("bucket"))
         )
 
 
@@ -193,17 +197,20 @@ def _force_split_big_buckets(pts: DataFrame, max_cluster_size: int, seed: int) -
     depth-capped recursion (≙ the near-duplicate base case
     knn_graph.h:120-131: such buckets are (near-)duplicate clusters that
     leader sampling cannot shrink; a seeded hash split bounds the
-    brute-force cost at the price of a few split-crossing edges)."""
+    brute-force cost at the price of a few split-crossing edges). Each
+    repetition splits with its own seed, ``seed + rep``."""
+    seed_col = (F.lit(seed) + F.col("rep")).cast("int")
     with checkpoints() as cp:
         # non-eager: the limit(1).count() probe is the materializing action
-        sizes = cp.pin(pts.groupBy("bucket").agg(F.count(F.lit(1)).alias("n")), eager=False)
+        sizes = cp.pin(pts.groupBy("rep", "bucket").agg(F.count(F.lit(1)).alias("n")), eager=False)
         big = sizes.where(F.col("n") > max_cluster_size)
         if big.limit(1).count() == 0:
             return pts
-        splits = big.select("bucket", F.ceil(F.col("n") / max_cluster_size).cast("long").alias("_ns"))
+        splits = big.select("rep", "bucket", F.ceil(F.col("n") / max_cluster_size).cast("long").alias("_ns"))
         return cp.keep(
-            pts.join(F.broadcast(splits), "bucket", "left")
+            pts.join(F.broadcast(splits), ["rep", "bucket"], "left")
             .select(
+                "rep",
                 "id",
                 "vec",
                 F.when(
@@ -211,8 +218,8 @@ def _force_split_big_buckets(pts: DataFrame, max_cluster_size: int, seed: int) -
                     # hash-namespace the split children (bucket ids are already
                     # mixed hashes — positional offsets would overflow int64)
                     F.xxhash64(
-                        "bucket", F.lit(seed), F.lit("split"),
-                        F.pmod(F.xxhash64("id", F.lit(seed), F.lit("split")), F.col("_ns")),
+                        "bucket", seed_col, F.lit("split"),
+                        F.pmod(F.xxhash64("id", seed_col, F.lit("split")), F.col("_ns")),
                     ),
                 ).otherwise(F.col("bucket")).alias("bucket"),
             )
@@ -236,95 +243,81 @@ def build_knn_graph(
     ≙ BuildApproximateNearestNeighborGraph (knn_graph.h:145-162): union of
     ``repetitions`` recursive sketches, merged + deduped to per-src top-k.
     """
-    pts0 = points.select("id", "vec").withColumn("bucket", F.lit(0).cast("long"))
+    reps = F.broadcast(points.sparkSession.range(repetitions).select(F.col("id").cast("int").alias("rep")))
+    pts0 = points.select("id", "vec").crossJoin(reps).select("rep", "id", "vec", F.lit(0).cast("long").alias("bucket"))
+    # each repetition's hash seed, seed + rep: an int, since xxhash64 hashes
+    # an int and a long differently and the leader sample depends on it
+    rep_seed = (F.lit(seed) + F.col("rep")).cast("int")
     with checkpoints() as cp:
-        # ONE shared materialization of the bucket-0 state — the repetitions
-        # all start from the identical frame, so checkpointing it per
-        # repetition was repetitions-1 redundant jobs. Eager: it is
-        # materialized before the repetition threads read it.
-        pts_base = cp.pin(pts0)
-
-        def one_repetition(rep_cp, rep: int) -> DataFrame:
-            pts = pts_base
-            for depth in range(max_depth):
-                with checkpoints() as level:
-                    # localCheckpoint the (tiny) size table: breaks the
-                    # self-join lineage between pts and its own aggregate.
-                    # Non-eager — the count() is the materializing action,
-                    # one job instead of two.
-                    sizes = level.pin(pts.groupBy("bucket").agg(F.count(F.lit(1)).alias("n")), eager=False)
-                    big = sizes.where(F.col("n") > max_cluster_size)
-                    if big.count() == 0:
-                        break
-                    big_pts = pts.join(big.select("bucket"), "bucket", "left_semi")
-                    done_pts = pts.join(big.select("bucket"), "bucket", "left_anti")
-                    # deterministic per-bucket leader sample: smallest hashes win
-                    n_leaders_expr = (
-                        F.when(F.lit(depth) == 0, F.lit(top_level_leaders))
-                        .otherwise(F.least(F.lit(MAX_LEADERS), F.greatest(F.lit(2), (F.col("n") * LEADER_FRACTION).cast("int"))))
-                    )
-                    big_sized = big.withColumn("n_leaders", n_leaders_expr).select("bucket", "n", "n_leaders")
-                    w = Window.partitionBy("bucket").orderBy("_h")
-                    # "n_leaders smallest hashes win" — but ranking the bucket's full
-                    # membership funnels it through ONE window-sort task (at depth 0
-                    # the bucket is the whole corpus: the exact scale-killer
-                    # functions/windows.py warns about). Pre-filter to a hash PREFIX
-                    # first: keep hashes below the ~(4·n_leaders+64)/n quantile of the
-                    # uniform int64 hash space, a distributed filter leaving ~4× the
-                    # needed rows, then rank only survivors. The filter is a prefix of
-                    # the ranking order, so the selected leaders are identical to the
-                    # unfiltered version whenever ≥ n_leaders rows survive (mean 4×
-                    # margin; Chernoff-negligible otherwise, and a short bucket just
-                    # yields fewer leaders — the oversize guard re-splits it).
-                    p_keep = (4.0 * F.col("n_leaders") + 64.0) / F.col("n")
-                    h_thr = F.least(
-                        F.lit(-9.223372036854776e18) + p_keep * F.lit(1.8446744073709552e19),
-                        F.lit(9.223372036854e18),
-                    ).cast("long")
-                    leaders = level.pin(
-                        big_pts.join(F.broadcast(big_sized), "bucket")
-                        .withColumn("_h", F.xxhash64("id", F.lit(seed + rep), F.lit(depth)))
-                        .where((F.col("n") <= 4 * F.col("n_leaders") + 64) | (F.col("_h") < h_thr))
-                        .withColumn("_r", F.row_number().over(w))
-                        .where(F.col("_r") <= F.col("n_leaders"))
-                        .select("bucket", "id", "vec", (F.col("_r") - 1).cast("long").alias("leader_rank")),
-                        # leaders derive from big_pts; cogrouping the two
-                        # without a lineage break trips the
-                        # ambiguous-self-join check. The NON-eager checkpoint
-                        # breaks lineage identically (the plan becomes a
-                        # LogicalRDD either way) but defers materialization
-                        # to the state swap's job below — one driver job per
-                        # depth instead of two.
-                        eager=False,
-                    )
-                    # fanout>1 only on the first split (knn_graph.h:133
-                    # recurses with fanout=1): duplication is bounded at
-                    # fanout×n per repetition.
-                    level_fanout = fanout if depth == 0 else 1
-                    reassigned = _assign_to_leaders(big_pts, _realias(leaders), level_fanout, metric)
-                    new_pts = reassigned.join(points.select("id", "vec"), "id").select("id", "vec", "bucket")
-                    # hash path encoding (see _assign_to_leaders): done
-                    # buckets keep their ids, split buckets get mixed-hash
-                    # children — no per-level renumbering pass, no global
-                    # window, no id overflow.
-                    pts = rep_cp.swap(done_pts.unionByName(new_pts), pts)
-            pts = _force_split_big_buckets(pts, max_cluster_size, seed + rep)
-            pts = _merge_small_buckets(pts).dropDuplicates(["bucket", "id"])
-            return _bucket_bruteforce(pts.select("bucket", "id", "vec"), k, metric)
-
-        # repetitions are fully independent — run their driver loops on
-        # threads so the per-level jobs of different reps overlap (Spark
-        # schedules concurrent jobs onto the shared task slots; the loop is
-        # latency-bound on small per-job work, so overlap ≈ repetitions×
-        # wall-clock win)
-        all_candidates = fan_out(one_repetition, range(repetitions), min(repetitions, 4))
-        cand = all_candidates[0]
-        for c in all_candidates[1:]:
-            cand = cand.unionByName(c)
-        edges = merge_topk(cand, k)
+        pts = cp.pin(pts0)
+        for depth in range(max_depth):
+            with checkpoints() as level:
+                # localCheckpoint the (tiny) size table: breaks the
+                # self-join lineage between pts and its own aggregate.
+                # Non-eager — the count() is the materializing action,
+                # one job instead of two.
+                sizes = level.pin(pts.groupBy("rep", "bucket").agg(F.count(F.lit(1)).alias("n")), eager=False)
+                big = sizes.where(F.col("n") > max_cluster_size)
+                if big.count() == 0:  # no repetition has an oversized bucket
+                    break
+                big_pts = pts.join(big.select("rep", "bucket"), ["rep", "bucket"], "left_semi")
+                done_pts = pts.join(big.select("rep", "bucket"), ["rep", "bucket"], "left_anti")
+                # deterministic per-bucket leader sample: smallest hashes win
+                n_leaders_expr = (
+                    F.when(F.lit(depth) == 0, F.lit(top_level_leaders))
+                    .otherwise(F.least(F.lit(MAX_LEADERS), F.greatest(F.lit(2), (F.col("n") * LEADER_FRACTION).cast("int"))))
+                )
+                big_sized = big.withColumn("n_leaders", n_leaders_expr).select("rep", "bucket", "n", "n_leaders")
+                w = Window.partitionBy("rep", "bucket").orderBy("_h")
+                # "n_leaders smallest hashes win" — but ranking the bucket's full
+                # membership funnels it through ONE window-sort task (at depth 0
+                # the bucket is the whole corpus: the exact scale-killer
+                # functions/windows.py warns about). Pre-filter to a hash PREFIX
+                # first: keep hashes below the ~(4·n_leaders+64)/n quantile of the
+                # uniform int64 hash space, a distributed filter leaving ~4× the
+                # needed rows, then rank only survivors. The filter is a prefix of
+                # the ranking order, so the selected leaders are identical to the
+                # unfiltered version whenever ≥ n_leaders rows survive (mean 4×
+                # margin; Chernoff-negligible otherwise, and a short bucket just
+                # yields fewer leaders — the oversize guard re-splits it).
+                p_keep = (4.0 * F.col("n_leaders") + 64.0) / F.col("n")
+                h_thr = F.least(
+                    F.lit(-9.223372036854776e18) + p_keep * F.lit(1.8446744073709552e19),
+                    F.lit(9.223372036854e18),
+                ).cast("long")
+                leaders = level.pin(
+                    big_pts.join(F.broadcast(big_sized), ["rep", "bucket"])
+                    .withColumn("_h", F.xxhash64("id", rep_seed, F.lit(depth)))
+                    .where((F.col("n") <= 4 * F.col("n_leaders") + 64) | (F.col("_h") < h_thr))
+                    .withColumn("_r", F.row_number().over(w))
+                    .where(F.col("_r") <= F.col("n_leaders"))
+                    .select("rep", "bucket", "id", "vec", (F.col("_r") - 1).cast("long").alias("leader_rank")),
+                    # leaders derive from big_pts; cogrouping the two
+                    # without a lineage break trips the
+                    # ambiguous-self-join check. The NON-eager checkpoint
+                    # breaks lineage identically (the plan becomes a
+                    # LogicalRDD either way) but defers materialization
+                    # to the state swap's job below — one driver job per
+                    # depth instead of two.
+                    eager=False,
+                )
+                # fanout>1 only on the first split (knn_graph.h:133
+                # recurses with fanout=1): duplication is bounded at
+                # fanout×n per repetition.
+                level_fanout = fanout if depth == 0 else 1
+                reassigned = _assign_to_leaders(big_pts, _realias(leaders), level_fanout, metric)
+                new_pts = reassigned.join(points.select("id", "vec"), "id").select("rep", "id", "vec", "bucket")
+                # hash path encoding (see _assign_to_leaders): done
+                # buckets keep their ids, split buckets get mixed-hash
+                # children — no per-level renumbering pass, no global
+                # window, no id overflow.
+                pts = cp.swap(done_pts.unionByName(new_pts), pts)
+        pts = _force_split_big_buckets(pts, max_cluster_size, seed)
+        pts = _merge_small_buckets(pts).dropDuplicates(["rep", "bucket", "id"])
+        edges = merge_topk(_bucket_bruteforce(pts.select("rep", "bucket", "id", "vec"), k, metric), k)
         # a lazy pin: under AQE taking it runs the shuffle stages, so the
-        # repetitions' checkpoints are released here and the first action
-        # on the result runs only its last stage
+        # loop's checkpoints are released here and the first action on the
+        # result runs only its last stage
         return cp.keep(cp.pin(symmetrize(edges) if symmetric else edges, eager=False))
 
 

@@ -27,8 +27,6 @@ and therefore the same assignment:
 
 from __future__ import annotations
 
-from concurrent.futures import ThreadPoolExecutor
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window
@@ -248,13 +246,8 @@ def coarsen_graph(
                 .groupBy(F.col("nsrc").alias("src"), F.col("ndst").alias("dst"))
                 .agg(F.sum("weight").alias("weight"))
             )
-            # the shrinkage count and the edge contraction both depend only
-            # on lab (already materialized): run them as concurrent jobs
-            # (guide §2.6) instead of back-to-back
-            with ThreadPoolExecutor(max_workers=1) as ex:
-                counted = ex.submit(new_w.count)
-                contracted = cp.pin(contracted)
-                n_new = counted.result()
+            n_new = new_w.count()
+            contracted = cp.pin(contracted)
             if n_new >= n:  # no shrinkage → stop (guard ≙ knn_graph.h:120-131)
                 break
             maps.append(lab)

@@ -11,8 +11,9 @@ probing it and reports wall time per (shard, ef) batch from inside the task
 (real executor-side timings — the distributed analogue of the reference's
 per-shard timers). ``ef`` 0 is the exact brute-force search; every ef > 0
 runs the sublinear IVF kernel (operators/ivf_shard.py), built once per
-shard. ``recall_qps_grid`` turns the timed table into one (nprobes, recall,
-qps) grid per ef with ``pareto_flags``, the one Pareto rule.
+shard. ``recall_qps_grid`` joins that one timed table back to every route
+config's probe ranks and turns it into one (nprobes, recall, qps) grid keyed
+by (config, ef); ``pareto_flags`` is the one Pareto rule.
 """
 
 from __future__ import annotations
@@ -181,47 +182,50 @@ def pareto_flags(df: pd.DataFrame) -> pd.Series:
 
 def recall_qps_grid(
     shard_results: DataFrame,
+    routes: DataFrame,
     gt: DataFrame,
     k: int,
     n_queries: int,
     nprobes_values: Iterable[int],
+    configs: Iterable[int],
     ef_list: Iterable[int],
-) -> dict[int, pd.DataFrame]:
-    """One (nprobes, recall, qps, pareto) grid per ef in ``ef_list`` (≙ the
-    combination sweep, route_search_combination.cpp:121-226). Small output
-    → pandas.
+) -> pd.DataFrame:
+    """The (config, ef, nprobes, recall, qps) grid of every route config in
+    ``configs`` (≙ the combination sweep, route_search_combination.cpp:
+    121-226): ``shard_results`` is one timed search per (query, shard) pair,
+    and ``routes`` (query_id, shard, probe_rank, config) gives each config's
+    probe rank of the pair. Small output → pandas, config-major.
 
-    TWO Spark aggregations for the whole grid, not O(|nprobes|·|ef|) jobs:
-    the recall curve comes from the histogram of each true hit's FIRST
-    probe rank per ef (cumsum gives found@p for every p), and the QPS model
-    from one (ef, shard, probe_rank) work table cumsum'd driver-side."""
+    TWO Spark aggregations for the whole grid, not O(|configs|·|nprobes|·
+    |ef|) jobs: the recall curve comes from the histogram of each true hit's
+    FIRST probe rank per (config, ef) (cumsum gives found@p for every p),
+    and the QPS model from one (config, ef, shard, probe_rank) work table
+    cumsum'd driver-side."""
+    ranked = shard_results.drop("probe_rank").join(routes, ["query_id", "shard"])
     # recall: first probe rank at which each (query, true-neighbor) is found
     first_hit = (
-        shard_results.select("ef", "query_id", "probe_rank", F.explode("neighbors").alias("neighbor_id"))
+        ranked.select("config", "ef", "query_id", "probe_rank", F.explode("neighbors").alias("neighbor_id"))
         .join(gt.select("query_id", "neighbor_id"), ["query_id", "neighbor_id"], "left_semi")
-        .groupBy("ef", "query_id", "neighbor_id")
+        .groupBy("config", "ef", "query_id", "neighbor_id")
         .agg(F.min("probe_rank").alias("first_rank"))
-        .groupBy("ef", "first_rank")
+        .groupBy("config", "ef", "first_rank")
         .agg(F.count(F.lit(1)).alias("n"))
         .toPandas()
     )
-    # qps: per-(ef, shard, probe_rank) work once; cumulative per shard in pandas
+    # qps: per-(config, ef, shard, probe_rank) work once; cumulative per shard in pandas
     work_all = (
-        shard_results.groupBy("ef", "shard", "probe_rank")
+        ranked.groupBy("config", "ef", "shard", "probe_rank")
         .agg(F.sum("time_s").alias("work"))
         .toPandas()
     )
-    out: dict[int, pd.DataFrame] = {}
-    for ef in ef_list:
-        fh = first_hit[first_hit["ef"] == ef]
-        work = work_all[work_all["ef"] == ef]
-        rows = []
-        for p in nprobes_values:
-            found = fh.loc[fh["first_rank"] <= p, "n"].sum()
-            w = work[work["probe_rank"] <= p].groupby("shard")["work"].sum()
-            qps = _replica_qps({int(s): float(v) for s, v in w.items()}, n_queries, 0.0, None, 20)["qps"]
-            rows.append({"nprobes": p, "recall": found / (n_queries * k), "qps": qps})
-        grid = pd.DataFrame(rows, columns=["nprobes", "recall", "qps"])
-        grid["pareto"] = pareto_flags(grid)
-        out[int(ef)] = grid
-    return out
+    rows = []
+    for c in configs:
+        for ef in ef_list:
+            fh = first_hit[(first_hit["config"] == c) & (first_hit["ef"] == ef)]
+            work = work_all[(work_all["config"] == c) & (work_all["ef"] == ef)]
+            for p in nprobes_values:
+                found = fh.loc[fh["first_rank"] <= p, "n"].sum()
+                w = work[work["probe_rank"] <= p].groupby("shard")["work"].sum()
+                qps = _replica_qps({int(s): float(v) for s, v in w.items()}, n_queries, 0.0, None, 20)["qps"]
+                rows.append({"config": c, "ef": ef, "nprobes": p, "recall": found / (n_queries * k), "qps": qps})
+    return pd.DataFrame(rows, columns=["config", "ef", "nprobes", "recall", "qps"])

@@ -15,19 +15,23 @@ table IS the extracted HNSW routing-point set, and our scoring is exact
 broadcast top-k — so "KMeansTree", "KMeansTree-Frequency" and the four
 "HNSW-*" variants all reduce to ONE scored relation per (budget, num_voting)
 with a different pure-DataFrame probe-order policy each. The sweep is a
-driver-side loop over a tiny config grid; each config's work (train, score,
-search) is fully distributed.
+driver-side loop over a tiny config grid that trains and scores each config.
+Then, as the reference does, it searches once and combines per config: one
+timed ``run_in_shard_searches`` over the distinct (query, shard) pairs of
+every config's routes, joined back to each config's probe ranks in one
+``recall_qps_grid``.
 """
 
 from __future__ import annotations
 
+from functools import reduce
 from typing import Iterable, Sequence
 
 import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from gp_ann_spark.checkpoint import checkpoints, fan_out
+from gp_ann_spark.checkpoint import checkpoints
 from gp_ann_spark.eval import recall as R
 from gp_ann_spark.operators import routing as RT
 from gp_ann_spark.operators import search as S
@@ -183,48 +187,28 @@ def routing_sweep_pareto(
     nq = queries.count()
     with checkpoints() as cp:
         # the routes relations of the configs pass to this scope, which
-        # releases them once every config is evaluated
+        # releases them once the grid is computed
         configs = iterate_routing_configs(
             points, assignment, queries, gt, k, num_shards, budgets, num_voting_list,
             policies=policies, metric=metric, seed=seed, n_queries=nq,
         )
-        # EAGER on purpose: the config threads below all read `sharded`
-        # concurrently — a lazy checkpoint would let several threads race to
-        # materialize the full point table at once (duplicated compute); one
-        # up-front job, then every thread hits the cache. (`sr_all` inside
-        # each thread stays non-eager: it is private to that thread.)
-        sharded = cp.pin(S.shard_points(points, assignment))
-
-        def eval_config(cfg_cp, cfg) -> list[dict]:
-            """Sweep-evaluate ONE route config; configs are independent, so
-            the driver loop runs them on a small thread pool (guide §2.6:
-            Spark schedules concurrent jobs onto shared task slots — one
-            config's aggregation back-fills the executor tail of another's
-            search). What this config pins is released when it returns."""
-            sr_all = cfg_cp.pin(SS.run_in_shard_searches(
-                sharded, queries, cfg["routes"], k=k, metric=metric, ef_values=ef_list, seed=seed,
-            ), eager=False)
-            out = []
-            for ef, grid in SS.recall_qps_grid(sr_all, gt, k, nq, nprobes_values, ef_list).items():
-                for _, g in grid.iterrows():
-                    out.append(
-                        {
-                            "algorithm": cfg["algorithm"],
-                            "budget": cfg["budget"],
-                            "num_voting": cfg["num_voting"],
-                            "first_shard_recall": cfg["first_shard_recall"],
-                            "ef": ef,
-                            "nprobes": int(g["nprobes"]),
-                            "recall": float(g["recall"]),
-                            "qps": float(g["qps"]),
-                        }
-                    )
-            return out
-
-        per_config = fan_out(eval_config, configs, min(4, max(1, len(configs))))
-    # rows in CONFIG ORDER regardless of thread completion order — the
-    # output frame's row order (and so downstream hashes) stays deterministic
-    pdf = pd.DataFrame([r for chunk in per_config for r in chunk])
+        routes = cp.pin(reduce(DataFrame.unionByName, (
+            c["routes"].where(F.col("probe_rank") <= max(nprobes_values))
+            .select("query_id", "shard", "probe_rank", F.lit(i).alias("config"))
+            for i, c in enumerate(configs)
+        )), eager=False)
+        # ONE timed search over the distinct (query, shard) pairs of every
+        # config (≙ RunInShardSearches once, route_search_combination.cpp:
+        # 121-226); the grid joins it back to each config's probe ranks
+        pairs = routes.groupBy("query_id", "shard").agg(F.min("probe_rank").alias("probe_rank"))
+        sharded = cp.pin(S.shard_points(points, assignment), eager=False)
+        searches = cp.pin(SS.run_in_shard_searches(
+            sharded, queries, pairs, k=k, metric=metric, ef_values=ef_list, seed=seed,
+        ), eager=False)
+        grid = SS.recall_qps_grid(searches, routes, gt, k, nq, nprobes_values, range(len(configs)), ef_list)
+    # rows in config order, then ef, then nprobes
+    cols = ("algorithm", "budget", "num_voting", "first_shard_recall")
+    pdf = pd.DataFrame([{c: configs[i][c] for c in cols} for i in grid["config"]]).join(grid.drop(columns="config"))
     # global Pareto across ALL configs (reference keeps the non-dominated set)
     pdf["pareto"] = SS.pareto_flags(pdf)
     return pdf

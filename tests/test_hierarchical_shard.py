@@ -69,7 +69,8 @@ def test_shard_searches_and_qps(spark, pts):
     assert sr.where(F.col("time_s") <= 0).count() == 0
     assert sr.select(F.size("neighbors")).agg(F.max("size(neighbors)")).collect()[0][0] <= 10
     gt = R.ground_truth(pts, qs, k=10)
-    grid = SS.recall_qps_grid(sr, gt, 10, 20, [1, 2, 4], [0])[0]
+    grid = SS.recall_qps_grid(sr, routes.withColumn("config", F.lit(0)), gt, 10, 20, [1, 2, 4], [0], [0])
+    assert list(grid["config"]) == [0, 0, 0] and list(grid["ef"]) == [0, 0, 0]
     assert list(grid["nprobes"]) == [1, 2, 4]
     assert grid["recall"].iloc[-1] == pytest.approx(1.0)
     assert (grid["recall"].diff().dropna() >= -1e-9).all()

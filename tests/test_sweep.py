@@ -96,3 +96,26 @@ def test_routing_sweep_pareto_ivf_ef_axis(spark, rng):
     ex = exact.set_index(["algorithm", "nprobes"])["recall"]
     for idx in ex.index:
         assert abs(big.loc[idx] - ex.loc[idx]) < 1e-9
+
+
+def test_routing_sweep_pareto_searches_once(spark, rng, monkeypatch):
+    """One timed search per sweep (≙ RunInShardSearches once,
+    route_search_combination.cpp:121-226), over only the distinct
+    (query, shard) pairs that some config probes within max(nprobes)."""
+    pts, asn, qs, gt = _setup(spark, rng)
+    real, calls = SW.SS.run_in_shard_searches, []
+
+    def spy(sharded, queries, routes, **kw):
+        calls.append(routes.select("query_id", "shard", "probe_rank").collect())
+        return real(sharded, queries, routes, **kw)
+
+    monkeypatch.setattr(SW.SS, "run_in_shard_searches", spy)
+    pdf = SW.routing_sweep_pareto(
+        pts, asn, qs, gt, k=5, num_shards=4, budgets=(256,), num_voting_list=(20,),
+        nprobes_values=(1, 2), policies=("min_dist", "frequency"),
+    )
+    assert len(pdf) == 3 * 2  # (2 policies + random) × 2 nprobes
+    assert len(calls) == 1
+    pairs = [(r["query_id"], r["shard"]) for r in calls[0]]
+    assert len(pairs) == len(set(pairs))
+    assert all(r["probe_rank"] <= 2 for r in calls[0])

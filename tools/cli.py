@@ -299,25 +299,27 @@ def cmd_small_scale_queries(spark, args):
         # over the top-60 routing points
         ("HNSW", *timed_routes(lambda: RT.kmeans_tree_router(qs, rp, num_voting=60, metric=metric, policy="min_dist"))),
     ]
+    # ONE timed search (BruteForce ≙ ef 0, HNSW ≙ ef 120) over the distinct
+    # (query, shard) pairs of both routers, combined per router in one grid
+    routes = routers[0][1].withColumn("config", F.lit(0)).unionByName(routers[1][1].withColumn("config", F.lit(1)))
+    pairs = routes.groupBy("query_id", "shard").agg(F.min("probe_rank").alias("probe_rank"))
+    sr = SS.run_in_shard_searches(sp, qs, pairs, k=k, metric=metric, ef_values=(0, 120), reps=1).localCheckpoint(eager=True)
+    grid = SS.recall_qps_grid(sr, routes, gt, k, nq, range(1, num_shards + 1), range(len(routers)), (0, 120))
     with open(out_file, "w") as out:
         out.write("partitioning,routing,shard query,probes,latency,routing latency, query latency,recall\n")
-        for desc, routes, routing_time in routers:
-            for shard_query, ef in (("BruteForce", 0), ("HNSW", 120)):
-                sr = SS.run_in_shard_searches(
-                    sp, qs, routes, k=k, metric=metric, ef_values=(ef,), reps=1
-                ).localCheckpoint(eager=True)
-                grid = SS.recall_qps_grid(sr, gt, k, nq, range(1, num_shards + 1), (ef,))[ef]
-                for _, g in grid.iterrows():
-                    qlat = 1.0 / g["qps"] if g["qps"] > 0 else float("inf")
-                    lat = routing_time / nq + qlat
-                    out.write(
-                        f"{part_method},{desc},{shard_query},{int(g['nprobes'])},"
-                        f"{lat},{routing_time / nq},{qlat},{g['recall']}\n"
-                    )
-                    print(
-                        f"router = {desc} query = {shard_query} nprobes = {int(g['nprobes'])} "
-                        f"recall = {g['recall']:.4f} avg latency = {1000.0 * lat:.4f} ms"
-                    )
+        for _, g in grid.iterrows():
+            desc, _, routing_time = routers[int(g["config"])]
+            shard_query = "BruteForce" if g["ef"] == 0 else "HNSW"
+            qlat = 1.0 / g["qps"] if g["qps"] > 0 else float("inf")
+            lat = routing_time / nq + qlat
+            out.write(
+                f"{part_method},{desc},{shard_query},{int(g['nprobes'])},"
+                f"{lat},{routing_time / nq},{qlat},{g['recall']}\n"
+            )
+            print(
+                f"router = {desc} query = {shard_query} nprobes = {int(g['nprobes'])} "
+                f"recall = {g['recall']:.4f} avg latency = {1000.0 * lat:.4f} ms"
+            )
 
 
 def cmd_analyze_approximation_losses(spark, args):
