@@ -23,10 +23,10 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from gp_ann_spark.functions.distances import pairwise_sqr_l2
 from gp_ann_spark.functions.windows import bounded_global_window
 
 from gp_ann_spark.checkpoint import checkpoints
+from gp_ann_spark.corpus.ingest import dense_ids
 from gp_ann_spark.operators import kmeans as KM
 from gp_ann_spark.operators import knn as KNN
 from gp_ann_spark.operators import partition as P
@@ -72,16 +72,7 @@ def hierarchical_kmeans(
                     # leaf ids are hashes (possibly negative int64) — fold to a
                     # non-negative entropy tuple; default_rng rejects negatives
                     rng = np.random.default_rng((seed, lvl, leaf & 0xFFFFFFFFFFFFFFFF))
-                    C = X[rng.choice(len(X), size=min(k, len(X)), replace=False)]
-                    for _ in range(n_iter):
-                        # BLAS m×k kernel — the (m,k,d) broadcast tensor is O(m·k·d)
-                        # memory per iteration in-task
-                        d2 = pairwise_sqr_l2(X, C)
-                        a = d2.argmin(1)
-                        for j in range(len(C)):
-                            m = a == j
-                            if m.any():
-                                C[j] = X[m].mean(0)
+                    _, a = KM.local_lloyd(X, k, rng, n_iter)
                     return pd.DataFrame({"id": pdf["id"], "sub": a.astype(np.int64)})
 
                 subs = joined.groupBy("leaf").applyInPandas(
@@ -99,22 +90,17 @@ def hierarchical_kmeans(
                 keep = asn.join(F.broadcast(big.select("leaf")), "leaf", "left_anti")
                 asn = cp.swap(keep.select("id", "leaf").unionByName(new_big), asn)
 
-        # densify leaf ids + centroids (partial/final mean via shard_centroids).
-        # dense_ids = range-repartition + broadcast prefix sums: the distinct
-        # leaf table is row-proportional (~n/target_leaf_size), so a global
-        # row_number window here would be the single-partition scale-killer
-        # windows.py warns about
-        from gp_ann_spark.corpus.ingest import dense_ids
-
+        # densify leaf ids, then leaf means and sizes in one shard_centroids
+        # aggregation. dense_ids = range-repartition + broadcast prefix sums:
+        # the distinct leaf table is row-proportional (~n/target_leaf_size),
+        # so a global row_number window here would be the single-partition
+        # scale-killer windows.py warns about
         dense = dense_ids(asn.select("leaf").distinct(), order_col="leaf").withColumnRenamed("id", "_n")
         # no broadcast hint: the leaf table is row-proportional too — let AQE
         # pick broadcast vs shuffle from its measured size
         asn = asn.join(dense, "leaf").select("id", F.col("_n").cast("long").alias("leaf"))
-        from gp_ann_spark.operators.routing import shard_centroids
-
-        cents = shard_centroids(points, asn.select("id", F.col("leaf").alias("shard")))
-        sizes = asn.groupBy(F.col("leaf")).agg(F.count(F.lit(1)).alias("size"))
-        leaf_cents = cents.select(F.col("shard").alias("leaf"), "vec").join(sizes, "leaf")
+        cents = KM.shard_centroids(points, asn.select("id", F.col("leaf").alias("shard")))
+        leaf_cents = cents.select(F.col("shard").alias("leaf"), "vec", "size")
         return cp.keep((asn, leaf_cents))
 
 
@@ -188,10 +174,10 @@ def pyramid_partition(
         )
         placed2 = KM.capacity_fill(all_shard, caps_df)
         placed = placed.select("id", "shard").unionByName(placed2.select("id", "shard"))
-    # loud stranded-point check (matching balanced_lloyd's RuntimeError
-    # style): if the shards reachable through aggregates lack capacity —
-    # e.g. the graph partitioner left some shards without aggregates —
-    # silently returning a partial assignment would lose data downstream
+    # loud stranded-point check (matching kmeans._enforce_cap's RuntimeError
+    # style): if the shards reachable through aggregates lack capacity — e.g.
+    # the graph partitioner left some shards without aggregates — silently
+    # returning a partial assignment would lose data downstream
     n_placed = placed.count()
     if n_placed != n:
         raise RuntimeError(

@@ -1,4 +1,4 @@
-"""K-means family: Lloyd's, balanced (BKM+-style), capacity-aware variants.
+"""K-means family: Lloyd's, capacity enforcement, BKM+ balanced k-means.
 
 Reference: ``src/kmeans.cpp`` — ``KMeans`` (:228-244, 20 Lloyd rounds, seed
 555), ``NearestCenters`` assign (:12-27), ``AggregateClustersParallel``
@@ -16,6 +16,12 @@ Spark-first shape per Lloyd superstep:
 
 So each superstep shuffles O(k·n_blocks) tiny rows, never the points.
 The point table itself is read repeatedly — cache() it before calling.
+
+Every k-means job of ``operators/`` lives here: ``lloyd``, the per-shard
+mean/size aggregation ``shard_centroids``, the cap re-migration
+``_enforce_cap`` (``partition.kmeans_partition``'s rebalance step), BKM+
+``balanced_kmeans_bkm`` and ``local_lloyd``, the in-task NumPy Lloyd of the
+k-means tree router and hierarchical k-means.
 """
 
 from __future__ import annotations
@@ -28,7 +34,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from gp_ann_spark.checkpoint import checkpoints
-from gp_ann_spark.functions.distances import distance_matrix, pos_distance_matrix
+from gp_ann_spark.functions.distances import distance_matrix, pairwise_sqr_l2, pos_distance_matrix
 
 SEED = 555  # the reference's algorithm seed (kmeans.cpp:19 via partition.cpp:14)
 
@@ -133,14 +139,13 @@ def _superstep(
 
 def assign_to_centroids(
     points: DataFrame, centroids: np.ndarray, metric: str = "l2",
-    id_col: str = "id", vec_col: str = "vec", with_dist: bool = False,
+    id_col: str = "id", vec_col: str = "vec",
 ) -> DataFrame:
     """Broadcast nearest-center assignment (≙ NearestCenters kmeans.cpp:12-27,
     the 'assign' half of Lloyd): mapInPandas blocked argmin, no shuffle at
     all — output stays co-partitioned with the points."""
     spark = points.sparkSession
     bc = spark.sparkContext.broadcast(centroids)
-    schema = f"{id_col} long, shard int" + (", dist double" if with_dist else "")
 
     def assign(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         C = bc.value
@@ -148,14 +153,50 @@ def assign_to_centroids(
             if len(pdf) == 0:
                 continue
             X = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            dists = distance_matrix(X, C, metric)
-            a = dists.argmin(axis=1)
-            out = {id_col: pdf[id_col].to_numpy(), "shard": a.astype(np.int32)}
-            if with_dist:
-                out["dist"] = dists[np.arange(len(X)), a]
-            yield pd.DataFrame(out)
+            a = distance_matrix(X, C, metric).argmin(axis=1)
+            yield pd.DataFrame({id_col: pdf[id_col].to_numpy(), "shard": a.astype(np.int32)})
 
-    return points.select(id_col, vec_col).mapInPandas(assign, schema=schema)
+    return points.select(id_col, vec_col).mapInPandas(assign, schema=f"{id_col} long, shard int")
+
+
+def shard_centroids(points: DataFrame, assignment: DataFrame, vec_col: str = "vec") -> DataFrame:
+    """Per-shard mean vector and size of a given assignment → ``(shard, vec,
+    size)`` (≙ AggregateClustersParallel kmeans.cpp:151-204, the 'update'
+    half of Lloyd): one mapInPandas pass emits per-block partial sums and
+    counts, one small ``groupBy(shard)`` final-aggregates them.
+    """
+    joined = points.join(assignment, "id").select("shard", vec_col)
+    schema = "shard int, cnt long, sums array<double>"
+
+    def partial(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            shards = pdf["shard"].to_numpy()
+            X = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
+            uniq = np.unique(shards)
+            pos = np.searchsorted(uniq, shards)
+            sums = np.zeros((len(uniq), X.shape[1]))
+            np.add.at(sums, pos, X)
+            cnt = np.bincount(pos, minlength=len(uniq))
+            yield pd.DataFrame({"shard": uniq, "cnt": cnt, "sums": list(sums)})
+
+    # dim probe reads ONE row of the points table — probing `joined` would
+    # execute the points⋈assignment join (a full-input job at scale) just to
+    # read a vector length
+    d = len(points.select(vec_col).first()[0])
+    agg = (
+        joined.mapInPandas(partial, schema=schema)
+        .groupBy("shard")
+        .agg(F.sum("cnt").alias("cnt"), *[F.sum(F.col("sums")[i]).alias(f"s{i}") for i in range(d)])
+    )
+    return agg.select(
+        "shard",
+        # double, not float32: centroid → query distances must rank the same
+        # way as the float64/DuckDB oracles (ties aside)
+        F.array(*[(F.col(f"s{i}") / F.col("cnt")).cast("double") for i in range(d)]).alias("vec"),
+        F.col("cnt").alias("size"),
+    )
 
 
 def lloyd(
@@ -185,6 +226,22 @@ def lloyd(
         centroids = centroids[keep]
     assignment = assign_to_centroids(points, centroids, metric, id_col, vec_col)
     return centroids, assignment
+
+
+def local_lloyd(X: np.ndarray, k: int, rng: np.random.Generator, n_iter: int) -> tuple[np.ndarray, np.ndarray]:
+    """In-task NumPy Lloyd on one group's points: ``k`` seeds drawn by
+    ``rng``, ``n_iter`` assign/update rounds, an empty cluster keeps its
+    centroid. Returns (centroids, the last round's assignment)."""
+    C = X[rng.choice(len(X), size=min(k, len(X)), replace=False)]
+    for _ in range(n_iter):
+        # BLAS m×k kernel, NOT (m,k,d) broadcasting — at 50k points, k=64,
+        # d=64 the tensor form is ~1.6 GB per iteration per task
+        a = pairwise_sqr_l2(X, C).argmin(1)
+        for j in range(len(C)):
+            m = a == j
+            if m.any():
+                C[j] = X[m].mean(0)
+    return C, a
 
 
 def capacity_fill(
@@ -280,84 +337,6 @@ def capacity_fill(
                 remaining = cp.swap(remaining.join(rejected, [id_col, shard_col], "left_anti"), remaining)
             if remaining.limit(1).count() == 0:
                 return scored.limit(0)
-
-
-def balanced_lloyd(
-    points: DataFrame,
-    k: int,
-    max_cluster_size: int,
-    n_iter: int = 20,
-    metric: str = "l2",
-    seed: int = SEED,
-    rebalance_rounds: int = 8,
-) -> tuple[np.ndarray, DataFrame]:
-    """Balanced k-means: Lloyd supersteps with a size penalty, then hard
-    capacity enforcement by greedy re-migration.
-
-    ≙ BalancedKMeans (kmeans.cpp:253-524). The reference runs 1000
-    sequential mini-batch sub-rounds per round with per-sub-round centroid
-    updates; that is inherently serial, so we batch to supersteps (SURVEY §7)
-    — its *final* greedy re-migration of overflow points (kmeans.cpp:494-515)
-    is what actually pins the invariant ``max shard ≤ max_cluster_size``,
-    and that step we reproduce exactly (iterated capacity_fill).
-    """
-    n = points.count()
-    # keep empty clusters: k_eff·cap ≥ n must hold or the spill has nowhere
-    # to go (silent point loss — see the unplaced assertion below)
-    centroids, _ = lloyd(points, k, n_iter=n_iter, metric=metric, seed=seed, drop_empty=False)
-    k_eff = len(centroids)
-    if k_eff * max_cluster_size < n:
-        raise ValueError(
-            f"infeasible balance: k={k_eff} × cap={max_cluster_size} < n={n}"
-        )
-    assignment = assign_to_centroids(points, centroids, metric, with_dist=True)
-    with checkpoints() as cp:
-        assignment = cp.pin(assignment)
-        for _ in range(rebalance_rounds):
-            sizes = {r["shard"]: r["cnt"] for r in assignment.groupBy("shard").agg(F.count(F.lit(1)).alias("cnt")).collect()}
-            over = [s for s, c in sizes.items() if c > max_cluster_size]
-            if not over:
-                break
-            # Within each overfull shard keep the max_cluster_size closest
-            # points (≙ kmeans.cpp:494-515 keeps best-fitting, migrates the
-            # rest).
-            w = Window.partitionBy("shard").orderBy(F.col("dist").asc(), F.col("id").asc())
-            ranked = assignment.withColumn("_r", F.row_number().over(w))
-            keep = ranked.where(~F.col("shard").isin(over) | (F.col("_r") <= max_cluster_size)).drop("_r")
-            spill_ids = ranked.where(F.col("shard").isin(over) & (F.col("_r") > max_cluster_size)).select("id")
-            spill_pts = points.join(spill_ids, "id", "left_semi")
-            # Rate spilled points against all non-full shards, greedy fill.
-            # range(k_eff), not sizes.keys(): a shard that never received a
-            # point is absent from sizes yet is exactly the spare capacity we
-            # need.
-            room = {
-                s: max_cluster_size - int(sizes.get(s, 0))
-                for s in range(k_eff)
-                if int(sizes.get(s, 0)) < max_cluster_size
-            }
-            if not room:
-                break
-            open_shards = sorted(room)
-            sub_c = centroids[open_shards]
-            rated = assign_all_candidates(spill_pts, sub_c, metric)
-            rated = rated.withColumn(
-                "shard", F.element_at(F.array(*[F.lit(s) for s in open_shards]), F.col("cand") + 1)
-            ).drop("cand")
-            caps = points.sparkSession.createDataFrame(
-                [(int(s), int(c)) for s, c in room.items()], "shard int, cap int"
-            )
-            with checkpoints() as step:
-                placed = step.pin(capacity_fill(rated, caps))
-                # every spilled point must land somewhere — silent loss would
-                # shrink the assignment (feasibility was checked up front, so
-                # this is a bug trap, not an expected path)
-                n_spill, n_placed = spill_ids.count(), placed.count()
-                if n_placed != n_spill:
-                    raise RuntimeError(f"capacity_fill stranded {n_spill - n_placed} of {n_spill} spill points")
-                assignment = cp.swap(
-                    keep.select("id", "shard", "dist").unionByName(placed.select("id", "shard", "dist")), assignment
-                )
-        return cp.keep((centroids[:k_eff], assignment.select("id", "shard")))
 
 
 def assign_all_candidates(
@@ -552,43 +531,21 @@ def balanced_kmeans_bkm(
 
 
 def _superstep_given_assignment(
-    pts: DataFrame, assignment: DataFrame, k: int, metric: str,
-    prev_centroids: np.ndarray | None = None,
+    pts: DataFrame, assignment: DataFrame, k: int, metric: str, prev_centroids: np.ndarray,
 ) -> tuple[np.ndarray, np.ndarray, float]:
-    """Centroid means + objective for a FIXED assignment (partial/final agg,
-    ≙ AggregateClustersParallel kmeans.cpp:151-204 + ObjectiveValue :246).
+    """Centroid means and sizes (``shard_centroids``) + objective
+    (≙ ObjectiveValue kmeans.cpp:246) for a FIXED assignment.
 
     A cluster with no members keeps its ``prev_centroids`` row (matching
     ``_superstep``'s empty-cluster rule) — zeroing it would park the
     centroid at the origin, where normalized corpora score every point at
     distance 1 and the penalty schedule dumps arbitrary points into it."""
-    d = len(pts.select("vec").first()[0])
-    joined = pts.join(assignment, "id").select("shard", "vec")
-
-    def partial(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            X = np.stack(pdf["vec"].to_numpy()).astype(np.float64)
-            sh = pdf["shard"].to_numpy()
-            sums = np.zeros((k, X.shape[1]))
-            np.add.at(sums, sh, X)
-            cnt = np.bincount(sh, minlength=k)
-            nz = cnt > 0
-            yield pd.DataFrame({"shard": np.arange(k)[nz], "cnt": cnt[nz], "sums": list(sums[nz])})
-
-    agg = (
-        joined.mapInPandas(partial, schema="shard int, cnt long, sums array<double>")
-        .groupBy("shard")
-        .agg(F.sum("cnt").alias("cnt"), *[F.sum(F.col("sums")[i]).alias(f"s{i}") for i in range(d)])
-        .toPandas()
-    )
-    C = prev_centroids.copy() if prev_centroids is not None else np.zeros((k, d))
+    C = prev_centroids.copy()
     sizes = np.zeros(k, dtype=np.int64)
-    for _, row in agg.iterrows():
-        j = int(row["shard"])
-        sizes[j] = int(row["cnt"])
-        C[j] = np.array([row[f"s{i}"] for i in range(d)]) / max(row["cnt"], 1)
+    for row in shard_centroids(pts, assignment).collect():
+        sizes[row["shard"]] = row["size"]
+        C[row["shard"]] = row["vec"]
+    joined = pts.join(assignment, "id").select("shard", "vec")
     # objective = Σ dist(p, centroid(assigned)) via one scoring pass
     spark = pts.sparkSession
     bc = spark.sparkContext.broadcast(C)

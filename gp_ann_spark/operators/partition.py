@@ -2,8 +2,9 @@
 graph partitioner (replacing KaMinPar), and overlapping variants.
 
 Reference: ``src/partitioning.cpp`` — ``RecursiveKMeansPartitioning``
-(:12-88), ``RebalancingKMeansPartitioning`` (:90-141), ``KMeansPartitioning``
-(:143-146, ε-balance wrapper), ``PartitionGraphWithKaMinPar`` (:172-199,
+(:12-88), ``RebalancingKMeansPartitioning`` (:90-141) and its ε-balance
+wrapper ``KMeansPartitioning`` (:143-146), both ``kmeans_partition`` here,
+``PartitionGraphWithKaMinPar`` (:172-199,
 external lib — reimplemented here from scratch per BASELINE.json north_star),
 ``GraphPartitioning`` (:251-264); ``src/overlapping_partitioning.cpp`` —
 OGP affinity moves (:23-141).
@@ -60,12 +61,21 @@ def max_cluster_size(n: int, num_shards: int, eps: float = 0.05) -> int:
 
 def kmeans_partition(points: DataFrame, num_shards: int, eps: float = 0.05, n_iter: int = 20,
                      metric: str = "l2", seed: int = SEED) -> DataFrame:
-    """Balanced k-means partitioning (≙ KMeansPartitioning partitioning.cpp:143-146
-    → BalancedKMeans): hard cap max shard ≤ (1+ε)n/s."""
+    """Plain k-means, then greedy re-migration of overflow points to their
+    nearest non-full shard with NO further centroid updates: hard cap max
+    shard ≤ (1+ε)n/s (≙ RebalancingKMeansPartitioning partitioning.cpp:90-141
+    — "just skip updating the centroids"). The CLI's ``KMeans``, ``RKM``,
+    ``OKM`` and ``ORKM`` methods all run it; the BKM+ size-penalty variant
+    is ``kmeans.balanced_kmeans_bkm``."""
     n = points.count()
     cap = max_cluster_size(n, num_shards, eps)
-    _, assignment = KM.balanced_lloyd(points, num_shards, cap, n_iter=n_iter, metric=metric, seed=seed)
-    return assignment
+    # keep empty clusters: they are the spare capacity the spill lands in
+    centroids, assignment = KM.lloyd(
+        points, num_shards, n_iter=n_iter, metric=metric, seed=seed, drop_empty=False
+    )
+    with checkpoints() as cp:
+        _, out = KM._enforce_cap(points.select("id", "vec"), cp.pin(assignment), centroids, cap, metric)
+        return cp.keep(out)
 
 
 def recursive_kmeans_partition(
@@ -102,25 +112,6 @@ def recursive_kmeans_partition(
         return cp.keep(remap_shard_ids(assignment))
 
 
-def rebalancing_kmeans_partition(
-    points: DataFrame, num_shards: int, eps: float = 0.05, n_iter: int = 20,
-    metric: str = "l2", seed: int = SEED,
-) -> DataFrame:
-    """Plain k-means, then ONE greedy re-migration of overflow points to
-    their nearest non-full shard with NO further centroid updates
-    (≙ RebalancingKMeansPartitioning partitioning.cpp:90-141 — "just skip
-    updating the centroids"). Distinct from ``kmeans_partition``, which
-    interleaves rebalancing with Lloyd rounds (balanced_lloyd)."""
-    n = points.count()
-    cap = max_cluster_size(n, num_shards, eps)
-    centroids, assignment = KM.lloyd(
-        points, num_shards, n_iter=n_iter, metric=metric, seed=seed, drop_empty=False
-    )
-    with checkpoints() as cp:
-        _, out = KM._enforce_cap(points.select("id", "vec"), cp.pin(assignment), centroids, cap, metric)
-        return cp.keep(out)
-
-
 def duplicates_in_clusters(cover: DataFrame) -> DataFrame:
     """Per-shard duplicate-entry diagnostic over a cover relation
     (≙ convert.cpp:13-18): entries minus distinct ids, per shard."""
@@ -152,6 +143,7 @@ def imbalance(assignment: DataFrame, num_shards: int | None = None) -> float:
 
 # ------------------------------------------------ multilevel graph partition
 MAX_COARSEN_LEVELS = 8
+LP_ROUNDS = 2  # label-propagation rounds per coarsening level, on both paths
 # Largest edge table graph_partition collects and partitions on the driver;
 # larger ones run as DataFrame supersteps. It is the largest size measured
 # on the driver path (4-core VM, local[4], 16 shards, coarse_target=256):
@@ -162,7 +154,7 @@ MAX_COARSEN_LEVELS = 8
 MAX_DRIVER_EDGES = 2_800_000
 
 
-def _lp_coarsen_level(edges: DataFrame, weights: DataFrame, cap: int, rounds: int = 2) -> DataFrame:
+def _lp_coarsen_level(edges: DataFrame, weights: DataFrame, cap: int) -> DataFrame:
     """One coarsening level: size-constrained label propagation.
 
     Vertices adopt the heaviest-affinity neighbor label; moves are
@@ -178,13 +170,16 @@ def _lp_coarsen_level(edges: DataFrame, weights: DataFrame, cap: int, rounds: in
     times in round N+1's plan (affinity join + label carry + gate), but its
     exchanges are canonically identical, so Spark executes them once and
     wires the repeats through ReusedExchange — no recompute at any scale,
-    and nothing intermediate is pinned in executor storage.
+    and nothing intermediate is pinned in executor storage. The logical plan
+    still grows about 3^``LP_ROUNDS`` (each round embeds the previous one
+    about three times), which is why the round count is a fixed constant,
+    not an option.
     """
     sym = edges.select("src", "dst", "weight").unionByName(
         edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"), "weight")
     )
     labels = weights.select("id", F.col("id").alias("label"), "w")
-    for _ in range(rounds):
+    for _ in range(LP_ROUNDS):
         affinity = (
             sym.join(labels.select(F.col("id").alias("dst"), F.col("label").alias("cand")), "dst")
             .groupBy("src", "cand")
@@ -592,14 +587,13 @@ def _rank_in_group(group: np.ndarray, *order_keys: np.ndarray) -> tuple[np.ndarr
     return o, np.flatnonzero(first)[np.cumsum(first) - 1]
 
 
-def _lp_labels(src: np.ndarray, dst: np.ndarray, wt: np.ndarray, vw: np.ndarray, cap: int,
-               rounds: int = 2) -> np.ndarray:
+def _lp_labels(src: np.ndarray, dst: np.ndarray, wt: np.ndarray, vw: np.ndarray, cap: int) -> np.ndarray:
     """``_lp_coarsen_level`` on dense arrays; returns each vertex's label."""
     n = len(vw)
     ss, dd, ww = np.concatenate([src, dst]), np.concatenate([dst, src]), np.concatenate([wt, wt])
     ids = np.arange(n)
     lab = ids.copy()
-    for _ in range(rounds):
+    for _ in range(LP_ROUNDS):
         a_src, a_cand, aff = _pair_sums(ss, lab[dd], ww, n)
         best = _first_per_group(a_src, -aff, a_cand)  # (aff desc, cand asc)
         cand, c_aff = lab.copy(), np.full(n, np.inf)

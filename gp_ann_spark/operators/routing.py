@@ -29,50 +29,12 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from gp_ann_spark.functions.distances import VALID_METRICS, pairwise_sqr_l2
+from gp_ann_spark.functions.distances import VALID_METRICS
+from gp_ann_spark.operators.kmeans import local_lloyd, shard_centroids
 
 SEED = 555
 
 POLICIES = ("min_dist", "frequency", "pyramid", "spann")
-
-
-def shard_centroids(points: DataFrame, assignment: DataFrame, vec_col: str = "vec") -> DataFrame:
-    """Per-shard mean vector → routing-point table ``(shard, vec)``.
-
-    Partial/final aggregation: posexplode-free — sums the arrays elementwise
-    with one mapInPandas partial pass (same pattern as k-means centroid agg).
-    """
-    joined = points.join(assignment, "id").select("shard", vec_col)
-    schema = "shard int, cnt long, sums array<double>"
-
-    def partial(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            shards = pdf["shard"].to_numpy()
-            X = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            uniq = np.unique(shards)
-            pos = np.searchsorted(uniq, shards)
-            sums = np.zeros((len(uniq), X.shape[1]))
-            np.add.at(sums, pos, X)
-            cnt = np.bincount(pos, minlength=len(uniq))
-            yield pd.DataFrame({"shard": uniq, "cnt": cnt, "sums": list(sums)})
-
-    # dim probe reads ONE row of the points table — probing `joined` would
-    # execute the points⋈assignment join (a full-input job at scale) just to
-    # read a vector length
-    d = len(points.select(vec_col).first()[0])
-    agg = (
-        joined.mapInPandas(partial, schema=schema)
-        .groupBy("shard")
-        .agg(F.sum("cnt").alias("cnt"), *[F.sum(F.col("sums")[i]).alias(f"s{i}") for i in range(d)])
-    )
-    return agg.select(
-        "shard",
-        # double, not float32: centroid → query distances must rank the same
-        # way as the float64/DuckDB oracles (ties aside)
-        F.array(*[(F.col(f"s{i}") / F.col("cnt")).cast("double") for i in range(d)]).alias("vec"),
-    )
 
 
 # Above this many routing points the scoring kernel stays distributed
@@ -793,20 +755,7 @@ def train_kmeans_tree(
             if len(nodes) >= max_nodes_per_shard or len(idx) <= min_cluster_size:
                 return
             k = min(branching, max(2, len(idx) // min_cluster_size))
-            sub = X[idx]
-            # mini Lloyd (numpy, 8 iters) on this node's points
-            ci = rng.choice(len(sub), size=min(k, len(sub)), replace=False)
-            C = sub[ci]
-            for _ in range(8):
-                # BLAS m×k kernel, NOT (m,k,d) broadcasting — at
-                # sample_per_shard=50k, k=64, d=64 the tensor form is
-                # ~1.6 GB per iteration per task
-                d2 = pairwise_sqr_l2(sub, C)
-                a = d2.argmin(1)
-                for j in range(len(C)):
-                    m = a == j
-                    if m.any():
-                        C[j] = sub[m].mean(0)
+            C, a = local_lloyd(X[idx], k, rng, 8)
             for j in range(len(C)):
                 m = a == j
                 if not m.any():

@@ -66,7 +66,7 @@ def ivf_topk(
         )
     else:
         assignment = cells.select("id", "shard")
-        cent_df = RT.shard_centroids(pts, assignment)
+        cent_df = KM.shard_centroids(pts, assignment)
         n_cells = cent_df.count()
     qs = pts.select(F.col("id").alias("query_id"), "vec")
     scored = RT.score_routing_points(

@@ -274,6 +274,12 @@ def test_small_scale_experiments_grid(spark, pts_file, tmp_path, capsys):
     for m in ("KMeans", "RKM"):
         assert os.path.exists(f"{out}/toy.partition.k=3.{m}.parquet")
         assert os.path.exists(f"{out}/toy.{m}.k=3.csv")
+    # both names run the one rebalancing k-means path
+    km, rkm = (
+        sorted(map(tuple, spark.read.parquet(f"{out}/toy.partition.k=3.{m}.parquet").select("id", "shard").collect()))
+        for m in ("KMeans", "RKM")
+    )
+    assert km == rkm
     import struct
 
     with open(f"{out}/toy.ground_truth.bin", "rb") as f:

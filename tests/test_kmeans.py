@@ -1,7 +1,9 @@
 import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
 from gp_ann_spark.operators import kmeans as KM
+from gp_ann_spark.operators import partition as P
 from tests.conftest import make_points_df
 
 
@@ -43,12 +45,26 @@ def test_lloyd_deterministic(spark, rng):
     assert sorted(map(tuple, a1.collect())) == sorted(map(tuple, a2.collect()))
 
 
-def test_balanced_lloyd_enforces_cap(spark, rng):
-    # One dominant blob: plain k-means would put ~all mass in one shard.
-    X = np.vstack([rng.normal(0, 0.05, size=(90, 4)), rng.normal(5, 0.05, size=(10, 4))])
-    df = make_points_df(spark, X).cache()
-    cap = 40
-    _, asn = KM.balanced_lloyd(df, 3, cap, n_iter=5)
+def dominant_blob(rng):
+    # plain k-means would put ~all mass in one shard
+    return np.vstack([rng.normal(0, 0.05, size=(90, 4)), rng.normal(5, 0.05, size=(10, 4))])
+
+
+def skewed_blobs(rng):
+    return np.vstack(
+        [rng.normal(c, 0.3, size=(n, 6)) for c, n in ((np.zeros(6), 70), (np.ones(6) * 5, 20), (np.ones(6) * 10, 10))]
+    )
+
+
+@pytest.mark.parametrize(
+    "make, k, eps, n_iter, cap",
+    [(dominant_blob, 3, 0.2, 5, 40), (skewed_blobs, 4, 0.05, 6, 26)],
+    ids=["dominant_blob", "skewed_blobs"],
+)
+def test_kmeans_partition_enforces_cap(spark, rng, make, k, eps, n_iter, cap):
+    df = make_points_df(spark, make(rng)).cache()
+    assert P.max_cluster_size(100, k, eps) == cap
+    asn = P.kmeans_partition(df, k, eps=eps, n_iter=n_iter)
     sizes = [r["cnt"] for r in asn.groupBy("shard").agg(F.count(F.lit(1)).alias("cnt")).collect()]
     assert sum(sizes) == 100  # every point assigned exactly once
     assert max(sizes) <= cap
@@ -159,7 +175,6 @@ def test_superstep_given_assignment_keeps_empty_cluster_centroid(spark, rng):
 
 
 def test_pyramid_refuses_more_shards_than_aggregates(spark, rng):
-    import pytest
     from gp_ann_spark.operators import hierarchical as H
 
     X = rng.normal(size=(40, 4)).astype(np.float32)

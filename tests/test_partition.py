@@ -125,17 +125,6 @@ def test_overlapping_kmeans_partition(spark, rng):
     assert mx <= cap_k2
 
 
-def test_rebalancing_kmeans_partition_distinct_path(spark, rng):
-    X = np.vstack(
-        [rng.normal(c, 0.3, size=(n, 6)) for c, n in ((np.zeros(6), 70), (np.ones(6) * 5, 20), (np.ones(6) * 10, 10))]
-    )
-    pts = make_points_df(spark, X).cache()
-    asn = P.rebalancing_kmeans_partition(pts, 4, eps=0.05, n_iter=6)
-    sizes = [r["c"] for r in asn.groupBy("shard").agg(F.count(F.lit(1)).alias("c")).collect()]
-    assert sum(sizes) == 100
-    assert max(sizes) <= P.max_cluster_size(100, 4, 0.05)
-
-
 def test_duplicates_in_clusters_diagnostic(spark):
     cover = spark.createDataFrame(
         [(0, 0), (1, 0), (1, 0), (2, 1), (3, 1)], "id long, shard int"

@@ -5,6 +5,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from gp_ann_spark.eval import recall as R
+from gp_ann_spark.operators import kmeans as KM
 from gp_ann_spark.operators import partition as P
 from gp_ann_spark.operators import routing as RT
 from gp_ann_spark.operators import search as S
@@ -27,11 +28,12 @@ def setup(spark):
 
 def test_shard_centroids_match_numpy(spark, setup):
     points, _, assignment, _, _ = setup
-    cents = {r["shard"]: np.array(r["vec"]) for r in RT.shard_centroids(points, assignment).collect()}
+    rows = {r["shard"]: r for r in KM.shard_centroids(points, assignment).collect()}
     pdf = points.join(assignment, "id").toPandas()
     for s, grp in pdf.groupby("shard"):
         want = np.stack(grp["vec"].to_numpy()).mean(0)
-        assert np.allclose(cents[s], want, atol=1e-5)
+        assert np.allclose(np.array(rows[s]["vec"]), want, atol=1e-5)
+        assert rows[s]["size"] == len(grp)
 
 
 def test_probe_order_policies(spark):

@@ -126,14 +126,12 @@ def cmd_partition(spark, args):
         asn = P.graph_partition(_knn_edges_auto(pts, strong=strong), k, eps=EPS)
     elif method == "Pyramid":
         asn, _ = H.pyramid_partition(pts, k, eps=EPS, metric=_metric())
-    elif method == "KMeans":
+    elif method in ("KMeans", "RKM"):
         asn = P.kmeans_partition(pts, k, eps=EPS, metric=_metric())
     elif method == "BalancedKMeans":
         _, asn = KM.balanced_kmeans_bkm(pts, k, cap, metric=_metric())
     elif method == "FlatKMeans":
         _, asn = KM.lloyd(pts, k, metric=_metric())
-    elif method == "RKM":
-        asn = P.rebalancing_kmeans_partition(pts, k, eps=EPS, metric=_metric())
     elif method == "OurPyramid":
         asn, _ = H.our_pyramid_partition(pts, k, eps=EPS, metric=_metric())
     elif method == "OGP":
@@ -149,13 +147,13 @@ def cmd_partition(spark, args):
             base = P.kmeans_partition(pts, k, eps=EPS, metric=_metric())
         elif method == "ORKM":
             # ceil(k*(1+o)) like the reference's std::ceil (partition.cpp:106)
-            base = P.rebalancing_kmeans_partition(pts, math.ceil(k * (1 + overlap)), eps=EPS, metric=_metric())
+            base = P.kmeans_partition(pts, math.ceil(k * (1 + overlap)), eps=EPS, metric=_metric())
         elif method == "OBKM":
             base = KM.balanced_kmeans_bkm(pts, math.ceil(k * (1 + overlap)), cap, metric=_metric())[1]
         else:  # OGPS: total assignments (n + overlap·n) / max cluster size (:115-118)
             k_adj = -(-int(n + overlap * n) // cap)
             base = P.graph_partition(_knn_edges_auto(pts, strong=strong), k_adj, eps=EPS)
-        cents = RT.shard_centroids(pts, base)
+        cents = KM.shard_centroids(pts, base)
         import numpy as np
 
         cpd = cents.orderBy("shard").toPandas()
