@@ -99,7 +99,8 @@ def featurize(files: DataFrame, dim: int = DIM, seed: int = 42, id_col: str = "i
     sign = ±1 from a second hash; vec[bucket] += sign; then L2-normalize.
     Pure DataFrame program (explode → groupBy → dense assembly): token
     hashing happens JVM-side in whole-stage codegen; the only shuffle is the
-    (id, bucket) partial-aggregated groupBy.
+    (id, bucket) partial-aggregated groupBy. Each row's norm is computed
+    once, in a ``select`` before the normalizing ``transform``.
 
     Replaces the reference's point readers (points_io.cpp:14-111) as the
     source of ``points(id, vec)``.
@@ -116,8 +117,14 @@ def featurize(files: DataFrame, dim: int = DIM, seed: int = 42, id_col: str = "i
         id_col,
         F.transform(F.sequence(F.lit(0), F.lit(dim - 1)), lambda i: F.coalesce(F.col("m")[i], F.lit(0.0))).alias("raw"),
     )
-    norm = F.sqrt(F.aggregate("raw", F.lit(0.0), lambda acc, v: acc + v * v))
-    feat = dense.select(
+    # the norm is its own column, computed once per row: written inside the
+    # transform lambda it would be re-aggregated for every one of the dim
+    # elements (Catalyst shares no subexpression with a lambda body)
+    normed = dense.select(
+        id_col, "raw", F.sqrt(F.aggregate("raw", F.lit(0.0), lambda acc, v: acc + v * v)).alias("_norm")
+    )
+    norm = F.col("_norm")
+    feat = normed.select(
         F.col(id_col).alias("id"),
         F.transform("raw", lambda v: (v / F.when(norm == 0.0, 1.0).otherwise(norm)).cast("float")).alias("vec"),
     )

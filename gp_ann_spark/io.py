@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from gp_ann_spark.functions.windows import bounded_global_window
+from gp_ann_spark.operators.graph import mirror
 
 
 def write_assignment(assignment: DataFrame, path: str, partition_by_shard: bool = True) -> None:
@@ -108,9 +109,7 @@ def write_metis_graph(edges: DataFrame, path: str) -> None:
     a (v, v) row survives the symmetrize-distinct as ONE directed edge,
     tripping the even-count assert on an otherwise valid graph."""
     edges = edges.where(F.col("src") != F.col("dst"))
-    sym = edges.select("src", "dst").unionByName(
-        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).distinct()
+    sym = mirror(edges).distinct()
     n_edges = sym.count()
     assert n_edges % 2 == 0, "symmetric graph must have an even directed-edge count"
     adj = (

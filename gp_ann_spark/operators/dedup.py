@@ -6,7 +6,9 @@ Scale design (the whole point at 100 TB):
 - exact dedup: one groupBy on the content hash — uniform keys, no skew;
 - MinHash/LSH: near-dup candidate generation is a *band-bucket equi-join*
   (shuffle keyed on band signatures), never an all-pairs scan; verification
-  runs only on candidates;
+  runs only on candidates. It runs as one groupBy on the band key, so the
+  signatures are computed once, and each text is tokenized once per
+  shingling (``doc_shingles``);
 - SimHash: signature is an aggregation over tokens (partial+final);
   near-dups = equal band of the signature (equi-join again);
 - n-gram Jaccard: the shingle inverted index (explode + self-join on
@@ -55,11 +57,16 @@ def exact_dedup(docs: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def word_shingles(text: Column, n: int = 3) -> Column:
-    """Distinct word n-gram shingles. Matches the oracle's
-    list_transform(generate_series(...)) construction: shingle i joins
-    tokens i..i+n-1 with single spaces."""
-    toks = tokens(text)
+def word_shingles(toks: Column, n: int = 3) -> Column:
+    """Distinct word n-gram shingles of a token-array column (``tokens(text)``).
+    Matches the oracle's list_transform(generate_series(...)) construction:
+    shingle i joins tokens i..i+n-1 with single spaces.
+
+    Takes the tokens, not the text: Catalyst does not share a subexpression
+    between a higher-order-function lambda and its surroundings, so a
+    ``tokens(text)`` inside the lambda re-split the whole text for every
+    token of every shingle (O(L²) per doc). Tokenize once in a ``select``
+    (``doc_shingles``) and pass the column."""
     grams = F.transform(
         F.sequence(F.lit(0), F.size(toks) - n),
         lambda i: F.concat_ws(" ", *[F.element_at(toks, i + j + 1) for j in range(n)]),
@@ -70,8 +77,10 @@ def word_shingles(text: Column, n: int = 3) -> Column:
 
 
 def doc_shingles(docs: DataFrame, text_col: str = "text", n: int = 3) -> DataFrame:
-    """(doc_id, shingle) exploded relation — the shingle inverted index."""
-    return docs.select("doc_id", F.explode(word_shingles(F.col(text_col), n)).alias("shingle"))
+    """(doc_id, shingle) exploded relation — the shingle inverted index. Each
+    text is tokenized once, in its own ``select``, before the explode."""
+    toks = docs.select("doc_id", tokens(F.col(text_col)).alias("_toks"))
+    return toks.select("doc_id", F.explode(word_shingles(F.col("_toks"), n)).alias("shingle"))
 
 
 def minhash_signatures(docs: DataFrame, text_col: str = "text", n: int = 3) -> DataFrame:
@@ -90,8 +99,15 @@ def minhash_signatures(docs: DataFrame, text_col: str = "text", n: int = 3) -> D
 
 def minhash_band_pairs(signatures: DataFrame) -> DataFrame:
     """LSH candidate pairs: docs sharing at least one band (band = 2
-    consecutive minhashes). Equi-join on (band_idx, band_key) — the scale
-    path; returns (doc_a, doc_b) with doc_a < doc_b, distinct."""
+    consecutive minhashes); returns (doc_a, doc_b) with doc_a < doc_b,
+    distinct.
+
+    The band-bucket equi-join is evaluated as ONE ``groupBy(band_idx,
+    band_key)`` that lists each bucket's docs, then every ordered pair
+    within a bucket: the signatures (and the shingling under them) are
+    computed once. A self-join of the banded relation evaluates that plan
+    once per join side — exchange reuse does not cover a cached input.
+    Still never all-pairs: only docs sharing a bucket meet."""
     rows_per_band = len(MINHASH_COEFFS) // N_BANDS
     bands = F.array(
         *[
@@ -102,14 +118,20 @@ def minhash_band_pairs(signatures: DataFrame) -> DataFrame:
         ]
     )
     banded = signatures.select("doc_id", F.posexplode(bands).alias("band_idx", "band_key"))
-    left = banded.select(F.col("doc_id").alias("doc_a"), "band_idx", "band_key")
-    right = banded.select(F.col("doc_id").alias("doc_b"), "band_idx", "band_key")
-    return (
-        left.join(right, ["band_idx", "band_key"])
-        .where(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b")
-        .distinct()
+    buckets = (
+        banded.groupBy("band_idx", "band_key")
+        .agg(F.collect_list("doc_id").alias("docs"))
+        .where(F.size("docs") > 1)
     )
+    pairs = F.flatten(
+        F.transform(
+            "docs",
+            lambda a: F.transform(
+                F.filter("docs", lambda b: a < b), lambda b: F.struct(a.alias("doc_a"), b.alias("doc_b"))
+            ),
+        )
+    )
+    return buckets.select(F.inline(pairs)).distinct()
 
 
 def jaccard_pairs(

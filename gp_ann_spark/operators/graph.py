@@ -28,20 +28,31 @@ from pyspark.sql import functions as F
 from gp_ann_spark.checkpoint import SuperstepCheckpointer, checkpoints
 
 
+def mirror(edges: DataFrame, *payload: str) -> DataFrame:
+    """Both orientations of every edge, ``(src, dst, *payload)`` and
+    ``(dst, src, *payload)``, from ONE pass over ``edges``: a two-struct
+    array per row, exploded by ``inline``. ``edges ∪ reversed(edges)`` would
+    evaluate the upstream plan once per union branch (exchange reuse does
+    not cover a cached input), e.g. the exact k-NN scoring kernel under
+    ``knn.symmetrize`` twice. The one edge-mirror definition behind
+    ``knn.symmetrize``, ``vertices``, ``degrees``, the CC/LP adjacency and
+    ``io.write_metis_graph``."""
+    keep = [F.col(c) for c in payload]
+    fwd = F.struct(F.col("src").alias("src"), F.col("dst").alias("dst"), *keep)
+    rev = F.struct(F.col("dst").alias("src"), F.col("src").alias("dst"), *keep)
+    return edges.select(F.inline(F.array(fwd, rev)))
+
+
 def vertices(edges: DataFrame) -> DataFrame:
     """Distinct vertex ids appearing as src or dst."""
-    return edges.select(F.col("src").alias("id")).unionByName(
-        edges.select(F.col("dst").alias("id"))
-    ).distinct()
+    return mirror(edges).select(F.col("src").alias("id")).distinct()
 
 
 def degrees(edges: DataFrame, directed: bool = False) -> DataFrame:
     """Per-vertex (out-)degree. ≙ partitioning.cpp:219. Undirected mode
     counts each incident edge once per endpoint."""
-    if directed:
-        return edges.groupBy(F.col("src").alias("id")).agg(F.count(F.lit(1)).alias("degree"))
-    both = edges.select(F.col("src").alias("id")).unionByName(edges.select(F.col("dst").alias("id")))
-    return both.groupBy("id").agg(F.count(F.lit(1)).alias("degree"))
+    rows = edges if directed else mirror(edges)
+    return rows.groupBy(F.col("src").alias("id")).agg(F.count(F.lit(1)).alias("degree"))
 
 
 def salted_count(df: DataFrame, key: str, n_salts: int = 32, salt_src: str | None = None) -> DataFrame:
@@ -57,13 +68,7 @@ def _symmetrized_cached(edges: DataFrame) -> DataFrame:
     """Undirected view of the edge table, partitioned on src and cached —
     the per-superstep join input shared by CC and LP. Materialized eagerly
     so every superstep reuses the one shuffle; callers own the unpersist."""
-    sym = (
-        edges.select("src", "dst")
-        .unionByName(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-        .distinct()
-        .repartition("src")
-        .cache()
-    )
+    sym = mirror(edges).distinct().repartition("src").cache()
     sym.count()
     return sym
 

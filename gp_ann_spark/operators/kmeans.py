@@ -30,7 +30,7 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from gp_ann_spark.checkpoint import checkpoints
@@ -53,14 +53,29 @@ def seeded_sample_centroids(points: DataFrame, k: int, seed: int = SEED) -> np.n
     return np.stack(sample["vec"].to_numpy()).astype(np.float64)
 
 
+def _sum_arrays(col: str) -> Column:
+    """Element-wise sum of a group's equal-length ``array<double>`` rows as
+    ONE aggregate expression: ``collect_list``, then a left fold from zeros
+    with ``zip_with``. When each map partition supplies at most one row per
+    group (both callers emit one per partition), these are the additions of
+    one ``F.sum`` per element in the same order (0 + p₁ + p₂ + … in
+    shuffle-read order), but in one Column instead of d, so building the
+    plan is d-independent and needs no dimension probe."""
+    parts = F.collect_list(col)
+    zero = F.transform(F.element_at(parts, 1), lambda _: F.lit(0.0))
+    return F.aggregate(parts, zero, lambda acc, x: F.zip_with(acc, x, lambda a, b: a + b))
+
+
 def _superstep(
     points: DataFrame, centroids: np.ndarray, metric: str, id_col: str, vec_col: str
 ) -> tuple[np.ndarray, np.ndarray, float]:
     """One Lloyd superstep: returns (new_centroids, sizes, objective).
 
-    mapInPandas emits per-block (shard, count, sum_0..sum_{d-1}, obj) partial
-    rows; Catalyst final-aggregates them (partial+final HashAggregate ≙
-    AggregateClustersParallel kmeans.cpp:151-204).
+    mapInPandas emits per-partition (shard, count, obj, norm_sq, sums)
+    partial rows — each batch's sums added to the partition's running total
+    in batch order, as a per-element partial ``F.sum`` would — and one
+    ``groupBy(shard)`` final-aggregates them, the sums as one ``_sum_arrays``
+    (partial+final ≙ AggregateClustersParallel kmeans.cpp:151-204).
 
     ``metric="mips"`` uses the reference's spherical update
     (SumPointsInClustersIP/NormalizeCentroidsIP kmeans.cpp:72-100): members
@@ -75,6 +90,7 @@ def _superstep(
 
     def partial(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         C = bc.value
+        cnt, objs, nsqs, sums = np.zeros(k, dtype=np.int64), np.zeros(k), np.zeros(k), np.zeros((k, d))
         for pdf in batches:
             if len(pdf) == 0:
                 continue
@@ -91,12 +107,14 @@ def _superstep(
             else:
                 Xw = X
                 nsq = np.zeros(len(X))
-            sums = np.zeros((k, d))
-            np.add.at(sums, a, Xw)
-            cnt = np.bincount(a, minlength=k)
-            objs = np.bincount(a, weights=obj, minlength=k)
-            nsqs = np.bincount(a, weights=nsq, minlength=k)
-            nz = cnt > 0
+            batch_sums = np.zeros((k, d))
+            np.add.at(batch_sums, a, Xw)
+            sums += batch_sums
+            cnt += np.bincount(a, minlength=k)
+            objs += np.bincount(a, weights=obj, minlength=k)
+            nsqs += np.bincount(a, weights=nsq, minlength=k)
+        nz = cnt > 0
+        if nz.any():
             yield pd.DataFrame(
                 {
                     "shard": np.arange(k)[nz],
@@ -115,25 +133,25 @@ def _superstep(
             F.sum("cnt").alias("cnt"),
             F.sum("obj").alias("obj"),
             F.sum("norm_sq").alias("norm_sq"),
-            *[F.sum(F.col("sums")[i]).alias(f"s{i}") for i in range(d)],
+            _sum_arrays("sums").alias("sums"),
         )
         .toPandas()
     )
     new_c = centroids.copy()
     sizes = np.zeros(k, dtype=np.int64)
     total_obj = float(agg["obj"].sum()) if len(agg) else 0.0
-    for _, row in agg.iterrows():
-        s = int(row["shard"])
-        sizes[s] = int(row["cnt"])
-        vec = np.array([row[f"s{i}"] for i in range(d)])
+    for row in agg.itertuples(index=False):
+        s = int(row.shard)
+        sizes[s] = int(row.cnt)
+        vec = np.asarray(row.sums, dtype=np.float64)
         if mips:
             # ≙ NormalizeCentroidsIP kmeans.cpp:72-86: rescale the raw sum so
             # ‖C‖² = mean member ‖p‖² (vec_norm is the squared norm).
-            desired = float(row["norm_sq"]) / row["cnt"]
+            desired = float(row.norm_sq) / row.cnt
             current = float((vec * vec).sum())
             new_c[s] = vec * np.sqrt(desired / current) if current > 0 else vec
         else:
-            new_c[s] = vec / row["cnt"]
+            new_c[s] = vec / row.cnt
     return new_c, sizes, total_obj
 
 
@@ -159,42 +177,52 @@ def assign_to_centroids(
     return points.select(id_col, vec_col).mapInPandas(assign, schema=f"{id_col} long, shard int")
 
 
+def _group_sums(keys: np.ndarray, X: np.ndarray, counts: np.ndarray | int = 1):
+    """(distinct keys, per-key count, per-key row sums), rows added in order."""
+    uniq, pos = np.unique(keys, return_inverse=True)
+    sums = np.zeros((len(uniq), X.shape[1]))
+    np.add.at(sums, pos, X)
+    cnt = np.zeros(len(uniq), dtype=np.int64)
+    np.add.at(cnt, pos, counts)
+    return uniq, cnt, sums
+
+
 def shard_centroids(points: DataFrame, assignment: DataFrame, vec_col: str = "vec") -> DataFrame:
     """Per-shard mean vector and size of a given assignment → ``(shard, vec,
     size)`` (≙ AggregateClustersParallel kmeans.cpp:151-204, the 'update'
-    half of Lloyd): one mapInPandas pass emits per-block partial sums and
-    counts, one small ``groupBy(shard)`` final-aggregates them.
+    half of Lloyd): one mapInPandas pass emits per-partition partial sums and
+    counts (each batch's sums added to the running total in batch order),
+    one small ``groupBy(shard)`` final-aggregates them with ONE array
+    aggregate (``_sum_arrays``) and divides once per shard.
+
+    Building the frame runs no Spark job: the aggregate needs no vector
+    length, so there is no dimension probe, and the plan is a fixed handful
+    of Columns for any d.
     """
     joined = points.join(assignment, "id").select("shard", vec_col)
     schema = "shard int, cnt long, sums array<double>"
 
     def partial(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            shards = pdf["shard"].to_numpy()
-            X = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            uniq = np.unique(shards)
-            pos = np.searchsorted(uniq, shards)
-            sums = np.zeros((len(uniq), X.shape[1]))
-            np.add.at(sums, pos, X)
-            cnt = np.bincount(pos, minlength=len(uniq))
-            yield pd.DataFrame({"shard": uniq, "cnt": cnt, "sums": list(sums)})
+        parts = [
+            _group_sums(pdf["shard"].to_numpy(), np.stack(pdf[vec_col].to_numpy()).astype(np.float64))
+            for pdf in batches
+            if len(pdf)
+        ]
+        if parts:
+            shards, cnts, sums = (np.concatenate(x) for x in zip(*parts))
+            uniq, cnt, total = _group_sums(shards, sums, cnts)
+            yield pd.DataFrame({"shard": uniq, "cnt": cnt, "sums": list(total)})
 
-    # dim probe reads ONE row of the points table — probing `joined` would
-    # execute the points⋈assignment join (a full-input job at scale) just to
-    # read a vector length
-    d = len(points.select(vec_col).first()[0])
     agg = (
         joined.mapInPandas(partial, schema=schema)
         .groupBy("shard")
-        .agg(F.sum("cnt").alias("cnt"), *[F.sum(F.col("sums")[i]).alias(f"s{i}") for i in range(d)])
+        .agg(F.sum("cnt").alias("cnt"), _sum_arrays("sums").alias("sums"))
     )
     return agg.select(
         "shard",
         # double, not float32: centroid → query distances must rank the same
         # way as the float64/DuckDB oracles (ties aside)
-        F.array(*[(F.col(f"s{i}") / F.col("cnt")).cast("double") for i in range(d)]).alias("vec"),
+        F.transform("sums", lambda v: v / F.col("cnt")).alias("vec"),
         F.col("cnt").alias("size"),
     )
 

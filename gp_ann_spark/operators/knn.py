@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from gp_ann_spark.functions.distances import distance_matrix, sql_distance
+from gp_ann_spark.operators.graph import mirror
 
 KNN_SCHEMA = "query_id long, neighbor_id long, dist double"
 # exact_knn broadcasts the query side; more queries than this are refused
@@ -195,16 +196,12 @@ def knn_edges(points: DataFrame, k: int = 10, metric: str = "l2") -> DataFrame:
 def symmetrize(edges: DataFrame) -> DataFrame:
     """edges ∪ reversed(edges), distinct on (src, dst) keeping min weight.
 
-    ≙ Symmetrize (knn_graph.h:272-283). One union (no shuffle) + one groupBy
-    shuffle; at scale this is the canonical partial-aggregated path.
+    ≙ Symmetrize (knn_graph.h:272-283). ``graph.mirror`` emits both
+    orientations from one pass over ``edges``, so the upstream plan (for
+    ``knn_edges``, the broadcast scoring kernel) is evaluated once, not once
+    per union branch; then one partial-aggregated groupBy shuffle.
     """
-    rev = edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"), "weight")
-    return (
-        edges.select("src", "dst", "weight")
-        .unionByName(rev)
-        .groupBy("src", "dst")
-        .agg(F.min("weight").alias("weight"))
-    )
+    return mirror(edges, "weight").groupBy("src", "dst").agg(F.min("weight").alias("weight"))
 
 
 def incremental_knn_update(
