@@ -8,11 +8,14 @@ Spark-first re-expression (BASELINE.json north_star: "HNSW-style graph
 routing re-expressed as broadcast top-k scoring"): every router reduces to
 
   1. a **routing-point table** ``(shard, vec)`` — shard centroids, k-means
-     tree nodes, or extracted tree leaves (small by construction: the
-     reference caps it at ≤10M points, routes.cpp:130);
-  2. one **broadcast top-k scoring** pass of the query batch against that
-     table (mapInPandas + BLAS — exact top-K, replacing the reference's
-     approximate HNSW descent, whose RNG is not reproducible anyway); and
+     tree nodes, or extracted tree leaves (the reference caps it at ≤10M
+     points, routes.cpp:130);
+  2. one **exact top-k scoring** pass of the queries against that table
+     (:func:`score_routing_points` — exact top-K, replacing the reference's
+     approximate HNSW descent, whose RNG is not reproducible anyway). One
+     NumPy kernel set does the scoring; the physical strategy only decides
+     which side is broadcast: the table (small tables) or the query batch
+     (large tables, scored per routing partition and merged in Catalyst); and
   3. pure-DataFrame post-processing of ``(query_id, shard, min_dist, votes)``
      into a probe order, one policy per reference probe-order variant.
 
@@ -22,6 +25,7 @@ routes.h:6-20) — join-friendly, Parquet-serializable.
 
 from __future__ import annotations
 
+import functools
 from typing import Iterator
 
 import numpy as np
@@ -35,6 +39,9 @@ from gp_ann_spark.operators.kmeans import local_lloyd, shard_centroids
 SEED = 555
 
 POLICIES = ("min_dist", "frequency", "pyramid", "spann")
+
+SCORED_SCHEMA = "query_id long, shard int, min_dist double, votes long"
+SCORE_DTYPES = {"float64": np.float64, "float32": np.float32}
 
 
 # Above this many routing points the scoring kernel stays distributed
@@ -53,24 +60,27 @@ SCORE_BUDGET_BYTES = 64 << 20
 # small" (at 100k queries × d=768 one unchecked toPandas is ~600 MB)
 MAX_QUERY_BLOCK_BYTES = 64 << 20
 
+_NULL_QUERY = "vec contains NULL vectors; cannot score routing points"
 
-def _query_block(pdf, q_id_col: str, q_vec_col: str) -> tuple[np.ndarray, np.ndarray]:
-    """(qids, Q) NumPy arrays of one collected query block. Raises on a
-    NULL vector anywhere in the block — loud, not a silently short result."""
-    vecs = pdf[q_vec_col]
+
+def _query_block(pdf) -> tuple[np.ndarray, np.ndarray]:
+    """(qids, Q) NumPy arrays of one query block (a driver collect or an
+    Arrow batch). Raises on a NULL vector anywhere in the block — loud, not
+    a silently short result or a NumPy shape error."""
+    vecs = pdf["vec"]
     if vecs.isna().any():
-        raise ValueError(f"{q_vec_col} contains NULL vectors; cannot score routing points")
-    return pdf[q_id_col].to_numpy().astype(np.int64), np.stack(vecs.to_numpy()).astype(np.float64)
+        raise ValueError(_NULL_QUERY)
+    return pdf["query_id"].to_numpy().astype(np.int64), np.stack(vecs.to_numpy()).astype(np.float64)
 
 
-def _bounded_query_batches(queries: DataFrame, q_id_col: str, q_vec_col: str):
+def _bounded_query_batches(queries: DataFrame):
     """Collect the query side to the driver in bounded blocks.
 
     Yields ``(qids, Q)`` NumPy blocks whose vector payload stays ≤
     ``MAX_QUERY_BLOCK_BYTES``.
-    The scoring kernels are per-query independent and both distributed
-    paths finish with a per-query window/aggregation, so running them per
-    block and unioning is bit-identical to one unchunked pass. One block
+    The scoring kernels are per-query independent and the distributed
+    strategy finishes with a per-query window/aggregation, so running them
+    per block and unioning is bit-identical to one unchunked pass. One block
     (the common evaluation-batch case) is one bounded ``limit`` collect
     after the one-row dimension probe; only when that collect overflows
     does the query set get counted and split by id hash, paying one
@@ -78,24 +88,24 @@ def _bounded_query_batches(queries: DataFrame, q_id_col: str, q_vec_col: str):
     should checkpoint it first (they already must for the size probe, see
     ``score_routing_points``).
     """
-    q = queries.select(q_id_col, q_vec_col)
-    first = q.select(q_vec_col).first()
+    q = queries.select("query_id", "vec")
+    first = q.select("vec").first()
     if first is None:  # empty query set
         yield np.zeros(0, dtype=np.int64), np.zeros((0, 1))
         return
     if first[0] is None:
-        raise ValueError(f"{q_vec_col} contains NULL vectors; cannot score routing points")
+        raise ValueError(_NULL_QUERY)
     block_rows = max(1, MAX_QUERY_BLOCK_BYTES // (8 * max(len(first[0]), 1)))
     pdf = q.limit(block_rows + 1).toPandas()
     if len(pdf) <= block_rows:
-        yield _query_block(pdf, q_id_col, q_vec_col)
+        yield _query_block(pdf)
         return
     n_blocks = -(-q.count() // block_rows)
     for i in range(n_blocks):
-        pdf = q.where(F.pmod(F.xxhash64(F.col(q_id_col)), F.lit(n_blocks)) == i).toPandas()
+        pdf = q.where(F.pmod(F.xxhash64(F.col("query_id")), F.lit(n_blocks)) == i).toPandas()
         if len(pdf) == 0:
             continue
-        yield _query_block(pdf, q_id_col, q_vec_col)
+        yield _query_block(pdf)
 
 _PAD_HASH = np.int64((1 << 62))  # sorts after every real xxhash64 tie-key
 
@@ -119,6 +129,19 @@ def _exact_pair_dists(Qr: np.ndarray, Vr: np.ndarray, metric: str) -> np.ndarray
     return 1.0 - (Qr * Vr).sum(axis=-1)
 
 
+def _merge_topnv(best: tuple, cand: tuple, nv: int) -> tuple:
+    """Row-wise merge of two per-query candidate sets into the ``nv`` best.
+
+    Each set is a ``(dist, rp_hash, payload)`` tuple of (rows × width)
+    arrays; one lexsort over the concatenated columns orders them by
+    (exact dist, rp_hash). The blocked kernel merges its column blocks with
+    it and the distributed partial merges its Arrow batches — one
+    tie-break, whichever side is distributed."""
+    d, h, x = (np.concatenate([b, c], axis=1) for b, c in zip(best, cand))
+    o = np.lexsort((h, d), axis=-1)[:, :nv]
+    return tuple(np.take_along_axis(a, o, axis=1) for a in (d, h, x))
+
+
 def _score_block_topnv(
     Q: np.ndarray,
     V: np.ndarray,
@@ -127,7 +150,7 @@ def _score_block_topnv(
     metric: str,
     budget_bytes: int = SCORE_BUDGET_BYTES,
     score_dtype=np.float64,
-) -> tuple[np.ndarray, np.ndarray]:
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     """Top-``nv`` routing points per query row, two-axis blocked.
 
     Neither the (nq × n_routing) distance matrix nor an unblocked routing
@@ -146,9 +169,10 @@ def _score_block_topnv(
     (shard, vec)) breaking exact ties such as duplicate routing points
     (tests/test_routing_search.py asserts bit-identity across layouts).
 
-    Returns ``(idx, dist)`` of shape (nq, ≤nv): column positions into V and
-    their exact float64 distances, each row in (dist, rp_hash) order; rows
-    with fewer than nv real points are padded with -1 / +inf.
+    Returns ``(dist, hash, idx)`` of shape (nq, ≤nv): exact float64
+    distances, tie-keys and column positions into V, each row in
+    (dist, rp_hash) order; rows with fewer than nv real points are padded
+    with +inf / ``_PAD_HASH`` / -1.
     """
     itemsize = np.dtype(score_dtype).itemsize
     nq, n = len(Q), len(V)
@@ -171,15 +195,12 @@ def _score_block_topnv(
     # top-nv is sufficient for the global merge
     v_block = max(nv, budget_bytes // (itemsize * max(nq, 1)), 1)
     q_block = max(1, budget_bytes // (itemsize * min(v_block, n) or 1))
-    out_idx = np.empty((nq, nv), dtype=np.int64)
-    out_dist = np.empty((nq, nv), dtype=np.float64)
+    out = tuple(np.empty((nq, nv), dtype=t) for t in (np.float64, np.int64, np.int64))
     cap = min(n, 2 * nv + 16)  # preselect width; margin overflow → fallback
     for qlo in range(0, nq, q_block):
         Qb = Q[qlo : qlo + q_block]
         m = len(Qb)
-        best_d = np.full((m, nv), np.inf)
-        best_h = np.full((m, nv), _PAD_HASH, dtype=np.int64)
-        best_i = np.full((m, nv), -1, dtype=np.int64)
+        best = tuple(np.full((m, nv), pad) for pad in (np.inf, _PAD_HASH, np.int64(-1)))
         for vlo in range(0, n, v_block):
             Vb = V[vlo : vlo + v_block]
             w = len(Vb)
@@ -233,28 +254,46 @@ def _score_block_topnv(
                     Q64[qlo + rlo : qlo + rlo + len(sel), None, :], V64[sel], metric
                 )
                 cd[rlo : rlo + rchunk] = np.where(valid[rlo : rlo + rchunk], ex, np.inf)
-            ch = np.where(valid, rp_hash[ci], _PAD_HASH)
-            ci = np.where(valid, ci, -1)
-            # merge running best with this block's candidates: one row-wise
-            # (exact dist, rp_hash) lexsort over ≤ nv+cap columns
-            ad = np.concatenate([best_d, cd], axis=1)
-            ah = np.concatenate([best_h, ch], axis=1)
-            ai = np.concatenate([best_i, ci], axis=1)
-            o = np.lexsort((ah, ad), axis=-1)[:, :nv]
-            best_d = np.take_along_axis(ad, o, axis=1)
-            best_h = np.take_along_axis(ah, o, axis=1)
-            best_i = np.take_along_axis(ai, o, axis=1)
-        out_idx[qlo : qlo + q_block] = best_i
-        out_dist[qlo : qlo + q_block] = best_d
-    return out_idx, out_dist
+            cand = (cd, np.where(valid, rp_hash[ci], _PAD_HASH), np.where(valid, ci, -1))
+            best = _merge_topnv(best, cand, nv)
+        for o, b in zip(out, best):
+            o[qlo : qlo + q_block] = b
+    return out
+
+
+def _shard_mins(Q, V, H, sh, metric, budget_bytes, score_dtype):
+    """Exact per-(query, shard) min distance against a non-empty table:
+    ``(shard, dmin (nq,), size)`` per shard, from the blocked kernel at nv=1
+    on each shard segment (gathered one at a time). This is the
+    ``num_voting=None`` form: a top-all selection through the nv-wide
+    kernel would hold nq × n_routing arrays (~75 GB at a 500k-row table and
+    a 10k-row Arrow batch); this holds nq × n_shards. Min is
+    order-independent over the same :func:`_exact_pair_dists` values, so
+    every row layout of the table gives bit-identical minima."""
+    order = np.argsort(sh, kind="stable")
+    sh = sh[order]
+    bounds = np.flatnonzero(np.diff(sh)) + 1
+    for s, e in zip(np.r_[0, bounds], np.r_[bounds, len(sh)]):
+        seg = order[s:e]
+        dmin = _score_block_topnv(Q, V[seg], H[seg], 1, metric, budget_bytes, score_dtype)[0]
+        yield int(sh[s]), dmin[:, 0], e - s
+
+
+def _shard_min_frame(qids, shard, dmin, size) -> pd.DataFrame:
+    return pd.DataFrame(
+        {"query_id": qids, "shard": np.int32(shard), "min_dist": dmin, "votes": np.int64(size)}
+    )
+
+
+def _tie_keyed(routing_points: DataFrame) -> DataFrame:
+    """The routing table with its xxhash64(shard, vec) tie-key ``_rp`` —
+    one definition for both strategies, so their tie-breaks agree."""
+    return routing_points.select("shard", "vec").withColumn("_rp", F.xxhash64("shard", "vec"))
 
 
 def _collect_routing_table(routing_points: DataFrame):
-    """(shards, vecs, rp_hash) arrays of the routing-point table, with the
-    Spark-side xxhash64(shard, vec) tie-key attached — the SAME key the
-    distributed path computes per partition, so tie-breaks agree."""
-    df = routing_points.select("shard", "vec").withColumn("_rp", F.xxhash64("shard", "vec"))
-    pdf = df.toPandas()
+    """(shards, vecs, rp_hash) arrays of the routing-point table."""
+    pdf = _tie_keyed(routing_points).toPandas()
     shards = pdf["shard"].to_numpy().astype(np.int64)
     vecs = np.stack(pdf["vec"].to_numpy()).astype(np.float64) if len(pdf) else np.zeros((0, 1))
     rp_hash = pdf["_rp"].to_numpy().astype(np.int64)
@@ -266,14 +305,13 @@ def score_routing_points(
     routing_points: DataFrame,
     num_voting: int | None = 20,
     metric: str = "l2",
-    q_id_col: str = "query_id",
-    q_vec_col: str = "vec",
     score_dtype: str = "float64",
     max_broadcast_rows: int = MAX_BROADCAST_ROUTING_POINTS,
     budget_bytes: int = SCORE_BUDGET_BYTES,
     distributed: bool | None = None,
 ) -> DataFrame:
-    """Top-k scoring of queries against the routing-point table.
+    """Top-k scoring of queries ``(query_id, vec)`` against the routing-point
+    table ``(shard, vec)``.
 
     ≙ HNSWRouter::Query (hnsw_router.h:106-119) + shard-membership lookup
     (:112-117): for each query take the ``num_voting`` nearest routing
@@ -284,26 +322,17 @@ def score_routing_points(
     router semantics (analyze_approximation_losses.cpp:92-142), where every
     shard's true min distance is wanted and votes degenerate to shard sizes.
 
-    Two physical strategies with bit-identical output:
+    One kernel set — the blocked top-nv kernel, its (dist, hash) merge
+    :func:`_merge_topnv` and its per-shard form :func:`_shard_mins` for
+    ``num_voting=None`` — runs under two physical strategies with
+    bit-identical output:
 
     - **broadcast** (routing table ≤ ``max_broadcast_rows``): collect +
-      broadcast the table, one blocked mapInPandas pass over the queries.
-      With ``num_voting=None`` the pass aggregates per shard segment
-      (blocked nv=1 min + segment size) instead of selecting a top-all
-      candidate set, so per-batch state is nq × n_shards, never
-      nq × n_routing.
-    - **distributed** (above the threshold, ≙ the reference's 1M–10M router
-      budgets, routes.cpp:130): the routing table STAYS a DataFrame; the
-      query batch (bounded — an evaluation batch, ~MBs) is broadcast
-      instead. With bounded ``num_voting``, each routing partition emits
-      its local top-``num_voting`` candidates per query and a Catalyst
-      window + aggregation merges them globally — shuffle volume is
-      nq × num_voting × n_partitions compact rows, never a distance
-      matrix. With ``num_voting=None`` a top-all candidate set would be
-      nq × n_routing rows, so the kernel switches to the AGGREGATE form:
-      each partition emits per-(query, shard) partial (min, count) and one
-      groupBy finishes — shuffle volume nq × n_shards × n_partitions,
-      independent of the table size.
+      broadcast the table, one mapInPandas pass over the queries;
+    - **distributed** (above it, ≙ the reference's 1M–10M router budgets,
+      routes.cpp:130): the table STAYS a DataFrame and the bounded query
+      batch is broadcast instead; each routing partition emits partial
+      rows and one Catalyst groupBy finishes (:func:`_distributed_scores`).
 
     All distance blocks are two-axis bounded to ``budget_bytes`` (64 MB);
     ``score_dtype="float32"`` halves block memory/bandwidth at scale (rank
@@ -312,8 +341,11 @@ def score_routing_points(
     """
     if metric not in VALID_METRICS:
         raise ValueError(f"metric must be one of {VALID_METRICS}, got {metric!r}")
-    spark = queries.sparkSession
-    dtype = np.float32 if score_dtype == "float32" else np.float64
+    if num_voting is not None and not num_voting >= 1:
+        raise ValueError(f"num_voting must be None or >= 1, got {num_voting!r}")
+    if score_dtype not in SCORE_DTYPES:
+        raise ValueError(f"score_dtype must be one of {tuple(SCORE_DTYPES)}, got {score_dtype!r}")
+    dtype = SCORE_DTYPES[score_dtype]
     if distributed is None:
         # count-only probe: limit(max+1) + a lit(1) projection decides
         # without shipping half a million vectors to the driver only to
@@ -325,250 +357,101 @@ def score_routing_points(
         n_head = routing_points.select(F.lit(1)).limit(max_broadcast_rows + 1).count()
         distributed = n_head > max_broadcast_rows
     if distributed:
-        if num_voting is None:
-            return _score_routing_points_distributed_all(
-                queries, routing_points, metric, q_id_col, q_vec_col, dtype, budget_bytes
-            )
-        return _score_routing_points_distributed(
-            queries, routing_points, num_voting, metric, q_id_col, q_vec_col, dtype, budget_bytes
-        )
-    shards, vecs, rp_hash = _collect_routing_table(routing_points)
-    if num_voting is None:
-        # "ALL routing points" is the AGGREGATE form, here too: a top-all
-        # selection through the nv-wide kernel would allocate
-        # (batch × n_routing) index/distance arrays — ~75 GB at a 500k-row
-        # table and the default 10k Arrow batch, defeating the 64 MB budget.
-        # Sort the table by shard once; per batch run the blocked kernel at
-        # nv=1 per shard segment (exact per-(query, shard) min), votes =
-        # shard size. Output is bit-identical to the old top-all + groupby
-        # (same _exact_pair_dists values, min is order-independent).
-        order = np.argsort(shards, kind="stable")
-        shards, vecs, rp_hash = shards[order], vecs[order], rp_hash[order]
-    bc = spark.sparkContext.broadcast((shards, vecs, rp_hash))
-    schema = f"{q_id_col} long, shard int, min_dist double, votes long"
+        return _distributed_scores(queries, routing_points, num_voting, metric, dtype, budget_bytes)
+    bc = queries.sparkSession.sparkContext.broadcast(_collect_routing_table(routing_points))
 
-    def score_topnv(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         sh, V, H = bc.value
-        nv = min(num_voting, len(sh))
+        if len(sh) == 0:  # empty routing table
+            return
         for pdf in batches:
-            if len(pdf) == 0 or nv == 0:
+            if len(pdf) == 0:
                 continue
-            Q = np.stack(pdf[q_vec_col].to_numpy())
-            idx, dists = _score_block_topnv(Q, V, H, nv, metric, budget_bytes, dtype)
-            qids = pdf[q_id_col].to_numpy()
+            qids, Q = _query_block(pdf)
+            if num_voting is None:
+                mins = _shard_mins(Q, V, H, sh, metric, budget_bytes, dtype)
+                yield pd.concat([_shard_min_frame(qids, *m) for m in mins], ignore_index=True)
+                continue
+            nv = min(num_voting, len(sh))
+            d, _, idx = _score_block_topnv(Q, V, H, nv, metric, budget_bytes, dtype)
             # vectorized (query, shard) reduction — one groupby per Arrow
             # batch instead of a Python loop per query
             flat = pd.DataFrame(
                 {
-                    q_id_col: np.repeat(qids, idx.shape[1]),
+                    "query_id": np.repeat(qids, idx.shape[1]),
                     "shard": sh[idx.ravel()].astype(np.int32),
-                    "min_dist": dists.ravel(),
+                    "min_dist": d.ravel(),
                 }
             )
-            out = flat.groupby([q_id_col, "shard"], sort=False, as_index=False).agg(
+            yield flat.groupby(["query_id", "shard"], sort=False, as_index=False).agg(
                 min_dist=("min_dist", "min"), votes=("min_dist", "size")
             )
-            yield out[[q_id_col, "shard", "min_dist", "votes"]]
 
-    def score_all(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        sh, V, H = bc.value  # shard-sorted at broadcast time
-        if len(sh) == 0:
+    return queries.select("query_id", "vec").mapInPandas(score, schema=SCORED_SCHEMA)
+
+
+def _distributed_scores(queries, routing_points, num_voting, metric, dtype, budget_bytes):
+    """The distributed strategy. Per bounded query block
+    (:func:`_bounded_query_batches`) one mapInPandas scores every routing
+    partition against the broadcast block, merging state ACROSS the
+    partition's Arrow batches: its running top-``num_voting`` candidates
+    per query (one row each, ``votes`` 1, tie-key ``rp``), or with
+    ``num_voting=None`` its running (min, count) per (query, shard). One
+    Catalyst finish covers all blocks: a per-query ``row_number ≤
+    num_voting`` window in the bounded form, then one groupBy(query_id,
+    shard). Blocks hold disjoint query ids, so the union is bit-identical
+    to an unchunked pass; no task holds more than one 64 MB distance
+    block."""
+
+    def score_partition(batches: Iterator[pd.DataFrame], bc) -> Iterator[pd.DataFrame]:
+        ids, Q = bc.value
+        if len(ids) == 0:  # empty query set
             return
-        bounds = np.flatnonzero(np.diff(sh)) + 1
-        starts = np.concatenate([[0], bounds])
-        ends = np.concatenate([bounds, [len(sh)]])
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            Q = np.stack(pdf[q_vec_col].to_numpy())
-            qids = pdf[q_id_col].to_numpy()
-            outs = []
-            for s, e in zip(starts, ends):
-                _, dmin = _score_block_topnv(Q, V[s:e], H[s:e], 1, metric, budget_bytes, dtype)
-                outs.append(
-                    pd.DataFrame(
-                        {
-                            q_id_col: qids,
-                            "shard": np.int32(sh[s]),
-                            "min_dist": dmin[:, 0],
-                            "votes": np.int64(e - s),
-                        }
-                    )
-                )
-            yield pd.concat(outs, ignore_index=True)
-
-    fn = score_all if num_voting is None else score_topnv
-    return queries.select(q_id_col, q_vec_col).mapInPandas(fn, schema=schema)
-
-
-def _score_routing_points_distributed(
-    queries: DataFrame,
-    routing_points: DataFrame,
-    num_voting: int,
-    metric: str,
-    q_id_col: str,
-    q_vec_col: str,
-    dtype,
-    budget_bytes: int,
-) -> DataFrame:
-    """Large-routing-table path: broadcast the query batch, keep the routing
-    points distributed. Each routing partition computes its local
-    top-``num_voting`` per query (blocked kernel); a window + aggregation
-    finishes the global top-k — the standard distributed-top-k shape, sized
-    so no task ever holds more than one 64 MB distance block. The query
-    collect is chunked by ``_bounded_query_batches`` (driver AND per-task
-    broadcast memory stay ≤ the block budget; per-query independence makes
-    the per-block union bit-identical)."""
-    spark = queries.sparkSession
-    rp_df = routing_points.select("shard", "vec").withColumn("_rp", F.xxhash64("shard", "vec"))
-    part_schema = f"{q_id_col} long, shard int, dist double, rp long"
-    outs: list[DataFrame] = []
-    for qids, Q in _bounded_query_batches(queries, q_id_col, q_vec_col):
-        outs.append(
-            _score_distributed_block(
-                spark, rp_df, qids, Q, num_voting, metric, q_id_col, dtype, budget_bytes, part_schema
-            )
-        )
-    res = outs[0]
-    for o in outs[1:]:
-        res = res.unionByName(o)
-    return res
-
-
-def _score_distributed_block(
-    spark, rp_df, qids, Q, num_voting, metric, q_id_col, dtype, budget_bytes, part_schema
-) -> DataFrame:
-    bc = spark.sparkContext.broadcast((qids, Q))
-
-    def partial(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ids, Qm = bc.value
-        if len(ids) == 0:
-            return
-        # running per-query top-nv ACROSS the partition's Arrow batches —
-        # one candidate set per partition, not per batch
-        best_d = best_h = best_s = None
+        best, mins = None, {}
         for pdf in batches:
             if len(pdf) == 0:
                 continue
             V = np.stack(pdf["vec"].to_numpy())
             H = pdf["_rp"].to_numpy().astype(np.int64)
             sh = pdf["shard"].to_numpy().astype(np.int64)
+            if num_voting is None:
+                for s, dmin, size in _shard_mins(Q, V, H, sh, metric, budget_bytes, dtype):
+                    cur = mins.setdefault(s, [dmin, 0])
+                    np.minimum(cur[0], dmin, out=cur[0])
+                    cur[1] += size
+                continue
             nv = min(num_voting, len(V))
-            idx, d = _score_block_topnv(Qm, V, H, nv, metric, budget_bytes, dtype)
-            h, s = H[idx], sh[idx]
-            pad = idx < 0
-            if pad.any():
-                d[pad], h[pad], s[pad] = np.inf, _PAD_HASH, -1
-            if best_d is None:
-                best_d, best_h, best_s = d, h, s
-            else:
-                ad = np.concatenate([best_d, d], axis=1)
-                ah = np.concatenate([best_h, h], axis=1)
-                as_ = np.concatenate([best_s, s], axis=1)
-                o = np.lexsort((ah, ad), axis=-1)[:, : min(num_voting, ad.shape[1])]
-                best_d = np.take_along_axis(ad, o, axis=1)
-                best_h = np.take_along_axis(ah, o, axis=1)
-                best_s = np.take_along_axis(as_, o, axis=1)
-        if best_d is None:
-            return
-        valid = np.isfinite(best_d)
-        nq_rep = valid.sum(axis=1)
-        yield pd.DataFrame(
-            {
-                q_id_col: np.repeat(ids, nq_rep),
-                "shard": best_s[valid].astype(np.int32),
-                "dist": best_d[valid],
-                "rp": best_h[valid],
-            }
-        )
-
-    cand = rp_df.mapInPandas(partial, schema=part_schema)
-    w = Window.partitionBy(q_id_col).orderBy(F.col("dist").asc(), F.col("rp").asc())
-    return (
-        cand.withColumn("_r", F.row_number().over(w))
-        .where(F.col("_r") <= num_voting)
-        .groupBy(q_id_col, "shard")
-        .agg(F.min("dist").alias("min_dist"), F.count(F.lit(1)).alias("votes"))
-    )
-
-
-def _score_routing_points_distributed_all(
-    queries: DataFrame,
-    routing_points: DataFrame,
-    metric: str,
-    q_id_col: str,
-    q_vec_col: str,
-    dtype,
-    budget_bytes: int,
-) -> DataFrame:
-    """Large-routing-table path for ``num_voting=None`` (score against ALL
-    points — the min-dist/centroid router semantics): a top-all candidate
-    merge would hold nq × partition_rows state per task and shuffle
-    nq × n_routing rows, so this kernel aggregates instead. Each partition
-    sorts its batch by shard and runs the canonical blocked kernel at nv=1
-    per shard segment — the per-(query, shard) exact min — accumulating one
-    (min over batches, count) pair per shard across the partition; a single
-    groupBy finishes. Shuffle volume is nq × n_shards × n_partitions compact
-    rows, independent of the routing-table size; per-task state is
-    nq × shards_in_partition floats. Output is bit-identical to the
-    broadcast path at ``num_voting=None`` (same _exact_pair_dists values,
-    min is order-independent, votes = shard sizes either way). The query
-    collect is chunked by ``_bounded_query_batches``; per-block results
-    union bit-identically (disjoint query ids)."""
-    spark = queries.sparkSession
-    rp_df = routing_points.select("shard", "vec").withColumn("_rp", F.xxhash64("shard", "vec"))
-    part_schema = f"{q_id_col} long, shard int, dist double, cnt long"
-    outs: list[DataFrame] = []
-    for qids, Q in _bounded_query_batches(queries, q_id_col, q_vec_col):
-        outs.append(
-            _score_distributed_all_block(
-                spark, rp_df, qids, Q, metric, q_id_col, dtype, budget_bytes, part_schema
-            )
-        )
-    res = outs[0]
-    for o in outs[1:]:
-        res = res.unionByName(o)
-    return res
-
-
-def _score_distributed_all_block(
-    spark, rp_df, qids, Q, metric, q_id_col, dtype, budget_bytes, part_schema
-) -> DataFrame:
-    bc = spark.sparkContext.broadcast((qids, Q))
-
-    def partial(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ids, Qm = bc.value
-        if len(ids) == 0:
-            return
-        acc: dict[int, list] = {}  # shard -> [running min (nq,), count]
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            V = np.stack(pdf["vec"].to_numpy())
-            H = pdf["_rp"].to_numpy().astype(np.int64)
-            sh = pdf["shard"].to_numpy().astype(np.int64)
-            order = np.argsort(sh, kind="stable")
-            V, H, sh = V[order], H[order], sh[order]
-            bounds = np.flatnonzero(np.diff(sh)) + 1
-            starts = np.concatenate([[0], bounds])
-            ends = np.concatenate([bounds, [len(sh)]])
-            for s, e in zip(starts, ends):
-                _, dmin = _score_block_topnv(Qm, V[s:e], H[s:e], 1, metric, budget_bytes, dtype)
-                key = int(sh[s])
-                cur = acc.get(key)
-                if cur is None:
-                    acc[key] = [dmin[:, 0], e - s]
-                else:
-                    np.minimum(cur[0], dmin[:, 0], out=cur[0])
-                    cur[1] += e - s
-        for key, (dmin, cnt) in acc.items():
+            d, h, idx = _score_block_topnv(Q, V, H, nv, metric, budget_bytes, dtype)
+            cand = (d, h, np.where(idx < 0, -1, sh[idx]))
+            best = cand if best is None else _merge_topnv(best, cand, num_voting)
+        for s, (dmin, size) in mins.items():
+            yield _shard_min_frame(ids, s, dmin, size)
+        if best is not None:
+            d, h, s = best
+            valid = np.isfinite(d)
             yield pd.DataFrame(
-                {q_id_col: ids, "shard": np.int32(key), "dist": dmin, "cnt": np.int64(cnt)}
+                {
+                    "query_id": np.repeat(ids, valid.sum(axis=1)),
+                    "shard": s[valid].astype(np.int32),
+                    "min_dist": d[valid],
+                    "votes": np.int64(1),
+                    "rp": h[valid],
+                }
             )
 
-    cand = rp_df.mapInPandas(partial, schema=part_schema)
-    return cand.groupBy(q_id_col, "shard").agg(
-        F.min("dist").alias("min_dist"), F.sum("cnt").alias("votes")
+    sc = queries.sparkSession.sparkContext
+    rp = _tie_keyed(routing_points)
+    schema = SCORED_SCHEMA if num_voting is None else SCORED_SCHEMA + ", rp long"
+    parts = None
+    for block in _bounded_query_batches(queries):
+        fn = functools.partial(score_partition, bc=sc.broadcast(block))
+        part = rp.mapInPandas(fn, schema=schema)
+        parts = part if parts is None else parts.unionByName(part)
+    if num_voting is not None:
+        w = Window.partitionBy("query_id").orderBy(F.col("min_dist").asc(), F.col("rp").asc())
+        parts = parts.withColumn("_r", F.row_number().over(w)).where(F.col("_r") <= num_voting)
+    return parts.groupBy("query_id", "shard").agg(
+        F.min("min_dist").alias("min_dist"), F.sum("votes").alias("votes")
     )
 
 
@@ -576,7 +459,6 @@ def probe_order(
     scored: DataFrame,
     policy: str = "min_dist",
     spann_eps: float = 0.6,
-    q_id_col: str = "query_id",
 ) -> DataFrame:
     """Turn (query, shard, min_dist, votes) into (query, shard, probe_rank).
 
@@ -601,12 +483,13 @@ def probe_order(
         order = [F.col("min_dist").asc(), F.col("shard").asc()]
     df = scored
     if policy == "spann":
-        w_q = Window.partitionBy(q_id_col)
+        w_q = Window.partitionBy("query_id")
         df = df.withColumn("_best", F.min("min_dist").over(w_q)).where(
             F.col("min_dist") <= F.col("_best") + spann_eps * F.abs(F.col("_best"))
         ).drop("_best")
-    w = Window.partitionBy(q_id_col).orderBy(*order)
-    return df.withColumn("probe_rank", F.row_number().over(w)).select(q_id_col, "shard", "probe_rank")
+    w = Window.partitionBy("query_id").orderBy(*order)
+    ranked = df.withColumn("probe_rank", F.row_number().over(w))
+    return ranked.select("query_id", "shard", "probe_rank")
 
 
 def centroid_router(

@@ -515,3 +515,72 @@ def test_score_overflow_all_duplicates_vectorized(spark):
             want[(i, s)] = (min(md, d[j]), cnt + 1)
     assert got == want
     assert tiny == want
+
+
+@pytest.mark.parametrize(
+    "bad",
+    [{"num_voting": -1}, {"num_voting": 0}, {"score_dtype": "float16"}, {"metric": "cosine"}],
+)
+def test_score_rejects_bad_inputs_before_any_job(spark, score_fixture, bad):
+    """Invalid scorer options fail on the driver with ValueError before the
+    size probe or any other Spark job — not inside a Python worker on one
+    strategy and as a silently empty (or silently float64) result on the
+    other."""
+    rp, qs, _ = score_fixture
+    sc, group = spark.sparkContext, f"score-bad-input-{bad}"
+    sc.setJobGroup(group, "validation must not submit jobs")
+    try:
+        with pytest.raises(ValueError, match=next(iter(bad))):
+            RT.score_routing_points(qs, rp, **bad)
+        assert sc.statusTracker().getJobIdsForGroup(group) == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+
+
+@pytest.mark.parametrize("budget", [RT.SCORE_BUDGET_BYTES, 2048])
+@pytest.mark.parametrize("nv", [25, None])
+@pytest.mark.parametrize("dt", ["float64", "float32"])
+@pytest.mark.parametrize("metric", ["l2", "mips"])
+def test_score_strategies_agree_on_every_option(spark, score_fixture, metric, dt, nv, budget):
+    """Broadcast and distributed scoring share one kernel set, so they are
+    bit-identical for every metric × score dtype × num_voting form × block
+    budget — not only on the l2 / float64 / default-budget defaults."""
+    rp, qs, _ = score_fixture
+    kw = dict(num_voting=nv, metric=metric, score_dtype=dt, budget_bytes=budget)
+    a = sorted(tuple(r) for r in RT.score_routing_points(qs, rp, distributed=False, **kw).collect())
+    b = sorted(
+        tuple(r)
+        for r in RT.score_routing_points(qs, rp.repartition(7), distributed=True, **kw).collect()
+    )
+    assert a and a == b
+
+
+@pytest.mark.parametrize("empty", ["routing_points", "queries"])
+@pytest.mark.parametrize("nv", [25, None])
+@pytest.mark.parametrize("distributed", [False, True])
+def test_score_empty_inputs(spark, score_fixture, empty, nv, distributed):
+    """An empty routing table or an empty query set scores to zero rows with
+    the scored schema, through both strategies and both forms."""
+    rp, qs, _ = score_fixture
+    if empty == "routing_points":
+        rp = rp.where(F.lit(False))
+    else:
+        qs = qs.where(F.lit(False))
+    out = RT.score_routing_points(qs, rp, num_voting=nv, distributed=distributed)
+    assert out.schema.simpleString() == (
+        "struct<query_id:bigint,shard:int,min_dist:double,votes:bigint>"
+    )
+    assert out.collect() == []
+
+
+def test_score_broadcast_null_query_vector_raises(spark, score_fixture):
+    """A NULL query vector fails the broadcast scorer with the same message
+    as the distributed one, not with a NumPy shape error."""
+    rp, _, Q = score_fixture
+    qs = spark.createDataFrame(
+        [(i, None if i == 3 else [float(x) for x in q]) for i, q in enumerate(Q)],
+        "query_id long, vec array<double>",
+    )
+    for nv in (25, None):
+        with pytest.raises(Exception, match="NULL vectors"):
+            RT.score_routing_points(qs, rp, num_voting=nv, distributed=False).collect()
