@@ -181,19 +181,26 @@ def recall_vs_probes(
     return dense.withColumn("recall", F.sum("found").over(w) / (n_queries * k)).select("nprobes", "recall")
 
 
-def first_shard_recall(gt: DataFrame, cover: DataFrame, routes: DataFrame, k: int, n_queries: int) -> float:
-    """Fraction of GT neighbors covered by the first probed shard
-    (≙ MaxFirstShardRoutingRecall routes.cpp:11-31)."""
-    first = routes.where(F.col("probe_rank") == 1).select("query_id", "shard")
-    hits = (
+def _first_shard_hits(gt: DataFrame, cover: DataFrame, routes: DataFrame, keys=()) -> DataFrame:
+    """(*keys, count): GT neighbors covered by the first probed shard, per
+    group of the ``keys`` columns of ``routes`` (≙ MaxFirstShardRoutingRecall
+    routes.cpp:11-31). One aggregation, whatever the number of groups."""
+    first = routes.where(F.col("probe_rank") == 1).select(*keys, "query_id", "shard")
+    return (
         gt.select("query_id", "neighbor_id")
         .join(cover.withColumnRenamed("id", "neighbor_id"), "neighbor_id")
         .join(first, ["query_id", "shard"])
-        .select("query_id", "neighbor_id")
+        .select(*keys, "query_id", "neighbor_id")
         .distinct()
+        .groupBy(*keys)
         .count()
     )
-    return hits / (n_queries * k)
+
+
+def first_shard_recall(gt: DataFrame, cover: DataFrame, routes: DataFrame, k: int, n_queries: int) -> float:
+    """Fraction of GT neighbors covered by the first probed shard
+    (≙ MaxFirstShardRoutingRecall routes.cpp:11-31)."""
+    return _first_shard_hits(gt, cover, routes).collect()[0]["count"] / (n_queries * k)
 
 
 def max_shard_search_recall(gt: DataFrame, cover: DataFrame, k: int, n_queries: int) -> float:

@@ -15,6 +15,9 @@ Two implementations of each kernel:
 - **SQL expression builders** (``sql_*``): pure Catalyst column expressions
   (zip_with + aggregate) for small/declarative paths where staying inside
   whole-stage codegen beats an Arrow hop.
+
+``topk`` is the one k-best selection over a NumPy distance matrix: every
+kernel picks its k best in (distance, key) order through it.
 """
 
 from __future__ import annotations
@@ -88,6 +91,35 @@ def distance_matrix(a: np.ndarray, b: np.ndarray, metric: str = "l2") -> np.ndar
     if metric == "mips":
         return mips_distance_matrix(a, b)
     return cosine_distance_matrix(a, b)
+
+
+def topk(d: np.ndarray, k: int, key: np.ndarray | None = None) -> np.ndarray:
+    """Column indices of each row's ``min(k, n)`` smallest entries of the
+    (rows × n) matrix ``d``, in (distance, ``key``, column) order — the one
+    k-best rule of every NumPy kernel (≙ the bounded (dist, id) heap TopN,
+    topn.h:6-32). ``key`` is per column (n,) or per entry (rows × n) and
+    defaults to the column position.
+
+    The pick is a pure function of the row's (distance, key) content, never
+    of argpartition's arbitrary choice among entries tied at the k-th
+    distance, so a local top-k under the same order as the global merge
+    loses nothing. O(n) per row: argpartition, then a full lexsort only for
+    rows with a tie at the k-th distance."""
+    if k < 1:
+        raise ValueError(f"k must be >= 1, got {k}")
+    d = np.asarray(d)
+    kk = min(k, d.shape[1])
+    key = np.broadcast_to(np.arange(d.shape[1]) if key is None else key, d.shape)
+    if kk == d.shape[1]:
+        return np.lexsort((key, d), axis=-1)
+    part = np.argpartition(d, kk - 1, axis=1)[:, :kk]
+    sel = np.take_along_axis(d, part, axis=1)
+    order = np.lexsort((part, np.take_along_axis(key, part, axis=1), sel), axis=-1)
+    idx = np.take_along_axis(part, order, axis=1)
+    tied = (d <= sel.max(axis=1)[:, None]).sum(axis=1) > kk
+    if tied.any():
+        idx[tied] = np.lexsort((key[tied], d[tied]), axis=-1)[:, :kk]
+    return idx
 
 
 def vec_norm(a: np.ndarray) -> np.ndarray:

@@ -32,6 +32,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from gp_ann_spark.checkpoint import checkpoints
 from gp_ann_spark.functions.distances import sql_inner_product
 from gp_ann_spark.operators.text_analysis import tokens
 
@@ -155,51 +156,54 @@ def jaccard_pairs(
     (doc_a, doc_b) is given (e.g. from minhash_band_pairs), verification is
     restricted to it. Returns (doc_a, doc_b, jaccard) rounded to 6 dp.
     """
-    sh = doc_shingles(docs, text_col, n)
-    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
-    if max_doc_freq is not None and candidates is None:
-        from gp_ann_spark.operators.graph import salted_count
+    with checkpoints() as cp:
+        # the shingle relation feeds the sizes, the document frequencies and
+        # every join side: pinned, the corpus is shingled once
+        sh = cp.pin(doc_shingles(docs, text_col, n), eager=False)
+        sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
+        if max_doc_freq is not None and candidates is None:
+            from gp_ann_spark.operators.graph import salted_count
 
-        dfreq = salted_count(sh, "shingle", salt_src="doc_id")
-        rare = dfreq.where(F.col("count") <= max_doc_freq).select("shingle")
-        shr = sh.join(rare, "shingle", "left_semi")
-        ca = shr.select(F.col("doc_id").alias("doc_a"), "shingle")
-        cb = shr.select(F.col("doc_id").alias("doc_b"), "shingle")
-        candidates = (
-            ca.join(cb, "shingle")
-            .where(F.col("doc_a") < F.col("doc_b"))
-            .select("doc_a", "doc_b")
-            .distinct()
+            dfreq = salted_count(sh, "shingle", salt_src="doc_id")
+            rare = dfreq.where(F.col("count") <= max_doc_freq).select("shingle")
+            shr = sh.join(rare, "shingle", "left_semi")
+            ca = shr.select(F.col("doc_id").alias("doc_a"), "shingle")
+            cb = shr.select(F.col("doc_id").alias("doc_b"), "shingle")
+            candidates = (
+                ca.join(cb, "shingle")
+                .where(F.col("doc_a") < F.col("doc_b"))
+                .select("doc_a", "doc_b")
+                .distinct()
+            )
+        if candidates is not None:
+            # exact intersections over the FULL shingle sets, candidate-bounded:
+            # |cand| × shingles work instead of the unguarded self-join
+            pa = sh.select(F.col("doc_id").alias("doc_a"), "shingle")
+            pb = sh.select(F.col("doc_id").alias("doc_b"), "shingle")
+            inter = (
+                candidates.join(pa, "doc_a")
+                .join(pb, ["doc_b", "shingle"])
+                .groupBy("doc_a", "doc_b")
+                .agg(F.count(F.lit(1)).alias("inter"))
+            )
+        else:
+            a = sh.select(F.col("doc_id").alias("doc_a"), "shingle")
+            b = sh.select(F.col("doc_id").alias("doc_b"), "shingle")
+            inter = (
+                a.join(b, "shingle")
+                .where(F.col("doc_a") < F.col("doc_b"))
+                .groupBy("doc_a", "doc_b")
+                .agg(F.count(F.lit(1)).alias("inter"))
+            )
+        sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_sh").alias("na"))
+        sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_sh").alias("nb"))
+        return cp.keep(
+            inter.join(sa, "doc_a")
+            .join(sb, "doc_b")
+            .withColumn("jaccard", F.round(F.col("inter") / (F.col("na") + F.col("nb") - F.col("inter")), 6))
+            .where(F.col("jaccard") >= threshold)
+            .select("doc_a", "doc_b", "jaccard")
         )
-    if candidates is not None:
-        # exact intersections over the FULL shingle sets, candidate-bounded:
-        # |cand| × shingles work instead of the unguarded self-join
-        pa = sh.select(F.col("doc_id").alias("doc_a"), "shingle")
-        pb = sh.select(F.col("doc_id").alias("doc_b"), "shingle")
-        inter = (
-            candidates.join(pa, "doc_a")
-            .join(pb, ["doc_b", "shingle"])
-            .groupBy("doc_a", "doc_b")
-            .agg(F.count(F.lit(1)).alias("inter"))
-        )
-    else:
-        a = sh.select(F.col("doc_id").alias("doc_a"), "shingle")
-        b = sh.select(F.col("doc_id").alias("doc_b"), "shingle")
-        inter = (
-            a.join(b, "shingle")
-            .where(F.col("doc_a") < F.col("doc_b"))
-            .groupBy("doc_a", "doc_b")
-            .agg(F.count(F.lit(1)).alias("inter"))
-        )
-    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_sh").alias("na"))
-    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_sh").alias("nb"))
-    return (
-        inter.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .withColumn("jaccard", F.round(F.col("inter") / (F.col("na") + F.col("nb") - F.col("inter")), 6))
-        .where(F.col("jaccard") >= threshold)
-        .select("doc_a", "doc_b", "jaccard")
-    )
 
 
 SIMHASH_BITS = 60  # hex64 yields 60 usable bits

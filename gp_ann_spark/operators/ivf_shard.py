@@ -34,10 +34,11 @@ clustered shard (tests/test_ivf_shard.py): recall@10 ≥ 0.95 at ef=200 and
 ≥ 0.8 at ef=50 vs 0.76/0.53 for the unspilled entry-budget kernel — the
 HNSW-class regime (inverted_index_hnsw.h M=32/efC=200 delivers ~0.9+).
 
-The whole query path is batch-BLAS: queries are grouped by probed-cell
-count and candidates gathered into one padded (group × max_cand) block per
-group — one batched matmul + one row-wise lexsort, no per-query Python in
-the distance path.
+Only the dense path (every cell probed) is batch-BLAS: one GEMM per block
+of queries. The gathered path groups queries by probed-cell count, copies
+each group's candidates into one padded (group × max_cand × d) block and
+reduces it with ``einsum`` rather than a GEMM. Both pick their k best
+through ``topk`` and hand them out in a per-row Python loop.
 """
 
 from __future__ import annotations
@@ -47,6 +48,7 @@ import numpy as np
 from gp_ann_spark.functions.distances import (
     distance_matrix,
     l2_normalize,
+    topk,
     vec_norm,
 )
 
@@ -74,19 +76,11 @@ def _blocked_topn(
     n×c matrix — blocks of X sized so each block×c float64 matrix stays
     ≤ ``budget_bytes`` (an unblocked n×c at a 25M-point shard with √n cells
     would be ~1 TB)."""
-    c = len(C)
-    nspill = min(nspill, c)
-    block = max(1, budget_bytes // (8 * max(c, 1)))
+    nspill = min(nspill, len(C))
+    block = max(1, budget_bytes // (8 * max(len(C), 1)))
     out = np.empty((len(X), nspill), dtype=np.int64)
     for lo in range(0, len(X), block):
-        d = distance_matrix(X[lo : lo + block], C, metric)
-        if nspill < c:
-            part = np.argpartition(d, nspill - 1, axis=1)[:, :nspill]
-            key = np.take_along_axis(d, part, axis=1)
-            o = np.lexsort((part, key), axis=-1)
-            out[lo : lo + block] = np.take_along_axis(part, o, axis=1)
-        else:
-            out[lo : lo + block] = np.lexsort((np.broadcast_to(np.arange(c), d.shape), d), axis=-1)
+        out[lo : lo + block] = topk(distance_matrix(X[lo : lo + block], C, metric), nspill)
     return out
 
 
@@ -190,9 +184,9 @@ def ivf_search(
     (dist, position) order — the same tie-break the exact path uses.
 
     Vectorized: queries are grouped by probed-cell count; each group does
-    ONE ragged-padded candidate gather, ONE batched matmul (einsum →
-    batched dgemm), and ONE row-wise lexsort. Per-group memory is blocked
-    to ~64 MB of gathered candidate vectors.
+    ONE ragged-padded candidate gather, ONE ``einsum`` reduction and ONE
+    ``topk``; a per-row loop hands out the results. Per-group memory is
+    blocked to ~64 MB of gathered candidate vectors.
     """
     C, order, starts, ends, primary = index
     Q = np.asarray(Q, dtype=np.float64)
@@ -241,11 +235,10 @@ def ivf_search(
                 # whole shard: skip the spilled gather (≥2× fewer distance
                 # evals) and score the dense block directly. Extensionally
                 # identical to the generic path (cand = arange(n), same
-                # (dist, position) lexsort) — this is the regime the exact-
+                # (dist, position) topk) — this is the regime the exact-
                 # at-full-budget gate and small-shard ef sweeps live in.
                 n_all = len(X)
                 blk = max(1, (64 << 20) // (8 * n_all))
-                pos = np.arange(n_all)
                 for glo in range(0, len(rows), blk):
                     rblk = rows[glo : glo + blk]
                     Qg = Qsb[rblk]
@@ -257,7 +250,7 @@ def ivf_search(
                         np.maximum(dg, 0.0, out=dg)
                     else:
                         dg = 1.0 - Qg @ Xs.T
-                    srt = np.lexsort((np.broadcast_to(pos, dg.shape), dg), axis=-1)[:, : min(k, n_all)]
+                    srt = topk(dg, k)
                     ds = np.take_along_axis(dg, srt, axis=1)
                     for ri, row in enumerate(rblk):
                         out_idx[lo + row] = srt[ri]
@@ -303,16 +296,13 @@ def ivf_search(
                 else:
                     dg = 1.0 - dots
                 dg[~valid] = np.inf
-                # row-wise stable (dist, position) sort; invalid rows sort last
-                sort_pos = np.where(valid, cand, PAD)
-                srt = np.lexsort((sort_pos, dg), axis=-1)
+                # (dist, position) order; invalid entries sort last
+                srt = topk(dg, k, key=np.where(valid, cand, PAD))
                 ds = np.take_along_axis(dg, srt, axis=1)
                 cs = np.take_along_axis(cand, srt, axis=1)
                 ok = np.take_along_axis(valid, srt, axis=1)
-                rank = np.cumsum(ok, axis=1)
-                take = ok & (rank <= k)
                 for ri, row in enumerate(rblk):
-                    sel = take[ri]
+                    sel = ok[ri]
                     out_idx[lo + row] = cs[ri][sel]
                     out_dist[lo + row] = ds[ri][sel]
     return out_idx, out_dist

@@ -34,7 +34,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from gp_ann_spark.checkpoint import checkpoints
-from gp_ann_spark.functions.distances import distance_matrix, pairwise_sqr_l2, pos_distance_matrix
+from gp_ann_spark.functions.distances import distance_matrix, pairwise_sqr_l2, pos_distance_matrix, topk
 
 SEED = 555  # the reference's algorithm seed (kmeans.cpp:19 via partition.cpp:14)
 
@@ -378,16 +378,12 @@ def assign_all_candidates(
 
     def rate(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         C = bc.value
-        f = top_f or len(C)
         for pdf in batches:
             if len(pdf) == 0:
                 continue
             X = np.stack(pdf["vec"].to_numpy()).astype(np.float64)
             dists = distance_matrix(X, C, metric)
-            if f < dists.shape[1]:
-                idx = np.argpartition(dists, f - 1, axis=1)[:, :f]
-            else:
-                idx = np.tile(np.arange(dists.shape[1]), (len(X), 1))
+            idx = topk(dists, top_f or len(C))
             ids = np.repeat(pdf["id"].to_numpy(), idx.shape[1])
             yield pd.DataFrame(
                 {

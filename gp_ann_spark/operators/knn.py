@@ -10,8 +10,9 @@ Reference analogues:
 Spark-first design: the *scale path* is a **broadcast top-k scoring** pass —
 ``mapInPandas`` over the big side with the small side (queries / centroids /
 routing points) broadcast as a dense NumPy matrix; each Arrow batch does one
-BLAS matmul and emits only its local top-k per query, then a single
-``groupBy(query)`` window keeps the global top-k. No crossJoin row explosion:
+BLAS matmul and emits only its local top-k per query (``topk``, in the
+global (dist, id) order), then a single ``groupBy(query)`` window keeps the
+global top-k. No crossJoin row explosion:
 the shuffle carries O(n_queries × k × n_blocks) rows, not O(n × n_queries).
 
 A pure-Catalyst variant (``exact_knn_sql``) exists for small oracle runs and
@@ -28,7 +29,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from gp_ann_spark.functions.distances import distance_matrix, sql_distance
+from gp_ann_spark.functions.distances import distance_matrix, sql_distance, topk
 from gp_ann_spark.operators.graph import mirror
 
 KNN_SCHEMA = "query_id long, neighbor_id long, dist double"
@@ -41,33 +42,20 @@ def _topk_within_block(
     k: int, metric: str, exclude_self: bool,
 ) -> pd.DataFrame:
     """Score one Arrow batch of base points against all queries, keep each
-    query's k best within the block. np.partition ≙ the reference's bounded
-    heap (topn.h:6-32) at block granularity.
-
-    Every candidate TIED at the k-th distance is kept (``d <= kth``, not an
-    arbitrary argpartition pick): the global tie-break is (dist,
-    neighbor_id) and dropping the smaller-id member of a boundary tie here
-    would make the final result depend on which Arrow block each point
-    landed in — i.e. on the input's partition layout. The downstream
-    total-order ``head(k)`` trims the extras, so the operator's output is
-    byte-stable across repartitions of the same point set."""
+    query's k best within the block (≙ the reference's bounded heap,
+    topn.h:6-32, at block granularity). The pick is ``topk`` keyed by
+    ``block_ids``: the global merge's (dist, neighbor_id) order, so no block
+    drops a candidate the merge would keep, whatever the partition layout."""
     d = distance_matrix(q_vecs, block_vecs, metric)  # (nq, nb)
     if exclude_self:
         same = q_ids[:, None] == block_ids[None, :]
         d[same] = np.inf
-    nb = d.shape[1]
-    kk = min(k, nb)
-    if kk < nb:
-        kth = np.partition(d, kk - 1, axis=1)[:, kk - 1]
-        mask = d <= kth[:, None]
-    else:
-        mask = np.ones(d.shape, dtype=bool)
-    qi, ci = np.nonzero(mask)
-    rows_q = q_ids[qi]
-    rows_n = block_ids[ci]
-    rows_d = d[qi, ci]
-    keep = np.isfinite(rows_d)
-    return pd.DataFrame({"query_id": rows_q[keep], "neighbor_id": rows_n[keep], "dist": rows_d[keep]})
+    idx = topk(d, k, key=block_ids)
+    dist = np.take_along_axis(d, idx, axis=1).ravel()
+    keep = np.isfinite(dist)
+    qi = np.repeat(np.arange(len(q_ids)), idx.shape[1])[keep]
+    ci = idx.ravel()[keep]
+    return pd.DataFrame({"query_id": q_ids[qi], "neighbor_id": block_ids[ci], "dist": dist[keep]})
 
 
 def exact_knn(

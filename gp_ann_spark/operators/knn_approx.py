@@ -37,7 +37,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from gp_ann_spark.functions.distances import distance_matrix
+from gp_ann_spark.functions.distances import distance_matrix, topk
 from gp_ann_spark.checkpoint import checkpoints
 from gp_ann_spark.checkpoint import realias as _realias
 from gp_ann_spark.operators.knn import merge_topk, symmetrize
@@ -88,16 +88,9 @@ def _assign_to_leaders(
         X = np.stack(pts_pdf["vec"].to_numpy()).astype(np.float64)
         L = np.stack(lead_pdf["vec"].to_numpy()).astype(np.float64)
         ranks = lead_pdf["leader_rank"].to_numpy()
-        d = distance_matrix(X, L, metric)
-        f = min(fanout, d.shape[1])
-        if f < d.shape[1]:
-            # canonical (distance, leader_rank) selection: a bare argpartition
-            # picks shuffle-arrival order among leaders tied at the fanout
-            # boundary (duplicate leader vectors are legal), which made two
-            # independent builds route the point to different buckets
-            idx = np.lexsort((np.broadcast_to(ranks, d.shape), d), axis=-1)[:, :f]
-        else:
-            idx = np.tile(np.arange(d.shape[1]), (len(X), 1))
+        # (distance, leader_rank) order: duplicate leader vectors are legal,
+        # and the pick must not follow the shuffle's arrival order
+        idx = topk(distance_matrix(X, L, metric), fanout, key=ranks)
         base = pts_pdf["bucket"].to_numpy().astype(np.uint64) * np.uint64(0x9E3779B97F4A7C15)
         child = np.repeat(base, idx.shape[1]) + (ranks[idx.ravel()].astype(np.uint64) + np.uint64(1))
         return pd.DataFrame(
@@ -129,17 +122,13 @@ def _bucket_bruteforce(bucketed: DataFrame, k: int, metric: str) -> DataFrame:
         # a point can occur twice in a merged bucket (fanout duplication) —
         # mask every equal-id pair, not just the diagonal
         d[ids[:, None] == ids[None, :]] = np.inf
-        kk = min(k, m - 1)
-        # keep EVERY candidate tied at the k-th distance (d <= kth), not an
-        # arbitrary argpartition pick: the mask is a pure function of the
-        # distance content, so the bucket's output no longer depends on the
-        # row order the shuffle delivered (same fix as knn._topk_within_block
-        # — the downstream total-order merge_topk trims the tie extras)
-        kth = np.partition(d, kk - 1, axis=1)[:, kk - 1]
-        r, c = np.nonzero(d <= kth[:, None])
-        w = d[r, c]
+        # merge_topk's (weight, dst) order, whatever row order the shuffle
+        # delivered
+        c = topk(d, k, key=ids)
+        w = np.take_along_axis(d, c, axis=1).ravel()
         keep = np.isfinite(w)  # drop masked equal-id pairs
-        return pd.DataFrame({"src": ids[r][keep], "dst": ids[c][keep], "weight": w[keep]})
+        r = np.repeat(np.arange(m), c.shape[1])[keep]
+        return pd.DataFrame({"src": ids[r], "dst": ids[c.ravel()[keep]], "weight": w[keep]})
 
     return bucketed.groupBy("rep", "bucket").applyInPandas(crunch, schema="src long, dst long, weight double")
 

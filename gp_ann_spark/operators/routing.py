@@ -33,7 +33,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from gp_ann_spark.functions.distances import VALID_METRICS
+from gp_ann_spark.functions.distances import VALID_METRICS, topk
 from gp_ann_spark.operators.kmeans import local_lloyd, shard_centroids
 
 SEED = 555
@@ -133,12 +133,12 @@ def _merge_topnv(best: tuple, cand: tuple, nv: int) -> tuple:
     """Row-wise merge of two per-query candidate sets into the ``nv`` best.
 
     Each set is a ``(dist, rp_hash, payload)`` tuple of (rows × width)
-    arrays; one lexsort over the concatenated columns orders them by
-    (exact dist, rp_hash). The blocked kernel merges its column blocks with
-    it and the distributed partial merges its Arrow batches — one
-    tie-break, whichever side is distributed."""
+    arrays; one ``topk`` over the concatenated columns picks them in
+    (exact dist, rp_hash) order. The blocked kernel merges its column
+    blocks with it and the distributed partial merges its Arrow batches —
+    one tie-break, whichever side is distributed."""
     d, h, x = (np.concatenate([b, c], axis=1) for b, c in zip(best, cand))
-    o = np.lexsort((h, d), axis=-1)[:, :nv]
+    o = topk(d, nv, key=h)
     return tuple(np.take_along_axis(a, o, axis=1) for a in (d, h, x))
 
 
@@ -239,8 +239,7 @@ def _score_block_topnv(
                     for olo in range(0, len(over), ochunk):
                         rows = over[olo : olo + ochunk]
                         ex = _exact_pair_dists(Q64[qlo + rows, None, :], V64[vlo : vlo + w], metric)
-                        o_sel = np.lexsort((np.broadcast_to(Hb, ex.shape), ex), axis=-1)[:, :nv]
-                        part[rows, :nv] = o_sel
+                        part[rows, :nv] = topk(ex, nv, key=Hb)
                     valid[over] = False
                     valid[over, :nv] = True
             ci = part + vlo

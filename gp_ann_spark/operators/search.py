@@ -31,7 +31,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from gp_ann_spark.checkpoint import realias
-from gp_ann_spark.functions.distances import distance_matrix
+from gp_ann_spark.functions.distances import distance_matrix, topk
 from gp_ann_spark.operators.ivf_shard import build_ivf, ivf_search
 
 
@@ -107,20 +107,12 @@ def probe_shards(
         )
 
     def exact(shard, ids, X, probes, Q) -> pd.DataFrame:
+        # X is in id order, so topk's column order is merge_results' (dist,
+        # neighbor_id) order: exactly min(k, |shard|) rows per query
         d = distance_matrix(Q, X, metric)
-        kk = min(k, d.shape[1])
-        # keep every candidate tied at the k-th distance (content-based
-        # mask, not an arbitrary argpartition pick): merge_results ranks by
-        # the total (dist, neighbor_id) order, and a tied candidate dropped
-        # here could never resurface — the same boundary-tie fix as
-        # knn._topk_within_block, required for exact == ivf-at-full-budget
-        # on shards containing duplicate vectors
-        if kk < d.shape[1]:
-            kth = np.partition(d, kk - 1, axis=1)[:, kk - 1]
-            qi, ci = np.nonzero(d <= kth[:, None])
-        else:
-            qi, ci = np.nonzero(np.ones(d.shape, dtype=bool))
-        return rows(shard, probes, qi, ids[ci], d[qi, ci])
+        idx = topk(d, k)
+        qi = np.repeat(np.arange(len(Q)), idx.shape[1])
+        return rows(shard, probes, qi, ids[idx.ravel()], np.take_along_axis(d, idx, axis=1).ravel())
 
     def ivf(shard, ids, X, probes, Q) -> pd.DataFrame:
         index = build_ivf(X, seed=seed + shard, metric=metric)

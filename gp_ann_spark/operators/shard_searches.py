@@ -26,7 +26,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from gp_ann_spark.functions.distances import distance_matrix
+from gp_ann_spark.functions.distances import distance_matrix, topk
 from gp_ann_spark.operators.ivf_shard import build_ivf, ivf_search
 from gp_ann_spark.operators.search import _per_shard
 
@@ -54,30 +54,6 @@ def run_in_shard_searches(
     """
     ef_list = sorted(set(int(e) for e in ef_values))
 
-    def exact(X, Q):
-        d = distance_matrix(Q, X, metric)
-        kk = min(k, d.shape[1])
-        if kk < d.shape[1]:
-            # canonical (dist, id) selection like probe_shards/ivf_search:
-            # argpartition's pick among candidates tied AT the k-th
-            # distance is layout-arbitrary — a GT neighbor tied at the
-            # boundary could be silently swapped for its twin. Rows with
-            # boundary ties (rare) re-rank against the full row.
-            part = np.argpartition(d, kk - 1, axis=1)[:, :kk]
-            sel_d = np.take_along_axis(d, part, axis=1)
-            order = np.lexsort((part, sel_d), axis=-1)
-            idx = np.take_along_axis(part, order, axis=1)
-            kth = sel_d.max(axis=1)
-            tied = (d <= kth[:, None]).sum(axis=1) > kk
-            if tied.any():
-                dt = d[tied]
-                cols = np.broadcast_to(np.arange(dt.shape[1]), dt.shape)
-                idx[tied] = np.lexsort((cols, dt), axis=-1)[:, :kk]
-        else:
-            cols = np.broadcast_to(np.arange(d.shape[1]), d.shape)
-            idx = np.lexsort((cols, d), axis=-1)
-        return idx
-
     def kernel(shard, ids, X, probes, Q) -> pd.DataFrame:
         index = build_ivf(X, seed=seed + shard, metric=metric) if ef_list[-1] > 0 else None
         frames = []
@@ -85,7 +61,10 @@ def run_in_shard_searches(
             times = []
             for _ in range(reps):
                 t0 = time.perf_counter()
-                idx = exact(X, Q) if ef == 0 else ivf_search(Q, X, index, k, ef, metric)[0]
+                if ef == 0:
+                    idx = topk(distance_matrix(Q, X, metric), k)
+                else:
+                    idx = ivf_search(Q, X, index, k, ef, metric)[0]
                 times.append(time.perf_counter() - t0)
             frames.append(
                 pd.DataFrame(

@@ -78,27 +78,20 @@ def iterate_routing_configs(
     points: DataFrame,
     assignment: DataFrame,
     queries: DataFrame,
-    gt: DataFrame,
-    k: int = 10,
     num_shards: int | None = None,
     budgets: Sequence[int] = DEFAULT_BUDGETS,
     num_voting_list: Sequence[int] = DEFAULT_NUM_VOTING,
     policies: Sequence[str] = RT.POLICIES,
-    cover: DataFrame | None = None,
     metric: str = "l2",
     seed: int = SEED,
-    n_queries: int | None = None,
 ) -> list[dict]:
     """The config sweep (≙ IterateRoutingConfigs routes.cpp:166-311).
 
     Returns one dict per route config: algorithm/budget/num_voting plus the
-    serializable ``routes`` relation and its max-first-shard recall.
-    ``n_queries`` lets a caller that already counted the query batch skip
-    the recount job.
+    serializable ``routes`` relation. ``routing_sweep_pareto`` scores the
+    first-shard recall of every config in one aggregation.
     """
-    cover = cover if cover is not None else assignment
     num_shards = num_shards or (assignment.agg(F.max("shard")).collect()[0][0] + 1)
-    nq = n_queries if n_queries is not None else queries.count()
     out: list[dict] = []
     with checkpoints() as cp:
         for cfg in generate_router_configs(budgets):
@@ -118,16 +111,11 @@ def iterate_routing_configs(
                             distributed=n_rp > RT.MAX_BROADCAST_ROUTING_POINTS,
                         ), eager=False)
                         for policy in policies:
-                            # checkpoint the (small, nq×shards) routes relation
-                            # so the (bigger) scored checkpoint can be released
-                            # per grid cell — a full reference-shaped grid (~10
-                            # budgets × 7 nv) would otherwise pin ~80
-                            # scored/routing tables for the session.
-                            # Non-eager: the first_shard_recall count is the
-                            # materializing action — one job per policy, not
-                            # two.
+                            # non-eager: the caller's first action over the
+                            # union of all configs' routes materializes every
+                            # routes pin at once; until then each keeps its
+                            # scored table alive
                             routes = cp.pin(RT.probe_order(scored, policy=policy), eager=False)
-                            fsr = R.first_shard_recall(gt, cover, routes, k, nq)
                             out.append(
                                 {
                                     "algorithm": f"KMeansTree-{policy}",
@@ -135,7 +123,6 @@ def iterate_routing_configs(
                                     "num_centroids": cfg["num_centroids"],
                                     "num_voting": nv,
                                     "n_routing_points": n_rp,
-                                    "first_shard_recall": fsr,
                                     "routes": routes,
                                 }
                             )
@@ -147,7 +134,6 @@ def iterate_routing_configs(
                 "num_centroids": 0,
                 "num_voting": 0,
                 "n_routing_points": 0,
-                "first_shard_recall": R.first_shard_recall(gt, cover, rr, k, nq),
                 "routes": rr,
             }
         )
@@ -189,14 +175,19 @@ def routing_sweep_pareto(
         # the routes relations of the configs pass to this scope, which
         # releases them once the grid is computed
         configs = iterate_routing_configs(
-            points, assignment, queries, gt, k, num_shards, budgets, num_voting_list,
-            policies=policies, metric=metric, seed=seed, n_queries=nq,
+            points, assignment, queries, num_shards, budgets, num_voting_list,
+            policies=policies, metric=metric, seed=seed,
         )
         routes = cp.pin(reduce(DataFrame.unionByName, (
             c["routes"].where(F.col("probe_rank") <= max(nprobes_values))
             .select("query_id", "shard", "probe_rank", F.lit(i).alias("config"))
             for i, c in enumerate(configs)
         )), eager=False)
+        # max-first-shard recall of every config in one aggregation, which
+        # also materializes the routes pin
+        hits = dict(R._first_shard_hits(gt, assignment, routes, ("config",)).collect())
+        for i, c in enumerate(configs):
+            c["first_shard_recall"] = hits.get(i, 0) / (nq * k)
         # ONE timed search over the distinct (query, shard) pairs of every
         # config (≙ RunInShardSearches once, route_search_combination.cpp:
         # 121-226); the grid joins it back to each config's probe ranks

@@ -321,6 +321,38 @@ def test_ivf_ties_with_duplicate_vectors_valid_topk(spark, rng):
             assert (dc <= _kth_excl_self(X, qid, k) + eps).all(), (in_shard, qid)
 
 
+def test_exact_probe_emits_k_rows_per_shard_on_duplicate_vectors(spark, rng):
+    """Shards full of duplicate vectors tie many candidates at the k-th
+    distance. Small-integer coordinates make every distance exact, so the
+    ties are real. The exact probe keeps exactly min(k, |shard|) rows per
+    (query, shard), chosen in (dist, neighbor_id) order, and the merged
+    result is the global (dist, neighbor_id) top-k."""
+    k = 4
+    base = rng.integers(0, 3, size=(6, 4)).astype(np.float64)
+    X = base[rng.integers(0, 6, 60)]
+    pts = make_points_df(spark, X)
+    asn = pts.select("id", (F.pmod("id", F.lit(3))).cast("int").alias("shard"))
+    qs = pts.select(F.col("id").alias("query_id"), "vec").where(F.col("query_id") < 10)
+    shards = spark.createDataFrame([(s,) for s in range(3)], "shard int")
+    routes = qs.select("query_id").crossJoin(shards).withColumn("probe_rank", F.col("shard") + 1)
+    sp = S.shard_points(pts, asn).localCheckpoint(eager=True)
+    per_shard = S.probe_shards(sp, qs, routes, k=k).localCheckpoint(eager=True)
+    counts = per_shard.groupBy("query_id", "shard").count().collect()
+    assert len(counts) == 10 * 3
+    assert {r["count"] for r in counts} == {k}
+    ids = np.arange(len(X))
+    for r in per_shard.collect():
+        in_shard = ids[ids % 3 == r["shard"]]
+        d = _canon_d(X[r["query_id"]], X[in_shard])
+        assert r["neighbor_id"] in in_shard[np.lexsort((in_shard, d))[:k]]
+    merged = S.merge_results(per_shard, k).collect()
+    got = {(r["query_id"], r["rank"]): (r["dist"], r["neighbor_id"]) for r in merged}
+    for q in range(10):
+        d = _canon_d(X[q], X)
+        for rank, j in enumerate(np.lexsort((ids, d))[:k], start=1):
+            assert got[(q, rank)] == (d[j], j)
+
+
 def test_probe_small_shard_includes_self_match(spark, rng):
     """A query drawn from the probed shard matches its own point (dist 0,
     no self-exclusion), and a shard of n <= k points yields exactly n rows

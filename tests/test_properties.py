@@ -3,10 +3,13 @@ with straightforward sequential simulators on arbitrary small instances —
 the same strategy the reference's asserts encode, but adversarial."""
 
 import numpy as np
+import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
+from hypothesis.extra.numpy import arrays
 from pyspark.sql import functions as F
 
+from gp_ann_spark.functions.distances import topk
 from gp_ann_spark.operators import kmeans as KM
 from gp_ann_spark.operators import knn as KNN
 
@@ -134,3 +137,34 @@ def test_merge_topk_and_symmetrize_invariants(spark, rng):
         assert (b, a) in pairs
         assert pairs[(b, a)] == min(best.get((a, b), np.inf), best.get((b, a), np.inf)) or True
         assert w == min(best.get((a, b), np.inf), best.get((b, a), np.inf))
+
+
+@st.composite
+def _tie_heavy_topk(draw):
+    """A (rows × n) matrix over {0, 1, 2, +inf} — ties at the k-th distance
+    are the common case — a key that is absent, per column or per entry
+    (with repeats, so (distance, key) ties fall back to the column), and k
+    from 1 to n + 2."""
+    rows, n = draw(st.integers(1, 6)), draw(st.integers(1, 12))
+    d = draw(arrays(np.float64, (rows, n), elements=st.sampled_from([0.0, 1.0, 2.0, np.inf])))
+    shape = draw(st.sampled_from([None, (n,), (rows, n)]))
+    key = None if shape is None else draw(arrays(np.int64, shape, elements=st.integers(-2, 2)))
+    return d, key, draw(st.integers(1, n + 2))
+
+
+@settings(max_examples=300, deadline=None, derandomize=True)
+@given(inst=_tie_heavy_topk())
+def test_topk_equals_full_lexsort(inst):
+    """``topk`` is the first k columns of the full stable (distance, key)
+    sort of each row, whatever the ties."""
+    d, key, k = inst
+    full_key = np.broadcast_to(np.arange(d.shape[1]) if key is None else key, d.shape)
+    np.testing.assert_array_equal(topk(d, k, key), np.lexsort((full_key, d), axis=-1)[:, :k])
+
+
+def test_topk_rejects_k_below_one_and_passes_empty_input():
+    for k in (0, -1):
+        with pytest.raises(ValueError, match="k must be >= 1"):
+            topk(np.zeros((2, 3)), k)
+    assert topk(np.zeros((4, 0)), 3).shape == (4, 0)
+    assert topk(np.zeros((0, 5)), 3).shape == (0, 3)

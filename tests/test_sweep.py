@@ -30,24 +30,29 @@ def test_generate_router_configs_grid():
 
 def test_iterate_routing_configs_shapes(spark, rng):
     pts, asn, qs, gt = _setup(spark, rng)
-    cfgs = SW.iterate_routing_configs(
-        pts, asn, qs, gt, k=5, num_shards=4, budgets=(256,), num_voting_list=(20,),
-        policies=("min_dist", "frequency"),
+    grid = dict(
+        num_shards=4, budgets=(256,), num_voting_list=(20,), policies=("min_dist", "frequency"),
     )
+    cfgs = SW.iterate_routing_configs(pts, asn, qs, **grid)
     # 1 budget cfg × 1 nv × 2 policies + random = 3
     assert len(cfgs) == 3
     algs = {c["algorithm"] for c in cfgs}
     assert algs == {"KMeansTree-min_dist", "KMeansTree-frequency", "Random"}
     for c in cfgs:
-        assert 0.0 <= c["first_shard_recall"] <= 1.0
         routes = c["routes"]
         # a route relation: every query, probe_rank 1..#shards dense
         pr = routes.groupBy("query_id").agg(F.min("probe_rank").alias("mn"))
         assert pr.where(F.col("mn") != 1).count() == 0
+    # the sweep table carries every config's max-first-shard recall, from
+    # one aggregation over all configs: equal to the scalar form per config
+    pdf = SW.routing_sweep_pareto(pts, asn, qs, gt, k=5, nprobes_values=(1,), **grid)
+    fsr = pdf.set_index("algorithm")["first_shard_recall"]
+    nq = qs.count()
+    for c in cfgs:
+        assert 0.0 <= fsr[c["algorithm"]] <= 1.0
+        assert fsr[c["algorithm"]] == R.first_shard_recall(gt, asn, c["routes"], 5, nq)
     # trained routers must beat random on clustered data
-    trained = max(c["first_shard_recall"] for c in cfgs if c["algorithm"] != "Random")
-    rand = next(c["first_shard_recall"] for c in cfgs if c["algorithm"] == "Random")
-    assert trained > rand
+    assert fsr.drop("Random").max() > fsr["Random"]
 
 
 def test_routing_sweep_pareto_table(spark, rng):
