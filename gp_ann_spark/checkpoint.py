@@ -199,6 +199,10 @@ class SuperstepCheckpointer:
         assert self.base_dir is not None
         return os.path.join(self.base_dir, self.name, f"meta_{superstep}.json")
 
+    def record(self, superstep: int, metrics: dict[str, Any] | None = None) -> None:
+        """Append a superstep's metrics to ``history`` (``save`` does too)."""
+        self.history.append({"superstep": superstep, **(metrics or {})})
+
     def save(
         self, df: DataFrame, superstep: int, metrics: dict[str, Any] | None = None,
         prev: DataFrame | None = None,
@@ -206,7 +210,7 @@ class SuperstepCheckpointer:
         """``df`` replaces ``prev`` as superstep state in the caller's scope:
         a ``swap``, or with a ``base_dir`` a write and read-back of ``df``."""
         scope = _THREAD.scopes[-1]
-        self.history.append({"superstep": superstep, **(metrics or {})})
+        self.record(superstep, metrics)
         if self.base_dir is None:
             return scope.swap(df, prev)
         path = self._dir(superstep)
@@ -245,7 +249,11 @@ class SuperstepCheckpointer:
         start = self.latest()
         if start is None:
             return self.save(init, 0, metrics), 1
-        return init.sparkSession.read.parquet(self._dir(start)), start + 1
+        return self.load(init.sparkSession, start), start + 1
+
+    def load(self, spark: Any, superstep: int) -> DataFrame:
+        """A complete superstep's saved state."""
+        return spark.read.parquet(self._dir(superstep))
 
     def load_meta(self, superstep: int) -> dict[str, Any]:
         with open(self._meta_path(superstep)) as f:

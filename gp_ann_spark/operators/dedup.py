@@ -135,6 +135,32 @@ def minhash_band_pairs(signatures: DataFrame) -> DataFrame:
     return buckets.select(F.inline(pairs)).distinct()
 
 
+def _shared_counts(postings: DataFrame) -> DataFrame:
+    """(doc_a, doc_b, inter): the shingles of ``postings`` (doc_id, shingle)
+    each pair shares, over the pairs sharing at least one — a self-join."""
+    a = postings.select(F.col("doc_id").alias("doc_a"), "shingle")
+    b = postings.select(F.col("doc_id").alias("doc_b"), "shingle")
+    return (
+        a.join(b, "shingle")
+        .where(F.col("doc_a") < F.col("doc_b"))
+        .groupBy("doc_a", "doc_b")
+        .agg(F.count(F.lit(1)).alias("inter"))
+    )
+
+
+def _pair_counts(pairs: DataFrame, postings: DataFrame) -> DataFrame:
+    """(doc_a, doc_b, inter): the shingles of ``postings`` each (doc_a,
+    doc_b) pair shares — |pairs| × shingles per doc work, no self-join."""
+    pa = postings.select(F.col("doc_id").alias("doc_a"), "shingle")
+    pb = postings.select(F.col("doc_id").alias("doc_b"), "shingle")
+    return (
+        pairs.join(pa, "doc_a")
+        .join(pb, ["doc_b", "shingle"])
+        .groupBy("doc_a", "doc_b")
+        .agg(F.count(F.lit(1)).alias("inter"))
+    )
+
+
 def jaccard_pairs(
     docs: DataFrame,
     text_col: str = "text",
@@ -149,11 +175,13 @@ def jaccard_pairs(
     sharing ≥1 shingle are ever scored). ``max_doc_freq`` is the explicit
     skew guard: shingle document frequencies are computed with a *salted
     two-phase aggregation* (hub shingles spread over many reducers) and
-    shingles present in more than ``max_doc_freq`` docs are excluded from
-    CANDIDATE GENERATION only — the Jaccard of every found pair is still
-    computed over the full shingle sets, so values are exact; only pairs
-    sharing *exclusively* hub shingles can be missed. If ``candidates``
-    (doc_a, doc_b) is given (e.g. from minhash_band_pairs), verification is
+    shingles present in more than ``max_doc_freq`` docs (hubs) are excluded
+    from CANDIDATE GENERATION only: the self-join over the rare shingles
+    finds the pairs and counts their shared rare shingles, and a join over
+    the hub postings alone adds their shared hubs, so every found pair's
+    Jaccard is still over the full shingle sets — only pairs sharing
+    *exclusively* hub shingles can be missed. If ``candidates`` (doc_a,
+    doc_b) is given (e.g. from minhash_band_pairs), verification is
     restricted to it. Returns (doc_a, doc_b, jaccard) rounded to 6 dp.
     """
     with checkpoints() as cp:
@@ -161,40 +189,20 @@ def jaccard_pairs(
         # every join side: pinned, the corpus is shingled once
         sh = cp.pin(doc_shingles(docs, text_col, n), eager=False)
         sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
-        if max_doc_freq is not None and candidates is None:
+        if candidates is not None:
+            inter = _pair_counts(candidates, sh)
+        elif max_doc_freq is not None:
             from gp_ann_spark.operators.graph import salted_count
 
             dfreq = salted_count(sh, "shingle", salt_src="doc_id")
-            rare = dfreq.where(F.col("count") <= max_doc_freq).select("shingle")
-            shr = sh.join(rare, "shingle", "left_semi")
-            ca = shr.select(F.col("doc_id").alias("doc_a"), "shingle")
-            cb = shr.select(F.col("doc_id").alias("doc_b"), "shingle")
-            candidates = (
-                ca.join(cb, "shingle")
-                .where(F.col("doc_a") < F.col("doc_b"))
-                .select("doc_a", "doc_b")
-                .distinct()
-            )
-        if candidates is not None:
-            # exact intersections over the FULL shingle sets, candidate-bounded:
-            # |cand| × shingles work instead of the unguarded self-join
-            pa = sh.select(F.col("doc_id").alias("doc_a"), "shingle")
-            pb = sh.select(F.col("doc_id").alias("doc_b"), "shingle")
-            inter = (
-                candidates.join(pa, "doc_a")
-                .join(pb, ["doc_b", "shingle"])
-                .groupBy("doc_a", "doc_b")
-                .agg(F.count(F.lit(1)).alias("inter"))
+            hubs = dfreq.where(F.col("count") > max_doc_freq).select("shingle")
+            rare = _shared_counts(sh.join(hubs, "shingle", "left_anti"))
+            hub = _pair_counts(rare.select("doc_a", "doc_b"), sh.join(hubs, "shingle", "left_semi"))
+            inter = rare.join(hub.withColumnRenamed("inter", "_hub"), ["doc_a", "doc_b"], "left").select(
+                "doc_a", "doc_b", (F.col("inter") + F.coalesce(F.col("_hub"), F.lit(0))).alias("inter"),
             )
         else:
-            a = sh.select(F.col("doc_id").alias("doc_a"), "shingle")
-            b = sh.select(F.col("doc_id").alias("doc_b"), "shingle")
-            inter = (
-                a.join(b, "shingle")
-                .where(F.col("doc_a") < F.col("doc_b"))
-                .groupBy("doc_a", "doc_b")
-                .agg(F.count(F.lit(1)).alias("inter"))
-            )
+            inter = _shared_counts(sh)
         sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_sh").alias("na"))
         sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_sh").alias("nb"))
         return cp.keep(

@@ -6,7 +6,9 @@ algorithms here, whereas the reference only embeds LP-shaped affinity moves
 (``overlapping_partitioning.cpp:23-48``) and degree computations
 (``partitioning.cpp:219``). All are iterative DataFrame programs: one
 equi-join + one aggregation per superstep, state checkpointed every superstep
-(resumable; see ``gp_ann_spark.checkpoint``).
+(resumable; see ``gp_ann_spark.checkpoint``). ``connected_components`` runs
+the same supersteps in NumPy on the driver when the edge table has at most
+``MAX_DRIVER_EDGES`` rows.
 
 Scale design notes (100 TB / 10^12 edges):
 
@@ -22,10 +24,24 @@ Scale design notes (100 TB / 10^12 edges):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+import numpy as np
+import pandas as pd
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from gp_ann_spark.checkpoint import SuperstepCheckpointer, checkpoints
+
+# Largest edge table that connected_components and partition.graph_partition
+# collect and solve on the driver; larger ones run as DataFrame supersteps.
+# It is the largest size measured on graph_partition's driver path (4-core
+# VM, local[4], 16 shards, coarse_target=256): 455,844 corpus k-NN edges
+# took 16.5 s (the Spark path: 50.9 s, same assignment) and a 2,801,396-edge
+# 2-D mesh 125 s, at a driver-process peak RSS of 293 MB and 904 MB. Most of
+# that time is the initial partition of the coarse graph, which runs on the
+# driver on both paths. connected_components on a 2,796,612-edge 2-D mesh
+# (1.4M vertices, 12 supersteps) took 9.5 s at a driver-process peak RSS of
+# 527 MB.
+MAX_DRIVER_EDGES = 2_800_000
 
 
 def mirror(edges: DataFrame, *payload: str) -> DataFrame:
@@ -211,14 +227,37 @@ def connected_components(
     O(diameter) — the difference between ~12 and ~4000 rounds on the long
     chain components a k-NN graph can contain. Labels only shrink and always
     name a vertex of the same component, so the fixpoint is exactly the
-    per-component min (same output as plain min-propagation).
+    per-component min (same output as plain min-propagation). At most
+    ``max_iter`` supersteps run.
 
-    Scale notes: the edge table is partitioned once on src and reused every
-    superstep; the jump join's probe side is skewed toward popular labels
-    but each probe row matches exactly one build row (unique id) — AQE's
-    skew-join split keeps the hot partitions bounded.
+    An edge table of at most ``MAX_DRIVER_EDGES`` rows is collected once
+    and the same supersteps run in NumPy on the driver
+    (``_connected_components_local``); a larger one runs them as DataFrame
+    supersteps (``_connected_components_spark``). Both return the same
+    labels and record the same ``{"superstep", "changed"}`` history in the
+    checkpointer, superstep 0 being the initial labels. The Spark path saves
+    every superstep through the checkpointer; the driver path saves only
+    its final labels, so a durable checkpointer resumes either path.
     """
     ckpt = checkpointer or SuperstepCheckpointer(None, "cc")
+    # one non-eager checkpoint feeds the size probe and whichever path runs:
+    # the count materializes it, so the edges' upstream plan executes once
+    with checkpoints() as cp:
+        sel = cp.pin(edges.select("src", "dst"), eager=False)
+        if sel.count() > MAX_DRIVER_EDGES:
+            return cp.keep(_connected_components_spark(sel, max_iter, ckpt))
+        pdf = sel.toPandas()
+    return _connected_components_local(
+        edges.sparkSession, pdf["src"].to_numpy(np.int64), pdf["dst"].to_numpy(np.int64), max_iter, ckpt,
+    )
+
+
+def _connected_components_spark(edges: DataFrame, max_iter: int, ckpt: SuperstepCheckpointer) -> DataFrame:
+    """``connected_components`` as DataFrame supersteps. Scale notes: the
+    edge table is partitioned once on src and reused every superstep; the
+    jump join's probe side is skewed toward popular labels but each probe
+    row matches exactly one build row (unique id) — AQE's skew-join split
+    keeps the hot partitions bounded."""
     sym = _symmetrized_cached(edges)
 
     with checkpoints() as cp:
@@ -258,6 +297,50 @@ def connected_components(
                 break
         sym.unpersist()
         return cp.keep(labels)
+
+
+def _connected_components_local(
+    spark: SparkSession, src: np.ndarray, dst: np.ndarray, max_iter: int, ckpt: SuperstepCheckpointer,
+) -> DataFrame:
+    """``_connected_components_spark`` on a collected edge table, superstep
+    for superstep. Vertices are indices into the sorted id array, so a label
+    (the index of its min vertex) orders as the id it names."""
+    ids = np.unique(np.concatenate([src, dst]))
+    # each label push, sender → receiver, sorted by receiver: a superstep's
+    # per-vertex neighbour min is one segment reduction
+    send = np.searchsorted(ids, np.concatenate([src, dst]))
+    recv = np.searchsorted(ids, np.concatenate([dst, src]))
+    o = np.argsort(recv, kind="stable")
+    send, recv = send[o], recv[o]
+    heads = np.flatnonzero(np.r_[True, recv[1:] != recv[:-1]]) if len(recv) else np.empty(0, np.int64)
+    start = ckpt.latest()
+    if start is None:
+        labels, it0, last = np.arange(len(ids)), 1, (0, {"changed": None})
+    else:  # resume: the last complete superstep's labels, as indices
+        pdf = ckpt.load(spark, start).toPandas()
+        labels = np.empty(len(ids), np.int64)
+        labels[np.searchsorted(ids, pdf["id"].to_numpy(np.int64))] = np.searchsorted(ids, pdf["component"].to_numpy(np.int64))
+        it0, last = start + 1, None
+    for it in range(it0, max_iter + 1):
+        stepped = labels.copy()
+        if len(heads):
+            r = recv[heads]
+            stepped[r] = np.minimum(stepped[r], np.minimum.reduceat(labels[send], heads))
+        new = stepped[stepped]  # pointer jump
+        changed = int((new != labels).sum())
+        if last is not None:
+            ckpt.record(*last)
+        labels, last = new, (it, {"changed": changed})
+        if changed == 0:
+            break
+    out = spark.createDataFrame(pd.DataFrame({"id": ids, "component": ids[labels]}), "id long, component long")
+    if last is None:  # resumed with no superstep left: the checkpoint holds these labels
+        return out
+    if ckpt.base_dir is None:
+        ckpt.record(*last)
+        return out
+    with checkpoints() as cp:
+        return cp.keep(ckpt.save(out, *last))
 
 
 # ------------------------------------------------- Label propagation (LP)

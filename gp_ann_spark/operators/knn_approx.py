@@ -9,25 +9,33 @@ depth 14, brute-force each final bucket (``CrunchBucket`` :165-185), merge
 per-bucket top-k lists across buckets and 3 repetitions with dedup
 (:218-235).
 
-Spark-first shape — an iterative DataFrame loop, no driver recursion over
-data:
+Where a repetition's sketch runs depends on the point count, as the
+reference runs it in one process: a set of at most ``MAX_TASK_POINTS``
+points runs each repetition's whole sketch inside one Arrow task
+(``_sketch``, one ``groupBy("rep").applyInPandas`` task per repetition);
+a larger one runs it as DataFrame supersteps. Both paths draw the same
+hashes (``functions.xxhash``) and call the same kernels, so they return the
+same edges:
 
-- state is ``(rep, id, vec, bucket)`` where ``bucket`` is a path-encoded id
-  (parent_bucket * fanout_limit + leader_rank) — the recursion tree lives in
-  a column, bounded by MAX_DEPTH like the reference; every stage is keyed
-  on ``(rep, bucket)``, so ONE depth loop runs all repetitions, each an
-  independent sketch seeded ``seed + rep``;
-- leaders are a *deterministic seeded sample per bucket* (smallest
-  xxhash64(id, seed + rep, depth) — partition-independent, ≙ the seeded
-  std::sample at knn_graph.h:75);
-- point→leader assignment is one cogrouped ``applyInPandas`` per bucket
-  (blocked BLAS, top-``fanout`` per point);
-- finished buckets flow straight into the per-bucket brute-force stage —
-  only oversized buckets iterate again, and the loop stops when no
-  repetition has one;
+- state is ``(rep, id, vec, bucket)`` where ``bucket`` is a hash
+  path-encoded id (splitmix64 of parent bucket and leader rank) — the
+  recursion tree lives in a column, bounded by MAX_DEPTH like the
+  reference; every stage is keyed on ``(rep, bucket)``, so ONE depth loop
+  runs all repetitions, each an independent sketch seeded ``seed + rep``;
+- leaders are a *deterministic seeded sample per bucket*: the ``n_leaders``
+  smallest ``(xxhash64(id, seed + rep, depth), id)`` pairs —
+  partition-independent, ≙ the seeded std::sample at knn_graph.h:75;
+- point→leader assignment (``_leader_children``) is blocked BLAS, top-
+  ``fanout`` leaders per point, one cogrouped ``applyInPandas`` per bucket
+  on the superstep path;
+- buckets the depth cap leaves oversized are hash-split, buckets under
+  ``MIN_CLUSTER_SIZE`` are packed together, and every final bucket is
+  brute-forced (``_crunch``) into distinct-id top-k candidates;
 - candidates from all buckets and repetitions form one relation, then one
   ``merge_topk`` (groupBy + window) deduplicates — lock-free vs the
-  reference's spinlocked merge.
+  reference's spinlocked merge. An in-process sketch first applies the
+  same rule to its own repetition (``_merge_topk_local``), so it ships
+  k rows per point, not k per bucket copy.
 """
 
 from __future__ import annotations
@@ -38,6 +46,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from gp_ann_spark.functions.distances import distance_matrix, topk
+from gp_ann_spark.functions.xxhash import xxhash64
 from gp_ann_spark.checkpoint import checkpoints
 from gp_ann_spark.checkpoint import realias as _realias
 from gp_ann_spark.operators.knn import merge_topk, symmetrize
@@ -54,6 +63,22 @@ MAX_MERGED_CLUSTER_SIZE = 2500
 MAX_DEPTH = 14
 REPETITIONS = 3
 SEED = 555
+# Largest point set whose repetitions each run as one in-process sketch
+# (see the module doc); larger ones run as DataFrame supersteps. Measured
+# on generated points (100 Gaussian clusters, d = 64, library defaults, 3
+# repetitions; 4-core VM, local[4], after a warm-up build), in-task vs
+# superstep wall time: 7.8 vs 12.8 s at 20k points, 13.7 vs 19.1 s at 50k,
+# 28.8 vs 32.9 s at 100k and 79.0 vs 69.5 s at 200k, the same edges at
+# every size. Peak Python worker RSS in-task: 578 MB at 100k.
+MAX_TASK_POINTS = 100_000
+# Rows per leader-assignment block: a (rows × leaders) distance matrix stays
+# at most 4096 × MAX_LEADERS doubles (49 MB).
+ASSIGN_BLOCK_ROWS = 4096
+# The superstep path ranks only a hash prefix of a bucket expected to hold
+# this many times its (n_leaders + 16) leaders; a bucket whose prefix comes
+# up short ranks its whole membership.
+LEADER_PREFILTER_MARGIN = 4
+_PHI = np.uint64(0x9E3779B97F4A7C15)
 
 
 def _mix64(x: np.ndarray) -> np.ndarray:
@@ -67,39 +92,169 @@ def _mix64(x: np.ndarray) -> np.ndarray:
     return x.astype(np.int64)
 
 
+def _n_leaders(depth: int, n: int, top_level_leaders: int) -> int:
+    """Leaders sampled from a bucket of ``n`` points (knn_graph.h:72-75);
+    the superstep path writes the same rule as a Column expression."""
+    if depth == 0:
+        return top_level_leaders
+    return min(MAX_LEADERS, max(2, int(n * LEADER_FRACTION)))
+
+
+def _leader_children(
+    bucket: np.ndarray, X: np.ndarray, L: np.ndarray, ranks: np.ndarray, fanout: int, metric: str,
+) -> tuple[np.ndarray, np.ndarray]:
+    """Each row's top-``fanout`` leaders in (distance, leader_rank) order
+    (≙ ClosestLeaders defs.cpp:87-96), blocked over rows. Returns (row index,
+    child bucket) per pick, the child splitmix64(bucket·φ + rank + 1) — a
+    HASH path encoding, so bucket ids never need a per-level renumbering. A
+    64-bit collision merges two buckets — harmless in an approximate
+    builder: distances are exact inside the merged bucket and the oversize
+    guard re-splits it."""
+    idx = np.concatenate([
+        topk(distance_matrix(X[s:s + ASSIGN_BLOCK_ROWS], L, metric), fanout, key=ranks)
+        for s in range(0, len(X), ASSIGN_BLOCK_ROWS)
+    ])
+    f = idx.shape[1]
+    child = np.repeat(bucket.astype(np.uint64) * _PHI, f) + (ranks[idx.ravel()].astype(np.uint64) + np.uint64(1))
+    return np.repeat(np.arange(len(X)), f), _mix64(child)
+
+
+def _split_children(bucket: np.ndarray, ids: np.ndarray, ns: np.ndarray, seed: np.ndarray) -> np.ndarray:
+    """Child bucket of a force split into ``ns`` parts: the superstep path's
+    ``xxhash64(bucket, seed, "split", pmod(xxhash64(id, seed, "split"), ns))``."""
+    return xxhash64(bucket, seed, "split", np.mod(xxhash64(ids, seed, "split"), ns))
+
+
+def _crunch(ids: np.ndarray, X: np.ndarray, k: int, metric: str) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """All-pairs k-NN inside one bucket (≙ CrunchBucket knn_graph.h:165-185):
+    dense m×m BLAS, then each row's k best DISTINCT other ids in
+    ``merge_topk``'s (weight, dst) order, whatever the row order. Only the
+    first column of each id is a candidate, and never for its own rows.
+    Returns (src, dst, weight)."""
+    m = len(ids)
+    if m < 2:
+        return np.empty(0, np.int64), np.empty(0, np.int64), np.empty(0)
+    d = distance_matrix(X, X, metric)
+    _, first, inv = np.unique(ids, return_index=True, return_inverse=True)
+    repeat = np.ones(m, dtype=bool)
+    repeat[first] = False
+    d[:, repeat] = np.inf
+    d[np.arange(m), first[inv]] = np.inf
+    c = topk(d, k, key=ids)
+    w = np.take_along_axis(d, c, axis=1).ravel()
+    keep = np.isfinite(w)
+    r = np.repeat(np.arange(m), c.shape[1])[keep]
+    return ids[r], ids[c.ravel()[keep]], w[keep]
+
+
+def _groups(bucket: np.ndarray, row: np.ndarray) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Sort permutation of the (bucket, row) pairs, and each bucket's
+    [start, end) in it."""
+    o = np.lexsort((row, bucket))
+    b = bucket[o]
+    starts = np.flatnonzero(np.r_[True, b[1:] != b[:-1]])
+    return o, starts, np.r_[starts[1:], len(b)]
+
+
+def _sketch(
+    ids: np.ndarray, X: np.ndarray, seed: int, k: int, metric: str, fanout: int,
+    max_cluster_size: int, top_level_leaders: int, max_depth: int,
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """One repetition's whole sketch in one process, step for step as
+    ``_knn_graph_supersteps`` runs it: the leader recursion, the depth-cap
+    force split, the small-bucket merge and the per-bucket brute force.
+    ``ids`` is ascending, so row order is id order everywhere. Returns the
+    candidates (src, dst, weight)."""
+    seed32 = np.asarray(seed).astype(np.int32)
+    row, bucket = np.arange(len(ids)), np.zeros(len(ids), np.int64)
+    for depth in range(max_depth):
+        o, starts, ends = _groups(bucket, row)
+        row, bucket = row[o], bucket[o]
+        sizes = ends - starts
+        big = sizes > max_cluster_size
+        if not big.any():
+            break
+        keep = np.repeat(~big, sizes)
+        rows, buckets = [row[keep]], [bucket[keep]]
+        for s, e in zip(starts[big], ends[big]):
+            members = row[s:e]
+            nl = _n_leaders(depth, e - s, top_level_leaders)
+            if nl < 1:  # no leaders: the bucket stays as it is
+                rows.append(members)
+                buckets.append(bucket[s:e])
+                continue
+            # the n_leaders smallest (hash, id) pairs, in rank order
+            lead = members[topk(xxhash64(ids[members], seed32, np.int32(depth))[None, :], nl, key=ids[members])[0]]
+            r, child = _leader_children(
+                bucket[s:e], X[members], X[lead], np.arange(len(lead)), fanout if depth == 0 else 1, metric,
+            )
+            rows.append(members[r])
+            buckets.append(child)
+        row, bucket = np.concatenate(rows), np.concatenate(buckets)
+    # depth-cap force split
+    _, inv, sizes = np.unique(bucket, return_inverse=True, return_counts=True)
+    big = (sizes > max_cluster_size)[inv]
+    ns = np.ceil(sizes / max_cluster_size).astype(np.int64)[inv]
+    bucket[big] = _split_children(bucket[big], ids[row[big]], ns[big], seed32)
+    # small-bucket merge: greedy packing in bucket-id order
+    keys, inv, sizes = np.unique(bucket, return_inverse=True, return_counts=True)
+    small = sizes < MIN_CLUSTER_SIZE
+    keys[small] = -(np.floor(np.cumsum(sizes[small]) / MAX_MERGED_CLUSTER_SIZE).astype(np.int64) + 1)
+    bucket = keys[inv]
+    # dedup (bucket, id), then brute-force every bucket
+    o, starts, ends = _groups(bucket, row)
+    row, bucket = row[o], bucket[o]
+    first = np.r_[True, (row[1:] != row[:-1]) | (bucket[1:] != bucket[:-1])]
+    out = []
+    for s, e in zip(starts, ends):
+        members = row[s:e][first[s:e]]
+        out.append(_crunch(ids[members], X[members], k, metric))
+    return _merge_topk_local(*(np.concatenate(col) for col in zip(*out)), k)
+
+
+def _merge_topk_local(src: np.ndarray, dst: np.ndarray, w: np.ndarray, k: int):
+    """``knn.merge_topk`` in NumPy: min weight per (src, dst), then each
+    src's k best in (weight, dst) order. Applied to one repetition's
+    candidates it drops only rows the global merge drops too, since that
+    merge's order is a total order over (src, dst) pairs."""
+    if len(src) == 0:
+        return src, dst, w
+    o = np.lexsort((w, dst, src))
+    src, dst, w = src[o], dst[o], w[o]
+    first = np.r_[True, (src[1:] != src[:-1]) | (dst[1:] != dst[:-1])]
+    src, dst, w = src[first], dst[first], w[first]
+    o = np.lexsort((dst, w, src))
+    src, dst, w = src[o], dst[o], w[o]
+    starts = np.flatnonzero(np.r_[True, src[1:] != src[:-1]])
+    rank = np.arange(len(src)) - np.repeat(starts, np.diff(np.r_[starts, len(src)]))
+    keep = rank < k
+    return src[keep], dst[keep], w[keep]
+
+
+def _vectors(pdf: pd.DataFrame) -> np.ndarray:
+    return np.stack(pdf["vec"].to_numpy()).astype(np.float64)
+
+
 def _assign_to_leaders(
     pts: DataFrame, leaders: DataFrame, fanout: int, metric: str,
 ) -> DataFrame:
     """Within each bucket, assign every point to its top-``fanout`` closest
-    leaders; new bucket = splitmix64(old·φ + leader_rank + 1) — a HASH path
-    encoding instead of positional (old·MAX_LEADERS + rank), so bucket ids
-    never need a per-level global renumbering (the round-1 densify pass cost
-    ~6 driver jobs per level per repetition). A 64-bit collision merges two
-    buckets — harmless in an approximate builder: distances are exact inside
-    the merged bucket and the oversize guard re-splits it.
-    Cogrouped applyInPandas: one dense (m×d)@(L×d) BLAS per bucket
-    (≙ ClosestLeaders defs.cpp:87-96 at bucket granularity)."""
+    leaders (``_leader_children``): one cogrouped applyInPandas per bucket,
+    points in id order and leaders in rank order whatever the shuffle
+    delivered."""
 
     def assign(pts_pdf: pd.DataFrame, lead_pdf: pd.DataFrame) -> pd.DataFrame:
         if len(pts_pdf) == 0:
             return pd.DataFrame()  # Spark accepts a column-less empty result
         if len(lead_pdf) == 0:  # no leaders sampled (tiny bucket) — keep as-is
             return pts_pdf[["rep", "id", "bucket"]]
-        X = np.stack(pts_pdf["vec"].to_numpy()).astype(np.float64)
-        L = np.stack(lead_pdf["vec"].to_numpy()).astype(np.float64)
-        ranks = lead_pdf["leader_rank"].to_numpy()
-        # (distance, leader_rank) order: duplicate leader vectors are legal,
-        # and the pick must not follow the shuffle's arrival order
-        idx = topk(distance_matrix(X, L, metric), fanout, key=ranks)
-        base = pts_pdf["bucket"].to_numpy().astype(np.uint64) * np.uint64(0x9E3779B97F4A7C15)
-        child = np.repeat(base, idx.shape[1]) + (ranks[idx.ravel()].astype(np.uint64) + np.uint64(1))
-        return pd.DataFrame(
-            {
-                "rep": pts_pdf["rep"].iloc[0],
-                "id": np.repeat(pts_pdf["id"].to_numpy(), idx.shape[1]),
-                "bucket": _mix64(child),
-            }
+        pts_pdf = pts_pdf.sort_values("id", ignore_index=True)
+        lead_pdf = lead_pdf.sort_values("leader_rank", ignore_index=True)
+        r, child = _leader_children(
+            pts_pdf["bucket"].to_numpy(), _vectors(pts_pdf), _vectors(lead_pdf),
+            lead_pdf["leader_rank"].to_numpy(), fanout, metric,
         )
+        return pd.DataFrame({"rep": pts_pdf["rep"].iloc[0], "id": pts_pdf["id"].to_numpy()[r], "bucket": child})
 
     return pts.groupBy("rep", "bucket").cogroup(leaders.groupBy("rep", "bucket")).applyInPandas(
         assign, schema="rep int, id long, bucket long"
@@ -107,28 +262,13 @@ def _assign_to_leaders(
 
 
 def _bucket_bruteforce(bucketed: DataFrame, k: int, metric: str) -> DataFrame:
-    """All-pairs k-NN inside each bucket (≙ CrunchBucket knn_graph.h:165-185):
-    one applyInPandas per bucket, dense m×m BLAS, local top-k."""
+    """``_crunch`` per (rep, bucket): one applyInPandas per bucket, rows in
+    id order."""
 
     def crunch(pdf: pd.DataFrame) -> pd.DataFrame:
-        m = len(pdf)
-        if m < 2:
-            return pd.DataFrame({"src": [], "dst": [], "weight": []}).astype(
-                {"src": "int64", "dst": "int64", "weight": "float64"}
-            )
-        X = np.stack(pdf["vec"].to_numpy()).astype(np.float64)
-        ids = pdf["id"].to_numpy()
-        d = distance_matrix(X, X, metric)
-        # a point can occur twice in a merged bucket (fanout duplication) —
-        # mask every equal-id pair, not just the diagonal
-        d[ids[:, None] == ids[None, :]] = np.inf
-        # merge_topk's (weight, dst) order, whatever row order the shuffle
-        # delivered
-        c = topk(d, k, key=ids)
-        w = np.take_along_axis(d, c, axis=1).ravel()
-        keep = np.isfinite(w)  # drop masked equal-id pairs
-        r = np.repeat(np.arange(m), c.shape[1])[keep]
-        return pd.DataFrame({"src": ids[r], "dst": ids[c.ravel()[keep]], "weight": w[keep]})
+        pdf = pdf.sort_values("id", kind="stable", ignore_index=True)
+        src, dst, w = _crunch(pdf["id"].to_numpy(np.int64), _vectors(pdf), k, metric)
+        return pd.DataFrame({"src": src, "dst": dst, "weight": w})
 
     return bucketed.groupBy("rep", "bucket").applyInPandas(crunch, schema="src long, dst long, weight double")
 
@@ -205,7 +345,8 @@ def _force_split_big_buckets(pts: DataFrame, max_cluster_size: int, seed: int) -
                 F.when(
                     F.col("_ns").isNotNull(),
                     # hash-namespace the split children (bucket ids are already
-                    # mixed hashes — positional offsets would overflow int64)
+                    # mixed hashes — positional offsets would overflow int64);
+                    # _split_children is the same rule in NumPy
                     F.xxhash64(
                         "bucket", seed_col, F.lit("split"),
                         F.pmod(F.xxhash64("id", seed_col, F.lit("split")), F.col("_ns")),
@@ -213,6 +354,125 @@ def _force_split_big_buckets(pts: DataFrame, max_cluster_size: int, seed: int) -
                 ).otherwise(F.col("bucket")).alias("bucket"),
             )
         )
+
+
+def _per_rep(points: DataFrame, repetitions: int) -> DataFrame:
+    """Every point once per repetition, with an int ``rep`` column."""
+    reps = points.sparkSession.range(repetitions).select(F.col("id").cast("int").alias("rep"))
+    return points.crossJoin(F.broadcast(reps))
+
+
+def _knn_graph_in_task(
+    pts: DataFrame, k: int, metric: str, repetitions: int, fanout: int, max_cluster_size: int,
+    top_level_leaders: int, max_depth: int, seed: int,
+) -> DataFrame:
+    """Candidates of every repetition, each sketched whole by ``_sketch`` in
+    one Arrow task: the points are range-partitioned on ``rep`` into one
+    partition per repetition (a fixed-count repartition, which AQE does not
+    coalesce)."""
+
+    def sketch(pdf: pd.DataFrame) -> pd.DataFrame:
+        pdf = pdf.sort_values("id", ignore_index=True)
+        src, dst, w = _sketch(
+            pdf["id"].to_numpy(np.int64), _vectors(pdf), seed + int(pdf["rep"].iloc[0]), k, metric, fanout,
+            max_cluster_size, top_level_leaders, max_depth,
+        )
+        return pd.DataFrame({"src": src, "dst": dst, "weight": w})
+
+    return (
+        _per_rep(pts, repetitions)
+        .repartitionByRange(repetitions, "rep")
+        .groupBy("rep")
+        .applyInPandas(sketch, schema="src long, dst long, weight double")
+    )
+
+
+def _knn_graph_supersteps(
+    points: DataFrame, k: int, metric: str, repetitions: int, fanout: int, max_cluster_size: int,
+    top_level_leaders: int, max_depth: int, seed: int,
+) -> DataFrame:
+    """Candidates of every repetition as DataFrame supersteps: one depth
+    loop keyed by (rep, bucket), then the force split, the small-bucket
+    merge and the per-bucket brute force."""
+    pts0 = _per_rep(points, repetitions).select("rep", "id", "vec", F.lit(0).cast("long").alias("bucket"))
+    # each repetition's hash seed, seed + rep: an int, since xxhash64 hashes
+    # an int and a long differently and the leader sample depends on it
+    rep_seed = (F.lit(seed) + F.col("rep")).cast("int")
+    with checkpoints() as cp:
+        pts = cp.pin(pts0)
+        for depth in range(max_depth):
+            with checkpoints() as level:
+                # localCheckpoint the (tiny) size table: breaks the
+                # self-join lineage between pts and its own aggregate.
+                # Non-eager — the count() is the materializing action,
+                # one job instead of two.
+                sizes = level.pin(pts.groupBy("rep", "bucket").agg(F.count(F.lit(1)).alias("n")), eager=False)
+                big = sizes.where(F.col("n") > max_cluster_size)
+                if big.count() == 0:  # no repetition has an oversized bucket
+                    break
+                big_pts = pts.join(big.select("rep", "bucket"), ["rep", "bucket"], "left_semi")
+                done_pts = pts.join(big.select("rep", "bucket"), ["rep", "bucket"], "left_anti")
+                # _n_leaders as a Column
+                n_leaders_expr = (
+                    F.when(F.lit(depth) == 0, F.lit(top_level_leaders))
+                    .otherwise(F.least(F.lit(MAX_LEADERS), F.greatest(F.lit(2), (F.col("n") * LEADER_FRACTION).cast("int"))))
+                )
+                big_sized = big.withColumn("n_leaders", n_leaders_expr).select("rep", "bucket", "n", "n_leaders")
+                # the n_leaders smallest (hash, id) pairs win — but ranking a
+                # bucket's full membership funnels it through ONE window-sort
+                # task (at depth 0 the bucket is the whole corpus: the exact
+                # scale-killer functions/windows.py warns about). Rank a hash
+                # PREFIX instead: hashes below the quantile of the uniform
+                # int64 hash space that keeps LEADER_PREFILTER_MARGIN ×
+                # (n_leaders + 16) rows on average. The prefix of the ranking
+                # order holds the same leaders whenever it keeps at least
+                # n_leaders rows; a bucket whose prefix comes up short ranks
+                # its whole membership instead.
+                margin = LEADER_PREFILTER_MARGIN * (F.col("n_leaders") + 16)
+                p_keep = margin.cast("double") / F.col("n")
+                h_thr = F.least(
+                    F.lit(-9.223372036854776e18) + p_keep * F.lit(1.8446744073709552e19),
+                    F.lit(9.223372036854e18),
+                ).cast("long")
+                hashed = big_pts.join(F.broadcast(big_sized), ["rep", "bucket"]).withColumn(
+                    "_h", F.xxhash64("id", rep_seed, F.lit(depth))
+                )
+                prefix = (F.col("n") <= margin) | (F.col("_h") < h_thr)
+                full_prefix = (
+                    hashed.where(prefix).groupBy("rep", "bucket", "n_leaders").count()
+                    .where(F.col("count") >= F.col("n_leaders"))
+                    .select("rep", "bucket", F.lit(True).alias("_enough"))
+                )
+                w = Window.partitionBy("rep", "bucket").orderBy("_h", "id")
+                leaders = level.pin(
+                    hashed.join(F.broadcast(full_prefix), ["rep", "bucket"], "left")
+                    .where(prefix | F.col("_enough").isNull())
+                    .withColumn("_r", F.row_number().over(w))
+                    .where(F.col("_r") <= F.col("n_leaders"))
+                    .select("rep", "bucket", "id", "vec", (F.col("_r") - 1).cast("long").alias("leader_rank")),
+                    # leaders derive from big_pts; cogrouping the two
+                    # without a lineage break trips the
+                    # ambiguous-self-join check. The NON-eager checkpoint
+                    # breaks lineage identically (the plan becomes a
+                    # LogicalRDD either way) but defers materialization
+                    # to the state swap's job below — one driver job per
+                    # depth instead of two.
+                    eager=False,
+                )
+                # fanout>1 only on the first split (knn_graph.h:133
+                # recurses with fanout=1): duplication is bounded at
+                # fanout×n per repetition.
+                level_fanout = fanout if depth == 0 else 1
+                reassigned = _assign_to_leaders(big_pts, _realias(leaders), level_fanout, metric)
+                new_pts = reassigned.join(points, "id").select("rep", "id", "vec", "bucket")
+                # hash path encoding (see _leader_children): done buckets
+                # keep their ids, split buckets get mixed-hash children —
+                # no per-level renumbering pass, no global window, no id
+                # overflow.
+                pts = cp.swap(done_pts.unionByName(new_pts), pts)
+        pts = _force_split_big_buckets(pts, max_cluster_size, seed)
+        pts = _merge_small_buckets(pts).dropDuplicates(["rep", "bucket", "id"])
+        return cp.keep(_bucket_bruteforce(pts.select("rep", "bucket", "id", "vec"), k, metric))
 
 
 def build_knn_graph(
@@ -231,81 +491,20 @@ def build_knn_graph(
 
     ≙ BuildApproximateNearestNeighborGraph (knn_graph.h:145-162): union of
     ``repetitions`` recursive sketches, merged + deduped to per-src top-k.
+    At most ``MAX_TASK_POINTS`` points sketch each repetition in one Arrow
+    task (``_knn_graph_in_task``); more run DataFrame supersteps
+    (``_knn_graph_supersteps``). Both return the same edges.
     """
-    reps = F.broadcast(points.sparkSession.range(repetitions).select(F.col("id").cast("int").alias("rep")))
-    pts0 = points.select("id", "vec").crossJoin(reps).select("rep", "id", "vec", F.lit(0).cast("long").alias("bucket"))
-    # each repetition's hash seed, seed + rep: an int, since xxhash64 hashes
-    # an int and a long differently and the leader sample depends on it
-    rep_seed = (F.lit(seed) + F.col("rep")).cast("int")
     with checkpoints() as cp:
-        pts = cp.pin(pts0)
-        for depth in range(max_depth):
-            with checkpoints() as level:
-                # localCheckpoint the (tiny) size table: breaks the
-                # self-join lineage between pts and its own aggregate.
-                # Non-eager — the count() is the materializing action,
-                # one job instead of two.
-                sizes = level.pin(pts.groupBy("rep", "bucket").agg(F.count(F.lit(1)).alias("n")), eager=False)
-                big = sizes.where(F.col("n") > max_cluster_size)
-                if big.count() == 0:  # no repetition has an oversized bucket
-                    break
-                big_pts = pts.join(big.select("rep", "bucket"), ["rep", "bucket"], "left_semi")
-                done_pts = pts.join(big.select("rep", "bucket"), ["rep", "bucket"], "left_anti")
-                # deterministic per-bucket leader sample: smallest hashes win
-                n_leaders_expr = (
-                    F.when(F.lit(depth) == 0, F.lit(top_level_leaders))
-                    .otherwise(F.least(F.lit(MAX_LEADERS), F.greatest(F.lit(2), (F.col("n") * LEADER_FRACTION).cast("int"))))
-                )
-                big_sized = big.withColumn("n_leaders", n_leaders_expr).select("rep", "bucket", "n", "n_leaders")
-                w = Window.partitionBy("rep", "bucket").orderBy("_h")
-                # "n_leaders smallest hashes win" — but ranking the bucket's full
-                # membership funnels it through ONE window-sort task (at depth 0
-                # the bucket is the whole corpus: the exact scale-killer
-                # functions/windows.py warns about). Pre-filter to a hash PREFIX
-                # first: keep hashes below the ~(4·n_leaders+64)/n quantile of the
-                # uniform int64 hash space, a distributed filter leaving ~4× the
-                # needed rows, then rank only survivors. The filter is a prefix of
-                # the ranking order, so the selected leaders are identical to the
-                # unfiltered version whenever ≥ n_leaders rows survive (mean 4×
-                # margin; Chernoff-negligible otherwise, and a short bucket just
-                # yields fewer leaders — the oversize guard re-splits it).
-                p_keep = (4.0 * F.col("n_leaders") + 64.0) / F.col("n")
-                h_thr = F.least(
-                    F.lit(-9.223372036854776e18) + p_keep * F.lit(1.8446744073709552e19),
-                    F.lit(9.223372036854e18),
-                ).cast("long")
-                leaders = level.pin(
-                    big_pts.join(F.broadcast(big_sized), ["rep", "bucket"])
-                    .withColumn("_h", F.xxhash64("id", rep_seed, F.lit(depth)))
-                    .where((F.col("n") <= 4 * F.col("n_leaders") + 64) | (F.col("_h") < h_thr))
-                    .withColumn("_r", F.row_number().over(w))
-                    .where(F.col("_r") <= F.col("n_leaders"))
-                    .select("rep", "bucket", "id", "vec", (F.col("_r") - 1).cast("long").alias("leader_rank")),
-                    # leaders derive from big_pts; cogrouping the two
-                    # without a lineage break trips the
-                    # ambiguous-self-join check. The NON-eager checkpoint
-                    # breaks lineage identically (the plan becomes a
-                    # LogicalRDD either way) but defers materialization
-                    # to the state swap's job below — one driver job per
-                    # depth instead of two.
-                    eager=False,
-                )
-                # fanout>1 only on the first split (knn_graph.h:133
-                # recurses with fanout=1): duplication is bounded at
-                # fanout×n per repetition.
-                level_fanout = fanout if depth == 0 else 1
-                reassigned = _assign_to_leaders(big_pts, _realias(leaders), level_fanout, metric)
-                new_pts = reassigned.join(points.select("id", "vec"), "id").select("rep", "id", "vec", "bucket")
-                # hash path encoding (see _assign_to_leaders): done
-                # buckets keep their ids, split buckets get mixed-hash
-                # children — no per-level renumbering pass, no global
-                # window, no id overflow.
-                pts = cp.swap(done_pts.unionByName(new_pts), pts)
-        pts = _force_split_big_buckets(pts, max_cluster_size, seed)
-        pts = _merge_small_buckets(pts).dropDuplicates(["rep", "bucket", "id"])
-        edges = merge_topk(_bucket_bruteforce(pts.select("rep", "bucket", "id", "vec"), k, metric), k)
+        # one non-eager checkpoint feeds the size probe and whichever path
+        # runs: the count materializes it, so the points' plan executes once
+        pts = cp.pin(points.select("id", "vec"), eager=False)
+        build = _knn_graph_in_task if pts.count() <= MAX_TASK_POINTS else _knn_graph_supersteps
+        edges = merge_topk(
+            build(pts, k, metric, repetitions, fanout, max_cluster_size, top_level_leaders, max_depth, seed), k,
+        )
         # a lazy pin: under AQE taking it runs the shuffle stages, so the
-        # loop's checkpoints are released here and the first action on the
+        # path's checkpoints are released here and the first action on the
         # result runs only its last stage
         return cp.keep(cp.pin(symmetrize(edges) if symmetric else edges, eager=False))
 

@@ -12,8 +12,9 @@ OGP affinity moves (:23-141).
 The graph partitioner is the north_star centerpiece: multilevel
 **label-propagation coarsening → driver-local initial partition → projection
 + balance-constrained LP refinement**. Where it runs depends on the edge
-table's size: one of at most ``MAX_DRIVER_EDGES`` rows is collected once
-and the driver runs the whole algorithm in vectorized NumPy; above it, Spark
+table's size: one of at most ``MAX_DRIVER_EDGES`` rows (``graph``'s
+constant, which ``connected_components`` shares) is collected once and the
+driver runs the whole algorithm in vectorized NumPy; above it, Spark
 runs the same algorithm as DataFrame supersteps, with the same tie-breaks
 and therefore the same assignment:
 
@@ -38,7 +39,7 @@ from gp_ann_spark.functions.windows import bounded_global_window
 from gp_ann_spark.operators import kmeans as KM
 from gp_ann_spark.checkpoint import checkpoints
 from gp_ann_spark.checkpoint import realias as _realias
-from gp_ann_spark.operators.graph import vertices
+from gp_ann_spark.operators.graph import MAX_DRIVER_EDGES, vertices
 
 SEED = KM.SEED
 
@@ -144,14 +145,6 @@ def imbalance(assignment: DataFrame, num_shards: int | None = None) -> float:
 # ------------------------------------------------ multilevel graph partition
 MAX_COARSEN_LEVELS = 8
 LP_ROUNDS = 2  # label-propagation rounds per coarsening level, on both paths
-# Largest edge table graph_partition collects and partitions on the driver;
-# larger ones run as DataFrame supersteps. It is the largest size measured
-# on the driver path (4-core VM, local[4], 16 shards, coarse_target=256):
-# 455,844 corpus k-NN edges took 16.5 s (the Spark path: 50.9 s, same
-# assignment) and a 2,801,396-edge 2-D mesh 125 s, at a driver-process peak
-# RSS of 293 MB and 904 MB. Most of that time is the initial partition of
-# the coarse graph, which runs on the driver on both paths.
-MAX_DRIVER_EDGES = 2_800_000
 
 
 def _lp_coarsen_level(edges: DataFrame, weights: DataFrame, cap: int) -> DataFrame:

@@ -6,7 +6,11 @@ from gp_ann_spark.session import get_spark
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark("gp_ann_spark_tests", master="local[4]", shuffle_partitions=4)
+    # a bounded heap: with the library's 48g default the session's JVM grows
+    # past the RAM of a 16 GB box over the suite and is killed
+    s = get_spark(
+        "gp_ann_spark_tests", master="local[4]", shuffle_partitions=4, extra_conf={"spark.driver.memory": "6g"}
+    )
     yield s
     s.stop()
 

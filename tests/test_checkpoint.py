@@ -98,11 +98,27 @@ def small_graph(spark):
     return pts, edges, asn
 
 
+def forced(module, name, value, fn):
+    """``fn()`` with the hand-off constant ``module.name`` set to ``value``."""
+    old = getattr(module, name)
+    setattr(module, name, value)
+    try:
+        return fn()
+    finally:
+        setattr(module, name, old)
+
+
+def knn_graph(pts):
+    return KA.build_knn_graph(pts, k=5, max_cluster_size=40, top_level_leaders=6, repetitions=2)
+
+
 OPERATORS = {
-    "build_knn_graph": lambda pts, edges, asn: KA.build_knn_graph(
-        pts, k=5, max_cluster_size=40, top_level_leaders=6, repetitions=2
-    ),
+    "build_knn_graph": lambda pts, edges, asn: knn_graph(pts),
+    "build_knn_graph_supersteps": lambda pts, edges, asn: forced(KA, "MAX_TASK_POINTS", -1, lambda: knn_graph(pts)),
     "connected_components": lambda pts, edges, asn: G.connected_components(edges),
+    "connected_components_spark": lambda pts, edges, asn: forced(
+        G, "MAX_DRIVER_EDGES", -1, lambda: G.connected_components(edges)
+    ),
     "pagerank": lambda pts, edges, asn: G.pagerank(edges, max_iter=6),
     "graph_partition_spark": lambda pts, edges, asn: P._graph_partition_spark(edges, 4, 0.05, 32, 2, P.SEED),
     "kmeans_partition": lambda pts, edges, asn: P.kmeans_partition(pts, 4, n_iter=3),

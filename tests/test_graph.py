@@ -86,6 +86,8 @@ def test_connected_components_log_rounds_on_long_chain(spark):
     labels = G.connected_components(make_edges_df(spark, path_graph(64)), checkpointer=cp)
     assert {r["component"] for r in labels.collect()} == {0}
     n_supersteps = len(cp.history) - 1  # history[0] is the init save
+    assert cp.history[0] == {"superstep": 0, "changed": None}
+    assert n_supersteps >= 1 and cp.history[-1]["changed"] == 0
     assert n_supersteps <= 10, f"expected O(log n) rounds, took {n_supersteps}"
 
 
@@ -149,3 +151,54 @@ def test_pagerank_checkpoint_resume(spark, tmp_path):
     assert resumed.select("n_iter").first()["n_iter"] > 3
     for v in ref:
         assert got[v] == pytest.approx(ref[v], abs=1e-9)
+
+
+def cc_both_paths(spark, monkeypatch, edge_list, **kw):
+    """(rows, history) of connected_components on the driver path and on
+    the DataFrame supersteps, MAX_DRIVER_EDGES monkeypatched to force each."""
+    from gp_ann_spark.checkpoint import SuperstepCheckpointer
+
+    edges = make_edges_df(spark, edge_list)
+    out = []
+    for cutoff in (G.MAX_DRIVER_EDGES, -1):
+        monkeypatch.setattr(G, "MAX_DRIVER_EDGES", cutoff)
+        cp = SuperstepCheckpointer(None, "cc")
+        rows = sorted((r["id"], r["component"]) for r in G.connected_components(edges, checkpointer=cp, **kw).collect())
+        out.append((rows, cp.history))
+    return out
+
+
+@pytest.mark.parametrize(
+    "case",
+    [
+        pytest.param(dict(edge_list=two_cliques_bridge()[:-1] + star_graph(4)[1:]), id="disconnected"),
+        pytest.param(dict(edge_list=path_graph(64)), id="chain64"),
+        pytest.param(dict(edge_list=path_graph(64), max_iter=2), id="chain64_max_iter_2"),
+    ],
+)
+def test_connected_components_driver_path_equals_supersteps(spark, monkeypatch, case):
+    """Same labels and the same per-superstep ``changed`` history on both
+    sides of the hand-off, also when ``max_iter`` stops before convergence."""
+    (local, local_hist), (spark_rows, spark_hist) = cc_both_paths(spark, monkeypatch, **case)
+    assert local == spark_rows
+    assert local_hist == spark_hist
+    if case.get("max_iter") == 2:
+        assert len(local_hist) == 3 and local_hist[-1]["changed"] > 0
+        assert len({c for _, c in local}) > 1  # stopped before convergence
+    else:
+        assert local_hist[-1]["changed"] == 0
+
+
+def test_connected_components_driver_path_runs_few_spark_jobs(spark):
+    """An edge table of at most MAX_DRIVER_EDGES rows is a count, one
+    collect and driver work: a silent fall-back to the DataFrame supersteps
+    (about five jobs per superstep) shows here."""
+    edges = make_edges_df(spark, path_graph(64))
+    sc = spark.sparkContext
+    sc.setJobGroup("cc_driver_probe", "cc_driver_probe")
+    try:
+        labels = G.connected_components(edges).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert {r["component"] for r in labels} == {0}
+    assert len(sc.statusTracker().getJobIdsForGroup("cc_driver_probe")) <= 3

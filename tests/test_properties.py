@@ -168,3 +168,59 @@ def test_topk_rejects_k_below_one_and_passes_empty_input():
             topk(np.zeros((2, 3)), k)
     assert topk(np.zeros((4, 0)), 3).shape == (4, 0)
     assert topk(np.zeros((0, 5)), 3).shape == (0, 3)
+
+
+_longs = st.integers(min_value=-(1 << 63), max_value=(1 << 63) - 1)
+_ints = st.integers(min_value=-(1 << 31), max_value=(1 << 31) - 1)
+
+
+@settings(max_examples=15, deadline=None, derandomize=True, suppress_health_check=list(HealthCheck))
+@given(
+    ids=st.lists(_longs, min_size=1, max_size=40),
+    seed=_ints, depth=st.integers(0, 14), ns=st.integers(1, 1 << 40), text=st.text(max_size=31).filter(
+        lambda t: len(t.encode("utf-8")) < 32
+    ),
+)
+def test_xxhash64_port_equals_spark(spark, ids, seed, depth, ns, text):
+    """The NumPy ``xxhash64`` equals ``F.xxhash64`` on the sketch's two hash
+    forms — the leader rank ``(id, seed, depth)`` and the force-split child
+    ``(bucket, seed, "split", pmod(xxhash64(id, seed, "split"), ns))`` — and
+    on a short string."""
+    from gp_ann_spark.functions.xxhash import xxhash64
+
+    df = spark.createDataFrame([(i,) for i in ids], "id long")
+    s = F.lit(seed).cast("int")
+    split = F.pmod(F.xxhash64("id", s, F.lit("split")), F.lit(ns).cast("long"))
+    rows = df.select(
+        "id",
+        F.xxhash64("id", s, F.lit(depth)).alias("rank"),
+        F.xxhash64("id", s, F.lit("split"), split).alias("child"),
+        F.xxhash64(F.lit(text), "id").alias("text"),
+    ).collect()
+    got = np.array([r["id"] for r in rows], dtype=np.int64)
+    s32 = np.int32(seed)
+    assert list(xxhash64(got, s32, np.int32(depth))) == [r["rank"] for r in rows]
+    child = xxhash64(got, s32, "split", np.mod(xxhash64(got, s32, "split"), np.int64(ns)))
+    assert list(child) == [r["child"] for r in rows]
+    assert list(xxhash64(text, got)) == [r["text"] for r in rows]
+
+
+def test_xxhash64_port_equals_spark_on_2000_ids(spark):
+    """Both sketch hash forms on 2,000 random ids, full int64 range and small."""
+    from gp_ann_spark.functions.xxhash import xxhash64
+
+    rng = np.random.default_rng(3)
+    ids = np.concatenate([
+        rng.integers(-(1 << 63), (1 << 63) - 1, size=1000, dtype=np.int64),
+        rng.integers(0, 10**6, size=1000).astype(np.int64),
+    ])
+    df = spark.createDataFrame([(int(i),) for i in ids], "id long")
+    s = F.lit(557).cast("int")
+    pdf = df.select(
+        "id",
+        F.xxhash64("id", s, F.lit(3)).alias("rank"),
+        F.xxhash64("id", s, F.lit("split"), F.pmod(F.xxhash64("id", s, F.lit("split")), F.lit(7).cast("long"))).alias("child"),
+    ).toPandas()
+    got, s32 = pdf["id"].to_numpy(np.int64), np.int32(557)
+    assert (xxhash64(got, s32, np.int32(3)) == pdf["rank"].to_numpy()).all()
+    assert (xxhash64(got, s32, "split", np.mod(xxhash64(got, s32, "split"), np.int64(7))) == pdf["child"].to_numpy()).all()

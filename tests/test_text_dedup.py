@@ -165,3 +165,41 @@ def test_multimodal_feature_dim_above_digest_width(spark):
     for mid, v in f32.items():
         assert v[:16] == f16[mid]
         assert any(x != 0.0 for x in v[16:])
+
+
+def test_jaccard_pairs_guarded_counts_shared_hub_shingles(spark):
+    """With hub shingles present (document frequency above ``max_doc_freq``)
+    the guarded form finds the pairs sharing a rare shingle and scores each
+    over its FULL shingle sets, hubs included: a Python oracle over the
+    same rule."""
+    hub = "alpha beta gamma delta"
+    texts = [
+        f"{hub} one two three four",
+        f"{hub} one two three five",
+        f"{hub} six seven eight nine",
+        f"{hub} six seven eight ten",
+        f"{hub} eleven twelve thirteen",
+        "one two three four only",
+    ]
+    docs = spark.createDataFrame(list(enumerate(texts)), "doc_id long, text string")
+
+    def shingles(t):
+        w = t.split()
+        return {" ".join(w[i:i + 3]) for i in range(len(w) - 2)}
+
+    sets = [shingles(t) for t in texts]
+    df = {}
+    for s in sets:
+        for x in s:
+            df[x] = df.get(x, 0) + 1
+    want = {}
+    for a in range(len(sets)):
+        for b in range(a + 1, len(sets)):
+            if any(df[x] <= 3 for x in sets[a] & sets[b]):
+                jac = round(len(sets[a] & sets[b]) / len(sets[a] | sets[b]), 6)
+                if jac >= 0.1:
+                    want[(a, b)] = jac
+    assert max(df.values()) > 3  # hubs exist
+    got = {(r["doc_a"], r["doc_b"]): r["jaccard"] for r in D.jaccard_pairs(docs, threshold=0.1, max_doc_freq=3).collect()}
+    assert got == want
+    assert (0, 1) in got and (0, 4) not in got  # 0 and 4 share only hub shingles
