@@ -724,7 +724,7 @@ def q_mips_kmeans_invariants(spark, sf_dir):
     asn = asn.localCheckpoint(eager=True)
     # run one more update step on the final assignment and check the
     # spherical property directly: ‖c_j‖² == mean member ‖p‖² (to 1e-6 rel)
-    new_c, sizes, _ = KM._superstep(pts, cents, "mips", "id", "vec")
+    new_c, sizes, _ = KM._superstep(pts, cents, "mips")
     from gp_ann_spark.functions.distances import sql_inner_product
 
     member_sq = {

@@ -92,7 +92,7 @@ def dense_ids(df: DataFrame, order_col: str = "sha256", scalable: bool = True) -
         )
 
 
-def featurize(files: DataFrame, dim: int = DIM, seed: int = 42, id_col: str = "id") -> DataFrame:
+def featurize(files: DataFrame, dim: int = DIM, seed: int = 42) -> DataFrame:
     """Hash-ngram projection: content → float32 vector of length ``dim``.
 
     For each whitespace token t: bucket = xxhash64(t, seed) mod dim,
@@ -105,27 +105,27 @@ def featurize(files: DataFrame, dim: int = DIM, seed: int = 42, id_col: str = "i
     Replaces the reference's point readers (points_io.cpp:14-111) as the
     source of ``points(id, vec)``.
     """
-    toks = files.select(id_col, F.explode(F.split(F.col("content"), r"\s+")).alias("tok")).where(F.col("tok") != "")
+    toks = files.select("id", F.explode(F.split(F.col("content"), r"\s+")).alias("tok")).where(F.col("tok") != "")
     buckets = toks.select(
-        id_col,
+        "id",
         (F.abs(F.xxhash64("tok", F.lit(seed))) % dim).cast("int").alias("bucket"),
         (F.abs(F.xxhash64("tok", F.lit(seed), F.lit("sign"))) % 2 * 2 - 1).cast("double").alias("sign"),
     )
-    sparse = buckets.groupBy(id_col, "bucket").agg(F.sum("sign").alias("val"))
-    as_map = sparse.groupBy(id_col).agg(F.map_from_entries(F.collect_list(F.struct("bucket", "val"))).alias("m"))
+    sparse = buckets.groupBy("id", "bucket").agg(F.sum("sign").alias("val"))
+    as_map = sparse.groupBy("id").agg(F.map_from_entries(F.collect_list(F.struct("bucket", "val"))).alias("m"))
     dense = as_map.select(
-        id_col,
+        "id",
         F.transform(F.sequence(F.lit(0), F.lit(dim - 1)), lambda i: F.coalesce(F.col("m")[i], F.lit(0.0))).alias("raw"),
     )
     # the norm is its own column, computed once per row: written inside the
     # transform lambda it would be re-aggregated for every one of the dim
     # elements (Catalyst shares no subexpression with a lambda body)
     normed = dense.select(
-        id_col, "raw", F.sqrt(F.aggregate("raw", F.lit(0.0), lambda acc, v: acc + v * v)).alias("_norm")
+        "id", "raw", F.sqrt(F.aggregate("raw", F.lit(0.0), lambda acc, v: acc + v * v)).alias("_norm")
     )
     norm = F.col("_norm")
     feat = normed.select(
-        F.col(id_col).alias("id"),
+        "id",
         F.transform("raw", lambda v: (v / F.when(norm == 0.0, 1.0).otherwise(norm)).cast("float")).alias("vec"),
     )
     # TOTAL over the input: a document with zero non-whitespace tokens
@@ -135,7 +135,7 @@ def featurize(files: DataFrame, dim: int = DIM, seed: int = 42, id_col: str = "i
     # assume one point row per input row. Such docs get the zero vector.
     zero = F.array(*[F.lit(0.0).cast("float") for _ in range(dim)])
     return (
-        files.select(F.col(id_col).alias("id"))
+        files.select("id")
         .join(feat, "id", "left")
         .select("id", F.coalesce("vec", zero).alias("vec"))
     )

@@ -51,7 +51,8 @@ def mirror(edges: DataFrame, *payload: str) -> DataFrame:
     evaluate the upstream plan once per union branch (exchange reuse does
     not cover a cached input), e.g. the exact k-NN scoring kernel under
     ``knn.symmetrize`` twice. The one edge-mirror definition behind
-    ``knn.symmetrize``, ``vertices``, ``degrees``, the CC/LP adjacency and
+    ``knn.symmetrize``, ``vertices``, ``degrees``, the CC/LP adjacency, the
+    partitioner's coarsening, refinement and overlap adjacency, and
     ``io.write_metis_graph``."""
     keep = [F.col(c) for c in payload]
     fwd = F.struct(F.col("src").alias("src"), F.col("dst").alias("dst"), *keep)

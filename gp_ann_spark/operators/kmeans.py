@@ -66,9 +66,7 @@ def _sum_arrays(col: str) -> Column:
     return F.aggregate(parts, zero, lambda acc, x: F.zip_with(acc, x, lambda a, b: a + b))
 
 
-def _superstep(
-    points: DataFrame, centroids: np.ndarray, metric: str, id_col: str, vec_col: str
-) -> tuple[np.ndarray, np.ndarray, float]:
+def _superstep(points: DataFrame, centroids: np.ndarray, metric: str) -> tuple[np.ndarray, np.ndarray, float]:
     """One Lloyd superstep: returns (new_centroids, sizes, objective).
 
     mapInPandas emits per-partition (shard, count, obj, norm_sq, sums)
@@ -94,7 +92,7 @@ def _superstep(
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            X = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
+            X = np.stack(pdf["vec"].to_numpy()).astype(np.float64)
             dists = distance_matrix(X, C, metric)
             a = dists.argmin(axis=1)
             obj = dists[np.arange(len(X)), a]
@@ -126,7 +124,7 @@ def _superstep(
             )
 
     agg = (
-        points.select(vec_col)
+        points.select("vec")
         .mapInPandas(partial, schema=schema)
         .groupBy("shard")
         .agg(
@@ -155,10 +153,7 @@ def _superstep(
     return new_c, sizes, total_obj
 
 
-def assign_to_centroids(
-    points: DataFrame, centroids: np.ndarray, metric: str = "l2",
-    id_col: str = "id", vec_col: str = "vec",
-) -> DataFrame:
+def assign_to_centroids(points: DataFrame, centroids: np.ndarray, metric: str = "l2") -> DataFrame:
     """Broadcast nearest-center assignment (≙ NearestCenters kmeans.cpp:12-27,
     the 'assign' half of Lloyd): mapInPandas blocked argmin, no shuffle at
     all — output stays co-partitioned with the points."""
@@ -170,11 +165,11 @@ def assign_to_centroids(
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            X = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
+            X = np.stack(pdf["vec"].to_numpy()).astype(np.float64)
             a = distance_matrix(X, C, metric).argmin(axis=1)
-            yield pd.DataFrame({id_col: pdf[id_col].to_numpy(), "shard": a.astype(np.int32)})
+            yield pd.DataFrame({"id": pdf["id"].to_numpy(), "shard": a.astype(np.int32)})
 
-    return points.select(id_col, vec_col).mapInPandas(assign, schema=f"{id_col} long, shard int")
+    return points.select("id", "vec").mapInPandas(assign, schema="id long, shard int")
 
 
 def _group_sums(keys: np.ndarray, X: np.ndarray, counts: np.ndarray | int = 1):
@@ -187,7 +182,7 @@ def _group_sums(keys: np.ndarray, X: np.ndarray, counts: np.ndarray | int = 1):
     return uniq, cnt, sums
 
 
-def shard_centroids(points: DataFrame, assignment: DataFrame, vec_col: str = "vec") -> DataFrame:
+def shard_centroids(points: DataFrame, assignment: DataFrame) -> DataFrame:
     """Per-shard mean vector and size of a given assignment → ``(shard, vec,
     size)`` (≙ AggregateClustersParallel kmeans.cpp:151-204, the 'update'
     half of Lloyd): one mapInPandas pass emits per-partition partial sums and
@@ -199,12 +194,12 @@ def shard_centroids(points: DataFrame, assignment: DataFrame, vec_col: str = "ve
     length, so there is no dimension probe, and the plan is a fixed handful
     of Columns for any d.
     """
-    joined = points.join(assignment, "id").select("shard", vec_col)
+    joined = points.join(assignment, "id").select("shard", "vec")
     schema = "shard int, cnt long, sums array<double>"
 
     def partial(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         parts = [
-            _group_sums(pdf["shard"].to_numpy(), np.stack(pdf[vec_col].to_numpy()).astype(np.float64))
+            _group_sums(pdf["shard"].to_numpy(), np.stack(pdf["vec"].to_numpy()).astype(np.float64))
             for pdf in batches
             if len(pdf)
         ]
@@ -233,8 +228,6 @@ def lloyd(
     n_iter: int = 20,
     metric: str = "l2",
     seed: int = SEED,
-    id_col: str = "id",
-    vec_col: str = "vec",
     drop_empty: bool = True,
 ) -> tuple[np.ndarray, DataFrame]:
     """Lloyd's k-means, fixed iteration count (≙ KMeans kmeans.cpp:228-244:
@@ -245,14 +238,14 @@ def lloyd(
     ``drop_empty=False`` — balanced callers keep all k centroids so that
     k·cap ≥ n stays feasible (an empty cluster is just spare capacity).
     """
-    centroids = seeded_sample_centroids(points.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec")), k, seed)
+    centroids = seeded_sample_centroids(points.select("id", "vec"), k, seed)
     sizes = None
     for _ in range(n_iter):
-        centroids, sizes, _ = _superstep(points, centroids, metric, id_col, vec_col)
+        centroids, sizes, _ = _superstep(points, centroids, metric)
     if drop_empty and sizes is not None and (sizes == 0).any():
         keep = sizes > 0
         centroids = centroids[keep]
-    assignment = assign_to_centroids(points, centroids, metric, id_col, vec_col)
+    assignment = assign_to_centroids(points, centroids, metric)
     return centroids, assignment
 
 
@@ -272,20 +265,13 @@ def local_lloyd(X: np.ndarray, k: int, rng: np.random.Generator, n_iter: int) ->
     return C, a
 
 
-def capacity_fill(
-    scored: DataFrame,
-    capacity: "int | DataFrame",
-    id_col: str = "id",
-    shard_col: str = "shard",
-    score_col: str = "dist",
-    prefer_col: str | None = None,
-) -> DataFrame:
+def capacity_fill(scored: DataFrame, capacity: "int | DataFrame") -> DataFrame:
     """Greedy capacity-constrained assignment as a window program.
 
-    Input: candidate (id, shard, score) ratings, possibly several shards per
+    Input: candidate (id, shard, dist) ratings, possibly several shards per
     id. Semantics ≙ the reference's global-rating greedy fill
     (overlapping_partitioning.cpp:205-222, partitioning.cpp:336-346):
-    process candidates in ascending (score, prefer, id, shard); a candidate
+    process candidates in ascending (dist, id, shard); a candidate
     lands iff the id is unplaced and its shard still has room — capacity is
     consumed only by actual placements.
 
@@ -306,24 +292,20 @@ def capacity_fill(
     # shard tie-break matters: within one id's candidates the id column is
     # constant, so equal scores across two shards would otherwise be an
     # unordered (nondeterministic) choice
-    order = (
-        [F.col(score_col).asc()]
-        + ([F.col(prefer_col).asc()] if prefer_col else [])
-        + [F.col(id_col).asc(), F.col(shard_col).asc()]
-    )
-    w_shard = Window.partitionBy(shard_col).orderBy(*order)
-    w_id = Window.partitionBy(id_col).orderBy(*order)
+    order = [F.col("dist").asc(), F.col("id").asc(), F.col("shard").asc()]
+    w_shard = Window.partitionBy("shard").orderBy(*order)
+    w_id = Window.partitionBy("id").orderBy(*order)
 
     if isinstance(capacity, DataFrame):
-        caps = capacity.select(shard_col, F.col("cap").cast("long"))
+        caps = capacity.select("shard", F.col("cap").cast("long"))
     else:
         caps = (
-            scored.select(shard_col).distinct().withColumn("cap", F.lit(int(capacity)).cast("long"))
+            scored.select("shard").distinct().withColumn("cap", F.lit(int(capacity)).cast("long"))
         )
     with checkpoints() as cp:
         caps = cp.pin(caps.where(F.col("cap") > 0))
         # pairs to dead (cap ≤ 0 / unknown) shards can never place — drop once
-        remaining = cp.pin(scored.join(F.broadcast(caps), shard_col, "left_semi"))
+        remaining = cp.pin(scored.join(F.broadcast(caps), "shard", "left_semi"))
         # termination is guaranteed (every continuing pass deletes ≥1 pair),
         # so #passes ≤ #pairs; guard with a generous bound so a logic
         # regression surfaces as a loud failure instead of an apparent hang
@@ -356,13 +338,13 @@ def capacity_fill(
             # tentative — a better re-proposer evicts a worse hold in a later
             # pass.
             ranked = proposals.withColumn("_fill", F.row_number().over(w_shard)).join(
-                F.broadcast(caps), shard_col
+                F.broadcast(caps), "shard"
             )
             with checkpoints() as step:
-                rejected = step.pin(ranked.where(F.col("_fill") > F.col("cap")).select(id_col, shard_col))
+                rejected = step.pin(ranked.where(F.col("_fill") > F.col("cap")).select("id", "shard"))
                 if rejected.limit(1).count() == 0:
                     return cp.keep(ranked.select(*scored.columns))
-                remaining = cp.swap(remaining.join(rejected, [id_col, shard_col], "left_anti"), remaining)
+                remaining = cp.swap(remaining.join(rejected, ["id", "shard"], "left_anti"), remaining)
             if remaining.limit(1).count() == 0:
                 return scored.limit(0)
 

@@ -33,29 +33,57 @@ from gp_ann_spark.functions.distances import distance_matrix, sql_distance, topk
 from gp_ann_spark.operators.graph import mirror
 
 KNN_SCHEMA = "query_id long, neighbor_id long, dist double"
-# exact_knn broadcasts the query side; more queries than this are refused
+# the broadcast side of a scoring pass (exact_knn's queries, the delta's new
+# batch); more rows than this are refused
 MAX_BROADCAST_QUERIES = 4_000_000
+
+
+def _blocks(batches: Iterator[pd.DataFrame], n_queries: int):
+    """``(rows, ids, float64 vecs)`` blocks of a ``mapInPandas`` input, sized
+    so the (block × n_queries) distance matrix stays ≤ ~64 MB whatever the
+    Arrow batch size: floor 2 × the 4M-query cap × 8 B = 64 MB."""
+    chunk = max(2, (8 << 20) // max(n_queries, 1))
+    for pdf in batches:
+        for lo in range(0, len(pdf), chunk):
+            rows = pdf.iloc[lo : lo + chunk]
+            yield rows, rows["id"].to_numpy(), np.stack(rows["vec"].to_numpy()).astype(np.float64)
 
 
 def _topk_within_block(
     block_ids: np.ndarray, block_vecs: np.ndarray, q_ids: np.ndarray, q_vecs: np.ndarray,
     k: int, metric: str, exclude_self: bool,
-) -> pd.DataFrame:
-    """Score one Arrow batch of base points against all queries, keep each
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Score one block of base points against all queries, keep each
     query's k best within the block (≙ the reference's bounded heap,
     topn.h:6-32, at block granularity). The pick is ``topk`` keyed by
     ``block_ids``: the global merge's (dist, neighbor_id) order, so no block
-    drops a candidate the merge would keep, whatever the partition layout."""
-    d = distance_matrix(q_vecs, block_vecs, metric)  # (nq, nb)
+    drops a candidate the merge would keep, whatever the partition layout.
+    Returns the (n_queries × n_block) distance matrix ``d`` and the (query,
+    column) positions of the finite picks."""
+    d = distance_matrix(q_vecs, block_vecs, metric)
     if exclude_self:
-        same = q_ids[:, None] == block_ids[None, :]
-        d[same] = np.inf
+        d[q_ids[:, None] == block_ids[None, :]] = np.inf
     idx = topk(d, k, key=block_ids)
-    dist = np.take_along_axis(d, idx, axis=1).ravel()
-    keep = np.isfinite(dist)
-    qi = np.repeat(np.arange(len(q_ids)), idx.shape[1])[keep]
-    ci = idx.ravel()[keep]
-    return pd.DataFrame({"query_id": q_ids[qi], "neighbor_id": block_ids[ci], "dist": dist[keep]})
+    qi = np.repeat(np.arange(len(q_ids)), idx.shape[1])
+    ci = idx.ravel()
+    keep = np.isfinite(d[qi, ci])
+    return d, qi[keep], ci[keep]
+
+
+def _broadcast_side(df: DataFrame, id_col: str) -> tuple[np.ndarray, np.ndarray]:
+    """``(ids, float64 vecs)`` of ``df(id_col, vec)``: the broadcast side of
+    a scoring pass, the scale contract of every pass here. Oversized inputs
+    are refused, not honored: the limit BOUNDS the collect at cap+1 rows."""
+    max_q = MAX_BROADCAST_QUERIES
+    pdf = df.select(F.col(id_col).alias("_id"), "vec").limit(max_q + 1).toPandas()
+    if len(pdf) > max_q:
+        raise ValueError(
+            f"the broadcast side of a scoring pass holds at most {max_q} queries "
+            "(knn.MAX_BROADCAST_QUERIES). For corpus-scale self-kNN use "
+            "knn_approx.build_knn_graph (the sketch path)."
+        )
+    vecs = np.stack(pdf["vec"].to_numpy()).astype(np.float64) if len(pdf) else np.zeros((0, 1))
+    return pdf["_id"].to_numpy(), vecs
 
 
 def exact_knn(
@@ -64,70 +92,38 @@ def exact_knn(
     k: int = 10,
     metric: str = "l2",
     exclude_self: bool = False,
-    id_col: str = "id",
-    vec_col: str = "vec",
-    q_id_col: str = "query_id",
-    q_vec_col: str = "vec",
 ) -> DataFrame:
-    """Exact top-k of every query against every point.
+    """Exact top-k of every query ``(query_id, vec)`` against every point
+    ``(id, vec)``.
 
     Broadcast top-k scoring (see module docstring). Result:
     ``(query_id, neighbor_id, dist, rank)`` with rank 1..k, deterministic
     tie-break by neighbor_id. ≙ recall.h:25-39 / knn_graph.h:14-28.
     """
     spark = points.sparkSession
-    # the query batch is the BROADCAST side — that is the operator's scale
-    # contract. Refuse silently-OOM-at-2am sizes instead of honoring them:
-    # self-joins over the full corpus belong to knn_approx.build_knn_graph.
-    # The limit BOUNDS the driver collect at cap+1 rows — an over-cap input
-    # raises here without first materializing all of it driver-side.
-    max_q = MAX_BROADCAST_QUERIES
-    qpd = (
-        queries.select(F.col(q_id_col).alias("qid"), F.col(q_vec_col).alias("qvec"))
-        .limit(max_q + 1)
-        .toPandas()
-    )
-    if len(qpd) > max_q:
-        raise ValueError(
-            f"exact_knn broadcasts the query side; >{max_q} queries exceed the "
-            f"cap (knn.MAX_BROADCAST_QUERIES). For corpus-scale "
-            "self-kNN use knn_approx.build_knn_graph (the sketch path)."
-        )
-    if len(qpd) == 0:
+    q_ids, q_vecs = _broadcast_side(queries, "query_id")
+    if len(q_ids) == 0:
         return spark.createDataFrame([], KNN_SCHEMA + ", rank int")
-    q_ids = qpd["qid"].to_numpy()
-    q_vecs = np.stack(qpd["qvec"].to_numpy()).astype(np.float64)
     bc = spark.sparkContext.broadcast((q_ids, q_vecs))
 
     def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         b_ids, b_vecs = bc.value
-        # cap the per-matmul block so the (block × n_queries) distance
-        # matrix stays ≤ ~64 MB regardless of Arrow batch sizing AND of the
-        # broadcast query count: floor 2 × 4M-query cap × 8 B = 64 MB, so
-        # the bound holds exactly at the broadcast limit the cap polices
-        chunk = max(2, (8 << 20) // max(len(b_ids), 1))
         # Accumulate the running top-k per query across the WHOLE task and
         # emit once: the downstream merge then sees n_tasks×nq×k rows, not
         # n_chunks×nq×k (at 600k points that is an 8× smaller shuffle —
         # this map-side combine is what makes the merge scale).
         acc: pd.DataFrame | None = None
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            ids = pdf[id_col].to_numpy()
-            vecs = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            for lo in range(0, len(ids), chunk):
-                part = _topk_within_block(
-                    ids[lo : lo + chunk], vecs[lo : lo + chunk], b_ids, b_vecs, k, metric, exclude_self
+        for _, ids, vecs in _blocks(batches, len(b_ids)):
+            d, qi, ci = _topk_within_block(ids, vecs, b_ids, b_vecs, k, metric, exclude_self)
+            part = pd.DataFrame({"query_id": b_ids[qi], "neighbor_id": ids[ci], "dist": d[qi, ci]})
+            acc = part if acc is None else pd.concat((acc, part), ignore_index=True)
+            if len(acc) > 4 * k * len(b_ids):
+                acc = (
+                    acc.sort_values(["query_id", "dist", "neighbor_id"], kind="stable")
+                    .groupby("query_id", sort=False)
+                    .head(k)
+                    .reset_index(drop=True)
                 )
-                acc = part if acc is None else pd.concat((acc, part), ignore_index=True)
-                if len(acc) > 4 * k * len(b_ids):
-                    acc = (
-                        acc.sort_values(["query_id", "dist", "neighbor_id"], kind="stable")
-                        .groupby("query_id", sort=False)
-                        .head(k)
-                        .reset_index(drop=True)
-                    )
         if acc is not None:
             yield (
                 acc.sort_values(["query_id", "dist", "neighbor_id"], kind="stable")
@@ -136,7 +132,7 @@ def exact_knn(
                 .reset_index(drop=True)
             )
 
-    partial = points.select(id_col, vec_col).mapInPandas(score, schema=KNN_SCHEMA)
+    partial = points.select("id", "vec").mapInPandas(score, schema=KNN_SCHEMA)
     w = Window.partitionBy("query_id").orderBy(F.col("dist").asc(), F.col("neighbor_id").asc())
     return (
         partial.withColumn("rank", F.row_number().over(w))
@@ -205,18 +201,18 @@ def incremental_knn_update(
 
     Exactness argument:
 
-    - *forward*: each new point's k nearest among (existing ∪ new) come from
-      one broadcast top-k pass (queries = the new batch);
+    - *forward*: each new point's k nearest among (existing ∪ new) are among
+      the per-block top-k picks of one scoring pass over existing ∪ new;
     - *reverse*: an existing point p's list changes only if some new q has
-      d(p,q) < p's current kth distance — so one ``mapInPandas`` over the
-      existing points with the new batch broadcast emits exactly the pairs
-      below each p's threshold (threshold = +inf while deg(p) < k);
+      d(p,q) ≤ p's current kth distance — so the same pass emits exactly the
+      pairs at or below each p's threshold (threshold = +inf while deg(p) < k);
     - ``merge_topk`` over (old edges ∪ forward ∪ reverse) then reproduces
       ``knn_edges(existing ∪ new)`` exactly (pytest-verified).
 
-    Scale shape: the new batch is the broadcast side in both passes; nothing
-    O(n_existing²) ever runs, and the shuffle carries only candidate pairs.
-    Returns the updated directed edge table (src, dst, weight).
+    Scale shape: the new batch is the broadcast side of the one pass
+    (``incremental_knn_delta``); nothing O(n_existing²) ever runs, and the
+    shuffle carries only candidate pairs. Returns the updated directed edge
+    table (src, dst, weight).
     """
     return merge_topk(edges.unionByName(incremental_knn_delta(existing_pts, edges, new_pts, k, metric)), k)
 
@@ -233,82 +229,67 @@ def deg_kth(edges: DataFrame, *extra_keys: str) -> DataFrame:
 
 
 def incremental_knn_delta(
-    existing_pts: DataFrame,
+    existing_pts: DataFrame | None,
     edges: DataFrame | None,
     new_pts: DataFrame,
     k: int = 10,
     metric: str = "l2",
     thresholds: DataFrame | None = None,
 ) -> DataFrame:
-    """The candidate-pair delta of ``incremental_knn_update``: forward top-k
-    rows for the new batch ∪ reverse below-threshold rows for affected
-    existing points — WITHOUT the final merge. The srcs appearing here are
-    exactly the points whose adjacency can change, which is what lets the
-    streaming sink rewrite only the buckets containing them
-    (streaming/ingest.py).
+    """The candidate-pair delta of ``incremental_knn_update`` — WITHOUT the
+    final merge. Its srcs are exactly the points whose adjacency can change,
+    which lets the streaming sink rewrite only the buckets holding them.
 
-    ``thresholds``: optional pre-maintained ``(src, deg, kth)`` sidecar.
-    When given, the O(n·k)-row aggregate over the full edge table is
-    skipped — at 10^12 edges that aggregate is the only table-sized read in
-    the delta, so a sidecar (n rows, maintained incrementally by the
-    streaming sink) makes the whole delta O(n_points + batch)."""
-    spark = existing_pts.sparkSession
-    all_pts = existing_pts.select("id", "vec").unionByName(new_pts.select("id", "vec"))
-    fwd = knn_edges_for_queries(all_pts, new_pts.select(F.col("id").alias("query_id"), "vec"), k, metric)
-
-    # per-existing-point kth threshold: sidecar if provided, else aggregate
-    # the current edge table; no edges at all (bootstrap) means every
-    # existing point's threshold is +inf — the deg<k branch below — which
-    # the left join's all-null side already produces
-    if thresholds is not None:
-        deg_thresh = thresholds.select("src", "deg", "kth")
-    elif edges is not None:
-        deg_thresh = deg_kth(edges)
-    else:
-        deg_thresh = spark.createDataFrame([], "src long, deg long, kth double")
-    with_thresh = existing_pts.join(deg_thresh, existing_pts.id == deg_thresh.src, "left").select(
-        "id", "vec",
-        F.when(F.col("deg") >= k, F.col("kth")).otherwise(F.lit(float("inf"))).alias("thresh"),
-    )
-    qpd = new_pts.select("id", "vec").toPandas()
-    q_ids = qpd["id"].to_numpy()
-    q_vecs = np.stack(qpd["vec"].to_numpy()).astype(np.float64) if len(qpd) else np.zeros((0, 1))
-    bc = spark.sparkContext.broadcast((q_ids, q_vecs))
-
-    def reverse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        n_ids, n_vecs = bc.value
-        for pdf in batches:
-            if len(pdf) == 0 or len(n_ids) == 0:
-                continue
-            X = np.stack(pdf["vec"].to_numpy()).astype(np.float64)
-            d = distance_matrix(X, n_vecs, metric)  # (n_block, n_new)
-            # ≤, not <: a new point tying p's kth distance can still enter
-            # the top-k via the (dist, id) tie-break in merge_topk
-            th = pdf["thresh"].to_numpy()[:, None]
-            r, c = np.nonzero(d <= th)
-            if len(r) == 0:
-                continue
-            yield pd.DataFrame(
-                {
-                    "src": pdf["id"].to_numpy()[r],
-                    "dst": n_ids[c],
-                    "weight": d[r, c],
-                }
+    One ``mapInPandas`` over existing ∪ new, the new batch collected and
+    broadcast once. Each block emits every new point's block-local top-k
+    (``topk`` keyed by id, self excluded; ``merge_topk`` reduces them, so
+    the delta needs no window) and every existing row's pairs at or below
+    its threshold (``≤``: a tie with p's kth distance can still enter via
+    the (dist, id) tie-break). The threshold is the kth distance once
+    deg ≥ k, else +inf; it comes from ``thresholds``, a maintained
+    ``(src, deg, kth)`` sidecar that spares the O(n·k)-row aggregate over
+    ``edges`` (the one table-sized read), else from ``edges``, else +inf.
+    ``existing_pts`` None is the empty sink: ``merge_topk(delta, k)`` is
+    then ``knn_edges(new_pts, k)``."""
+    spark = new_pts.sparkSession
+    if thresholds is None and edges is not None:
+        thresholds = deg_kth(edges)
+    # new rows are candidates only: no distance is ≤ -inf
+    scan = new_pts.select("id", "vec", F.lit(float("-inf")).alias("thresh"))
+    if existing_pts is not None:
+        old = existing_pts.select("id", "vec")
+        inf = F.lit(float("inf"))
+        if thresholds is None:
+            old = old.withColumn("thresh", inf)
+        else:
+            t = thresholds.select("src", "deg", "kth")
+            old = old.join(t, old.id == t.src, "left").select(
+                "id", "vec", F.when(F.col("deg") >= k, F.col("kth")).otherwise(inf).alias("thresh")
             )
+        scan = old.unionByName(scan)
+    bc = spark.sparkContext.broadcast(_broadcast_side(new_pts, "id"))
 
-    rev = with_thresh.mapInPandas(reverse, schema="src long, dst long, weight double")
-    fwd_edges = fwd.select(
-        F.col("query_id").alias("src"), F.col("neighbor_id").alias("dst"), F.col("dist").alias("weight")
-    )
-    return fwd_edges.unionByName(rev)
+    def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        n_ids, n_vecs = bc.value
+        if len(n_ids) == 0:
+            return
+        for rows, ids, vecs in _blocks(batches, len(n_ids)):
+            d, qi, ci = _topk_within_block(ids, vecs, n_ids, n_vecs, k, metric, exclude_self=True)
+            th = rows["thresh"].to_numpy()
+            old = th > -np.inf
+            # every weight is scored with its src as the left operand, as
+            # knn_edges scores it: a GEMM's low bits depend on operand order,
+            # so the reverse pairs take their own (existing × new) product
+            # rather than the transpose of ``d``
+            dr = distance_matrix(vecs[old], n_vecs, metric)
+            ri, ni = np.nonzero(dr <= th[old, None])
+            yield pd.DataFrame({
+                "src": np.concatenate((n_ids[qi], ids[old][ri])),
+                "dst": np.concatenate((ids[ci], n_ids[ni])),
+                "weight": np.concatenate((d[qi, ci], dr[ri, ni])),
+            })
 
-
-def knn_edges_for_queries(
-    points: DataFrame, queries: DataFrame, k: int = 10, metric: str = "l2",
-) -> DataFrame:
-    """Exact top-k of the query set against the point set, excluding
-    self-pairs — the query-batch form of ``knn_edges``."""
-    return exact_knn(points, queries, k=k, metric=metric, exclude_self=True)
+    return scan.mapInPandas(score, schema="src long, dst long, weight double")
 
 
 def merge_topk(candidates: DataFrame, k: int, by: str = "src") -> DataFrame:

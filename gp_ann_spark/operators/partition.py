@@ -39,17 +39,16 @@ from gp_ann_spark.functions.windows import bounded_global_window
 from gp_ann_spark.operators import kmeans as KM
 from gp_ann_spark.checkpoint import checkpoints
 from gp_ann_spark.checkpoint import realias as _realias
-from gp_ann_spark.operators.graph import MAX_DRIVER_EDGES, vertices
+from gp_ann_spark.operators.graph import MAX_DRIVER_EDGES, mirror, vertices
 
 SEED = KM.SEED
 
 
-def random_partition(points: DataFrame, num_shards: int, seed: int = SEED, id_col: str = "id") -> DataFrame:
+def random_partition(points: DataFrame, num_shards: int, seed: int = SEED) -> DataFrame:
     """Deterministic pseudo-random shard per id (≙ the random routing/
     partitioning baseline, routes.cpp:269-285)."""
     return points.select(
-        F.col(id_col).alias("id"),
-        F.pmod(F.xxhash64(id_col, F.lit(seed)), F.lit(num_shards)).cast("int").alias("shard"),
+        "id", F.pmod(F.xxhash64("id", F.lit(seed)), F.lit(num_shards)).cast("int").alias("shard")
     )
 
 
@@ -168,9 +167,7 @@ def _lp_coarsen_level(edges: DataFrame, weights: DataFrame, cap: int) -> DataFra
     about three times), which is why the round count is a fixed constant,
     not an option.
     """
-    sym = edges.select("src", "dst", "weight").unionByName(
-        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"), "weight")
-    )
+    sym = mirror(edges, "weight")
     labels = weights.select("id", F.col("id").alias("label"), "w")
     for _ in range(LP_ROUNDS):
         affinity = (
@@ -413,12 +410,7 @@ def refine_partition(
     multilevel refinement; determinstic via (gain, id) ordering)."""
     with checkpoints() as cp:
         # non-eager: round 1's movers count is the first consumer of both
-        sym = cp.pin(
-            edges.select("src", "dst", "weight").unionByName(
-                edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"), "weight")
-            ),
-            eager=False,
-        )
+        sym = cp.pin(mirror(edges, "weight"), eager=False)
         asn = cp.pin(assignment.select("id", "shard"), eager=False)
         for _ in range(rounds):
             conn = (
@@ -695,9 +687,7 @@ def overlapping_partition(
     (Cover semantics defs.h:32, free in relational form, SURVEY §1).
     """
     with checkpoints() as cp:
-        sym = cp.pin(edges.select("src", "dst").unionByName(
-            edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        ))
+        sym = cp.pin(mirror(edges))
         cover = cp.pin(assignment.select("id", "shard"))
         n = assignment.select("id").distinct().count()
         s = num_shards or (assignment.agg(F.max("shard")).collect()[0][0] + 1)

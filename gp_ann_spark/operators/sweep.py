@@ -65,7 +65,7 @@ def generate_router_configs(
 def random_routes(queries: DataFrame, num_shards: int, seed: int = SEED) -> DataFrame:
     """Seeded random probe order per query (≙ routes.cpp:269-285)."""
     spark = queries.sparkSession
-    shards = F.broadcast(spark.createDataFrame([(int(s),) for s in range(num_shards)], "shard int"))
+    shards = F.broadcast(spark.range(num_shards).select(F.col("id").cast("int").alias("shard")))
     w = Window.partitionBy("query_id").orderBy(F.xxhash64("query_id", "shard", F.lit(seed)))
     return (
         queries.select("query_id")

@@ -9,9 +9,12 @@ repo snapshots arrive continuously. Spark-first shape:
   an Iceberg CDC feed);
 - every micro-batch runs the BATCH operators inside ``foreachBatch`` —
   sha256 dedup against the sink (anti-join on the hash, a pruned parquet
-  read), the pure-Catalyst featurizer, then ``incremental_knn_update``
-  (broadcast the new batch twice — forward top-k + reverse threshold pass)
-  so the edge table stays EXACT without ever recomputing old×old pairs;
+  read), the pure-Catalyst featurizer, then ``incremental_knn_delta`` (the
+  new batch broadcast once; one scoring pass emits its forward top-k and
+  the reverse below-threshold pairs) so the edge table stays EXACT without
+  ever recomputing old×old pairs. Every batch, the first included, takes
+  the same write path: merge the changed buckets, pin them, dynamic
+  overwrite, refresh the threshold sidecar;
 - exactly-once across restarts comes from the checkpointLocation +
   idempotent-by-construction sinks (dedup by content hash). Crash-replay
   analysis: ids are allocated as max(meta, committed row count), so a crash
@@ -19,7 +22,9 @@ repo snapshots arrive continuously. Spark-first shape:
   ids; a crash between the edge write and the points append leaves edge
   rows naming not-yet-committed ids, but the replayed batch re-derives the
   SAME ids (same content order, same offset — the points never landed) and
-  rewrites the same buckets, so the sink converges to the exact state;
+  rewrites the same buckets, so the sink converges to the exact state.
+  Replay recomputes from the sinks alone: no staging copy is ever written
+  or read;
 - ``trigger(availableNow=True)`` drains the backlog and stops — the batch
   API and the streaming API are the same engine, so tests drive real
   streaming queries deterministically.
@@ -35,12 +40,12 @@ from __future__ import annotations
 import json
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from gp_ann_spark.checkpoint import checkpoints
 from gp_ann_spark.corpus.ingest import dedup_files, dense_ids, featurize
-from gp_ann_spark.operators.knn import deg_kth, incremental_knn_delta, knn_edges, merge_topk
+from gp_ann_spark.operators.knn import deg_kth, incremental_knn_delta, merge_topk
 
 REPO_SCHEMA = "repo string, path string, commit string, lang string, content string"
 
@@ -109,10 +114,16 @@ def _read_next_id(spark: SparkSession, points_dir: str) -> int:
     return max(meta or 0, committed)
 
 
+def _write_meta(spark: SparkSession, meta_dir: str, value: Column) -> None:
+    """Overwrite a one-row, one-file metadata sink with the literal
+    ``value``. The row is built on the JVM (``spark.range`` plus a
+    literal): a Python-list ``createDataFrame`` would ship it through a
+    Python worker, several times slower for one row."""
+    spark.range(1, numPartitions=1).select(value).write.mode("overwrite").parquet(meta_dir)
+
+
 def _write_next_id(spark: SparkSession, points_dir: str, next_id: int) -> None:
-    spark.createDataFrame([(int(next_id),)], "next_id long").coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(points_dir + "_meta")
+    _write_meta(spark, points_dir + "_meta", F.lit(int(next_id)).cast("long").alias("next_id"))
 
 
 def _write_thresholds(spark: SparkSession, thresh_dir: str, bucket_edges) -> None:
@@ -170,9 +181,7 @@ class _BucketedSink:
         self.scan_error = scan_error
 
     def stamp(self, spark: SparkSession) -> None:
-        spark.createDataFrame([(self.n_buckets,)], "n_buckets int").coalesce(
-            1
-        ).write.mode("overwrite").parquet(self.meta_dir)
+        _write_meta(spark, self.meta_dir, F.lit(self.n_buckets).cast("int").alias("n_buckets"))
 
     def ensure_layout(self, spark: SparkSession) -> None:
         """Validate (or establish) the sink's bucket layout before any
@@ -271,12 +280,14 @@ def ingest_stream(
     edge table. Blocks until the backlog is processed (availableNow).
 
     The edge sink is parquet PARTITIONED BY ``bucket = pmod(src, n_buckets)``
-    and each micro-batch rewrites only the buckets whose src set intersects
-    the changed ids (``incremental_knn_delta`` knows exactly which srcs can
-    change) via dynamic partition overwrite — untouched buckets' files are
-    left byte-identical on disk. At 10^12 edges this bounds the per-batch
-    write to O(changed buckets), where the old write-then-swap rewrote the
-    entire table twice per batch."""
+    and each micro-batch — the first one included, which finds no edge sink
+    and writes every bucket its points land in — rewrites only the buckets
+    whose src set intersects the changed ids (``incremental_knn_delta``
+    knows exactly which srcs can change). The merged buckets are pinned and
+    written once, by dynamic partition overwrite straight into the sink:
+    the pin is what lets the write replace the path it was read from.
+    Untouched buckets' files are left byte-identical on disk, so at 10^12
+    edges the per-batch write is O(changed buckets)."""
 
     edges_sink = _edges_sink(edges_dir, n_buckets)
     points_sink = _points_sink(points_dir, n_buckets)
@@ -327,7 +338,6 @@ def ingest_stream(
             #    (deterministic within the batch: rank by sha256, prefix-sum
             #    assignment — no single-partition window)
             offset = _read_next_id(spark, points_dir) if have_sink else 0
-            existing = spark.read.parquet(points_dir) if have_sink else None
             # in-flight marker: present ⇒ a batch may have crashed between its
             # sink writes, so the next id read reconciles against the committed
             # count instead of trusting the (possibly stale) metadata row. It
@@ -341,15 +351,19 @@ def ingest_stream(
             )
             new_pts = cp.pin(featurize(with_ids, dim=dim).join(with_ids.select("id", "sha256"), "id"))
             # 4. maintain the EXACT edge table incrementally, rewriting only the
-            #    src-buckets that contain changed rows. The (src, deg, kth)
-            #    threshold sidecar (bucket-partitioned like the edges) replaces
-            #    the O(n·k)-row full-edge-table aggregate in the delta — the one
-            #    remaining table-sized read — so a batch touches O(n_points)
-            #    narrow rows + O(changed buckets) edge rows, never O(edges).
+            #    src-buckets that contain changed rows — the first batch too:
+            #    with no edge sink the delta takes no thresholds (every
+            #    existing point's is +inf), and over an empty sink it is the
+            #    batch's own k-NN edges. The (src, deg, kth) threshold sidecar
+            #    (bucket-partitioned like the edges) replaces the O(n·k)-row
+            #    full-edge-table aggregate in the delta — the one remaining
+            #    table-sized read — so a batch touches O(n_points) narrow rows
+            #    + O(changed buckets) edge rows, never O(edges).
             thresh_dir = edges_dir + "_thresh"
-            if existing is not None and _sink_exists(edges_dir):
+            have_edges = _sink_exists(edges_dir)
+            thresholds = None
+            if have_edges:
                 edges_sink.ensure_layout(spark)
-                edges_full = spark.read.parquet(edges_dir)
                 if not _sink_exists(thresh_dir):
                     # sidecar lost (a crash between the first edge write and
                     # _write_thresholds): rebuild the FULL sidecar now (every
@@ -357,44 +371,35 @@ def ingest_stream(
                     # changed buckets, so an in-memory partial rebuild would
                     # leave every other src invisible (null → +inf threshold)
                     # on the NEXT batch.
-                    deg_kth(edges_full, "bucket").write.mode("overwrite").partitionBy(
+                    deg_kth(spark.read.parquet(edges_dir), "bucket").write.mode("overwrite").partitionBy(
                         "bucket"
                     ).parquet(thresh_dir)
-                thresholds = spark.read.parquet(thresh_dir).select("src", "deg", "kth")
-                delta = cp.pin(incremental_knn_delta(
-                    existing.select("id", "vec"), None, new_pts.select("id", "vec"),
-                    k=k, metric=metric, thresholds=thresholds,
-                ))
-                changed = [
-                    int(r["b"]) for r in delta.select(bucket.alias("b")).distinct().collect()
-                ]
-                if changed:
+                thresholds = spark.read.parquet(thresh_dir)
+            existing = spark.read.parquet(points_dir).select("id", "vec") if have_sink else None
+            # lazy: the changed-bucket collect below materializes it
+            delta = cp.pin(incremental_knn_delta(
+                existing, None, new_pts.select("id", "vec"), k=k, metric=metric, thresholds=thresholds,
+            ), eager=False)
+            changed = [int(r["b"]) for r in delta.select(bucket.alias("b")).distinct().collect()]
+            if changed:
+                if have_edges:
                     # filter on the PARTITION column so the scan prunes to the
                     # changed bucket directories (a pmod(src,..) predicate does
                     # not map to partition pruning)
-                    old_changed = edges_full.where(F.col("bucket").isin(changed)).select(
+                    delta = spark.read.parquet(edges_dir).where(F.col("bucket").isin(changed)).select(
                         "src", "dst", "weight"
-                    )
-                    updated = merge_topk(old_changed.unionByName(delta), k).withColumn("bucket", bucket)
-                    # stage, then dynamic-overwrite ONLY the changed bucket dirs
-                    # (can't read+overwrite the same path in one job); both
-                    # writes are O(changed buckets), not O(table)
-                    staging = edges_dir + "_staging"
-                    updated.write.mode("overwrite").partitionBy("bucket").parquet(staging)
-                    staged = spark.read.parquet(staging)
-                    staged.write.mode("overwrite").option(
-                        "partitionOverwriteMode", "dynamic"
-                    ).partitionBy("bucket").parquet(edges_dir)
-                    _write_thresholds(spark, thresh_dir, staged)
-            else:
-                all_pts = new_pts.select("id", "vec")
-                if existing is not None:
-                    all_pts = all_pts.unionByName(existing.select("id", "vec"))
-                n_all = all_pts.count()
-                if n_all > 1:
-                    full = knn_edges(all_pts, k=min(k, n_all - 1), metric=metric).withColumn("bucket", bucket)
-                    full.write.mode("overwrite").partitionBy("bucket").parquet(edges_dir)
-                    _write_thresholds(spark, thresh_dir, spark.read.parquet(edges_dir))
+                    ).unionByName(delta)
+                # pinned, so the overwrite's plan reads a checkpoint, not the
+                # sink it replaces (the pin is lazy: the write materializes
+                # it, and a dynamic overwrite swaps the changed bucket dirs
+                # in only at job commit, after every read of them); the
+                # sidecar refresh then reads the same rows from the pin
+                updated = cp.pin(merge_topk(delta, k).withColumn("bucket", bucket), eager=False)
+                updated.write.mode("overwrite").option("partitionOverwriteMode", "dynamic").partitionBy(
+                    "bucket"
+                ).parquet(edges_dir)
+                _write_thresholds(spark, thresh_dir, updated)
+                if not have_edges:
                     edges_sink.stamp(spark)
             new_pts.withColumn("pbucket", _points_bucket(n_buckets)).write.mode(
                 "append"

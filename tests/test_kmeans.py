@@ -137,7 +137,7 @@ def test_mips_superstep_matches_numpy_simulator(spark, rng):
     Cn = C.copy()
     Cs = C.copy()
     for _ in range(3):
-        Cs, sizes, _ = KM._superstep(df, Cs, "mips", "id", "vec")
+        Cs, sizes, _ = KM._superstep(df, Cs, "mips")
         Cn = numpy_mips_superstep(X, Cn)
         np.testing.assert_allclose(Cs, Cn, atol=1e-6)
     assert sizes.sum() == 90
