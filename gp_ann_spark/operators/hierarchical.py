@@ -91,7 +91,7 @@ def hierarchical_kmeans(
                 asn = cp.swap(keep.select("id", "leaf").unionByName(new_big), asn)
 
         # densify leaf ids, then leaf means and sizes in one shard_centroids
-        # aggregation. dense_ids = range-repartition + broadcast prefix sums:
+        # aggregation. dense_ids = one range shuffle + per-partition offsets:
         # the distinct leaf table is row-proportional (~n/target_leaf_size),
         # so a global row_number window here would be the single-partition
         # scale-killer windows.py warns about

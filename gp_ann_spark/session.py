@@ -11,8 +11,21 @@ import os
 
 from pyspark.sql import SparkSession
 
-# Defaults chosen for the sandbox (local[32], 128 GiB). On a real cluster the
-# same config is passed via spark-submit; shuffle partitions should be set to
+
+def driver_memory(meminfo: str = "/proc/meminfo") -> str:
+    """``spark.driver.memory``: ``SPARK_GRAFT_DRIVER_MEM`` if set, else half
+    the box's RAM (``MemTotal``), at most 48g. In local mode every task runs
+    inside the driver JVM, and a heap the size of a shared box gets the
+    process killed as the heap grows toward it."""
+    if os.environ.get("SPARK_GRAFT_DRIVER_MEM"):
+        return os.environ["SPARK_GRAFT_DRIVER_MEM"]
+    with open(meminfo) as fh:
+        total_kb = next(int(line.split()[1]) for line in fh if line.startswith("MemTotal:"))
+    return f"{min(48 << 10, total_kb // 1024 // 2)}m"
+
+
+# Defaults chosen for the sandbox (local[32]). On a real cluster the same
+# config is passed via spark-submit; shuffle partitions should be set to
 # ~2-3x total cores there.
 _ENGINE_CONF = {
     # AQE: runtime coalescing of small shuffle partitions, skew-join split.
@@ -29,8 +42,8 @@ _ENGINE_CONF = {
     # sizing guide §2.2 asks for. The LOCAL default advisory is 8 MB, sized
     # for this single-node 2–32-core sandbox: small enough that the
     # scaling-bench's few-hundred-MB shuffles still spread across all
-    # cores (measured: 64 MB here serialized the featurize/pagerank reduce
-    # sides and broke the N→4N ≥0.8 contract), large enough that the
+    # cores (measured: 64 MB here serialized the pagerank reduce sides and
+    # broke the N→4N ≥0.8 contract), large enough that the
     # KB-scale bench shuffles stay at 1–2 tasks. A real cluster should set
     # SPARK_GRAFT_ADVISORY_PARTITION_BYTES to 128–256m so 100 TB shuffles
     # produce 100 MB+ partitions (guide §2.2) instead of millions of 8 MB
@@ -54,7 +67,7 @@ _ENGINE_CONF = {
     # local mode: the driver JVM IS the executor — give it real heap
     # (only effective for the first session of a process; harness runs
     # each parallelism level in its own subprocess).
-    "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"),
+    "spark.driver.memory": driver_memory(),
     "spark.driver.maxResultSize": "8g",
 }
 

@@ -9,12 +9,12 @@ repo snapshots arrive continuously. Spark-first shape:
   an Iceberg CDC feed);
 - every micro-batch runs the BATCH operators inside ``foreachBatch`` —
   sha256 dedup against the sink (anti-join on the hash, a pruned parquet
-  read), the pure-Catalyst featurizer, then ``incremental_knn_delta`` (the
-  new batch broadcast once; one scoring pass emits its forward top-k and
-  the reverse below-threshold pairs) so the edge table stays EXACT without
-  ever recomputing old×old pairs. Every batch, the first included, takes
-  the same write path: merge the changed buckets, pin them, dynamic
-  overwrite, refresh the threshold sidecar;
+  read), dense ids and the one-pass Arrow featurizer, then
+  ``incremental_knn_delta`` (the new batch broadcast once; one scoring pass
+  emits its forward top-k and the reverse below-threshold pairs) so the
+  edge table stays EXACT without ever recomputing old×old pairs. Every
+  batch, the first included, takes the same write path: merge the changed
+  buckets, pin them, dynamic overwrite, refresh the threshold sidecar;
 - exactly-once across restarts comes from the checkpointLocation +
   idempotent-by-construction sinks (dedup by content hash). Crash-replay
   analysis: ids are allocated as max(meta, committed row count), so a crash
@@ -346,10 +346,10 @@ def ingest_stream(
             # renumbering — see _read_next_id.
             with open(_inflight_marker(points_dir), "w") as fh:
                 fh.write(json.dumps({"offset": int(offset), "n_new": int(n_new)}))
-            with_ids = dense_ids(batch_unique, order_col="sha256").withColumn(
-                "id", F.col("id") + F.lit(offset)
-            )
-            new_pts = cp.pin(featurize(with_ids, dim=dim).join(with_ids.select("id", "sha256"), "id"))
+            # numbered by one range shuffle, then featurized in one narrow
+            # pass that carries sha256 through: no join back
+            with_ids = dense_ids(batch_unique).withColumn("id", F.col("id") + F.lit(offset))
+            new_pts = cp.pin(featurize(with_ids, dim=dim))
             # 4. maintain the EXACT edge table incrementally, rewriting only the
             #    src-buckets that contain changed rows — the first batch too:
             #    with no edge sink the delta takes no thresholds (every
@@ -401,9 +401,11 @@ def ingest_stream(
                 _write_thresholds(spark, thresh_dir, updated)
                 if not have_edges:
                     edges_sink.stamp(spark)
-            new_pts.withColumn("pbucket", _points_bucket(n_buckets)).write.mode(
-                "append"
-            ).partitionBy("pbucket").parquet(points_dir)
+            # the sink's column order; one task per bucket, so a micro-batch
+            # adds one file per bucket directory, not one per range partition
+            new_pts.select("id", "vec", "sha256", _points_bucket(n_buckets).alias("pbucket")).repartition(
+                "pbucket"
+            ).write.mode("append").partitionBy("pbucket").parquet(points_dir)
             if not have_sink:
                 points_sink.stamp(spark)
             _write_next_id(spark, points_dir, offset + n_new)

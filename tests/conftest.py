@@ -6,8 +6,9 @@ from gp_ann_spark.session import get_spark
 
 @pytest.fixture(scope="session")
 def spark():
-    # a bounded heap: with the library's 48g default the session's JVM grows
-    # past the RAM of a 16 GB box over the suite and is killed
+    # a bounded heap, below the library's default of half the box's RAM:
+    # over the suite the session's JVM grows toward its heap limit, and the
+    # Python workers and side scripts need the rest of a 16 GB box
     s = get_spark(
         "gp_ann_spark_tests", master="local[4]", shuffle_partitions=4, extra_conf={"spark.driver.memory": "6g"}
     )
@@ -29,3 +30,20 @@ def make_points_df(spark, vecs, id_col="id", vec_col="vec"):
 def make_edges_df(spark, edge_list):
     rows = [(int(a), int(b), float(w)) for a, b, w in edge_list]
     return spark.createDataFrame(rows, "src long, dst long, weight double")
+
+
+def job_ids(spark):
+    """Ids of every job in the status store. A job group would miss the jobs
+    a stream thread runs under its own group; the listener bus feeds the
+    store asynchronously, so sleep a moment before the second read."""
+    sc = spark.sparkContext
+    jobs = sc._jvm.scala.jdk.javaapi.CollectionConverters.asJava(sc._jsc.sc().statusStore().jobsList(None))
+    return {j.jobId() for j in jobs}
+
+
+def final_plan(df) -> str:
+    """The physical plan that ran: AQE's final plan, nested stages included,
+    or the plain plan where AQE had no exchange to adapt."""
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan()
+    return (plan.executedPlan() if plan.nodeName() == "AdaptiveSparkPlan" else plan).toString()

@@ -12,20 +12,14 @@ from gp_ann_spark.operators import dedup as DD
 from gp_ann_spark.operators import kmeans as KM
 from gp_ann_spark.operators import knn as KNN
 from gp_ann_spark.operators import text_analysis as TA
-from tests.conftest import make_points_df
-
-
-def _final_plan(df) -> str:
-    """The physical plan that ran (AQE's final plan, nested stages included)."""
-    df.collect()
-    return df._jdf.queryExecution().executedPlan().executedPlan().toString()
+from tests.conftest import final_plan, make_points_df
 
 
 def test_symmetrize_runs_the_knn_kernel_once(spark, rng):
     # cached, as the pipeline's points are: exchange reuse does not cover it
     pts = make_points_df(spark, rng.normal(size=(120, 6))).cache()
     try:
-        plan = _final_plan(KNN.symmetrize(KNN.knn_edges(pts, k=4)))
+        plan = final_plan(KNN.symmetrize(KNN.knn_edges(pts, k=4)))
     finally:
         pts.unpersist()
     assert plan.count("MapInPandas") == 1
@@ -37,7 +31,7 @@ def test_minhash_band_pairs_shingles_once(spark):
     # cached, as the pipeline's docs are: exchange reuse does not cover it
     docs = spark.createDataFrame(rows, "doc_id long, text string").cache()
     try:
-        plan = _final_plan(DD.minhash_band_pairs(DD.minhash_signatures(docs)))
+        plan = final_plan(DD.minhash_band_pairs(DD.minhash_signatures(docs)))
     finally:
         docs.unpersist()
     assert len(re.findall(r"Generate explode\(", plan)) == 1
@@ -107,9 +101,10 @@ def test_featurize_normalizes_each_row_once(spark):
         [(0, "alpha beta gamma alpha"), (1, "delta"), (2, "   ")], "id long, content string"
     )
     out = featurize(files, dim=16)
-    plan = out._jdf.queryExecution().optimizedPlan().toString()
-    # the norm's square-sum aggregate appears once, outside the per-element lambda
-    assert plan.count("aggregate(") == 1
+    plan = final_plan(out)
+    # the norm is taken once per row inside the Arrow kernel: no shuffle and
+    # no Catalyst square-sum lambda
+    assert "Exchange" not in plan and "aggregate(" not in plan
     vecs = {r["id"]: np.asarray(r["vec"], dtype=np.float64) for r in out.collect()}
     assert abs(np.linalg.norm(vecs[0]) - 1.0) < 1e-6 and abs(np.linalg.norm(vecs[1]) - 1.0) < 1e-6
     assert not vecs[2].any()

@@ -6,6 +6,7 @@ from pyspark.sql import functions as F
 
 from gp_ann_spark.corpus import dedup_files, dense_ids, featurize, generate_repos, repos_to_points
 from gp_ann_spark.operators.partition import remap_shard_ids
+from tests.conftest import final_plan, job_ids
 
 N = 300
 
@@ -40,15 +41,44 @@ def test_dedup_collapses_duplicate_contents(spark):
     assert n_distinct < N
 
 
-def test_dense_ids_scalable_matches_window(spark):
-    files = dedup_files(generate_repos(spark, N, seed=42))
-    a = dense_ids(files, "sha256", scalable=True).select("sha256", "id").orderBy("id").collect()
-    b = dense_ids(files, "sha256", scalable=False).select("sha256", "id").orderBy("id").collect()
-    assert a == b
+def test_dense_ids_rank_the_distinct_hashes(spark):
+    repos = generate_repos(spark, N, seed=42)
+    files = dedup_files(repos)
+    a = dense_ids(files, "sha256").select("sha256", "id").orderBy("id").collect()
     ids = [r["id"] for r in a]
     assert ids == list(range(len(ids)))
     hashes = [r["sha256"] for r in a]
     assert hashes == sorted(hashes)
+    assert hashes == sorted({hashlib.sha256(r["content"].encode()).hexdigest() for r in repos.collect()})
+
+
+def test_front_end_plans_hold_no_window_and_no_join(spark):
+    """``dense_ids`` numbers by one range shuffle (no window, no join) and
+    ``featurize`` is one narrow pass (no exchange, no explode, no join), so
+    ids and features are never joined back together."""
+    files = dedup_files(generate_repos(spark, 50, seed=42)).select("sha256", "content").localCheckpoint()
+    numbered = final_plan(dense_ids(files))
+    assert "Window" not in numbered and "Join" not in numbered
+    featurized = final_plan(featurize(files.withColumn("id", F.monotonically_increasing_id())))
+    assert not any(op in featurized for op in ("Exchange", "Generate", "Join"))
+    assert "Join" not in final_plan(repos_to_points(generate_repos(spark, 50, seed=42)))
+
+
+# repos_to_points + a pin on 300 rows at local[4]: the dedup stage, the
+# range sampling, the pinned range shuffle, the partition-count collect and
+# the pin. Featurizing by token explode and numbering by window ran 16.
+JOBS_REPOS_TO_POINTS = 7
+
+
+def test_repos_to_points_runs_few_spark_jobs(spark):
+    import time
+
+    repos = generate_repos(spark, N, seed=42)
+    before = job_ids(spark)
+    repos_to_points(repos).localCheckpoint(eager=True)
+    time.sleep(1.0)  # the status store is fed by the asynchronous listener bus
+    n_jobs = len(job_ids(spark) - before)
+    assert n_jobs <= JOBS_REPOS_TO_POINTS, n_jobs
 
 
 def test_featurizer_unit_norm_and_deterministic(spark):

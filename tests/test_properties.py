@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 from gp_ann_spark.functions.distances import topk
 from gp_ann_spark.operators import kmeans as KM
 from gp_ann_spark.operators import knn as KNN
+from tests.conftest import final_plan
 
 # One shared strategy: a small candidate-rating instance.
 _instances = st.integers(min_value=1, max_value=9999).flatmap(
@@ -224,3 +225,87 @@ def test_xxhash64_port_equals_spark_on_2000_ids(spark):
     got, s32 = pdf["id"].to_numpy(np.int64), np.int32(557)
     assert (xxhash64(got, s32, np.int32(3)) == pdf["rank"].to_numpy()).all()
     assert (xxhash64(got, s32, "split", np.mod(xxhash64(got, s32, "split"), np.int64(7))) == pdf["child"].to_numpy()).all()
+
+
+# Java's regex \s, the separator set of ``featurize``: no-break space, the
+# information separators and U+2028 split a Python str.split() but not it
+_JAVA_SPACE = " \t\n\x0b\f\r"
+# under 32 UTF-8 bytes (6 characters of at most 4 bytes): the span of the
+# xxhash64 port
+_tokens = st.text(
+    st.one_of(
+        st.sampled_from("ab\u00a0\x1c\u2028"),
+        st.characters(blacklist_characters=_JAVA_SPACE, blacklist_categories=("Cs",)),
+    ),
+    min_size=1,
+    max_size=6,
+)
+
+
+@st.composite
+def _documents(draw):
+    """Tokens from a small pool (repeats accumulate and cancel) joined by
+    runs of Java whitespace, each end with or without a run; the empty and
+    whitespace-only documents included."""
+    pool = draw(st.lists(_tokens, min_size=1, max_size=4))
+    toks = draw(st.lists(st.sampled_from(pool), max_size=10))
+    runs = draw(st.lists(st.text(st.sampled_from(_JAVA_SPACE), min_size=1, max_size=3),
+                         min_size=len(toks) + 1, max_size=len(toks) + 1))
+    lead, trail = draw(st.booleans()), draw(st.booleans())
+    doc = "".join(r + t for r, t in zip(runs, toks)) + (runs[-1] if trail else "")
+    return doc if lead or not toks else doc[len(runs[0]):]
+
+
+def _codes(tok, dim, seed):
+    from gp_ann_spark.functions.xxhash import xxhash64
+
+    bucket = abs(int(xxhash64(tok, np.int32(seed)))) % dim
+    return bucket, abs(int(xxhash64(tok, np.int32(seed), "sign"))) % 2 * 2 - 1
+
+
+def _featurize_oracle(doc, dim, seed):
+    import re
+
+    raw = np.zeros(dim)
+    for tok in re.split(f"[{_JAVA_SPACE}]+", doc):
+        if tok:
+            bucket, sign = _codes(tok, dim, seed)
+            raw[bucket] += sign
+    norm = np.sqrt((raw * raw).sum())
+    return (raw / (norm or 1.0)).astype(np.float32)
+
+
+def _cancelling_pair(dim, seed):
+    """Two tokens of one bucket and opposite signs: their document sums to
+    +0.0 in every bucket."""
+    first = {}
+    for i in range(4 * dim + 8):
+        bucket, sign = _codes(f"c{i}", dim, seed)
+        if -sign in first.get(bucket, {}):
+            return f"{first[bucket][-sign]} c{i}"
+        first.setdefault(bucket, {})[sign] = f"c{i}"
+    raise AssertionError("no cancelling pair")
+
+
+@settings(max_examples=15, deadline=None, derandomize=True, suppress_health_check=list(HealthCheck))
+@given(docs=st.lists(_documents(), max_size=8), dim=st.sampled_from([1, 3, 16, 64]), seed=_ints)
+def test_featurize_equals_numpy_oracle(spark, docs, dim, seed):
+    """``featurize``'s float32 bytes equal a Python oracle over the ported
+    ``xxhash64``, split on Java's six whitespace characters only; its other
+    columns pass through, and its plan is one narrow pass."""
+    from gp_ann_spark.corpus import featurize
+
+    pair = _cancelling_pair(dim, seed)
+    docs = docs + ["", " \t\x0b\f\r\n", pair, pair + " b", "a\u00a0b c"]
+    df = spark.createDataFrame(
+        [(i, f"t{i}", doc, i / 2) for i, doc in enumerate(docs)], "id long, tag string, content string, w double"
+    )
+    out = featurize(df, dim=dim, seed=seed)
+    assert out.columns == ["id", "tag", "w", "vec"]
+    rows = sorted(out.collect())
+    assert [(r["id"], r["tag"], r["w"]) for r in rows] == [(i, f"t{i}", i / 2) for i in range(len(docs))]
+    for r, doc in zip(rows, docs):
+        assert np.asarray(r["vec"], dtype=np.float32).tobytes() == _featurize_oracle(doc, dim, seed).tobytes(), doc
+    assert not np.asarray(rows[len(docs) - 3]["vec"]).any()
+    plan = final_plan(out)
+    assert not any(op in plan for op in ("Exchange", "Generate", "Join"))

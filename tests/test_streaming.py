@@ -8,7 +8,7 @@ from pyspark.sql import functions as F
 
 from gp_ann_spark.operators import knn as KNN
 from gp_ann_spark.streaming import ingest_stream, lang_counts_stream
-from tests.conftest import make_points_df
+from tests.conftest import job_ids, make_points_df
 
 
 def _edge_set(df):
@@ -593,15 +593,10 @@ def test_ingest_writes_no_staging_copy(spark, tmp_path, monkeypatch):
     _assert_sink_exact(spark, points_dir, edges_dir, 3)
 
 
-# one micro-batch into a seeded sink runs 41 jobs at local[4] on Spark 4.1;
-# the two-pass delta with a staging copy of the changed buckets ran 46
-JOBS_PER_MICRO_BATCH = 41
-
-
-def _job_ids(spark):
-    sc = spark.sparkContext
-    jobs = sc._jvm.scala.jdk.javaapi.CollectionConverters.asJava(sc._jsc.sc().statusStore().jobsList(None))
-    return {j.jobId() for j in jobs}
+# one micro-batch into a seeded sink runs 35 jobs at local[4] on Spark 4.1;
+# featurizing by token explode and numbering by window ran 41, the two-pass
+# delta with a staging copy of the changed buckets 46
+JOBS_PER_MICRO_BATCH = 35
 
 
 def test_micro_batch_runs_few_spark_jobs(spark, tmp_path):
@@ -615,9 +610,34 @@ def test_micro_batch_runs_few_spark_jobs(spark, tmp_path):
     _land(spark, input_dir, [f"seeded sink doc {i} q{i * 7 % 11}" for i in range(40)])
     ingest_stream(spark, input_dir, points_dir, edges_dir, ckpt, k=3, dim=16)
     _land(spark, input_dir, [f"micro batch doc {i} q{i % 11}" for i in range(10)])
-    before = _job_ids(spark)
+    before = job_ids(spark)
     ingest_stream(spark, input_dir, points_dir, edges_dir, ckpt, k=3, dim=16)
     time.sleep(1.0)  # the status store is fed by the asynchronous listener bus
-    n_jobs = len(_job_ids(spark) - before)
+    n_jobs = len(job_ids(spark) - before)
     assert n_jobs <= JOBS_PER_MICRO_BATCH, n_jobs
+    _assert_sink_exact(spark, points_dir, edges_dir, 3)
+
+
+def test_micro_batch_adds_one_file_per_points_bucket(spark, tmp_path):
+    """The points append is one task per ``pbucket``: a micro-batch numbered
+    over several range partitions still adds at most one parquet file to
+    each bucket directory of the points sink."""
+    import glob
+    import os
+
+    input_dir, points_dir, edges_dir, ckpt = _drain_paths(tmp_path)
+
+    def files():
+        buckets = glob.glob(os.path.join(points_dir, "pbucket=*"))
+        return {d: len(glob.glob(os.path.join(d, "*.parquet"))) for d in buckets}
+
+    _land(spark, input_dir, [f"bucketed sink doc {i} r{i % 13}" for i in range(60)])
+    ingest_stream(spark, input_dir, points_dir, edges_dir, ckpt, k=3, dim=16, n_buckets=4)
+    before = files()
+    assert set(before.values()) == {1}
+    _land(spark, input_dir, [f"bucketed batch doc {i} r{i % 7}" for i in range(60)])
+    ingest_stream(spark, input_dir, points_dir, edges_dir, ckpt, k=3, dim=16, n_buckets=4)
+    after = files()
+    assert all(after[d] - before.get(d, 0) <= 1 for d in after), (before, after)
+    assert sum(after.values()) > sum(before.values())
     _assert_sink_exact(spark, points_dir, edges_dir, 3)
