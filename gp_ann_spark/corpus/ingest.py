@@ -55,15 +55,16 @@ def dedup_files(repos: DataFrame) -> DataFrame:
     )
 
 
-def dense_ids(df: DataFrame, order_col: str = "sha256") -> DataFrame:
+def dense_ids(df: DataFrame, order_col: str = "sha256") -> tuple[DataFrame, int]:
     """Append ``id`` = the rank 0..n-1 of the unique key ``order_col``
-    (FIXTURES.md: id = dense rank over distinct sha256).
+    (FIXTURES.md: id = dense rank over distinct sha256); returns the
+    numbered frame and its row count n.
 
     One range shuffle on the key, sorted within partitions and pinned:
     ``repartitionByRange`` samples its boundaries per evaluation, so the
     counts and the numbering must read the same layout. One collect of the
     per-partition row counts (at most ``defaultParallelism`` rows) gives
-    each partition's prefix offset; a row's id is that offset plus its
+    each partition's prefix offset and n; a row's id is that offset plus its
     position in the partition. No window, no join, no single-partition sort.
     """
     n_parts = max(df.sparkSession.sparkContext.defaultParallelism, 1)
@@ -74,7 +75,7 @@ def dense_ids(df: DataFrame, order_col: str = "sha256") -> DataFrame:
         offsets = np.cumsum([0] + [counts.get(p, 0) for p in range(max(counts, default=0))]).tolist()
         # monotonically_increasing_id is (partition id << 33) + row position
         pos = F.monotonically_increasing_id() - F.shiftleft(pid.cast("long"), 33)
-        return cp.keep(parted.withColumn("id", F.lit(offsets)[pid] + pos))
+        return cp.keep(parted.withColumn("id", F.lit(offsets)[pid] + pos)), sum(counts.values())
 
 
 def featurize(files: DataFrame, dim: int = DIM, seed: int = 42) -> DataFrame:
@@ -129,5 +130,5 @@ def repos_to_points(repos: DataFrame, dim: int = DIM, seed: int = 42) -> DataFra
     samples its whole input in a job of its own, so the other order would
     run the Arrow kernel twice.
     """
-    files = dense_ids(dedup_files(repos).select("sha256", "content"))
+    files, _ = dense_ids(dedup_files(repos).select("sha256", "content"))
     return featurize(files.select("id", "content"), dim=dim, seed=seed)

@@ -95,7 +95,7 @@ def hierarchical_kmeans(
         # the distinct leaf table is row-proportional (~n/target_leaf_size),
         # so a global row_number window here would be the single-partition
         # scale-killer windows.py warns about
-        dense = dense_ids(asn.select("leaf").distinct(), order_col="leaf").withColumnRenamed("id", "_n")
+        dense = dense_ids(asn.select("leaf").distinct(), order_col="leaf")[0].withColumnRenamed("id", "_n")
         # no broadcast hint: the leaf table is row-proportional too — let AQE
         # pick broadcast vs shuffle from its measured size
         asn = asn.join(dense, "leaf").select("id", F.col("_n").cast("long").alias("leaf"))

@@ -1,4 +1,1 @@
-from gp_ann_spark.streaming.ingest import (  # noqa: F401
-    ingest_stream,
-    lang_counts_stream,
-)
+from gp_ann_spark.streaming.ingest import ingest_stream  # noqa: F401

@@ -16,15 +16,25 @@ repo snapshots arrive continuously. Spark-first shape:
   batch, the first included, takes the same write path: merge the changed
   buckets, pin them, dynamic overwrite, refresh the threshold sidecar;
 - exactly-once across restarts comes from the checkpointLocation +
-  idempotent-by-construction sinks (dedup by content hash). Crash-replay
-  analysis: ids are allocated as max(meta, committed row count), so a crash
-  between the points append and the meta write cannot re-issue committed
-  ids; a crash between the edge write and the points append leaves edge
-  rows naming not-yet-committed ids, but the replayed batch re-derives the
-  SAME ids (same content order, same offset — the points never landed) and
-  rewrites the same buckets, so the sink converges to the exact state.
-  Replay recomputes from the sinks alone: no staging copy is ever written
-  or read;
+  idempotent-by-construction sinks (dedup by content hash) + ONE state
+  record next to the points sink, ``<points>_state.json`` =
+  ``{n_buckets, next_id, inflight}``, replaced atomically (temp file,
+  fsync, rename). A batch records ``inflight = (offset, n_new)`` before
+  its first sink write and commits ``next_id = offset + n_new`` with
+  ``inflight = null`` in one write after its points append. Crash-replay
+  analysis: a crash before the in-flight write leaves the sinks and the
+  record untouched; a crash after it and before the points append leaves
+  edge rows naming not-yet-committed ids, but the replayed batch finds the
+  committed count equal to ``offset``, re-derives the SAME ids (same
+  content order, same offset — the points never landed) and rewrites the
+  same buckets, so the sink converges to the exact state; a crash after
+  the append finds the count equal to ``offset + n_new``, and the replayed
+  batch dedups to zero and clears the record; any other count is a torn
+  append and fails loudly. Since the next id and the in-flight flag move
+  in one write, no crash can leave a stale next id without the in-flight
+  record that makes replay reconcile it. Replay
+  recomputes from the sinks alone: no staging copy is ever written or
+  read;
 - ``trigger(availableNow=True)`` drains the backlog and stops — the batch
   API and the streaming API are the same engine, so tests drive real
   streaming queries deterministically.
@@ -59,71 +69,100 @@ def _sink_exists(path: str) -> bool:
     return False
 
 
-def _inflight_marker(points_dir: str) -> str:
-    return points_dir + "_inflight"
+def _load_state(path: str) -> dict | None:
+    try:
+        with open(path) as fh:
+            return json.load(fh)
+    except FileNotFoundError:
+        return None
 
 
-def _read_next_id(spark: SparkSession, points_dir: str) -> int:
-    """Next dense id from the one-row metadata sink.
-
-    Reconciliation against the committed row count (ids are dense 0..n-1,
-    so the count IS the next id; ``count(*)`` reads only parquet footers)
-    runs ONLY when the in-flight marker from a crashed batch is present or
-    the meta sink is missing — the clean path is one metadata-row read, not
-    a per-batch listing of a 10^12-row sink. The reconcile repairs a stale
-    meta after a crash between the points append and the meta write, which
-    would otherwise let a later batch re-issue committed ids.
-
-    The marker records the crashed batch's ``(offset, n_new)``; replay
-    verifies the committed count equals either ``offset`` (append never
-    landed — replay re-derives the same ids) or ``offset + n_new`` (append
-    landed, only the meta write was lost). Any intermediate count means a
-    TORN append (a filesystem without atomic job commit left part of the
-    batch's rows in the sink): replay would assign the remaining contents
-    different ids than the crashed attempt while already-written edge rows
-    still name the old ids — fail loudly instead of silently binding edges
-    to the wrong vectors."""
-    meta_dir = points_dir + "_meta"
-    meta = None
-    if _sink_exists(meta_dir):
-        meta = int(spark.read.parquet(meta_dir).collect()[0]["next_id"])
-    marker = _inflight_marker(points_dir)
-    if meta is not None and not os.path.exists(marker):
-        return meta
-    committed = int(spark.read.parquet(points_dir).count())
-    if os.path.exists(marker):
-        with open(marker) as fh:
-            raw = fh.read().strip()
-        try:
-            m = json.loads(raw)
-        except ValueError:
-            m = None
-        if isinstance(m, dict) and "offset" in m and "n_new" in m:
-            offset, n_new = int(m["offset"]), int(m["n_new"])
-            if committed not in (offset, offset + n_new):
-                raise RuntimeError(
-                    f"torn append detected in points sink {points_dir}: committed "
-                    f"row count {committed} is neither the in-flight batch's "
-                    f"offset {offset} nor offset+n_new {offset + n_new}. The "
-                    "crashed batch's parquet files are partially committed — "
-                    "quarantine the files newer than the marker (or delete rows "
-                    f"with id >= {offset}) before resuming, or edge rows from "
-                    "the crashed attempt will bind to the wrong vectors."
-                )
-        # legacy plain-int marker (pre-r4): no n_new to verify against
-    return max(meta or 0, committed)
+def _save_state(path: str, n_buckets: int, next_id: int, inflight: dict | None = None) -> None:
+    """Replace the sinks' state record atomically: written to a temp file
+    in the same directory, synced, then renamed over the record, so a crash
+    leaves either the old record or the new one, never a torn file."""
+    tmp = path + ".tmp"
+    with open(tmp, "w") as fh:
+        json.dump({"n_buckets": n_buckets, "next_id": next_id, "inflight": inflight}, fh)
+        fh.flush()
+        os.fsync(fh.fileno())
+    os.replace(tmp, path)
 
 
-def _write_meta(spark: SparkSession, meta_dir: str, value: Column) -> None:
-    """Overwrite a one-row, one-file metadata sink with the literal
-    ``value``. The row is built on the JVM (``spark.range`` plus a
-    literal): a Python-list ``createDataFrame`` would ship it through a
-    Python worker, several times slower for one row."""
-    spark.range(1, numPartitions=1).select(value).write.mode("overwrite").parquet(meta_dir)
+def _next_id(
+    state: dict | None, n_buckets: int, points: DataFrame | None, edges: DataFrame | None, points_dir: str,
+    edges_dir: str,
+) -> int:
+    """Check the sinks against the state record and return the next dense id.
+
+    With a record, ``n_buckets`` must equal the stored spec (a mismatch
+    would miss duplicates in the pruned dedup anti-join and select the wrong
+    old edge rows in the bucketed merge). A clean record's ``next_id`` is
+    trusted, so the clean path counts nothing. An ``inflight`` record
+    ``(offset, n_new)`` is left by a batch that crashed between its first
+    sink write and its final record write: ids are dense 0..n-1, so the
+    committed row count (``count(*)`` reads only parquet footers) is the
+    next id, and it must equal either ``offset`` (the points append never
+    landed — replay re-derives the same ids) or ``offset + n_new`` (the
+    append landed, only the record write was lost). Any count in between
+    means a TORN append (a filesystem without atomic job commit left part
+    of the batch's rows in the sink): replay would give the remaining
+    contents other ids than the crashed attempt while its edge rows still
+    name the old ids — fail loudly instead of binding edges to the wrong
+    vectors.
+
+    Without a record (lost, or sinks written before the record existed),
+    each sink present gets ``_scan_layout`` and the committed row count is
+    the next id."""
+    if state is not None:
+        stored = int(state["n_buckets"])
+        if stored != n_buckets:
+            raise ValueError(
+                f"sinks {points_dir} and {edges_dir} were written with n_buckets={stored}; reopening with "
+                f"n_buckets={n_buckets} would break the dedup anti-join's pruning and corrupt the bucketed "
+                f"edge maintenance — repartition the sinks or pass n_buckets={stored}"
+            )
+        if state["inflight"] is None:
+            return int(state["next_id"])
+        committed = points.count() if points is not None else 0
+        offset, n_new = int(state["inflight"]["offset"]), int(state["inflight"]["n_new"])
+        if committed not in (offset, offset + n_new):
+            raise RuntimeError(
+                f"torn append detected in points sink {points_dir}: committed "
+                f"row count {committed} is neither the in-flight batch's "
+                f"offset {offset} nor offset+n_new {offset + n_new}. The "
+                "crashed batch's parquet files are partially committed — "
+                "quarantine the files newer than the state record (or delete rows "
+                f"with id >= {offset}) before resuming, or edge rows from "
+                "the crashed attempt will bind to the wrong vectors."
+            )
+        return committed
+    _scan_layout(
+        points, f"points sink {points_dir}", "pbucket", _points_bucket(n_buckets),
+        f"pbucket values do not match n_buckets={n_buckets} — it was bucketed with a different layout; pass the "
+        "original n_buckets",
+    )
+    _scan_layout(
+        edges, f"edge sink {edges_dir}", "bucket", _edges_bucket(n_buckets),
+        f"bucket layout does not match n_buckets={n_buckets}",
+    )
+    return points.count() if points is not None else 0
 
 
-def _write_next_id(spark: SparkSession, points_dir: str, next_id: int) -> None:
-    _write_meta(spark, points_dir + "_meta", F.lit(int(next_id)).cast("long").alias("next_id"))
+def _scan_layout(sink: DataFrame | None, what: str, col: str, expr: Column, mismatch: str) -> None:
+    """Check a sink found without a state record: it is partitioned by
+    ``col`` and every stored value equals ``expr`` — recording a spec over
+    values computed with another n_buckets would bless pruning to the
+    wrong buckets."""
+    if sink is None:
+        return
+    if col not in sink.columns:
+        raise ValueError(
+            f"{what} has no '{col}' partition column — rebuild it with partitionBy('{col}') before resuming "
+            "incremental ingest"
+        )
+    if sink.where(expr != F.col(col)).limit(1).count():
+        raise ValueError(f"{what} {mismatch}")
 
 
 def _write_thresholds(spark: SparkSession, thresh_dir: str, bucket_edges) -> None:
@@ -141,78 +180,7 @@ def _write_thresholds(spark: SparkSession, thresh_dir: str, bucket_edges) -> Non
     )
 
 
-class _BucketedSink:
-    """ONE layout guard for every bucket-partitioned parquet sink (the edge
-    sink and the points sink today; any future sink — a media-feature
-    table, say — instantiates this instead of copying the logic a third
-    time).
-
-    Invariants enforced per sink:
-
-    - the layout meta dir ``sink_dir + meta_suffix`` pins ``n_buckets``;
-      reopening with a different value is refused (a mismatch would silently
-      drop/duplicate rows in every bucket-pruned read);
-    - a sink whose meta was lost but that HAS the bucket column gets a
-      one-time consistency scan before the meta is stamped (blind stamping
-      would bless wrong-bucket pruning);
-    - a sink WITHOUT the bucket column was not written by this engine
-      (``ingest_stream`` buckets both sinks from their first write) and is
-      refused with an error naming the column.
-    """
-
-    def __init__(
-        self,
-        sink_dir: str,
-        n_buckets: int,
-        bucket_col: str,
-        bucket_expr,
-        what: str,
-        meta_suffix: str,
-        mismatch_consequence: str,
-        scan_error: str,
-    ):
-        self.sink_dir = sink_dir
-        self.n_buckets = int(n_buckets)
-        self.bucket_col = bucket_col
-        self.bucket_expr = bucket_expr
-        self.what = what
-        self.meta_dir = sink_dir + meta_suffix
-        self.mismatch_consequence = mismatch_consequence
-        self.scan_error = scan_error
-
-    def stamp(self, spark: SparkSession) -> None:
-        _write_meta(spark, self.meta_dir, F.lit(self.n_buckets).cast("int").alias("n_buckets"))
-
-    def ensure_layout(self, spark: SparkSession) -> None:
-        """Validate (or establish) the sink's bucket layout before any
-        bucket-pruned read or partial overwrite touches it."""
-        if _sink_exists(self.meta_dir):
-            stored = int(spark.read.parquet(self.meta_dir).collect()[0]["n_buckets"])
-            if stored != self.n_buckets:
-                raise ValueError(
-                    f"{self.what} {self.sink_dir} was written with "
-                    f"n_buckets={stored}; reopening with "
-                    f"n_buckets={self.n_buckets} "
-                    + self.mismatch_consequence.format(stored=stored)
-                )
-            return
-        sink = spark.read.parquet(self.sink_dir)
-        if self.bucket_col not in sink.columns:
-            raise ValueError(
-                f"{self.what} {self.sink_dir} has no '{self.bucket_col}' partition "
-                f"column — rebuild it with partitionBy('{self.bucket_col}') before "
-                "resuming incremental ingest"
-            )
-        # meta missing but the sink IS bucketed (e.g. the meta write was
-        # lost): verify the stored values against THIS n_buckets before
-        # stamping — blind stamping over values computed with a different
-        # n_buckets would bless wrong-bucket pruning
-        if sink.where(self.bucket_expr != F.col(self.bucket_col)).limit(1).count():
-            raise ValueError(self.scan_error)
-        self.stamp(spark)
-
-
-def _points_bucket(n_buckets: int):
+def _points_bucket(n_buckets: int) -> Column:
     """Points-sink partition key: a uniform hash of the content sha256 —
     the dedup anti-join's equi-key, so pruning to the batch's buckets is
     exact (a hash collision across buckets is impossible: same sha256 ⇒
@@ -220,49 +188,11 @@ def _points_bucket(n_buckets: int):
     return F.pmod(F.xxhash64(F.col("sha256")), F.lit(n_buckets)).cast("int")
 
 
-def _edges_sink(edges_dir: str, n_buckets: int) -> _BucketedSink:
-    """Edge sink: bucket = pmod(src, n_buckets). The changed-bucket list is
-    computed from src but old rows are selected by their STORED bucket
-    value, so a layout mismatch would silently drop/duplicate adjacency
-    (≙ the maintenance contract of the bucketed incremental path)."""
-    return _BucketedSink(
-        edges_dir,
-        n_buckets,
-        bucket_col="bucket",
-        bucket_expr=F.pmod(F.col("src"), F.lit(n_buckets)).cast("int"),
-        what="edge sink",
-        meta_suffix="_layout",
-        mismatch_consequence=(
-            "would corrupt the bucketed maintenance path — repartition the "
-            "sink or pass n_buckets={stored}"
-        ),
-        scan_error=(
-            f"edge sink {edges_dir} bucket layout does not match "
-            f"n_buckets={n_buckets}"
-        ),
-    )
-
-
-def _points_sink(points_dir: str, n_buckets: int) -> _BucketedSink:
-    """Points sink: pbucket = pmod(xxhash64(sha256), n_buckets). Pruning the
-    dedup anti-join with buckets computed at a different ``n_buckets`` than
-    the stored values would MISS duplicates and silently double-insert rows."""
-    return _BucketedSink(
-        points_dir,
-        n_buckets,
-        bucket_col="pbucket",
-        bucket_expr=_points_bucket(n_buckets),
-        what="points sink",
-        meta_suffix="_playout",
-        mismatch_consequence=(
-            "would break dedup anti-join pruning — pass n_buckets={stored}"
-        ),
-        scan_error=(
-            f"points sink {points_dir} pbucket values do not match "
-            f"n_buckets={n_buckets} — it was bucketed with a different "
-            "layout; pass the original n_buckets"
-        ),
-    )
+def _edges_bucket(n_buckets: int) -> Column:
+    """Edge-sink partition key. The changed-bucket list is computed from src
+    but old rows are selected by their STORED bucket value, so the stored
+    spec must match (the state record pins it)."""
+    return F.pmod(F.col("src"), F.lit(n_buckets)).cast("int")
 
 
 def ingest_stream(
@@ -289,12 +219,18 @@ def ingest_stream(
     Untouched buckets' files are left byte-identical on disk, so at 10^12
     edges the per-batch write is O(changed buckets)."""
 
-    edges_sink = _edges_sink(edges_dir, n_buckets)
-    points_sink = _points_sink(points_dir, n_buckets)
-    bucket = edges_sink.bucket_expr
+    state_path = points_dir + "_state.json"
+    thresh_dir = edges_dir + "_thresh"
+    bucket = _edges_bucket(n_buckets)
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         with checkpoints() as cp:
+            # each sink is read once per batch: the checks, the dedup
+            # anti-join, the delta and the merge share the frame
+            points = spark.read.parquet(points_dir) if _sink_exists(points_dir) else None
+            edges = spark.read.parquet(edges_dir) if _sink_exists(edges_dir) else None
+            state = _load_state(state_path)
+            offset = _next_id(state, n_buckets, points, edges, points_dir, edges_dir)
             # 1. content-hash dedup WITHIN the batch — the ONE definition of the
             #    keep-first-provenance rule (corpus.dedup_files), so the batch
             #    and streaming paths cannot silently diverge ...
@@ -305,51 +241,32 @@ def ingest_stream(
             #    reads ONLY the batch's buckets (partition-pruned scan) instead
             #    of the whole 10^12-row sink every micro-batch — same design as
             #    the edge sink.
-            have_sink = _sink_exists(points_dir)
-            if have_sink:
-                points_sink.ensure_layout(spark)
+            if points is not None:
                 batch_buckets = [
                     int(r["b"])
                     for r in batch_unique.select(_points_bucket(n_buckets).alias("b"))
                     .distinct()
                     .collect()
                 ]
-                seen = (
-                    spark.read.parquet(points_dir)
-                    .where(F.col("pbucket").isin(batch_buckets))
-                    .select("sha256")
-                )
+                seen = points.where(F.col("pbucket").isin(batch_buckets)).select("sha256")
                 batch_unique = batch_unique.join(seen, "sha256", "left_anti")
-            batch_unique = cp.pin(batch_unique)
-            n_new = batch_unique.count()
+            # 3. dense ids continue from the state's next_id: numbered by one
+            #    range shuffle, whose per-partition counts give n_new
+            with_ids, n_new = dense_ids(batch_unique)
             if n_new == 0:
                 # a replayed batch whose points append fully landed dedups to
-                # zero — finalize the crashed attempt's bookkeeping (else the
-                # marker leaks and EVERY later batch pays the count-reconcile
-                # over the full sink). _read_next_id validates the marker's
-                # (offset, n_new) against the committed count first, so a torn
-                # append still fails loudly here rather than being blessed.
-                marker = _inflight_marker(points_dir)
-                if have_sink and os.path.exists(marker):
-                    _write_next_id(spark, points_dir, _read_next_id(spark, points_dir))
-                    os.remove(marker)
+                # zero: _next_id validated the in-flight record against the
+                # committed count, so clear it (else every later batch pays
+                # the count over the full sink); a lost record is restored
+                if points is not None and (state is None or state["inflight"] is not None):
+                    _save_state(state_path, n_buckets, offset)
                 return
-            # 3. dense ids continue from the metadata sink's next_id
-            #    (deterministic within the batch: rank by sha256, prefix-sum
-            #    assignment — no single-partition window)
-            offset = _read_next_id(spark, points_dir) if have_sink else 0
-            # in-flight marker: present ⇒ a batch may have crashed between its
-            # sink writes, so the next id read reconciles against the committed
-            # count instead of trusting the (possibly stale) metadata row. It
-            # records (offset, n_new) so replay can DETECT a torn append (a
-            # committed count strictly between the two) instead of silently
-            # renumbering — see _read_next_id.
-            with open(_inflight_marker(points_dir), "w") as fh:
-                fh.write(json.dumps({"offset": int(offset), "n_new": int(n_new)}))
-            # numbered by one range shuffle, then featurized in one narrow
-            # pass that carries sha256 through: no join back
-            with_ids = dense_ids(batch_unique).withColumn("id", F.col("id") + F.lit(offset))
-            new_pts = cp.pin(featurize(with_ids, dim=dim))
+            # recorded before the batch's first sink write, so a crash
+            # anywhere until the final record write leaves it for _next_id
+            _save_state(state_path, n_buckets, offset, {"offset": offset, "n_new": n_new})
+            # featurized in one narrow pass that carries sha256 through: no
+            # join back
+            new_pts = cp.pin(featurize(with_ids.withColumn("id", F.col("id") + F.lit(offset)), dim=dim))
             # 4. maintain the EXACT edge table incrementally, rewriting only the
             #    src-buckets that contain changed rows — the first batch too:
             #    with no edge sink the delta takes no thresholds (every
@@ -359,11 +276,8 @@ def ingest_stream(
             #    full-edge-table aggregate in the delta — the one remaining
             #    table-sized read — so a batch touches O(n_points) narrow rows
             #    + O(changed buckets) edge rows, never O(edges).
-            thresh_dir = edges_dir + "_thresh"
-            have_edges = _sink_exists(edges_dir)
             thresholds = None
-            if have_edges:
-                edges_sink.ensure_layout(spark)
+            if edges is not None:
                 if not _sink_exists(thresh_dir):
                     # sidecar lost (a crash between the first edge write and
                     # _write_thresholds): rebuild the FULL sidecar now (every
@@ -371,24 +285,22 @@ def ingest_stream(
                     # changed buckets, so an in-memory partial rebuild would
                     # leave every other src invisible (null → +inf threshold)
                     # on the NEXT batch.
-                    deg_kth(spark.read.parquet(edges_dir), "bucket").write.mode("overwrite").partitionBy(
-                        "bucket"
-                    ).parquet(thresh_dir)
+                    _write_thresholds(spark, thresh_dir, edges)
                 thresholds = spark.read.parquet(thresh_dir)
-            existing = spark.read.parquet(points_dir).select("id", "vec") if have_sink else None
+            existing = points.select("id", "vec") if points is not None else None
             # lazy: the changed-bucket collect below materializes it
             delta = cp.pin(incremental_knn_delta(
                 existing, None, new_pts.select("id", "vec"), k=k, metric=metric, thresholds=thresholds,
             ), eager=False)
             changed = [int(r["b"]) for r in delta.select(bucket.alias("b")).distinct().collect()]
             if changed:
-                if have_edges:
+                if edges is not None:
                     # filter on the PARTITION column so the scan prunes to the
                     # changed bucket directories (a pmod(src,..) predicate does
                     # not map to partition pruning)
-                    delta = spark.read.parquet(edges_dir).where(F.col("bucket").isin(changed)).select(
-                        "src", "dst", "weight"
-                    ).unionByName(delta)
+                    delta = edges.where(F.col("bucket").isin(changed)).select("src", "dst", "weight").unionByName(
+                        delta
+                    )
                 # pinned, so the overwrite's plan reads a checkpoint, not the
                 # sink it replaces (the pin is lazy: the write materializes
                 # it, and a dynamic overwrite swaps the changed bucket dirs
@@ -399,21 +311,14 @@ def ingest_stream(
                     "bucket"
                 ).parquet(edges_dir)
                 _write_thresholds(spark, thresh_dir, updated)
-                if not have_edges:
-                    edges_sink.stamp(spark)
             # the sink's column order; one task per bucket, so a micro-batch
             # adds one file per bucket directory, not one per range partition
             new_pts.select("id", "vec", "sha256", _points_bucket(n_buckets).alias("pbucket")).repartition(
                 "pbucket"
             ).write.mode("append").partitionBy("pbucket").parquet(points_dir)
-            if not have_sink:
-                points_sink.stamp(spark)
-            _write_next_id(spark, points_dir, offset + n_new)
-            # clean completion: the metadata row is authoritative again
-            try:
-                os.remove(_inflight_marker(points_dir))
-            except FileNotFoundError:
-                pass
+            # clean completion: one atomic write commits the next id and
+            # clears the in-flight record
+            _save_state(state_path, n_buckets, offset + n_new)
 
     stream = spark.readStream.schema(REPO_SCHEMA).parquet(input_dir)
     q = (
@@ -424,25 +329,3 @@ def ingest_stream(
     )
     q.awaitTermination()
 
-
-def lang_counts_stream(
-    spark: SparkSession, input_dir: str, checkpoint_dir: str, sink_dir: str
-) -> None:
-    """Classic stateful streaming aggregation over the ingest feed: running
-    per-language document counts (update-mode state, the canonical
-    watermark-free global aggregate). Written via foreachBatch so the sink
-    is a plain parquet snapshot per drain."""
-    stream = spark.readStream.schema(REPO_SCHEMA).parquet(input_dir)
-    counts = stream.groupBy("lang").count()
-
-    def save(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.write.mode("overwrite").parquet(sink_dir)
-
-    q = (
-        counts.writeStream.outputMode("complete")
-        .foreachBatch(save)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()

@@ -44,9 +44,10 @@ def test_dedup_collapses_duplicate_contents(spark):
 def test_dense_ids_rank_the_distinct_hashes(spark):
     repos = generate_repos(spark, N, seed=42)
     files = dedup_files(repos)
-    a = dense_ids(files, "sha256").select("sha256", "id").orderBy("id").collect()
+    numbered, n = dense_ids(files, "sha256")
+    a = numbered.select("sha256", "id").orderBy("id").collect()
     ids = [r["id"] for r in a]
-    assert ids == list(range(len(ids)))
+    assert ids == list(range(len(ids))) and n == len(ids)
     hashes = [r["sha256"] for r in a]
     assert hashes == sorted(hashes)
     assert hashes == sorted({hashlib.sha256(r["content"].encode()).hexdigest() for r in repos.collect()})
@@ -57,7 +58,7 @@ def test_front_end_plans_hold_no_window_and_no_join(spark):
     ``featurize`` is one narrow pass (no exchange, no explode, no join), so
     ids and features are never joined back together."""
     files = dedup_files(generate_repos(spark, 50, seed=42)).select("sha256", "content").localCheckpoint()
-    numbered = final_plan(dense_ids(files))
+    numbered = final_plan(dense_ids(files)[0])
     assert "Window" not in numbered and "Join" not in numbered
     featurized = final_plan(featurize(files.withColumn("id", F.monotonically_increasing_id())))
     assert not any(op in featurized for op in ("Exchange", "Generate", "Join"))
@@ -94,7 +95,7 @@ def test_featurizer_unit_norm_and_deterministic(spark):
 
 def test_featurizer_same_content_same_vector(spark):
     repos = generate_repos(spark, N, seed=42)
-    files = dense_ids(dedup_files(repos), "sha256")
+    files, _ = dense_ids(dedup_files(repos), "sha256")
     pts = featurize(files, dim=32)
     assert pts.count() == files.count()
     assert pts.select("id").distinct().count() == pts.count()
